@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import time
@@ -101,7 +102,9 @@ def ensure_bench_fixture(n_files: int = 32) -> str:
 
         os.makedirs(CACHE, exist_ok=True)
         tmp = path + ".tmp"
-        os.makedirs(tmp, exist_ok=True)
+        # a crashed earlier run may have left a partial tmp dir
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
         df = gen_transcripts_fast(BENCH_TURNS)
         step = (len(df) + n_files - 1) // n_files
         for i in range(n_files):
@@ -135,6 +138,7 @@ def ensure_parallel_sf(sf_dir: str, n_files: int = 32) -> str:
     if not os.path.exists(path):
         os.makedirs(CACHE, exist_ok=True)
         tmp = path + ".tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
         for src in sorted(_glob.glob(os.path.join(sf_dir, "*.parquet"))):
             tbl = pq.read_table(src)
             out_dir = os.path.join(tmp, os.path.basename(src))
@@ -157,6 +161,7 @@ def _write_parts(df, path: str, table_name: str, n_files: int) -> None:
     n_files splits (tmp dir + os.replace so a crashed run never leaves
     a half-written fixture that later runs mistake for complete)."""
     tmp = path + ".tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
     out_dir = os.path.join(tmp, table_name)
     os.makedirs(out_dir, exist_ok=True)
     step = (len(df) + n_files - 1) // n_files

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -102,7 +103,9 @@ def _ensure_big_transcripts(total_turns: int, n_convs: int,
     if not os.path.exists(path):
         os.makedirs(bench.CACHE, exist_ok=True)
         tmp = path + ".tmp"
-        os.makedirs(tmp, exist_ok=True)
+        # a crashed earlier run may have left a partial tmp dir
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
         df = gen_transcripts_fast(total_turns, n_convs=n_convs)
         step = (len(df) + n_files - 1) // n_files
         for i in range(n_files):
@@ -168,7 +171,7 @@ def cmd_extract_growth(runs=3):
     if os.path.exists(sf_path):
         with open(sf_path) as f:
             sf = json.load(f)
-    sf["extract_family"] = {"extract_pipeline": row}
+    sf.setdefault("extract_family", {})["extract_pipeline"] = row
     with open(sf_path, "w") as f:
         json.dump(sf, f, indent=1)
     return row

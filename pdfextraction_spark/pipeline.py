@@ -9,18 +9,25 @@
       -> append per-partition manifest rows (metrics)
 
 Chunked commits: logical partitions are processed in ``n_chunks``
-groups; each group is one Spark job whose output append is followed by
-its manifest append, so a killed run resumes at chunk granularity with
-no duplicate rows (tests/test_resume.py).
+groups. Each group runs ONE Spark job, the output append. The driver
+then does the chunk's bookkeeping with pyarrow: it groups the metric
+columns of the chunk's committed files into per-partition stats and
+commits the manifest rows (sources/manifest.py). A killed run resumes
+at chunk granularity with no duplicate rows (tests/test_resume.py).
+Job start reads the manifest the same way, so a resume with nothing
+left to do runs no Spark job for its bookkeeping.
 """
 
 from __future__ import annotations
 
+import os
 import uuid
 from datetime import datetime
-from typing import List, Optional
+from typing import Dict, List, Optional
 
-from pyspark.errors import AnalysisException
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from . import __version__
@@ -33,6 +40,7 @@ from .operators.partitioning import (
 from .sources.manifest import (
     append_manifest,
     committed_partitions,
+    manifest_table,
     reconcile_orphan_commits,
     snapshot_id_for_path,
     writer_lock,
@@ -59,21 +67,19 @@ def extract_dataframe(
     I/O for zero gain; at warehouse scale that is a full extra pass
     over the corpus (guide §2.1: remove shuffles outright).
 
-    ``shuffle=None`` (auto) keeps the exchange unless the input is a
-    file scan with at least ``defaultParallelism`` files — the
-    conservative proxy for "the scan alone saturates the cluster"
-    (file count bounds split count for single-row-group files; a
-    many-file corpus written by any distributed writer passes, the
-    single-file test fixtures keep today's exchange). Values are
-    identical on both paths (pinned by test); output ROW ORDER is not
-    part of the contract either way.
+    ``shuffle=None`` (auto) keeps the exchange unless the input's
+    planned scan already has at least ``defaultParallelism``
+    partitions — "the scan alone saturates the cluster", counted the
+    way Spark will run it. File count is not that proxy: Spark
+    bin-packs tiny files into shared splits (many tiny files can scan
+    as one task and need the exchange), and splits a large file with
+    many row groups into several (it needs none). Values are identical
+    on both paths (pinned by test); output ROW ORDER is not part of
+    the contract either way.
     """
     if shuffle is None:
-        try:
-            n_files = len(turns.inputFiles())
-        except Exception:
-            n_files = 0
-        shuffle = n_files < turns.sparkSession.sparkContext.defaultParallelism
+        shuffle = (turns.rdd.getNumPartitions()
+                   < turns.sparkSession.sparkContext.defaultParallelism)
     if not shuffle:
         return extract_turns(turns)
     return extract_turns(prepare_for_extraction(turns, num_partitions, salt_turns))
@@ -179,35 +185,68 @@ def _reconcile_debug_dir(
     read as absence of failures. At job start, diff the manifest's
     commit_ids with parse_failures > 0 (current snapshot) against the
     debug dir's commit_id partitions and dump the missing ones.
-    Bounded: both sides are distinct commit_id lists, not row scans."""
-    try:
-        need = {
-            r["commit_id"]
-            for r in spark.read.parquet(manifest_path)
-            .filter(
-                (F.col("source_snapshot_id") == snapshot)
-                & (F.col("parse_failures") > 0)
-            )
-            .select("commit_id").distinct().collect()
-        }
-    except AnalysisException:
-        return []
+    Bounded: both sides are read on the driver, one or two columns
+    each, never a row scan of the output."""
+    need = set(
+        manifest_table(
+            manifest_path,
+            ["commit_id", "source_snapshot_id", "parse_failures"],
+            (ds.field("source_snapshot_id") == snapshot)
+            & (ds.field("parse_failures") > 0),
+        ).column("commit_id").to_pylist()
+    )
+    need.discard(None)  # legacy manifest rows carry no commit_id
     if not need:
         return []
-    try:
-        have = {
-            r["commit_id"]
-            for r in spark.read.parquet(debug_dir)
-            .select("commit_id").distinct().collect()
-        }
-    except AnalysisException:
-        have = set()
+    have = set()
+    if os.path.isdir(debug_dir):
+        have = set(
+            ds.dataset(debug_dir, format="parquet", partitioning=ds.partitioning(
+                pa.schema([("commit_id", pa.string())]), flavor="hive"))
+            .to_table(columns=["commit_id"])
+            .column("commit_id").to_pylist()
+        )
     missing = sorted(need - have)
     now = datetime.now()
     for commit_id in missing:
         _dump_debug_rows(spark, output_path, turns, debug_dir,
                          commit_id, now)
     return missing
+
+
+_NO_ROWS = {"row_count": 0, "blocks_kept": 0, "blocks_dropped": 0,
+            "parse_failures": 0}
+
+
+def _commit_stats(output_path: str, commit_id: str) -> Dict[int, dict]:
+    """Per-partition manifest metrics of one COMMITTED chunk, read on
+    the driver from its durable files: the ``commit_id=<id>``
+    directory only, the 4 metric columns only, grouped with pyarrow.
+    So the manifest provably describes what is on disk, at the cost of
+    a footer-and-column read instead of a Spark job."""
+    path = os.path.join(output_path, f"commit_id={commit_id}")
+    if not os.path.isdir(path):
+        return {}
+    t = ds.dataset(path, format="parquet").to_table(
+        columns=["partition_id", "blocks_kept", "blocks_dropped",
+                 "parse_failed"]
+    )
+    t = t.set_column(3, "parse_failed", pc.cast(t["parse_failed"], pa.int64()))
+    grouped = t.group_by("partition_id").aggregate([
+        ([], "count_all"),
+        ("blocks_kept", "sum"),
+        ("blocks_dropped", "sum"),
+        ("parse_failed", "sum"),
+    ])
+    return {
+        r["partition_id"]: {
+            "row_count": r["count_all"],
+            "blocks_kept": r["blocks_kept_sum"] or 0,
+            "blocks_dropped": r["blocks_dropped_sum"] or 0,
+            "parse_failures": r["parse_failed_sum"] or 0,
+        }
+        for r in grouped.to_pylist()
+    }
 
 
 def _run_locked(
@@ -275,40 +314,22 @@ def _run_locked(
             .withColumn("extractor_version", F.lit(__version__))
             .withColumn("commit_id", F.lit(commit_id))
         )
-        # single write pass (no persist — at corpus scale the chunk
-        # output cannot be cached); manifest stats come from the
-        # COMMITTED files: partition-pruned by commit_id, column-pruned
-        # to the 4 metric columns, so the stats pass is cheap and the
-        # manifest provably describes what is durable on disk
+        # the chunk's one Spark job: a single write pass (no persist —
+        # at corpus scale the chunk output cannot be cached)
         out.write.mode("append").partitionBy("commit_id").parquet(output_path)
         if fail_before_manifest_chunk is not None and ci + 1 >= fail_before_manifest_chunk:
             raise RuntimeError(
                 f"injected failure inside commit window of chunk {ci + 1}"
             )
-        stats = (
-            spark.read.parquet(output_path)
-            .filter(F.col("commit_id") == commit_id)
-            .groupBy("partition_id")
-            .agg(
-                F.count("*").alias("row_count"),
-                F.sum("blocks_kept").alias("blocks_kept"),
-                F.sum("blocks_dropped").alias("blocks_dropped"),
-                F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-            )
-            .collect()
-        )
-        seen = {r.partition_id: r for r in stats}
+        seen = _commit_stats(output_path, commit_id)
         now = datetime.now()
         rows = [
             {
                 "run_id": run_id,
                 "commit_id": commit_id,
                 "source_snapshot_id": snapshot,
-                "partition_id": int(p),
-                "row_count": int(seen[p].row_count) if p in seen else 0,
-                "blocks_kept": int(seen[p].blocks_kept or 0) if p in seen else 0,
-                "blocks_dropped": int(seen[p].blocks_dropped or 0) if p in seen else 0,
-                "parse_failures": int(seen[p].parse_failures or 0) if p in seen else 0,
+                "partition_id": p,
+                **seen.get(p, _NO_ROWS),
                 "extractor_version": __version__,
                 "committed_at": now,
             }

@@ -39,9 +39,11 @@ def q_longest_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max_by("doc_id", pick).alias("best_doc_id"),
         F.max(F.length("text")).cast("long").alias("best_len"),
         F.count("*").alias("n_docs"),
-        # min != max == count_distinct > 1 on the non-null text column
-        # (same value, no two-phase distinct rewrite / second shuffle)
-        (F.min("text") != F.max("text")).alias("conflict_detected"),
+        # min != max == count_distinct > 1 (no two-phase distinct
+        # rewrite / second shuffle); both ignore null texts, but on an
+        # all-null source min != max is null where the count is false
+        F.coalesce(F.min("text") != F.max("text"), F.lit(False))
+        .alias("conflict_detected"),
     )
 
 

@@ -13,6 +13,13 @@ Iceberg catalog is not available in this sandbox); the protocol —
 append manifest rows only AFTER the chunk's output append is durable —
 is identical with an Iceberg table, where the two appends can share a
 transaction.
+
+The manifest is control-plane data (a few rows per chunk), so the
+driver reads and writes it with pyarrow instead of running Spark jobs.
+A chunk's rows land in one hidden file that is then renamed to a
+visible name: the rename is the commit point. A crash before it leaves
+only a hidden file, which every reader (Spark and pyarrow) skips, so
+the chunk reads as uncommitted and is reconciled and re-extracted.
 """
 
 from __future__ import annotations
@@ -21,13 +28,22 @@ import contextlib
 import hashlib
 import json
 import os
+import shutil
 import socket
 import time
-from typing import List, Set
+import uuid
+from datetime import timezone
+from typing import List, Optional, Set
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schema import MANIFEST_SCHEMA
+
+_ARROW_SCHEMA = to_arrow_schema(MANIFEST_SCHEMA)
 
 
 _SNAPSHOT_PROBE_BYTES = 4096
@@ -152,39 +168,45 @@ def writer_lock(output_path: str, stale_after_sec: float = 3600.0):
             os.unlink(lock_fp)
 
 
-def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
-    if not os.path.exists(manifest_path):
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
-    return spark.read.parquet(manifest_path)
+def manifest_table(manifest_path: str, columns: List[str],
+                   filter: Optional[ds.Expression] = None) -> pa.Table:
+    """Only ``columns`` of the committed manifest rows, read on the
+    driver through pyarrow. Hidden names (an in-flight ``.part-*``
+    file, ``_SUCCESS``) are skipped, as Spark's reader skips them. The
+    read schema is the manifest's own, narrowed to ``columns``: a file
+    written before one of them existed reads as nulls there, and
+    columns left out are never decoded, so Spark-written INT96 and
+    driver-written ``committed_at`` types never meet. An absent
+    manifest reads as an empty table."""
+    schema = pa.schema([_ARROW_SCHEMA.field(c) for c in columns])
+    if not os.path.isdir(manifest_path):
+        return schema.empty_table()
+    return ds.dataset(manifest_path, schema=schema, format="parquet").to_table(
+        filter=filter
+    )
 
 
 def committed_partitions(
     spark: SparkSession, manifest_path: str, source_snapshot_id: str
 ) -> Set[int]:
-    mf = read_manifest(spark, manifest_path)
-    rows = (
-        mf.filter(F.col("source_snapshot_id") == source_snapshot_id)
-        .select("partition_id")
-        .distinct()
-        .collect()
+    t = manifest_table(
+        manifest_path, ["source_snapshot_id", "partition_id"],
+        ds.field("source_snapshot_id") == source_snapshot_id,
     )
-    return {r.partition_id for r in rows}
+    return set(t.column("partition_id").to_pylist())
 
 
 def committed_commit_ids(spark: SparkSession, manifest_path: str):
     """All commit_ids with at least one manifest row (any run/snapshot).
 
     Returns ``None`` when the manifest predates the commit_id column
-    (column absent, or any row carries a null) — in that state the
-    manifest cannot say which output commits are covered, so callers
-    must NOT treat on-disk commits as orphans."""
-    mf = read_manifest(spark, manifest_path)
-    if "commit_id" not in mf.columns:
+    (a file without the column, or any row carrying a null) — in that
+    state the manifest cannot say which output commits are covered, so
+    callers must NOT treat on-disk commits as orphans."""
+    ids = manifest_table(manifest_path, ["commit_id"]).column("commit_id")
+    if ids.null_count:
         return None
-    ids = {r.commit_id for r in mf.select("commit_id").distinct().collect()}
-    if None in ids:
-        return None
-    return ids
+    return set(ids.to_pylist())
 
 
 def reconcile_orphan_commits(spark: SparkSession, output_path: str,
@@ -209,8 +231,6 @@ def reconcile_orphan_commits(spark: SparkSession, output_path: str,
     is the same contract Iceberg enforces with optimistic commit
     locking on the table metadata; the parquet stand-in has no catalog
     to arbitrate, so the caller must serialize runs."""
-    import shutil
-
     if not os.path.isdir(output_path):
         return []
     on_disk = {
@@ -234,9 +254,22 @@ def reconcile_orphan_commits(spark: SparkSession, output_path: str,
 
 def append_manifest(spark: SparkSession, manifest_path: str,
                     rows: List[dict]) -> None:
+    """Commit one chunk's manifest rows from the driver: write them to
+    a hidden ``.part-<uuid>.parquet`` in the manifest directory, then
+    ``os.replace`` it to its visible name. The rename is the commit
+    point: before it every reader skips the file, after it the whole
+    file is visible. ``committed_at`` is written as a UTC instant, a
+    naive datetime read as local time (as Spark reads one), so Spark
+    reads the column back as ``TimestampType``."""
     if not rows:
         return
-    spark.createDataFrame(
-        [tuple(r[f.name] for f in MANIFEST_SCHEMA.fields) for r in rows],
-        MANIFEST_SCHEMA,
-    ).coalesce(1).write.mode("append").parquet(manifest_path)
+    table = pa.Table.from_pylist(
+        [{**r, "committed_at": r["committed_at"].astimezone(timezone.utc)}
+         for r in rows],
+        schema=_ARROW_SCHEMA,
+    )
+    os.makedirs(manifest_path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    hidden = os.path.join(manifest_path, "." + name)
+    pq.write_table(table, hidden)
+    os.replace(hidden, os.path.join(manifest_path, name))

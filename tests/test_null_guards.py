@@ -1,0 +1,35 @@
+"""Optimizer rewrites that are only equal on null-free data carry a
+guard; each is checked against its DuckDB oracle on the null case."""
+
+import duckdb
+import pandas as pd
+
+
+def test_longest_wins_all_null_source_matches_oracle(spark, tmp_path):
+    """``conflict_detected`` is ``min(text) != max(text)``, which is
+    null for a source whose texts are all null; the oracle's
+    ``COUNT(DISTINCT text) > 1`` is false there."""
+    import __spark_entry__ as entry
+
+    docs = pd.DataFrame({
+        "doc_id": pd.array([1, 2, 3, 4, 5, 6], "int64"),
+        "text": [None, None, "aa", "bbb", "same", "same"],
+        "lang": ["en"] * 6,
+        "source": ["nulls", "nulls", "conflict", "conflict", "dup", "dup"],
+        "n_chars": pd.array([0, 0, 2, 3, 4, 4], "int64"),
+    })
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    docs.to_parquet(sf_dir / "documents.parquet", index=False)
+
+    got = (entry.queries()["longest_wins_merge"](spark, str(sf_dir))
+           .toPandas().set_index("source").sort_index())
+    con = duckdb.connect()
+    con.register("documents", docs)
+    want = (con.execute(entry.oracle_sql()["longest_wins_merge"]).df()
+            .set_index("source").sort_index())
+
+    assert got["conflict_detected"].tolist() == [True, False, False]
+    assert got["conflict_detected"].tolist() == want["conflict_detected"].tolist()
+    assert got["best_doc_id"].tolist() == want["best_doc_id"].tolist()
+    assert got["n_docs"].tolist() == want["n_docs"].tolist()

@@ -363,3 +363,34 @@ class TestRound4Plans:
         plan = _plan(perplexity_score(docs, lm, oov))
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
+
+
+@pytest.mark.slow
+def test_extraction_keeps_exchange_when_tiny_files_pack(spark, tmp_path):
+    """The auto shuffle gate counts planned scan partitions, not files:
+    tiny files that Spark bin-packs into one split scan as one task,
+    so the salted exchange must stay to give the kernel parallelism."""
+    import pandas as pd
+
+    from pdfextraction_spark.pipeline import extract_dataframe
+
+    n_cores = spark.sparkContext.defaultParallelism
+    src = tmp_path / "tiny_files"
+    src.mkdir()
+    for i in range(2 * n_cores):
+        pd.DataFrame({
+            "conv_id": [f"c{i}"], "turn_idx": pd.array([0], "int32"),
+            "role": ["user"], "text": [f"turn {i}"],
+            "tool": [None], "ts": pd.to_datetime(["2024-01-01"]).astype("datetime64[us]"),
+        }).to_parquet(src / f"part-{i:05d}.parquet", index=False)
+    # pack every file into one split regardless of core count
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try:
+        turns = spark.read.parquet(str(src))
+        assert len(turns.inputFiles()) >= n_cores
+        assert turns.rdd.getNumPartitions() == 1
+        out = extract_dataframe(turns, 8)
+        assert _plan(out).count("Exchange") == 1
+        assert out.count() == 2 * n_cores
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
