@@ -30,9 +30,7 @@ TABLE_MIN_COLS = 3  # multipage_processor.py:176 / spatial_preprocessor.py:481
 TABLE_MIN_ROWS = 2  # spatial_preprocessor.py:500
 
 EMPTY_SENTINEL = "[EMPTY]"
-FIELD_SEP = ":\t"  # "{field}:\t{value}"
 CLUSTER_SEP = "    "  # 4 spaces between clusters on a line
-LINE_SEP = "\n"
 
 FIELD_KEYWORDS = (
     "name", "id", "number", "no", "code", "date", "time", "status", "type",

@@ -165,26 +165,6 @@ def perplexity_score(
     )
 
 
-def lm_quality_gate(
-    docs: DataFrame,
-    lm: DataFrame,
-    oov_logp: float,
-    max_ppl: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """CCNet head/tail-style gate: keep documents the corpus LM finds
-    unsurprising (ppl <= max_ppl). Scoring via the vectorized path."""
-    scores = perplexity_score(
-        docs, lm, oov_logp, id_col=id_col, text_col=text_col,
-        vectorized=True,
-    )
-    return docs.join(
-        scores.filter(F.col("ppl") <= max_ppl).select(id_col, "ppl"),
-        id_col,
-    )
-
-
 def ppl_buckets(
     docs: DataFrame,
     lm: DataFrame,

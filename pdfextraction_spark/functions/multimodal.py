@@ -7,8 +7,8 @@ struct; all per-item work runs in Arrow-batched ``mapInPandas`` stages
 Decode status by modality:
 
 - **image**: REAL for PNG via the dependency-free pure-NumPy codec
-  (functions/png.py); other formats raise NotImplementedError naming
-  the library they need (PIL).
+  (functions/png.py); other formats (they need PIL) degrade to the
+  deterministic byte-digest fake.
 - **audio**: REAL for PCM WAV via stdlib ``wave``; other formats raise
   NotImplementedError (libsndfile/ffmpeg).
 - **video**: REAL for animated GIF via the dependency-free LZW codec
@@ -68,20 +68,6 @@ def encode_fake_blob(kind: str, seed: int, n_payload: int = 256) -> bytes:
     ).tobytes()
 
 
-def decode_image_real(data: bytes) -> np.ndarray:
-    """Real image decode. PNG decodes natively (pure NumPy + zlib
-    codec, functions/png.py); other formats need an image library this
-    container doesn't ship."""
-    from .png import PNG_MAGIC, decode_png
-
-    if bytes(data[:8]) == PNG_MAGIC:
-        return decode_png(data)
-    raise NotImplementedError(
-        "non-PNG image decode requires PIL/pillow (not installed "
-        "here); wire PIL.Image.open(io.BytesIO(data)) in this function"
-    )
-
-
 def _fake_pixel_stats(data: bytes) -> tuple:
     """Deterministic fake decode: stats derived from the blob bytes —
     stable across runs/executors (no RNG, no time)."""
@@ -137,67 +123,6 @@ def image_features(media: DataFrame, num_partitions: int = 32) -> DataFrame:
         .repartition(num_partitions, F.xxhash64("media_id"))
     )
     return pruned.mapInPandas(fn, ddl)
-
-
-def _nn_resize(px: np.ndarray, new_w: int, new_h: int) -> np.ndarray:
-    """Nearest-neighbor resample (deterministic, pure NumPy)."""
-    h, w = px.shape[:2]
-    yi = np.minimum((np.arange(new_h) * h) // max(new_h, 1), h - 1)
-    xi = np.minimum((np.arange(new_w) * w) // max(new_w, 1), w - 1)
-    return px[yi][:, xi]
-
-
-def resize_images(media: DataFrame, max_side: int = 256,
-                  num_partitions: int = 32) -> DataFrame:
-    """Resize: target dims computed JVM-side (pure column math);
-    PNG blobs are REALLY decoded, nearest-neighbor resampled, and
-    re-encoded inside the mapInPandas stage. Non-PNG blobs pass
-    through with resized=false (degrade, don't die)."""
-    ddl = ("media_id long, new_width int, new_height int, "
-           "resized boolean, data binary")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .png import PNG_MAGIC, decode_png, encode_png
-
-        for pdf in batches:
-            out_data, resized = [], []
-            for data, nw, nh in zip(pdf["data"], pdf["new_width"],
-                                    pdf["new_height"]):
-                if bytes(data[:8]) == PNG_MAGIC:
-                    try:
-                        px = decode_png(data)
-                        out_data.append(
-                            encode_png(_nn_resize(px, int(nw), int(nh)))
-                        )
-                        resized.append(True)
-                        continue
-                    except Exception:  # unsupported variant / corrupt
-                        pass
-                out_data.append(bytes(data))
-                resized.append(False)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "new_width": pdf["new_width"].to_numpy(),
-                    "new_height": pdf["new_height"].to_numpy(),
-                    "resized": resized,
-                    "data": out_data,
-                }
-            )
-
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.least(F.lit(1.0), F.lit(max_side) / F.greatest(w, h))
-    planned = (
-        media.filter(F.col("kind") == "image")
-        .select(
-            "media_id",
-            "data",
-            F.greatest(F.round(w * scale).cast("int"), F.lit(1)).alias("new_width"),
-            F.greatest(F.round(h * scale).cast("int"), F.lit(1)).alias("new_height"),
-        )
-        .repartition(num_partitions, F.xxhash64("media_id"))
-    )
-    return planned.mapInPandas(fn, ddl)
 
 
 def frame_stats(px: np.ndarray) -> tuple:

@@ -68,17 +68,6 @@ def rasterize_words(
     return canvas
 
 
-def render_page_image(text: str, dpi: int = 300) -> bytes:
-    """Single-envelope convenience: PNG bytes (the reference function's
-    signature, envelope instead of pdf_path+page_num). Raises on a
-    non-layout payload, mirroring the reference's missing-page raise."""
-    full = decode_pdf_envelope_full(text)
-    if full is None:
-        raise ValueError("payload is not a pdf_layout envelope")
-    words, pw, ph = full
-    return encode_png(rasterize_words(words, pw, ph, dpi))
-
-
 def render_pages(turns: DataFrame, dpi: int = 300) -> DataFrame:
     """Rasterize every pdf_layout turn to a PNG page image.
 

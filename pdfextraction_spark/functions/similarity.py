@@ -930,51 +930,18 @@ def lsh_bucket_id(vec_name: str, planes: Sequence[Sequence[float]],
     return bucket
 
 
-def _centroid_scores(vec_col, centroids: Sequence[Sequence[float]],
-                     assume_double: bool = False):
-    """Array of cosine scores against each centroid, ROUNDED to 6dp.
-    Rounding pins the downstream argmax/top-probe decisions against
-    last-ulp drift, so the assignment is reproducible across engines
-    (the DuckDB oracle computes round(list_cosine_similarity(v, c),
-    6)); a 1e-6 score difference is far below any meaningful centroid
-    margin.
-
-    ``assume_double=True``: ``vec_col`` is already a bound
-    array<double> attribute — skip the cast ``transform``. Callers
-    MUST stage the cast as a real projection column first: higher-order
-    functions are interpreted, and a non-attribute input expression
-    nested under them is re-evaluated per element/per consumer."""
-    v = vec_col if assume_double else _as_double(vec_col)
-    norm_v = _norm(v)
-    scores = []
-    for c in centroids:
-        lit = F.array(*[F.lit(float(x)) for x in c])
-        norm_c = float(np.linalg.norm(np.asarray(c, dtype=np.float64))) or 1.0
-        scores.append(F.round(_dot(v, lit) / (norm_v * F.lit(norm_c)), 6))
-    return F.array(*scores)
-
-
-def ivf_assign(vec_col, centroids: Sequence[Sequence[float]]):
-    """IVF list id = argmax cosine over the centroid set.
-
-    NOTE: this duplicates the scores array in the expression tree
-    (array_position + array_max); prefer :func:`_staged_assign`, which
-    stages the scores as a bound column so they are computed once."""
-    s = _centroid_scores(vec_col, centroids)
-    return F.array_position(s, F.array_max(s)).cast("int")
-
-
 def _centroid_scores_named(vec_name: str, norm_name: str,
                            centroids: Sequence[Sequence[float]]):
     """Array of rounded-6dp cosine scores against each centroid over a
-    BOUND array<double> column and its STAGED norm column. Two savings
-    vs the original Column-by-Column form, both value-preserving: the
-    per-vector norm is computed once per row (the old form inlined the
-    norm expression into every one of the k score expressions), and
-    each centroid literal array is one py4j call (_lit_arr) instead of
-    dim calls. The dot itself stays the compact HOF form — see the
-    scope-discipline note above (unrolling k x dim chains was a
-    measured net loss here)."""
+    BOUND array<double> column and its STAGED norm column. Rounding
+    pins the downstream argmax/top-probe decisions against last-ulp
+    drift, so the assignment is reproducible across engines (the
+    DuckDB oracle computes round(list_cosine_similarity(v, c), 6)).
+    The per-vector norm is computed once per row, not inlined into
+    every one of the k score expressions, and each centroid literal
+    array is one py4j call (_lit_arr) instead of dim calls. The dot
+    itself stays the compact HOF form — see the scope-discipline note
+    above (unrolling k x dim chains was a measured net loss here)."""
     scores = []
     for c in centroids:
         nc = float(np.linalg.norm(np.asarray(c, dtype=np.float64))) or 1.0

@@ -10,10 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-from ..config import FIELD_KEYWORDS
-
-# X1/X4 field-keyword matcher (spatial_preprocessor.py:19-25)
-FIELD_KEYWORD_RE = "(" + "|".join(FIELD_KEYWORDS) + ")"
 # X9-X11 value patterns (spatial_preprocessor.py:374-384)
 DATE_RE = r"\d{1,2}/\d{1,2}/\d{4}"
 PHONE_RE = r"\d{3}-\d{3}-\d{4}"
@@ -116,11 +112,6 @@ def is_english(col: Column, threshold: float = 0.05) -> Column:
     return (stopword_ratio(col) >= threshold) & (ascii_ratio >= 0.9)
 
 
-def field_keyword_hit(col: Column) -> Column:
-    """X1: text contains any of the 31 field keywords."""
-    return F.lower(col).rlike(FIELD_KEYWORD_RE)
-
-
 FENCE_JSON_RE = r"```(?:json)?\s*(\{[\s\S]*?\})\s*```"
 
 
@@ -195,14 +186,6 @@ def norm_ws_lower(col: Column) -> Column:
     space); changing the ordering must touch the whole family and
     its SQL mirrors at once."""
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
-
-
-def fingerprint64(col: Column) -> Column:
-    """Deterministic 64-bit document fingerprint (rolling-hash
-    analogue): xxhash64 of the whitespace-normalized lowercased text.
-    Used for exact-dup detection at scale (shuffle key, not content
-    compare)."""
-    return F.xxhash64(norm_ws_lower(col))
 
 
 def winnowed(df, text_col: str = "text", k: int = 8, window: int = 4,

@@ -42,7 +42,6 @@ _WORD_FAST_RE = re.compile(
     r'"x1": ([-+0-9.eE]+), "y1": ([-+0-9.eE]+)\}'
 )
 _WORD_COUNT_RE = re.compile(r'\{"t":')
-_ESCAPE_RE = re.compile(r"\\")
 
 
 def detect_kinds(texts: pd.Series) -> np.ndarray:

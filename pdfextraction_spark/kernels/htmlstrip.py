@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import re
 from html import unescape
-from typing import List, Sequence, Tuple
+from typing import List, Tuple
 
 from ..config import (
     HTML_BLOCK_TAGS,
@@ -144,9 +144,3 @@ def strip_html_doc(html: str) -> Tuple[str, List[Tuple[str, int, int]], int, int
         spans.append((tag, p, p + len(t)))
         p += len(t) + 1
     return "\n".join(parts), spans, len(kept), dropped, len(kept) == 0
-
-
-def strip_html_batch(texts: Sequence[str]):
-    """Batch entry: list of per-doc tuples (text, spans, kept, dropped,
-    failed)."""
-    return [strip_html_doc(t or "") for t in texts]

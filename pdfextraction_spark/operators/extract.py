@@ -17,10 +17,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..kernels.extract import extract_batch_flat
-from ..schema import EXTRACTED_ARROW
 
-# ts passes through (zero-copy) when present so event-time streaming
-# windows can run downstream of the extraction stage
+# ts passes through (zero-copy) when present, so each extracted row
+# keeps the event time of its turn
 _PASSTHROUGH = ["conv_id", "turn_idx", "role", "ts"]
 
 

@@ -7,7 +7,7 @@ Mirrors the reference's multi-page result merger
   longest non-null value wins; ties go to the earliest turn (the
   reference replaces only on strictly-greater length, so first-seen
   wins ties); any repeated non-null occurrence flags a conflict.
-- A9 row accumulation (:122-144): per-conversation ordered
+- A9 table-row accumulation (:122-163): per-conversation ordered
   accumulation with source-turn bookkeeping, order fixed by
   pre-sorting on turn (result_merger.py:19-20) — expressed as
   array_sort(collect_list(struct(turn_idx, ...))).
@@ -121,27 +121,4 @@ def merge_conversation_tables(tables: DataFrame) -> DataFrame:
         .withColumn("headers", F.array_join("headers", "\x1f"))
         .select("conv_id", "headers", "total_rows", "source_turns",
                 "rows_by_turn", "spans_multiple_turns")
-    )
-
-
-def accumulate_conversation_lines(extracted: DataFrame) -> DataFrame:
-    """A9 analogue: per conversation, all extracted lines accumulated
-    in (turn_idx, line order), with source-turn metadata columns
-    matching result_merger.py:153-163 (total rows, source turns,
-    multi-turn flag)."""
-    lines = extracted.select(
-        "conv_id",
-        "turn_idx",
-        F.posexplode(F.split(F.col("extracted_text"), "\n")).alias("line_pos", "line"),
-    ).filter(F.length(F.trim("line")) > 0)
-    return lines.groupBy("conv_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct("turn_idx", "line_pos", "line"))
-            ),
-            lambda s: s["line"],
-        ).alias("lines"),
-        F.count("*").alias("total_lines"),
-        F.array_sort(F.collect_set("turn_idx")).alias("source_turns"),
-        (F.size(F.collect_set("turn_idx")) > 1).alias("spans_multiple_turns"),
     )

@@ -280,10 +280,6 @@ def reflow(words: Sequence[Word]) -> List[Tuple[str, str]]:
     return out
 
 
-def reflow_text(words: Sequence[Word]) -> str:
-    return "\n".join(t for _, t in reflow(words))
-
-
 def spacing_stats(words: Sequence[Word]) -> Tuple[float, float, float]:
     """A1 word-spacing stats (calculate_word_spacing_stats,
     spatial_preprocessor.py:422-463): over consecutive reading-order

@@ -9,13 +9,20 @@
       -> append per-partition manifest rows (metrics)
 
 Chunked commits: logical partitions are processed in ``n_chunks``
-groups. Each group runs ONE Spark job, the output append. The driver
-then does the chunk's bookkeeping with pyarrow: it groups the metric
+groups. Each group is extracted through ``extract_dataframe`` with the
+exchange forced on (the salted repartition is what keys a chunk to its
+partitions) and runs ONE Spark job, the output append. The Spark
+driver then does the chunk's bookkeeping with pyarrow: it groups the metric
 columns of the chunk's committed files into per-partition stats and
-commits the manifest rows (sources/manifest.py). A killed run resumes
+commits the manifest rows (sources/manifest.py). The job summary's
+``observed_metrics`` are sums of those manifest rows, so the summary
+and the manifest count the same committed rows. A killed run resumes
 at chunk granularity with no duplicate rows (tests/test_resume.py).
 Job start reads the manifest the same way, so a resume with nothing
 left to do runs no Spark job for its bookkeeping.
+
+This is a batch job, resumable through its manifest; the engine has no
+Structured Streaming path.
 """
 
 from __future__ import annotations
@@ -28,7 +35,7 @@ from typing import Dict, List, Optional
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import __version__
 from .config import DEFAULT_NUM_PARTITIONS, MEGA_CONV_TURNS_PER_SALT
@@ -290,19 +297,8 @@ def _run_locked(
     observed = {"turns": 0, "parse_failures": 0, "blocks_dropped": 0}
     for ci, part_group in enumerate(chunks):
         chunk_df = turns.filter(F.col("partition_id").isin(part_group))
-        prepared = prepare_for_extraction(
-            chunk_df, max(len(part_group), 1), salt_turns
-        )
-        extracted = extract_turns(prepared)
-        # S8 usage-log analogue (cost_tracker.py:51-69): streaming-free
-        # metrics via observe, surfaced in the job summary alongside
-        # the per-partition manifest rows
-        obs = Observation(f"extraction_chunk_{ci}")
-        extracted = extracted.observe(
-            obs,
-            F.count(F.lit(1)).alias("turns"),
-            F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-            F.sum("blocks_dropped").alias("blocks_dropped"),
+        extracted = extract_dataframe(
+            chunk_df, max(len(part_group), 1), salt_turns, shuffle=True
         )
         # partition_id is a pure function of conv_id -> recompute after
         # the Arrow stage instead of shipping it through the kernel
@@ -339,10 +335,13 @@ def _run_locked(
         if debug_dir is not None:
             _dump_debug_rows(spark, output_path, turns, debug_dir,
                              commit_id, now)
-        total_rows += sum(r["row_count"] for r in rows)
-        for k, v in (obs.get or {}).items():
-            if v is not None:
-                observed[k] = observed.get(k, 0) + int(v)
+        chunk_rows = sum(r["row_count"] for r in rows)
+        total_rows += chunk_rows
+        # S8 usage-log analogue (cost_tracker.py:51-69): the summary's
+        # metrics are the committed manifest rows, summed
+        observed["turns"] += chunk_rows
+        for k in ("parse_failures", "blocks_dropped"):
+            observed[k] += sum(r[k] for r in rows)
         if fail_after_chunks is not None and ci + 1 >= fail_after_chunks:
             raise RuntimeError(f"injected failure after {ci + 1} chunks")
 

@@ -90,16 +90,19 @@ def q_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ordered_accumulate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9 ordered row accumulation (result_merger.py:122-144): line
-    items accumulated in line-number order per order."""
+    items accumulated in line-number order per order. A line with a
+    null quantity is left out of ``acc`` and ``mixed_rows``, and an
+    order with no quantity at all has ``acc`` null, as in the oracle's
+    ``string_agg`` and ``COUNT(DISTINCT ..)``."""
     li = _t(spark, sf_dir, "lineitem")
+    q = F.col("l_quantity").cast("int")
     acc = F.array_join(
         F.transform(
             F.array_sort(
                 F.collect_list(
-                    F.struct(
-                        F.col("l_linenumber").alias("ln"),
-                        F.col("l_quantity").cast("int").alias("q"),
-                    )
+                    F.when(q.isNotNull(), F.struct(
+                        F.col("l_linenumber").alias("ln"), q.alias("q"),
+                    ))
                 )
             ),
             lambda s: F.concat_ws(":", s["ln"].cast("string"), s["q"].cast("string")),
@@ -110,17 +113,14 @@ def q_ordered_accumulate(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_orderkey")
         .agg(
             F.count("*").alias("n_lines"),
-            acc.alias("acc"),
-            # "more than one distinct value" as min != max: l_quantity
-            # is non-null, so this equals count_distinct(..) > 1 while
-            # avoiding Spark's two-phase distinct-aggregate rewrite,
-            # which shuffled the 600k-row table TWICE (plan had two
-            # Exchange + four ObjectHashAggregate nodes; now one
-            # Exchange — oracle-checked identical output)
-            (
-                F.min(F.col("l_quantity").cast("int"))
-                != F.max(F.col("l_quantity").cast("int"))
-            ).alias("mixed_rows"),
+            F.when(F.count(q) > 0, acc).alias("acc"),
+            # "more than one distinct value" as min != max, which
+            # avoids Spark's two-phase distinct-aggregate rewrite: that
+            # shuffled the 600k-row table TWICE (plan had two Exchange +
+            # four ObjectHashAggregate nodes; now one Exchange). min and
+            # max skip nulls as count_distinct does; on an all-null
+            # order both are null, hence the coalesce to false
+            F.coalesce(F.min(q) != F.max(q), F.lit(False)).alias("mixed_rows"),
         )
     )
 

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import types as T
 
 TRANSCRIPTS_SCHEMA = T.StructType(
@@ -13,46 +12,6 @@ TRANSCRIPTS_SCHEMA = T.StructType(
         T.StructField("text", T.StringType()),
         T.StructField("tool", T.StringType()),
         T.StructField("ts", T.TimestampType()),
-    ]
-)
-
-SPAN_STRUCT = T.StructType(
-    [
-        T.StructField("label", T.StringType()),
-        T.StructField("start", T.IntegerType()),
-        T.StructField("end", T.IntegerType()),
-    ]
-)
-
-EXTRACTED_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("payload_kind", T.StringType()),
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("spans", T.ArrayType(SPAN_STRUCT)),
-        T.StructField("blocks_kept", T.IntegerType()),
-        T.StructField("blocks_dropped", T.IntegerType()),
-        T.StructField("parse_failed", T.BooleanType()),
-    ]
-)
-
-SPAN_ARROW = pa.list_(
-    pa.struct([("label", pa.string()), ("start", pa.int32()), ("end", pa.int32())])
-)
-
-EXTRACTED_ARROW = pa.schema(
-    [
-        ("conv_id", pa.string()),
-        ("turn_idx", pa.int32()),
-        ("role", pa.string()),
-        ("payload_kind", pa.string()),
-        ("extracted_text", pa.string()),
-        ("spans", SPAN_ARROW),
-        ("blocks_kept", pa.int32()),
-        ("blocks_dropped", pa.int32()),
-        ("parse_failed", pa.bool_()),
     ]
 )
 

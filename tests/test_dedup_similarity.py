@@ -233,24 +233,6 @@ class TestConversationMerge:
         # tie on length within one turn -> earliest position wins
         assert out[("c3", "Dept")].value == "B2"
 
-    def test_accumulate_lines_ordered(self, spark):
-        from pdfextraction_spark.operators.merge import (
-            accumulate_conversation_lines,
-        )
-
-        rows = [
-            ("c1", 1, "b1\nb2"),
-            ("c1", 0, "a1"),
-            ("c1", 2, "c1line"),
-        ]
-        df = spark.createDataFrame(
-            rows, "conv_id string, turn_idx int, extracted_text string"
-        )
-        out = accumulate_conversation_lines(df).collect()[0]
-        assert out.lines == ["a1", "b1", "b2", "c1line"]
-        assert out.source_turns == [0, 1, 2]
-        assert out.spans_multiple_turns
-
 
 @pytest.mark.slow
 class TestIVF:

@@ -29,27 +29,6 @@ class TestMultimodal:
         assert [r.phash for r in a] == [r.phash for r in b]
         assert all(0 <= r.mean_byte <= 255 for r in a)
 
-    def test_resize_real_pixels(self, media):
-        """Resize really resamples: output blobs decode to the target
-        dims and match an independent nearest-neighbor resample."""
-        import numpy as np
-
-        from pdfextraction_spark.functions.png import decode_png
-
-        out = {r.media_id: r for r in M.resize_images(media, max_side=24).collect()}
-        src = media.filter("kind = 'image'").select("media_id", "data").collect()
-        assert len(out) == len(src) > 0
-        for s in src:
-            r = out[s.media_id]
-            assert max(r.new_width, r.new_height) <= 24
-            assert min(r.new_width, r.new_height) >= 1
-            assert r.resized
-            px = decode_png(bytes(r.data))
-            assert px.shape[:2] == (r.new_height, r.new_width)
-            exp = M._nn_resize(decode_png(bytes(s.data)),
-                               r.new_width, r.new_height)
-            assert (px == exp).all()
-
     def test_frame_sampling_counts(self, media):
         out = M.sample_frames(media, every_k=10).toPandas()
         metas = {r.media_id: r.meta.n_frames
@@ -94,18 +73,6 @@ class TestMultimodal:
                 assert r.decoded
                 n_checked += 1
         assert n_checked > 10
-
-    def test_real_decoder_png_and_stub_boundary(self):
-        import numpy as np
-
-        from pdfextraction_spark.functions.png import encode_png
-
-        img = np.arange(6 * 5 * 3, dtype=np.uint8).reshape(6, 5, 3)
-        out = M.decode_image_real(encode_png(img))
-        assert (out == img).all()
-        # non-PNG formats remain an honest stub
-        with pytest.raises(NotImplementedError, match="PIL"):
-            M.decode_image_real(b"\xff\xd8\xff\xe0jpeg-ish")
 
     def test_image_features_real_pixels(self, media):
         """image_features must report TRUE pixel statistics for the
@@ -376,8 +343,6 @@ def test_undecodable_blobs_degrade_not_die(spark):
     aud = M.audio_features(media, num_partitions=2).collect()
     assert len(aud) == 1 and aud[0].media_id == 101
     assert aud[0].sample_rate == 0  # fallback marker
-    rs = M.resize_images(media, max_side=8).collect()
-    assert len(rs) == 1 and not rs[0].resized
 
 
 def test_sample_frames_null_n_frames_degrades(spark):

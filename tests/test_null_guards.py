@@ -33,3 +33,36 @@ def test_longest_wins_all_null_source_matches_oracle(spark, tmp_path):
     assert got["conflict_detected"].tolist() == want["conflict_detected"].tolist()
     assert got["best_doc_id"].tolist() == want["best_doc_id"].tolist()
     assert got["n_docs"].tolist() == want["n_docs"].tolist()
+
+
+def test_ordered_accumulate_null_quantities_match_oracle(spark, tmp_path):
+    """A null ``l_quantity`` drops out of ``acc`` (``concat_ws`` alone
+    would keep its line number) and of ``mixed_rows``; an order whose
+    quantities are all null has ``acc`` null and ``mixed_rows`` false
+    (``min != max`` alone is null there)."""
+    import __spark_entry__ as entry
+
+    li = pd.DataFrame({
+        "l_orderkey": pd.array([1, 1, 2, 2, 3, 3, 4, 4], "int64"),
+        "l_linenumber": pd.array([1, 2, 1, 2, 1, 2, 1, 2], "int32"),
+        "l_quantity": pd.array([None, 5.0, None, None, 3.0, 7.0, 4.0, 4.0],
+                               "Float64"),
+    })
+    sf_dir = tmp_path / "sf"
+    sf_dir.mkdir()
+    path = sf_dir / "lineitem.parquet"
+    li.to_parquet(path, index=False)
+
+    got = (entry.queries()["ordered_accumulate"](spark, str(sf_dir))
+           .toPandas().set_index("l_orderkey").sort_index())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{path}')")
+    want = (con.execute(entry.oracle_sql()["ordered_accumulate"]).df()
+            .set_index("l_orderkey").sort_index())
+
+    assert got["acc"].tolist() == ["2:5", None, "1:3,2:7", "1:4,2:4"]
+    assert got["mixed_rows"].tolist() == [False, False, True, False]
+    assert got["acc"].tolist() == [
+        None if pd.isna(v) else v for v in want["acc"]]
+    assert got["mixed_rows"].tolist() == want["mixed_rows"].tolist()
+    assert got["n_lines"].tolist() == want["n_lines"].tolist()

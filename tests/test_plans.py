@@ -11,6 +11,13 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _canon(df):
+    pdf = df.toPandas()
+    for c in pdf.columns:
+        pdf[c] = pdf[c].astype(str)
+    return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+
 @pytest.mark.slow
 class TestPlans:
     def test_filter_pushdown_and_pruning(self, spark):
@@ -65,13 +72,7 @@ class TestPlans:
         forced = extract_dataframe(turns, 8, shuffle=True)
         assert _plan(forced).count("Exchange") == 1
 
-        def canon(df):
-            pdf = df.toPandas()
-            for c in pdf.columns:
-                pdf[c] = pdf[c].astype(str)
-            return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
-
-        pd.testing.assert_frame_equal(canon(auto), canon(forced))
+        pd.testing.assert_frame_equal(_canon(auto), _canon(forced))
 
     def test_ann_broadcasts_queries(self, spark):
         import __spark_entry__ as em
@@ -366,11 +367,16 @@ class TestRound4Plans:
 
 
 @pytest.mark.slow
-def test_extraction_keeps_exchange_when_tiny_files_pack(spark, tmp_path):
-    """The auto shuffle gate counts planned scan partitions, not files:
-    tiny files that Spark bin-packs into one split scan as one task,
-    so the salted exchange must stay to give the kernel parallelism."""
+def test_extraction_keeps_exchange_when_tiny_files_pack(
+        spark, tmp_path, xs_parquet):
+    """The auto shuffle gate counts planned scan partitions, not files.
+    Tiny files that Spark bin-packs into one split scan as one task, so
+    the salted exchange must stay to give the kernel parallelism. The
+    opposite layout, a few files whose row groups Spark splits into at
+    least ``defaultParallelism`` partitions, needs no exchange and gives
+    the same values as the shuffled path."""
     import pandas as pd
+    import pyarrow.parquet as pq
 
     from pdfextraction_spark.pipeline import extract_dataframe
 
@@ -394,3 +400,29 @@ def test_extraction_keeps_exchange_when_tiny_files_pack(spark, tmp_path):
         assert out.count() == 2 * n_cores
     finally:
         spark.conf.unset("spark.sql.files.minPartitionNum")
+
+    # two files of many row groups, split by a small partition size
+    table = pq.read_table(xs_parquet)
+    big = tmp_path / "few_big_files"
+    big.mkdir()
+    half = table.num_rows // 2
+    rows_per_group = max(1, half // (4 * n_cores))
+    for i, part in enumerate((table.slice(0, half), table.slice(half))):
+        pq.write_table(part, big / f"part-{i:05d}.parquet",
+                       row_group_size=rows_per_group)
+    total = sum(f.stat().st_size for f in big.iterdir())
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+                   str(max(1024, total // (2 * n_cores))))
+    try:
+        turns = spark.read.parquet(str(big))
+        assert len(turns.inputFiles()) == 2 < n_cores
+        assert turns.rdd.getNumPartitions() >= n_cores
+        auto = extract_dataframe(turns, 8)
+        assert "Exchange" not in _plan(auto)
+        forced = extract_dataframe(turns, 8, shuffle=True)
+        assert _plan(forced).count("Exchange") == 1
+        got = _canon(auto)
+        assert len(got) == table.num_rows
+        pd.testing.assert_frame_equal(got, _canon(forced))
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")

@@ -23,7 +23,6 @@ from pdfextraction_spark.functions.png import decode_png
 from pdfextraction_spark.functions.render import (
     MAX_PIXELS,
     rasterize_words,
-    render_page_image,
     render_pages,
 )
 from pdfextraction_spark.functions.text import clip_text, preview_text
@@ -67,16 +66,6 @@ def test_rasterize_pixel_cap_raises():
     assert MAX_PIXELS == 64_000_000
 
 
-def test_render_page_image_round_trip():
-    env = encode_pdf_envelope([_w(72, 72, 144, 90)], 612.0, 792.0)
-    png = render_page_image(env, dpi=36)  # scale 0.5
-    img = decode_png(png)
-    assert img.shape[:2] == (math.ceil(792 * 0.5), math.ceil(612 * 0.5))
-    assert img.min() == 0 and img.max() == 255
-    with pytest.raises(ValueError, match="pdf_layout"):
-        render_page_image("just plain text", dpi=36)
-
-
 def test_render_pages_spark(spark):
     env = encode_pdf_envelope([_w(10, 10, 60, 20), _w(10, 30, 40, 38)])
     rows = [
@@ -97,9 +86,9 @@ def test_render_pages_spark(spark):
     assert (out["ink_pixels"] > 0).all()
     for png in out["png"]:
         assert bytes(png)[:8] == b"\x89PNG\r\n\x1a\n"
-        assert decode_png(bytes(png)).shape[:2] == (
-            math.ceil(792 * s), math.ceil(612 * s)
-        )
+        img = decode_png(bytes(png))
+        assert img.shape[:2] == (math.ceil(792 * s), math.ceil(612 * s))
+        assert img.min() == 0 and img.max() == 255
 
 
 # --------------------------------------------------------------- X19
@@ -169,12 +158,22 @@ def test_debug_response_sink(spark, tmp_path):
     out, mf, dbg = (
         str(tmp_path / "out"), str(tmp_path / "mf"), str(tmp_path / "dbg")
     )
-    run_extraction_job(
+    summary = run_extraction_job(
         spark, p, out, mf, num_partitions=4, n_chunks=2, debug_dir=dbg
     )
     failed = spark.read.parquet(out).filter("parse_failed")
     n_failed = failed.count()
     assert n_failed > 0  # the fixture plants ~2% malformed envelopes
+    # the summary counts the committed output rows
+    written = spark.read.parquet(out).agg(
+        F.count("*").alias("turns"),
+        F.sum("blocks_dropped").alias("blocks_dropped"),
+    ).collect()[0]
+    assert summary["observed_metrics"] == {
+        "turns": written["turns"],
+        "parse_failures": n_failed,
+        "blocks_dropped": written["blocks_dropped"],
+    }
     dump = spark.read.parquet(dbg)
     assert dump.count() == n_failed
     pdump = dump.toPandas()

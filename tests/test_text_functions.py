@@ -57,15 +57,16 @@ class TestTokenFunctions:
         ).select(
             X.ws_token_count(F.col("t")).alias("ws"),
             X.bpe_token_count(F.col("t")).alias("bpe"),
-            X.fingerprint64(F.col("t")).alias("fp"),
+            X.norm_ws_lower(F.col("t")).alias("key"),
         )
         rows = df.collect()
         assert rows[0].ws == 5
         # hello|world|,|it|is|42|!
         assert rows[0].bpe == 7
         assert rows[1].ws == 0
-        # fingerprint is whitespace-normalized: rows 0 and 2 collide
-        assert rows[0].fp == rows[2].fp
+        # the exact-dedup key is whitespace-normalized: rows 0 and 2
+        # collide
+        assert rows[0].key == rows[2].key == "hello world, it is 42!"
 
 
 def test_schema_normalization_all_shapes(spark):
