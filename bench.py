@@ -554,10 +554,9 @@ def production_queries() -> dict:
         # context assembly over the RAW bench transcripts (the driver
         # query composes extraction first — extraction throughput is
         # already the headline metric, so the bench times the window
-        # op itself on the big fixture), vectorized searchsorted path
+        # op itself on the big fixture)
         "context_windows": lambda s, d: context_windows(
             s.read.parquet(ensure_bench_fixture()), budget=100,
-            vectorized=True,
         ),
         # crawl-increment composite with the production xxhash64
         # family (driver query runs portable md5 for the oracle)
@@ -830,8 +829,7 @@ def run_sf_growth(tiers=("/root/testdata/sf0.01", "/root/testdata/sf0.1"),
     # ---- big-vocabulary LM growth (VERDICT r5 item 9) -------------
     # vocab_size=100k against the fixture's ~10k realized types: the
     # whole vocabulary becomes the model (worst case for THIS corpus),
-    # so the vectorized scorer ships a 10^4-entry dict — through a
-    # real Spark broadcast, not a per-task closure pickle. End-to-end
+    # so the scorer broadcast-joins a 10^4-row model table. End-to-end
     # = train + score, the production shape.
     from pdfextraction_spark.functions.lm import (
         perplexity_score,
@@ -846,7 +844,7 @@ def run_sf_growth(tiers=("/root/testdata/sf0.01", "/root/testdata/sf0.1"),
             lm, oov_logp, _nt = train_unigram_lm(
                 _docs, vocab_size=100_000, alpha=1.0
             )
-            return perplexity_score(_docs, lm, oov_logp, vectorized=True)
+            return perplexity_score(_docs, lm, oov_logp)
 
         force(fn())  # untimed warm per tier
         ws = []
@@ -1395,7 +1393,6 @@ def main() -> None:
     # be charged to whichever query runs first
     qs["group_stats"](spark, bench_sf).count()
     qs["sessionize_events"](spark, bench_sf).count()
-    from pyspark.sql import functions as SF
 
     force = _force
     times = {}
@@ -1410,26 +1407,6 @@ def main() -> None:
         t0 = time.time()
         force(fn(spark, bench_sf))
         times[name] = round(time.time() - t0, 3)
-    # production winnowing variant (xxhash64 — not SQL-portable, so
-    # not a driver query; recall-pinned in pytest, timed here)
-    from pdfextraction_spark.functions.text import winnowed
-
-    docs = spark.read.parquet(os.path.join(bench_sf, "documents.parquet"))
-
-    def _winnow_fast():
-        return winnowed(docs, k=8, window=4, fast=True,
-                        out_col="_fps").select(
-            "doc_id",
-            SF.array_join(
-                SF.transform(SF.col("_fps"), lambda v: v.cast("string")),
-                ",",
-            ).alias("fingerprints"),
-        )
-
-    force(_winnow_fast())  # same untimed steady-state pass as HEADLINE
-    t0 = time.time()
-    force(_winnow_fast())
-    times["winnow_fingerprints_fast"] = round(time.time() - t0, 3)
     # one-time IVF index build (amortized across queries in
     # production; ann_ivf_topk above measured search only)
     if IVF_BUILD_WALLS:

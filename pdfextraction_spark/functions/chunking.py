@@ -120,7 +120,6 @@ def context_windows(
     conv_col: str = "conv_id",
     idx_col: str = "turn_idx",
     text_col: str = "text",
-    vectorized: bool | None = None,
 ) -> DataFrame:
     """Per-turn training-context assembly over a conversation: for
     every turn i the context is the maximal contiguous run of turns
@@ -134,33 +133,15 @@ def context_windows(
     turn_idx, n_tokens, ctx_start_idx (turn_idx of the first context
     turn), ctx_n_turns, ctx_tokens, truncated.
 
-    The vectorized/expression dial (_resolve_vectorized family):
-    ``vectorized=None`` (the default) resolves to the VECTORIZED
-    mapInPandas path — one segmented numpy searchsorted pass per Arrow
-    batch, O(len log len) per conversation. Unlike the IVF dial there
-    is no cheap static signal to key on (the quadratic term depends on
-    per-conversation turn counts, which are data), and the numpy path
-    wins at every measured scale (bench fixture: ~2 s vs ~4.4 s) while
-    being exact, so the auto-dial is unconditional.
-    ``vectorized=False`` keeps the pure-expression form — ONE shuffle
-    (groupBy conv) builds the per-conversation (turn_idx, tok) array;
-    the cumulative-sum array is staged as a real projection column
-    (the staging rule — HOFs are interpreted, a non-attribute input
-    nested under them re-evaluates per element), then each exploded
-    turn finds its window start by counting prefix sums below
-    cum_i - budget. That count is O(len) per turn — O(len^2) per
-    conversation: fine at bounded turn counts, a scale-killer on
-    mega-conversations, which is why it is no longer the default. It
-    remains the SQL-mirrorable reference form, equality-pinned against
-    the vectorized path in tests. Window start is monotone in i, so
-    the closed form needs no iteration: j = #{prefix sums <
-    cum_i - budget} + 1, clamped to i when the turn alone overflows.
+    One hash shuffle on conv_id, then a segmented numpy pass per Arrow
+    batch (``_np_context_windows``): O(len log len) per conversation.
+    Window start is monotone in i, so it needs no iteration: j is the
+    first turn whose exclusive prefix sum is >= cum_i - budget,
+    clamped to i when the turn alone overflows.
     """
     # shared token convention (ONE home: text.ws_token_count); NULL
     # text counts as 0 tokens (like empty) — without the coalesce a
-    # NULL tok would poison the running-sum accumulator (the
-    # aggregate restarts at 0 after a NULL element, silently shifting
-    # every later window) and crash the numpy path
+    # NULL tok would crash the numpy cumsum
     from .text import ws_token_count
 
     tok = ws_token_count(
@@ -171,76 +152,11 @@ def context_windows(
         F.col(idx_col).alias("turn_idx"),
         tok.alias("tok"),
     )
-    if vectorized is None or vectorized:
-        return _np_context_windows(base, budget)
-    g = base.groupBy("conv_id").agg(
-        F.sort_array(F.collect_list(F.struct("turn_idx", "tok"))).alias("ts")
-    )
-    g = g.withColumn(
-        "cums",
-        F.aggregate(
-            "ts",
-            F.array().cast("array<long>"),
-            lambda acc, x: F.concat(
-                acc,
-                F.array(
-                    F.coalesce(
-                        F.try_element_at(acc, F.lit(-1)),
-                        F.lit(0).cast("long"),
-                    )
-                    + x["tok"]
-                ),
-            ),
-        ),
-    )
-    ex = g.select(
-        "conv_id", "ts", "cums", F.posexplode("ts").alias("p0", "t")
-    ).select(
-        "conv_id",
-        "ts",
-        "cums",
-        (F.col("p0") + 1).alias("i"),
-        F.col("t.turn_idx").alias("turn_idx"),
-        F.col("t.tok").alias("n_tokens"),
-    )
-    staged = ex.withColumn(
-        "cnt",
-        F.size(
-            F.filter(
-                F.concat(
-                    F.array(F.lit(0).cast("long")),
-                    F.slice(F.col("cums"), 1, F.col("i") - 1),
-                ),
-                lambda c: c < F.element_at(F.col("cums"), F.col("i"))
-                - budget,
-            )
-        ),
-    ).withColumn("trunc", F.col("cnt") >= F.col("i"))
-    start_pos = F.when(F.col("trunc"), F.col("i")).otherwise(F.col("cnt") + 1)
-    staged = staged.withColumn("sp", start_pos)
-    prefix = F.when(F.col("sp") == 1, F.lit(0).cast("long")).otherwise(
-        F.element_at(F.col("cums"), F.col("sp") - 1)
-    )
-    return staged.select(
-        "conv_id",
-        "turn_idx",
-        "n_tokens",
-        F.element_at(F.col("ts"), F.col("sp"))["turn_idx"]
-        .alias("ctx_start_idx"),
-        F.when(F.col("trunc"), F.lit(1))
-        .otherwise(F.col("i") - F.col("sp") + 1)
-        .cast("int")
-        .alias("ctx_n_turns"),
-        F.when(F.col("trunc"), F.col("n_tokens"))
-        .otherwise(F.element_at(F.col("cums"), F.col("i")) - prefix)
-        .cast("long")
-        .alias("ctx_tokens"),
-        F.col("trunc").alias("truncated"),
-    )
+    return _np_context_windows(base, budget)
 
 
 def _np_context_windows(base: DataFrame, budget: int) -> DataFrame:
-    """mapInPandas scale path for context_windows: hash-repartition by
+    """mapInPandas body of context_windows: hash-repartition by
     conv, sort within partitions by (conv, turn), then ONE segmented
     numpy pass per Arrow batch — cumsums and the window-start
     searchsorted are computed for every conversation in the batch at
@@ -250,15 +166,13 @@ def _np_context_windows(base: DataFrame, budget: int) -> DataFrame:
     600k-turn bench fixture — per-group dispatch, not math, was the
     wall). A conversation straddling an Arrow batch boundary is
     carried into the next batch (batches arrive in partition sort
-    order), so results are exact regardless of batch cuts. Same
-    keep/clamp semantics as the expression path, equality-pinned in
-    tests."""
+    order), so results are exact regardless of batch cuts."""
     import numpy as np
     import pandas as pd
 
-    # key column types follow the INPUT (the expression path keeps
-    # them too — a bigint conv_id or long turn_idx must not be
-    # silently coerced to the fixture's string/int shape)
+    # key column types follow the INPUT (a bigint conv_id or long
+    # turn_idx must not be silently coerced to the fixture's
+    # string/int shape)
     dts = dict(base.dtypes)
     schema = (
         f"conv_id {dts['conv_id']}, turn_idx {dts['turn_idx']},"

@@ -48,17 +48,6 @@ def md5_prefix60(col: Column) -> Column:
     ).cast("long")
 
 
-def md5_seeded_prefix(col: Column, seed: int) -> Column:
-    """Portable seeded hash family: 16-hex-char md5 prefix of
-    '<seed>:<text>', compared AS A STRING — lowercase hex of equal
-    length orders identically to the unsigned integer it encodes, so
-    MIN() over these strings is MIN() over the hash values. DuckDB
-    mirror: ``substring(md5(seed || ':' || s), 1, 16)``."""
-    return F.substring(
-        F.md5(F.encode(F.concat(F.lit(f"{seed}:"), col), "UTF-8")), 1, 16
-    )
-
-
 def with_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                   n: int = 3) -> DataFrame:
     """(doc_id, shingles): DISTINCT word n-gram shingles of the
@@ -322,9 +311,11 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     permutations (standard MinHash trick).
 
     ``portable=False``: xxhash64(shingle, seed_i) longs (production).
-    ``portable=True``: md5_seeded_prefix hex strings — the identical
-    signature is computable in plain SQL, so the driver's DuckDB
-    oracle re-derives it end to end.
+    ``portable=True``: 16-hex-char md5 prefixes of '<seed>:<shingle>',
+    compared as strings (lowercase hex of equal length orders like the
+    integer it encodes, so MIN() over them is MIN() over the hashes).
+    The identical signature is computable in plain SQL, so the
+    query's DuckDB oracle re-derives it end to end.
 
     ``shingles`` short-circuits the shingling step with a caller-built
     (doc_id, shingles) table — the LSH operators shingle the corpus
@@ -709,7 +700,6 @@ def winnow_containment_pairs(
     max_fp_df: int = 1000,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fast: bool = False,
 ) -> DataFrame:
     """ASYMMETRIC containment detection over winnowing fingerprints
     (Schleimer et al., SIGMOD 2003): containment(A in B) =
@@ -730,15 +720,14 @@ def winnow_containment_pairs(
     ``max_fp_df`` — shared boilerplate — are excluded from candidate
     GENERATION only, and the exact intersection is restored from
     bounded per-doc hot-fp arrays, so the reported containment stays
-    exact for every surfaced pair). ``fast=True`` switches to the
-    xxhash64 fingerprint family (production); the md5 family is what
-    the DuckDB oracle re-derives."""
+    exact for every surfaced pair). Fingerprints are the md5 family
+    ``winnowed`` emits, which the DuckDB oracle re-derives."""
     from .text import winnowed
 
     base = winnowed(
         df.select(F.col(id_col).alias("doc_id"),
                   F.col(text_col).alias("text")),
-        k=k, window=window, fast=fast, out_col="_fps",
+        k=k, window=window, out_col="_fps",
     ).select("doc_id", "_fps").filter(F.size("_fps") > 0)
     # materialize the exploded fingerprint rows ONCE: six downstream
     # plans consume them (df-count agg, tagged probe, both sides of
@@ -773,8 +762,7 @@ def winnow_containment_pairs(
         .groupBy("inner_id", "outer_id")
         .agg(F.count("*").alias("shared_cold"))
     )
-    empty = F.array().cast(
-        "array<bigint>" if fast else "array<string>")
+    empty = F.array().cast("array<string>")
     ha = hot.select(F.col("doc_id").alias("inner_id"),
                     F.col("hot_fps").alias("hot_a"))
     hb = hot.select(F.col("doc_id").alias("outer_id"),

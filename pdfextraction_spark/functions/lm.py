@@ -18,10 +18,10 @@ Scale shape:
 - training is one tokenize→count aggregation plus a global top-V
   (TakeOrderedAndProject — no full sort); the model is BOUNDED (V+1
   rows), so it broadcasts.
-- scoring has two paths: the exact explode→broadcast-join→re-agg path
-  (one shuffle on doc_id, SQL-mirrorable — the oracle form) and the
-  vectorized path (model dict in a pandas_udf closure, like the PQ
-  codebooks: ZERO shuffle, one Arrow round-trip; the 100-TB default).
+- scoring is explode → broadcast join → re-aggregate: one shuffle on
+  doc_id, no Python, and the same plan shape the DuckDB oracle
+  mirrors (a pandas_udf scorer with the model dict in a broadcast
+  measured no faster at vocab 20 or 100k).
 
 Tokenization single-home: norm_ws_lower + single-space split (the
 exact-dedup family normalization), empty tokens dropped.
@@ -30,13 +30,9 @@ exact-dedup family normalization), empty tokens dropped.
 from __future__ import annotations
 
 import math
-from typing import Optional, Tuple
-
-import numpy as np
-import pandas as pd
+from typing import Tuple
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 
 from .text import norm_ws_lower
 
@@ -115,53 +111,20 @@ def perplexity_score(
     oov_logp: float,
     id_col: str = "doc_id",
     text_col: str = "text",
-    vectorized: bool = False,
 ) -> DataFrame:
     """Per-document perplexity exp(-mean logp). Zero-token documents
     are dropped (no distribution to score). Output:
-    (id_col, n_tokens, ppl).
-
-    ``vectorized=False``: explode → broadcast join → groupBy(id) —
-    exact and SQL-mirrorable (the driver oracle form).
-    ``vectorized=True``: the bounded model rides a pandas_udf closure;
-    the plan stays narrow (no explode, no shuffle) — the corpus-scale
-    path, parity-tested against the exact form."""
+    (id_col, n_tokens, ppl)."""
     toks = docs.select(
         F.col(id_col), _tokens(F.col(text_col)).alias("__toks")
     ).filter(F.size("__toks") > 0)
-    if not vectorized:
-        ex = toks.select(id_col, F.explode("__toks").alias("token"))
-        scored = ex.join(F.broadcast(lm), "token", "left").withColumn(
-            "__lp", F.coalesce(F.col("logp"), F.lit(oov_logp))
-        )
-        return scored.groupBy(id_col).agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.exp(-F.avg("__lp")).alias("ppl"),
-        )
-
-    # bounded collect (V+1 rows), shipped as a REAL Spark broadcast —
-    # a plain closure capture would re-pickle the dict into every task
-    # (fine at V=20, ~MBs per task at a production V=100k); broadcast
-    # sends it once per executor and the UDF dereferences .value
-    model = {r["token"]: r["logp"] for r in lm.collect()}
-    bc_model = docs.sparkSession.sparkContext.broadcast(model)
-
-    @pandas_udf("double")
-    def _ppl(tok_lists: pd.Series) -> pd.Series:
-        mdl = bc_model.value
-        out = np.empty(len(tok_lists), dtype=np.float64)
-        for i, toks_ in enumerate(tok_lists):
-            lps = np.fromiter(
-                (mdl.get(t, oov_logp) for t in toks_),
-                dtype=np.float64, count=len(toks_),
-            )
-            out[i] = math.exp(-lps.mean())
-        return pd.Series(out)
-
-    return toks.select(
-        id_col,
-        F.size("__toks").cast("long").alias("n_tokens"),
-        _ppl(F.col("__toks")).alias("ppl"),
+    ex = toks.select(id_col, F.explode("__toks").alias("token"))
+    scored = ex.join(F.broadcast(lm), "token", "left").withColumn(
+        "__lp", F.coalesce(F.col("logp"), F.lit(oov_logp))
+    )
+    return scored.groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("n_tokens"),
+        F.exp(-F.avg("__lp")).alias("ppl"),
     )
 
 
@@ -172,35 +135,23 @@ def ppl_buckets(
     id_col: str = "doc_id",
     text_col: str = "text",
     probs: Tuple[float, float] = (1.0 / 3.0, 2.0 / 3.0),
-    vectorized: bool = False,
-    approx: Optional[float] = None,
 ) -> DataFrame:
     """CCNet head/middle/tail stratification: split the corpus at the
-    ppl percentiles in ``probs``. Scale shape: the cutoffs are TWO
-    broadcast scalars (never a global ntile window — a single-
+    exact ppl percentiles in ``probs``. Scale shape: the cutoffs are
+    TWO broadcast scalars (never a global ntile window — a single-
     partition sort is the anti-pattern this function exists to avoid);
-    assignment is a plain CASE comparison. ``approx`` switches the
-    cutoff estimate to percentile_approx(accuracy=approx) for
-    billion-row corpora (the length_quantiles dial precedent)."""
+    assignment is a plain CASE comparison."""
     # two consumers (cutoff agg + bucket projection): checkpoint the
     # slim per-doc scores so the scoring chain runs once (the family's
     # lineage-cut discipline)
     scores = perplexity_score(
         docs, lm, oov_logp, id_col=id_col, text_col=text_col,
-        vectorized=vectorized,
     ).localCheckpoint()
     lo_p, hi_p = probs
-    if approx is None:
-        agg = scores.agg(
-            F.percentile("ppl", F.lit(lo_p)).alias("lo"),
-            F.percentile("ppl", F.lit(hi_p)).alias("hi"),
-        )
-    else:
-        agg = scores.agg(
-            F.percentile_approx("ppl", F.lit(lo_p), F.lit(int(approx))).alias("lo"),
-            F.percentile_approx("ppl", F.lit(hi_p), F.lit(int(approx))).alias("hi"),
-        )
-    row = agg.collect()[0]  # bounded: two scalars
+    row = scores.agg(
+        F.percentile("ppl", F.lit(lo_p)).alias("lo"),
+        F.percentile("ppl", F.lit(hi_p)).alias("hi"),
+    ).collect()[0]  # bounded: two scalars
     lo, hi = float(row["lo"]), float(row["hi"])
     bucket = (
         F.when(F.col("ppl") <= lo, F.lit("head"))

@@ -350,8 +350,6 @@ def corpus_length_quantiles(
     probs: Sequence[float] = (0.25, 0.5, 0.75, 0.9),
     stratum_col: str = "lang",
     text_col: str = "text",
-    approx: bool = False,
-    accuracy: int = 10000,
 ) -> DataFrame:
     """Per-stratum length quantiles of character and whitespace-token
     counts, plus the stratum count — the distribution summary a
@@ -359,21 +357,10 @@ def corpus_length_quantiles(
     dials. Output columns are scalar (p50_chars, ... — the driver
     canonicalizer rejects arrays).
 
-    ``approx=False`` (default, the driver-oracle path): EXACT
-    interpolated quantiles (R-7, the convention Spark `percentile`
-    and DuckDB `quantile_cont` share). Exact percentile materializes
-    each group's values — right for per-language reporting (bounded
-    strata).
-
-    ``approx=True`` (the billion-row dial): `percentile_approx`
-    (Greenwald-Khanna mergeable sketches, map-side combinable — no
-    group materialization, memory O(accuracy) per stratum no matter
-    the row count). ``accuracy`` trades memory for error: the rank
-    error is bounded by n_rows/accuracy, so accuracy=10000 pins the
-    reported quantile within ±0.01% of the true rank. The approx
-    value is an ACTUAL group member (no interpolation), so on integer
-    lengths it differs from R-7 by at most the local inter-value gap
-    — the pytest bound checks both guarantees on the fixture."""
+    Quantiles are EXACT and interpolated (R-7, the convention Spark
+    `percentile` and DuckDB `quantile_cont` share). Exact percentile
+    materializes each group's values — right for per-language
+    reporting (bounded strata)."""
     t = F.trim(F.col(text_col))
     n_tokens = F.when(F.length(t) == 0, F.lit(0)).otherwise(
         F.size(F.split(t, r"\s+"))
@@ -388,11 +375,6 @@ def corpus_length_quantiles(
         tag = f"p{int(round(p * 100))}"
         for col in ("n_chars", "n_tokens"):
             suffix = col.split("_")[1]
-            if approx:
-                q = F.percentile_approx(
-                    col, F.lit(float(p)), F.lit(int(accuracy))
-                ).cast("double")
-            else:
-                q = F.percentile(col, F.lit(float(p)))
+            q = F.percentile(col, F.lit(float(p)))
             aggs.append(F.round(q, 4).alias(f"{tag}_{suffix}"))
     return base.groupBy("stratum").agg(*aggs)

@@ -52,11 +52,9 @@ def ws_token_count(col: Column) -> Column:
 
 
 def bpe_token_count(col: Column) -> Column:
-    """Sub-word-ish token count via the BPE-style regex — the cheap
-    codegen HEURISTIC. When budgets must be tokenizer-exact (chunk/
-    pack/context at production), use functions/tokenizer.py
-    ``bpe_vocab_counter`` — a real merges-file BPE behind a broadcast
-    + vectorized pandas_udf."""
+    """Sub-word-ish token count via the BPE-style regex: a codegen
+    heuristic, not a trained tokenizer (no merges file, so counts are
+    an estimate of a real BPE's)."""
     return F.size(F.regexp_extract_all(col, F.lit(BPE_TOKEN_RE), 0))
 
 
@@ -189,16 +187,15 @@ def norm_ws_lower(col: Column) -> Column:
 
 
 def winnowed(df, text_col: str = "text", k: int = 8, window: int = 4,
-             fast: bool = False, out_col: str = "fingerprints"):
+             out_col: str = "fingerprints"):
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
     SIGMOD 2003) as a DataFrame transform: hash every character
     k-gram, keep the minimum hash of each sliding window of ``window``
     consecutive k-grams. Guarantees every match of length >=
     window+k-1 shares a selected fingerprint while keeping
     ~2/(window+1) of the grams. Appends ``out_col`` (sorted distinct
-    fingerprints; md5-prefix strings, or xxhash64 longs with
-    ``fast=True`` — the production family, recall-pinned against the
-    portable one in tests).
+    fingerprints as 16-hex md5 prefixes, the family DuckDB re-derives
+    in ``winnow_fingerprints_sql``).
 
     WHY a df-transform and not one Column expression: higher-order
     functions are interpreted (not codegen), and an interpreted
@@ -211,25 +208,19 @@ def winnowed(df, text_col: str = "text", k: int = 8, window: int = 4,
     stages separate because the staged expressions are non-cheap and
     multiply referenced. Measured 280x at 300-char docs (round 3);
     the pathology was previously masked by count()-pruned benching."""
-    if fast:
-        hash_fn, ddl = F.xxhash64, "array<bigint>"
-    else:
-        def hash_fn(g):
-            return F.substring(F.md5(F.encode(g, "UTF-8")), 1, 16)
-
-        ddl = "array<string>"
     low = F.lower(F.col(text_col))
     s1 = df.withColumn("_w_low", low).withColumn(
         "_w_n", F.length("_w_low") - (k - 1)
     )
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.col("_w_n"), F.lit(1))),
-        lambda i: hash_fn(F.col("_w_low").substr(i, F.lit(k))),
+        lambda i: F.substring(F.md5(F.encode(
+            F.col("_w_low").substr(i, F.lit(k)), "UTF-8")), 1, 16),
     )
     s2 = s1.withColumn("_w_grams", grams)
     g = F.col("_w_grams")
     n = F.col("_w_n")
-    selected = F.when(n <= 0, F.array().cast(ddl)).otherwise(
+    selected = F.when(n <= 0, F.array().cast("array<string>")).otherwise(
         F.when(
             n <= window,
             F.array(F.array_min(g)),
@@ -244,47 +235,3 @@ def winnowed(df, text_col: str = "text", k: int = 8, window: int = 4,
         s2.withColumn(out_col, F.array_sort(F.array_distinct(selected)))
         .drop("_w_low", "_w_n", "_w_grams")
     )
-
-
-def winnow_fingerprints(col: Column, k: int = 8, window: int = 4) -> Column:
-    """Single-expression winnowing (portable md5 family) — SMALL
-    INPUTS ONLY: as one nested expression the interpreted HOF
-    evaluator is O(len^2 * window) (see ``winnowed``, the staged
-    df-transform pipelines must use). Kept for fixture-scale tests
-    and as the semantic reference the DuckDB oracle mirrors; output
-    is identical to ``winnowed(..., fast=False)``."""
-    return _winnow_expr(
-        col, k, window,
-        lambda g: F.substring(F.md5(F.encode(g, "UTF-8")), 1, 16),
-        "array<string>",
-    )
-
-
-def winnow_fingerprints_fast(col: Column, k: int = 8,
-                             window: int = 4) -> Column:
-    """Single-expression winnowing, xxhash64 family — SMALL INPUTS
-    ONLY (same caveat as winnow_fingerprints); pipelines use
-    ``winnowed(..., fast=True)``."""
-    return _winnow_expr(col, k, window, F.xxhash64, "array<bigint>")
-
-
-def _winnow_expr(col: Column, k: int, window: int, hash_fn,
-                 ddl: str) -> Column:
-    low = F.lower(col)
-    n_grams = F.length(low) - (k - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n_grams, F.lit(1))),
-        lambda i: hash_fn(low.substr(i, F.lit(k))),
-    )
-    selected = F.when(n_grams <= 0, F.array().cast(ddl)).otherwise(
-        F.when(
-            n_grams <= window,
-            F.array(F.array_min(grams)),
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), n_grams - (window - 1)),
-                lambda j: F.array_min(F.slice(grams, j, window)),
-            )
-        )
-    )
-    return F.array_sort(F.array_distinct(selected))

@@ -29,9 +29,9 @@ the engine defines its own deterministic scale. The reference's
 ``regions`` list is summarized as counts (n_table_regions,
 n_field_lines) rather than prose descriptions.
 
-Pure DataFrame composition over the two extraction operators — one
-hash shuffle on (conv_id, turn_idx) for the region counts, then an
-equi-join; no new kernel code.
+One narrow mapInArrow stage over the turns: each pdf_layout envelope
+is decoded once and feeds both the layout kernel (field lines) and
+the table kernel (regions); no join, no shuffle.
 """
 
 from __future__ import annotations
@@ -40,56 +40,7 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
-
-
-def classify_blocks(extracted: DataFrame, tables: DataFrame) -> DataFrame:
-    """Per-turn block classification for decodable pdf_layout turns.
-
-    ``extracted``: output of extract_turns/extract_dataframe (native
-    spans array). ``tables``: output of extract_tables (one row per
-    table row). Returns (conv_id, turn_idx, block_class, confidence,
-    n_table_regions, n_field_lines)."""
-    fields = (
-        extracted.filter(
-            (F.col("payload_kind") == "pdf_layout") & ~F.col("parse_failed")
-        )
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.size(
-                F.filter("spans", lambda s: s["label"] == F.lit("fields"))
-            ).cast("long").alias("n_field_lines"),
-        )
-    )
-    regions = (
-        tables.groupBy("conv_id", "turn_idx")
-        .agg(F.count_distinct("table_idx").alias("n_table_regions"))
-    )
-    joined = fields.join(regions, ["conv_id", "turn_idx"], "left").withColumn(
-        "n_table_regions", F.coalesce("n_table_regions", F.lit(0)).cast("long")
-    )
-    has_t = F.col("n_table_regions") > 0
-    has_f = F.col("n_field_lines") > 0
-    block_class = (
-        F.when(has_t & has_f, "mixed")
-        .when(has_t, "table")
-        .when(has_f, "form")
-        .otherwise("unknown")
-    )
-    evidence = F.col("n_field_lines") + 2 * F.col("n_table_regions")
-    confidence = F.when(
-        has_t | has_f,
-        F.round(0.5 + 0.1 * F.least(evidence, F.lit(4)), 2),
-    ).otherwise(F.lit(0.0))
-    return joined.select(
-        "conv_id",
-        "turn_idx",
-        block_class.alias("block_class"),
-        confidence.alias("confidence"),
-        "n_table_regions",
-        "n_field_lines",
-    )
+from pyspark.sql import DataFrame
 
 
 _FUSED_DDL = ("conv_id string, turn_idx int, block_class string, "
@@ -160,12 +111,10 @@ def _classify_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
 
 
 def classify_turns(turns: DataFrame) -> DataFrame:
-    """Fused single-pass classifier: one narrow mapInArrow stage that
-    decodes each pdf_layout envelope ONCE and runs both evidence
-    kernels — no second extraction pass, no join, no shuffle. Agrees
-    row-for-row with classify_blocks() (pinned in tests); prefer this
-    form in pipelines, and the compositional form when the extraction
-    and table outputs are already materialized."""
+    """Per-turn block classification for decodable pdf_layout turns.
+    Returns (conv_id, turn_idx, block_class, confidence,
+    n_table_regions, n_field_lines); undecodable or empty envelopes
+    (parse_failed turns) and non-PDF turns yield no row."""
     return turns.select("conv_id", "turn_idx", "text").mapInArrow(
         _classify_batches, _FUSED_DDL
     )

@@ -901,8 +901,8 @@ def winnow_fingerprints_sql(table: str = "documents") -> str:
     return f"""
         WITH {_winnow_fps_ctes(table)}
         SELECT doc_id,
-               array_to_string(list_sort(list_distinct(fps)), ',')
-                 AS fingerprints,
+               coalesce(array_to_string(list_sort(list_distinct(fps)),
+                                        ','), '') AS fingerprints,
                CAST(len(list_distinct(fps)) AS BIGINT) AS n_fps
         FROM wsel
     """

@@ -193,8 +193,7 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language exact R-7 length quantiles (chars + whitespace
     tokens) — the distribution summary that chooses chunking/packing
-    dials; percentile_approx (t-digest) is the documented swap for
-    billion-row strata."""
+    dials."""
     from pdfextraction_spark.functions.repetition import (
         corpus_length_quantiles,
     )
@@ -225,10 +224,7 @@ def q_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture's q99 turn length, so both multi-turn contexts and the
     single-turn truncation clamp are exercised. Composes the
     extraction pipeline with the window op, so the oracle (golden
-    turns parquet + window SQL) checks both. Runs the default
-    (vectorized) path — the driver value-check therefore gates the
-    production plan, with the expression form held equal by the
-    pytest parity pins."""
+    turns parquet + window SQL) checks both."""
     from pdfextraction_spark.functions.chunking import context_windows
     from pdfextraction_spark.pipeline import extract_dataframe
 

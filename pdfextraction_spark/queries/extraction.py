@@ -115,9 +115,8 @@ def q_conv_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_classify_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Step-1 structure classification (openai_service.py:256-283,
     prompts.py:14-40) made deterministic: form/table/mixed per
-    decodable pdf_layout turn from field-line + table-region evidence.
-    Uses the fused single-pass form (one decode per envelope, no join);
-    pinned equal to the compositional classify_blocks in tests."""
+    decodable pdf_layout turn from field-line + table-region evidence,
+    in one mapInArrow pass (one decode per envelope, no join)."""
     from pdfextraction_spark.operators.classify import classify_turns
 
     return classify_turns(_fixture_turns(spark, sf_dir))

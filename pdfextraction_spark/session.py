@@ -16,7 +16,6 @@ def build_session(
     app_name: str = "pdfextraction-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict | None = None,
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_MASTER", None)
     if master is None:
@@ -58,20 +57,14 @@ def build_session(
         # single-threaded (0.4-0.6 s single-task stages in the funnel;
         # incremental_update 3.5 s -> 2.6 s with the floor lowered).
         # At warehouse scale partitions sit at/above the advisory size
-        # and the floor is inert; the env dial restores the default if
-        # a deployment prefers byte-balanced coalescing. 128k measured
-        # best across the suite (64k over-parallelized the light
-        # multi-shuffle aggregations: +0.3-0.75 s on repetition_stats/
-        # contamination_hits; 128k keeps the hash-heavy wins without
-        # that penalty).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("PDFX_AQE_MIN_PARTITION", "128k"),
-        )
+        # and the floor is inert. 128k measured best across the suite
+        # (64k over-parallelized the light multi-shuffle aggregations:
+        # +0.3-0.75 s on repetition_stats/contamination_hits; 128k
+        # keeps the hash-heavy wins without that penalty).
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+                "128k")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
     spark = b.getOrCreate()
     _warm_python_workers(spark)
     return spark
@@ -82,20 +75,16 @@ _WARMED = set()
 
 def _warm_python_workers(spark: SparkSession) -> None:
     """Pre-fork the Python worker pool with one trivial vectorized-UDF
-    job (PDFX_WARM_WORKERS=0 disables). A local[N] session forks N
-    workers the first time an Arrow/pandas stage runs, and every
-    worker imports pandas+pyarrow (~2-4 s wall for 32 parallel cold
-    imports) — without this, that one-time pool startup lands on
-    whichever query happens to hit the Python boundary first
-    (measured: the first IVF build read 4.6 s cold vs 1.2 s warm).
+    job. A local[N] session forks N workers the first time an
+    Arrow/pandas stage runs, and every worker imports pandas+pyarrow
+    (~2-4 s wall for 32 parallel cold imports) — without this, that
+    one-time pool startup lands on whichever query happens to hit the
+    Python boundary first (measured: the first IVF build read 4.6 s
+    cold vs 1.2 s warm).
     Same stance as the bench's untimed warm passes: shared
     infrastructure init must not be charged to one operator. Workers
     are reused for the life of the process (spark.python.worker.reuse
     default), so this runs once per session's context."""
-    import os as _os
-
-    if _os.environ.get("PDFX_WARM_WORKERS", "1") == "0":
-        return
     sc = spark.sparkContext
     if sc.applicationId in _WARMED:
         return

@@ -17,14 +17,10 @@ def golden_xs():
 def test_classify_blocks_vs_golden(spark, xs_parquet, golden_xs):
     import os
 
-    from pdfextraction_spark.operators.classify import classify_blocks
-    from pdfextraction_spark.operators.tables import extract_tables
-    from pdfextraction_spark.pipeline import extract_dataframe
+    from pdfextraction_spark.operators.classify import classify_turns
 
-    turns = spark.read.parquet(xs_parquet)
     got = (
-        classify_blocks(extract_dataframe(turns, num_partitions=4),
-                        extract_tables(turns))
+        classify_turns(spark.read.parquet(xs_parquet))
         .toPandas()
         .sort_values(["conv_id", "turn_idx"])
         .reset_index(drop=True)
@@ -224,26 +220,3 @@ def test_schema_norm_fuzz_vs_golden(spark):
     }
     for sid, payload in samples:
         assert got[sid] == normalized_schema_str_golden(payload), (sid, payload)
-
-
-def test_classify_fused_equals_composed(spark, xs_parquet):
-    """The fused one-decode classifier must equal the compositional
-    (extract + tables + join) form row-for-row."""
-    from pdfextraction_spark.operators.classify import (
-        classify_blocks,
-        classify_turns,
-    )
-    from pdfextraction_spark.operators.tables import extract_tables
-    from pdfextraction_spark.pipeline import extract_dataframe
-
-    turns = spark.read.parquet(xs_parquet)
-    cols = ["conv_id", "turn_idx", "block_class", "confidence",
-            "n_table_regions", "n_field_lines"]
-    fused = (classify_turns(turns).toPandas()
-             .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-    composed = (classify_blocks(extract_dataframe(turns, 4),
-                                extract_tables(turns)).toPandas()
-                .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
-    assert len(fused) == len(composed) > 0
-    for c in cols:
-        assert list(fused[c]) == list(composed[c]), c

@@ -814,15 +814,6 @@ class TestContainment:
         )
         assert got == want
 
-    def test_fast_family_finds_the_same_pair(self, spark):
-        got = {
-            (r.inner_id, r.outer_id)
-            for r in D.winnow_containment_pairs(
-                self._docs(spark), threshold=0.5, fast=True
-            ).collect()
-        }
-        assert (1, 2) in got
-
     def test_hot_fp_stoplist_keeps_exact_containment(self, spark):
         """With max_fp_df=1 every shared fp is 'hot': candidates can
         only come from cold collisions, so pairs sharing ONLY hot fps

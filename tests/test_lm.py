@@ -1,6 +1,6 @@
 """Unigram-LM perplexity scoring (CCNet-style quality gate):
-hand-computed model on a tiny corpus, exact-vs-vectorized path
-parity, OOV pricing and the ppl strata."""
+hand-computed model and scores on a tiny corpus, OOV pricing and the
+ppl strata."""
 
 import math
 
@@ -68,31 +68,13 @@ def test_score_hand_computed_and_oov(tiny_docs):
     assert max(out, key=lambda d: out[d]["ppl"]) == 3
 
 
-def test_vectorized_parity(tiny_docs):
-    lm, oov_logp, _ = train_unigram_lm(tiny_docs, vocab_size=4, alpha=1.0)
-    exact = {
-        (r["doc_id"], r["n_tokens"]): r["ppl"]
-        for r in perplexity_score(tiny_docs, lm, oov_logp).collect()
-    }
-    fast = {
-        (r["doc_id"], r["n_tokens"]): r["ppl"]
-        for r in perplexity_score(
-            tiny_docs, lm, oov_logp, vectorized=True
-        ).collect()
-    }
-    assert set(exact) == set(fast)
-    for k in exact:
-        assert fast[k] == pytest.approx(exact[k], rel=1e-12)
-
-
 def test_zero_token_docs_dropped(spark):
     docs = spark.createDataFrame(
         [(1, "hello world"), (2, ""), (3, "   ")], "doc_id int, text string"
     )
     lm, oov_logp, _ = train_unigram_lm(docs, vocab_size=2)
-    for vec in (False, True):
-        got = perplexity_score(docs, lm, oov_logp, vectorized=vec).collect()
-        assert sorted(r["doc_id"] for r in got) == [1]
+    got = perplexity_score(docs, lm, oov_logp).collect()
+    assert sorted(r["doc_id"] for r in got) == [1]
 
 
 def test_ppl_buckets_terciles(spark):
@@ -112,15 +94,3 @@ def test_ppl_buckets_terciles(spark):
             <= out[out.bucket == "middle"]["ppl"].min() + 1e-12)
     assert (out[out.bucket == "middle"]["ppl"].max()
             <= out[out.bucket == "tail"]["ppl"].min() + 1e-12)
-
-
-def test_ppl_buckets_approx_dial(spark):
-    from pdfextraction_spark.functions.lm import ppl_buckets
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    lm, oov_logp, _ = train_unigram_lm(docs, vocab_size=20)
-    exact = ppl_buckets(docs, lm, oov_logp).toPandas()
-    approx = ppl_buckets(docs, lm, oov_logp, approx=10000).toPandas()
-    m = exact.merge(approx, on="doc_id", suffixes=("_e", "_a"))
-    # at accuracy 10k on a small corpus the approx cutoffs agree
-    assert (m["bucket_e"] == m["bucket_a"]).mean() > 0.95

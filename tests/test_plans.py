@@ -97,17 +97,14 @@ class TestPlans:
         assert "ReadSchema: struct<conv_id:string,turn_idx:int,text:string>" in plan
 
     def test_classify_no_extra_exchange(self, spark, xs_parquet):
-        """classify_blocks: one exchange per extraction stage (the
-        salted repartition), one for the region-count aggregation, one
-        for the join co-partitioning — no more."""
-        from pdfextraction_spark.operators.classify import classify_blocks
-        from pdfextraction_spark.operators.tables import extract_tables
-        from pdfextraction_spark.pipeline import extract_dataframe
+        """classify_turns: one narrow mapInArrow stage over the turns —
+        each envelope is decoded once for both evidence kernels, so
+        there is no extraction exchange, no aggregation and no join."""
+        from pdfextraction_spark.operators.classify import classify_turns
 
-        turns = spark.read.parquet(xs_parquet)
-        plan = _plan(classify_blocks(extract_dataframe(turns, 4),
-                                     extract_tables(turns)))
-        assert plan.count("Exchange") <= 5
+        plan = _plan(classify_turns(spark.read.parquet(xs_parquet)))
+        assert "Exchange" not in plan
+        assert "MapInArrow" in plan
 
     def test_stoplist_broadcasts_only_hot_set(self, spark):
         """ngram_jaccard: the (tiny) hot-shingle stoplist is broadcast;
@@ -272,19 +269,6 @@ class TestRound4Plans:
         assert "SortMergeJoin" not in plan
         assert "ReadSchema: struct<text:string,source:string>" in plan
 
-    def test_context_windows_single_shuffle(self, spark):
-        """Window assembly = ONE shuffle (groupBy conv); the explode
-        and prefix arithmetic stay narrow. (AQE may add a coalesce
-        read over the same exchange — count real Exchange nodes.)"""
-        from pdfextraction_spark.functions.chunking import context_windows
-
-        turns = spark.createDataFrame(
-            [("a", 0, "x y"), ("a", 1, "z"), ("b", 0, "w")],
-            "conv_id string, turn_idx int, text string",
-        )
-        plan = _plan(context_windows(turns, budget=4, vectorized=False))
-        assert plan.count("Exchange") <= 1
-
     def test_semantic_dedup_join_keyed_on_list(self, spark):
         """The within-cluster prune self-joins on list_id only —
         cluster size bounds the quadratic; no cross join appears."""
@@ -296,16 +280,16 @@ class TestRound4Plans:
         assert "BroadcastNestedLoopJoin" not in plan
 
     def test_context_windows_vectorized_shape(self, spark):
-        """Scale path = ONE hash Exchange (repartition by conv) + an
-        in-partition sort + one MapInPandas stage — never a per-group
-        FlatMapGroups dispatch."""
+        """ONE hash Exchange (repartition by conv) + an in-partition
+        sort + one MapInPandas stage — never a per-group FlatMapGroups
+        dispatch."""
         from pdfextraction_spark.functions.chunking import context_windows
 
         turns = spark.createDataFrame(
             [("a", 0, "x y"), ("a", 1, "z"), ("b", 0, "w")],
             "conv_id string, turn_idx int, text string",
         )
-        plan = _plan(context_windows(turns, budget=4, vectorized=True))
+        plan = _plan(context_windows(turns, budget=4))
         assert plan.count("Exchange") == 1
         assert "MapInPandas" in plan
         assert "FlatMapGroupsInPandas" not in plan
@@ -340,19 +324,6 @@ class TestRound4Plans:
         plan = _plan(em.q_render_pages(spark, "/root/testdata/sf0.001"))
         assert "Exchange" not in plan
         assert "MapInPandas" in plan
-
-    def test_lm_vectorized_path_narrow(self, spark):
-        """The corpus-scale LM scoring path carries the bounded model
-        in a pandas_udf closure — no explode, no shuffle."""
-        from pdfextraction_spark.functions.lm import (
-            perplexity_score, train_unigram_lm,
-        )
-
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        lm, oov, _ = train_unigram_lm(docs, vocab_size=20)
-        plan = _plan(perplexity_score(docs, lm, oov, vectorized=True))
-        assert "Exchange" not in plan
-        assert "ArrowEvalPython" in plan
 
     def test_lm_exact_path_broadcasts_model(self, spark):
         from pdfextraction_spark.functions.lm import (

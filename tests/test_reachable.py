@@ -11,13 +11,14 @@ its tests.
 The pass is by name, to a fixed point. A def (function, class or
 module-level assignment) is live once its name is used by a root or by
 a live def; a live def makes every name in its body live. A name is
-used when it appears as a name, as an attribute, or as an identifier
-inside a string constant: registry keys, SQL text and docstrings can
-name code too. Imports bind names but do not use them, so a package
-``__init__`` re-export keeps nothing alive. Other module-level
-statements run on import, so their names are live. Matching by bare
-name over-approximates (two defs with one name live together), which
-is the safe side for a guard that fails on dead code.
+used only when it appears in code, as a name or as an attribute. Text
+inside a string constant (a docstring, a registry key, SQL) names
+nothing: a docstring that mentions a helper does not call it. Imports
+bind names but do not use them, so a package ``__init__`` re-export
+keeps nothing alive. Other module-level statements run on import, so
+their names are live. Matching by bare name over-approximates (two
+defs with one name live together), which is the safe side for a guard
+that fails on dead code.
 
 Needs no Spark.
 """
@@ -26,7 +27,6 @@ from __future__ import annotations
 
 import ast
 import os
-import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "pdfextraction_spark")
@@ -49,8 +49,6 @@ EXEMPT_DEFS = {
     ("kernels/tables.py", "tables_batch"),
 }
 
-_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
-
 
 def _py_files(base):
     for dirpath, dirnames, filenames in os.walk(base):
@@ -72,8 +70,6 @@ def _used_names(node):
             out.add(n.id)
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
-        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
-            out.update(_IDENT.findall(n.value))
     return out
 
 

@@ -648,66 +648,69 @@ class TestLengthQuantiles:
                            - round(float(np.percentile(toks, p)), 4)) \
                     < 1e-9
 
-    def test_approx_dial_bound(self, spark):
-        """approx=True (percentile_approx, the billion-row mergeable-
-        sketch dial): at accuracy >= n_rows the rank error bound
-        n/accuracy is < 1 row, so the sketch must return the exact
-        lower-neighbor group member — within one inter-value gap of
-        the R-7 interpolated exact value, and an actual member of the
-        group (no interpolation)."""
-        import numpy as np
 
-        from pdfextraction_spark.functions.repetition import (
-            corpus_length_quantiles,
-        )
+CTX_COLS = ["conv_id", "turn_idx", "n_tokens", "ctx_start_idx",
+            "ctx_n_turns", "ctx_tokens", "truncated"]
 
-        rows = [(i, "x " * (i % 17 + 1), "en" if i % 2 else "de")
-                for i in range(60)]
-        docs = spark.createDataFrame(
-            rows, "doc_id long, text string, lang string")
-        exact = corpus_length_quantiles(docs).toPandas() \
-            .set_index("stratum")
-        approx = corpus_length_quantiles(
-            docs, approx=True, accuracy=10000
-        ).toPandas().set_index("stratum")
-        assert list(exact.columns) == list(approx.columns)
-        for lang in ("en", "de"):
-            chars = np.sort([len(t) for _, t, lg in rows if lg == lang])
-            gap = float(np.max(np.diff(chars))) if len(chars) > 1 else 0.0
-            members = set(chars.tolist())
-            for p in (25, 50, 75, 90):
-                a = approx.loc[lang, f"p{p}_chars"]
-                e = exact.loc[lang, f"p{p}_chars"]
-                # sketch value is an actual group member ...
-                assert a in members
-                # ... within one inter-value gap of the R-7 exact value
-                assert abs(a - e) <= gap + 1e-9
+
+def _context_windows_ref(rows, budget):
+    """Loop reference for context_windows: each turn's context walks
+    back over earlier turns while the running token total still fits
+    ``budget``; a turn over budget on its own is its own (truncated)
+    context. NULL or blank text is 0 tokens."""
+    import pandas as pd
+
+    convs = {}
+    for conv, idx, text in rows:
+        convs.setdefault(conv, []).append((idx, len((text or "").split())))
+    out = []
+    for conv, turns in convs.items():
+        turns.sort()
+        for i, (idx, tok) in enumerate(turns):
+            j, total = i, tok
+            while j > 0 and total + turns[j - 1][1] <= budget:
+                j -= 1
+                total += turns[j][1]
+            out.append((conv, idx, tok, turns[j][0], i - j + 1, total,
+                        tok > budget))
+    return pd.DataFrame(out, columns=CTX_COLS)
+
+
+def _assert_context_windows_match_ref(got, rows, budget):
+    import pandas as pd
+
+    key = ["conv_id", "turn_idx"]
+    got = got[CTX_COLS].sort_values(key).reset_index(drop=True)
+    want = (_context_windows_ref(rows, budget).sort_values(key)
+            .reset_index(drop=True).astype(got.dtypes.to_dict()))
+    pd.testing.assert_frame_equal(got, want)
 
 
 class TestContextWindows:
-    """Per-turn context assembly (chat-training budgeted history)."""
+    """Per-turn context assembly (chat-training budgeted history),
+    checked against the loop reference ``_context_windows_ref``."""
 
-    def _turns(self, spark):
+    ROWS = [
         # conv A: token counts 3,4,5,200,2 — budget 10 exercises
         # multi-turn windows, window shrink, and the truncation clamp
-        rows = [
-            ("A", 0, "w w w"),
-            ("A", 1, "x x x x"),
-            ("A", 2, "y y y y y"),
-            ("A", 3, " ".join(["z"] * 200)),
-            ("A", 4, "q q"),
-            ("B", 7, ""),          # empty text -> 0 tokens
-            ("B", 9, "a b"),
-        ]
+        ("A", 0, "w w w"),
+        ("A", 1, "x x x x"),
+        ("A", 2, "y y y y y"),
+        ("A", 3, " ".join(["z"] * 200)),
+        ("A", 4, "q q"),
+        ("B", 7, ""),          # empty text -> 0 tokens
+        ("B", 9, "a b"),
+    ]
+
+    def _turns(self, spark):
         return spark.createDataFrame(
-            rows, "conv_id string, turn_idx int, text string")
+            self.ROWS, "conv_id string, turn_idx int, text string")
 
     def test_hand_computed(self, spark):
         from pdfextraction_spark.functions.chunking import context_windows
 
         out = (
-            context_windows(self._turns(spark), budget=10,
-                            vectorized=False)
+            context_windows(self._turns(spark), budget=10)
             .toPandas().set_index(["conv_id", "turn_idx"]).sort_index()
         )
         # A0: just itself (3); A1: 3+4=7 fits; A2: 4+5=9 fits, +3=12
@@ -731,22 +734,14 @@ class TestContextWindows:
         assert (~out.drop(index=[("A", 3)]).truncated).all()
 
     def test_vectorized_parity(self, spark):
-        import pandas as pd
-
         from pdfextraction_spark.functions.chunking import context_windows
 
-        t = self._turns(spark)
-        key = ["conv_id", "turn_idx"]
-        a = context_windows(t, budget=10, vectorized=False).toPandas() \
-            .sort_values(key).reset_index(drop=True)
-        b = context_windows(t, budget=10, vectorized=True).toPandas() \
-            .sort_values(key).reset_index(drop=True)
-        a = a.astype(b.dtypes.to_dict())
-        pd.testing.assert_frame_equal(a, b)
+        _assert_context_windows_match_ref(
+            context_windows(self._turns(spark), budget=10).toPandas(),
+            self.ROWS, 10)
 
     def test_vectorized_parity_fuzz(self, spark):
         import numpy as np
-        import pandas as pd
 
         from pdfextraction_spark.functions.chunking import context_windows
 
@@ -759,15 +754,10 @@ class TestContextWindows:
                 rows.append((f"c{c}", i, " ".join(["t"] * k)))
         t = spark.createDataFrame(
             rows, "conv_id string, turn_idx int, text string")
-        key = ["conv_id", "turn_idx"]
-        a = context_windows(t, budget=25, vectorized=False).toPandas() \
-            .sort_values(key).reset_index(drop=True)
-        b = context_windows(t, budget=25, vectorized=True).toPandas() \
-            .sort_values(key).reset_index(drop=True)
-        a = a.astype(b.dtypes.to_dict())
-        pd.testing.assert_frame_equal(a, b)
+        got = context_windows(t, budget=25).toPandas()
+        _assert_context_windows_match_ref(got, rows, 25)
         # window-start is monotone within a conversation
-        for _, g in a.groupby("conv_id"):
+        for _, g in got.groupby("conv_id"):
             s = g.sort_values("turn_idx").ctx_start_idx.to_numpy()
             assert (np.diff(s) >= 0).all()
 
@@ -821,11 +811,9 @@ class TestReviewFixesR4:
         """The mapInPandas carry path: with 16-row Arrow batches a
         128-turn conversation spans 8+ batches, a 16-turn one closes
         exactly ON a batch boundary, and singletons land between —
-        the held-pieces carry must reassemble every case exactly
-        (pinned against the expression form, which has no batching)."""
-        import numpy as np
-        import pandas as pd
-
+        the held-pieces carry must reassemble every case exactly.
+        10-row batches also close a held conversation in the middle
+        of a batch that goes on to start the next one."""
         from pdfextraction_spark.functions.chunking import context_windows
 
         rows = []
@@ -836,57 +824,44 @@ class TestReviewFixesR4:
         t = spark.createDataFrame(
             rows, "conv_id string, turn_idx int, text string"
         ).repartition(2)
-        key = ["conv_id", "turn_idx"]
         old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
-        try:
-            b = context_windows(t, budget=20, vectorized=True).toPandas() \
-                .sort_values(key).reset_index(drop=True)
-        finally:
+        for batch in ("16", "10"):
             spark.conf.set(
-                "spark.sql.execution.arrow.maxRecordsPerBatch", old)
-        a = context_windows(t, budget=20, vectorized=False).toPandas() \
-            .sort_values(key).reset_index(drop=True)
-        a = a.astype(b.dtypes.to_dict())
-        pd.testing.assert_frame_equal(a, b)
-        # every turn present exactly once despite the batch cuts
-        assert len(b) == 128 + 16 + 1 + 47 + 16 + 3
+                "spark.sql.execution.arrow.maxRecordsPerBatch", batch)
+            try:
+                got = context_windows(t, budget=20).toPandas()
+            finally:
+                spark.conf.set(
+                    "spark.sql.execution.arrow.maxRecordsPerBatch", old)
+            # every turn present exactly once despite the batch cuts
+            assert len(got) == 128 + 16 + 1 + 47 + 16 + 3
+            _assert_context_windows_match_ref(got, rows, 20)
 
     def test_context_windows_null_text_is_zero_tokens(self, spark):
-        import pandas as pd
-
         from pdfextraction_spark.functions.chunking import context_windows
 
         rows = [("A", 0, "a b c"), ("A", 1, None), ("A", 2, "d e")]
         t = spark.createDataFrame(
             rows, "conv_id string, turn_idx int, text string")
-        out = context_windows(t, budget=10, vectorized=False).toPandas() \
-            .set_index("turn_idx").sort_index()
+        got = context_windows(t, budget=10).toPandas()
+        out = got.set_index("turn_idx").sort_index()
         # NULL turn counts 0 tokens; the running sum must NOT restart
         assert out.loc[1, "n_tokens"] == 0
         assert out.loc[2, "ctx_start_idx"] == 0
         assert out.loc[2, "ctx_tokens"] == 5
-        v = context_windows(t, budget=10, vectorized=True).toPandas() \
-            .sort_values("turn_idx").reset_index(drop=True)
-        e = out.reset_index()[v.columns].astype(v.dtypes.to_dict())
-        pd.testing.assert_frame_equal(
-            e.sort_values("turn_idx").reset_index(drop=True), v)
+        _assert_context_windows_match_ref(got, rows, 10)
 
     def test_context_windows_vectorized_long_keys(self, spark):
-        import pandas as pd
-
         from pdfextraction_spark.functions.chunking import context_windows
 
         rows = [(10**12, 0, "a b"), (10**12, 1, "c d e"),
                 (7, 5, "x y z w")]
         t = spark.createDataFrame(
             rows, "conv_id long, turn_idx long, text string")
-        a = context_windows(t, budget=4, vectorized=False).toPandas() \
-            .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-        b = context_windows(t, budget=4, vectorized=True).toPandas() \
-            .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-        pd.testing.assert_frame_equal(a.astype(b.dtypes.to_dict()), b)
-        assert a.conv_id.dtype.kind == "i"  # keys keep the input type
+        got = context_windows(t, budget=4).toPandas()
+        assert got.conv_id.dtype.kind == "i"  # keys keep the input type
+        assert got.turn_idx.dtype.kind == "i"
+        _assert_context_windows_match_ref(got, rows, 4)
 
     def test_mixture_weights_zero_token_source(self, spark):
         import duckdb

@@ -98,9 +98,8 @@ def test_winnowing_guarantee(spark):
     substring of length >= window + k - 1 share at least one selected
     fingerprint; fingerprints of unrelated random texts differ."""
     import numpy as np
-    from pyspark.sql import functions as F
 
-    from pdfextraction_spark.functions.text import winnow_fingerprints
+    from pdfextraction_spark.functions.text import winnowed
 
     rng = np.random.default_rng(31)
 
@@ -118,9 +117,7 @@ def test_winnowing_guarantee(spark):
     df = spark.createDataFrame(rows, "doc_id int, text string")
     fps = {
         r.doc_id: set(r.fps)
-        for r in df.select(
-            "doc_id", winnow_fingerprints(F.col("text"), k=8, window=4).alias("fps")
-        ).collect()
+        for r in winnowed(df, k=8, window=4, out_col="fps").collect()
     }
     assert fps[0] & fps[1], "shared substring must share a fingerprint"
     assert not (fps[0] & fps[2] & fps[1] & fps[3])
@@ -130,87 +127,26 @@ def test_winnowing_guarantee(spark):
 
 
 def test_winnowed_staged_equals_expression_form(spark):
-    """The staged df-transform (the O(len*w) pipeline form) must be
-    value-identical to the single-expression reference form, for both
-    hash families."""
+    """The staged df-transform equals the portable DuckDB derivation
+    (``winnow_fingerprints_sql``, the query's oracle) on texts shorter
+    than k, exactly k, inside one window, and long."""
+    import duckdb
     import numpy as np
-    from pyspark.sql import functions as F
 
-    from pdfextraction_spark.functions.text import (
-        winnow_fingerprints,
-        winnow_fingerprints_fast,
-        winnowed,
-    )
+    from pdfextraction_spark.functions.text import winnowed
+    from pdfextraction_spark.oracle import portable_sql as P
 
     rng = np.random.default_rng(3)
     rows = [(i, "".join(chr(97 + int(c))
                         for c in rng.integers(0, 26, size=int(n))))
             for i, n in enumerate([0, 3, 8, 11, 40, 200])]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    expr = df.select(
-        "doc_id",
-        winnow_fingerprints(F.col("text")).alias("slow"),
-        winnow_fingerprints_fast(F.col("text")).alias("fast"),
-    )
-    staged_slow = winnowed(df, out_col="fps")
-    staged_fast = winnowed(df, fast=True, out_col="fps")
-    e = {r.doc_id: (list(r.slow), list(r.fast)) for r in expr.collect()}
-    for r in staged_slow.collect():
-        assert list(r.fps) == e[r.doc_id][0], r.doc_id
-    for r in staged_fast.collect():
-        assert list(r.fps) == e[r.doc_id][1], r.doc_id
-
-
-def test_winnowing_fast_matches_portable_contract(spark):
-    """winnow_fingerprints_fast (xxhash64 production form) keeps the
-    winnowing guarantee and the selection density of the portable md5
-    form on the same corpus: every substring-sharing pair detected by
-    the portable form is detected by the fast form (and vice versa),
-    and per-doc fingerprint counts track closely (the ~2/(w+1)
-    density is hash-family-independent in expectation)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from pdfextraction_spark.functions.text import (
-        winnow_fingerprints,
-        winnow_fingerprints_fast,
-    )
-
-    rng = np.random.default_rng(47)
-
-    def rand_text(n):
-        return "".join(chr(97 + int(c)) for c in rng.integers(0, 26, size=n))
-
-    # 30 docs; every even doc shares a 40-char block with its successor
-    rows, did = [], 0
-    for b in range(15):
-        shared = rand_text(40)
-        rows.append((did, rand_text(50) + shared + rand_text(50))); did += 1
-        rows.append((did, rand_text(70) + shared + rand_text(30))); did += 1
-    df = spark.createDataFrame(rows, "doc_id int, text string")
-    out = df.select(
-        "doc_id",
-        winnow_fingerprints(F.col("text"), k=8, window=4).alias("slow"),
-        winnow_fingerprints_fast(F.col("text"), k=8, window=4).alias("fast"),
-    ).collect()
-    slow = {r.doc_id: set(r.slow) for r in out}
-    fast = {r.doc_id: set(r.fast) for r in out}
-
-    def overlap_pairs(fp):
-        ids = sorted(fp)
-        return {
-            (a, b)
-            for i, a in enumerate(ids) for b in ids[i + 1:]
-            if fp[a] & fp[b]
-        }
-
-    planted = {(2 * b, 2 * b + 1) for b in range(15)}
-    sp, fp_ = overlap_pairs(slow), overlap_pairs(fast)
-    assert planted <= sp and planted <= fp_  # guarantee holds for both
-    # no rampant false positives in either family
-    assert len(sp - planted) <= 2 and len(fp_ - planted) <= 2
-    # density parity: counts within 25% per doc
-    for d in slow:
-        assert abs(len(slow[d]) - len(fast[d])) <= max(
-            3, 0.25 * len(slow[d])
-        ), d
+    got = {r.doc_id: ",".join(r.fps)
+           for r in winnowed(df, out_col="fps").collect()}
+    con = duckdb.connect()
+    con.register("documents", df.toPandas())
+    want = dict(con.execute(
+        f"SELECT doc_id, fingerprints FROM ({P.winnow_fingerprints_sql()})"
+    ).fetchall())
+    assert got == want
+    assert got[0] == got[1] == "" and got[5].count(",") > 10
