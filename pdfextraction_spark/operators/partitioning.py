@@ -7,9 +7,11 @@
   spreads over ceil(turns/K) partitions instead of hot-spotting one
   executor. Safe because per-turn extraction never crosses turns; a
   conversation-level merge (operators/merge.py) re-shuffles unsalted.
-- ``sort_within``: stable (conv_id, turn_idx) order inside every
-  partition — the north rule's "stable turn ordering" making per-turn
-  output deterministic partition-by-partition.
+- ``sort_within``: (conv_id, turn_idx) order inside every partition
+  after that shuffle, whose arrival order is not deterministic. It
+  runs only with the exchange, for undersplit scans; a scan-parallel
+  input keeps its file order. Per-turn values never depend on it
+  (the kernel is row-local), only the row order within a file.
 """
 
 from __future__ import annotations

@@ -2,19 +2,19 @@
 
     transcripts scan
       -> anti-join committed partitions (resume)
-      -> salted repartition by hash(conv_id) (+ turn-range salt)
-      -> sortWithinPartitions(conv_id, turn_idx)
+      -> [undersplit scan only] salted repartition by hash(conv_id)
+         (+ turn-range salt), then sortWithinPartitions(conv_id, turn_idx)
       -> fused mapInArrow extraction stage
       -> append output parquet (lineage columns)
       -> append per-partition manifest rows (metrics)
 
 Chunked commits: logical partitions are processed in ``n_chunks``
-groups. Each group is extracted through ``extract_dataframe`` with the
-exchange forced on (the salted repartition is what keys a chunk to its
-partitions) and runs ONE Spark job, the output append. The Spark
-driver then does the chunk's bookkeeping with pyarrow: it groups the metric
-columns of the chunk's committed files into per-partition stats and
-commits the manifest rows (sources/manifest.py). The job summary's
+groups. A group is a filter on ``partition_id`` (a pure function of
+conv_id, so no exchange is needed to find its rows), extracted through
+``extract_dataframe``, and runs ONE Spark job, the output append. The
+Spark driver then does the chunk's bookkeeping with pyarrow: it groups
+the metric columns of the chunk's committed files into per-partition
+stats and commits the manifest rows (sources/manifest.py). The job summary's
 ``observed_metrics`` are sums of those manifest rows, so the summary
 and the manifest count the same committed rows. A killed run resumes
 at chunk granularity with no duplicate rows (tests/test_resume.py).
@@ -59,35 +59,29 @@ def extract_dataframe(
     turns: DataFrame,
     num_partitions: int = DEFAULT_NUM_PARTITIONS,
     salt_turns: int = MEGA_CONV_TURNS_PER_SALT,
-    shuffle: bool | None = None,
 ) -> DataFrame:
     """Pure transformation: transcripts -> extracted turns (no sinks).
 
     Per-turn extraction is row-local (``extract_turns`` is a narrow
     map with no cross-row state), so the salted exchange contributes
-    nothing to correctness here — it exists to (a) give undersplit
-    inputs parallelism (a single pandas-written parquet file scans as
-    ONE task) and (b) key the resumable job's chunk/manifest
-    semantics (``run_extraction_job`` keeps it unconditionally).
-    When the scan itself already spreads the corpus across the
+    nothing to correctness here — it exists to give undersplit inputs
+    parallelism (a single pandas-written parquet file scans as ONE
+    task). When the scan itself already spreads the corpus across the
     cluster, shuffling every byte before a per-row kernel doubles the
     I/O for zero gain; at warehouse scale that is a full extra pass
     over the corpus (guide §2.1: remove shuffles outright).
 
-    ``shuffle=None`` (auto) keeps the exchange unless the input's
-    planned scan already has at least ``defaultParallelism``
-    partitions — "the scan alone saturates the cluster", counted the
-    way Spark will run it. File count is not that proxy: Spark
-    bin-packs tiny files into shared splits (many tiny files can scan
-    as one task and need the exchange), and splits a large file with
-    many row groups into several (it needs none). Values are identical
-    on both paths (pinned by test); output ROW ORDER is not part of
-    the contract either way.
+    The exchange is kept only when the input's planned scan has fewer
+    than ``defaultParallelism`` partitions — "the scan alone saturates
+    the cluster", counted the way Spark will run it. File count is not
+    that proxy: Spark bin-packs tiny files into shared splits (many
+    tiny files can scan as one task and need the exchange), and splits
+    a large file with many row groups into several (it needs none).
+    Values are identical on both paths (pinned by test); output ROW
+    ORDER is not part of the contract either way.
     """
-    if shuffle is None:
-        shuffle = (turns.rdd.getNumPartitions()
-                   < turns.sparkSession.sparkContext.defaultParallelism)
-    if not shuffle:
+    if (turns.rdd.getNumPartitions()
+            >= turns.sparkSession.sparkContext.defaultParallelism):
         return extract_turns(turns)
     return extract_turns(prepare_for_extraction(turns, num_partitions, salt_turns))
 
@@ -136,6 +130,10 @@ def run_extraction_job(
     window of chunk k — after its output append, before its manifest
     append (resume tests only).
     """
+    # zero chunks would run nothing yet report every partition processed
+    if n_chunks < 1 or num_partitions < 1:
+        raise ValueError(f"need n_chunks >= 1 and num_partitions >= 1, "
+                         f"got {n_chunks} and {num_partitions}")
     with writer_lock(output_path):
         return _run_locked(
             spark, input_path, output_path, manifest_path, run_id,
@@ -297,9 +295,7 @@ def _run_locked(
     observed = {"turns": 0, "parse_failures": 0, "blocks_dropped": 0}
     for ci, part_group in enumerate(chunks):
         chunk_df = turns.filter(F.col("partition_id").isin(part_group))
-        extracted = extract_dataframe(
-            chunk_df, max(len(part_group), 1), salt_turns, shuffle=True
-        )
+        extracted = extract_dataframe(chunk_df, len(part_group), salt_turns)
         # partition_id is a pure function of conv_id -> recompute after
         # the Arrow stage instead of shipping it through the kernel
         out = logical_partition_id(extracted, num_partitions)

@@ -185,3 +185,72 @@ def test_crash_before_manifest_rename(spark, tmp_path, monkeypatch):
     mf_rows = spark.read.parquet(mf).toPandas()
     assert mf_rows["row_count"].sum() == n_turns
     assert sorted(mf_rows["partition_id"]) == list(range(8))
+
+
+@pytest.mark.parametrize("bad", [{"n_chunks": 0}, {"num_partitions": 0}])
+def test_job_rejects_empty_chunking(spark, tmp_path, bad):
+    """With no chunk or no partition the job would run nothing yet
+    report work done, so it refuses before taking the writer lock."""
+    from pdfextraction_spark.pipeline import run_extraction_job
+
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match=">= 1"):
+        run_extraction_job(spark, str(tmp_path / "in"), str(out),
+                           str(tmp_path / "mf"), **bad)
+    assert not out.exists()
+
+
+@pytest.mark.slow
+def test_resume_on_scan_parallel_input(spark, tmp_path, xs_parquet,
+                                       monkeypatch):
+    """An input that scans as at least ``defaultParallelism`` partitions
+    is extracted chunk by chunk with no exchange. A crash after one
+    chunk and a resume leave no duplicate rows and the same rows as the
+    job on the single-file fixture, whose undersplit scan keeps the
+    salted exchange."""
+    import pdfextraction_spark.pipeline as pipeline
+
+    wide = str(tmp_path / "wide")
+    spark.read.parquet(xs_parquet).repartition(8).write.parquet(wide)
+    assert (spark.read.parquet(wide).rdd.getNumPartitions()
+            >= spark.sparkContext.defaultParallelism)
+
+    plans = []
+    real_extract = pipeline.extract_dataframe
+
+    def capture_plan(*args):
+        df = real_extract(*args)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return df
+
+    monkeypatch.setattr(pipeline, "extract_dataframe", capture_plan)
+
+    out, mf = str(tmp_path / "out"), str(tmp_path / "mf")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        pipeline.run_extraction_job(spark, wide, out, mf, run_id="w1",
+                                    num_partitions=8, n_chunks=4,
+                                    fail_after_chunks=1)
+    summary = pipeline.run_extraction_job(spark, wide, out, mf, run_id="w2",
+                                          num_partitions=8, n_chunks=4)
+    assert summary["partitions_done_before"] == 2
+    assert summary["partitions_processed"] == 6
+    assert len(plans) == 1 + 4  # the crashed run's chunk + the resume's
+    assert all("Exchange" not in p for p in plans)
+
+    plans.clear()
+    ref_out = str(tmp_path / "ref_out")
+    pipeline.run_extraction_job(spark, xs_parquet, ref_out,
+                                str(tmp_path / "ref_mf"),
+                                num_partitions=8, n_chunks=4)
+    assert len(plans) == 4
+    assert all(p.count("Exchange") == 1 for p in plans)
+
+    lineage = ["run_id", "commit_id", "source_snapshot_id"]
+    got = spark.read.parquet(out).drop(*lineage)
+    ref = spark.read.parquet(ref_out).drop(*lineage)
+    n = got.count()
+    assert n == ref.count() == spark.read.parquet(xs_parquet).count()
+    assert got.select("conv_id", "turn_idx").distinct().count() == n
+    assert got.exceptAll(ref).count() == 0 == ref.exceptAll(got).count()
+    mf_rows = pq.read_table(mf, columns=["row_count"]).column("row_count")
+    assert sum(mf_rows.to_pylist()) == n

@@ -1,8 +1,10 @@
 """Physical-plan audits: the properties that make the engine hold at
 100 TB must survive refactors — filter pushdown to the scan, column
 pruning, broadcast of small dims, map-side partial aggregation, and
-exactly ONE exchange in the extraction pipeline (the mandated salted
-repartition)."""
+at most ONE exchange in the extraction pipeline: the salted
+repartition, planned only when the scan is undersplit (fewer
+partitions than ``defaultParallelism``), none for a scan-parallel
+input."""
 
 import pytest
 
@@ -56,11 +58,15 @@ class TestPlans:
     def test_extraction_skips_exchange_on_wide_scans(
             self, spark, xs_parquet, tmp_path_factory):
         """Per-turn extraction is row-local, so when the scan already
-        yields >= defaultParallelism files the salted exchange is
+        yields >= defaultParallelism partitions the salted exchange is
         skipped (guide: remove shuffles outright) — and the two paths
-        are value-identical (the contract the auto dial rests on)."""
+        are value-identical (the contract the gate rests on)."""
         import pandas as pd
 
+        from pdfextraction_spark.operators.extract import extract_turns
+        from pdfextraction_spark.operators.partitioning import (
+            prepare_for_extraction,
+        )
         from pdfextraction_spark.pipeline import extract_dataframe
 
         src = spark.read.parquet(xs_parquet)
@@ -69,7 +75,7 @@ class TestPlans:
         turns = spark.read.parquet(wide)
         auto = extract_dataframe(turns, 8)
         assert "Exchange" not in _plan(auto)  # scan-parallel: no shuffle
-        forced = extract_dataframe(turns, 8, shuffle=True)
+        forced = extract_turns(prepare_for_extraction(turns, 8))
         assert _plan(forced).count("Exchange") == 1
 
         pd.testing.assert_frame_equal(_canon(auto), _canon(forced))
@@ -349,6 +355,10 @@ def test_extraction_keeps_exchange_when_tiny_files_pack(
     import pandas as pd
     import pyarrow.parquet as pq
 
+    from pdfextraction_spark.operators.extract import extract_turns
+    from pdfextraction_spark.operators.partitioning import (
+        prepare_for_extraction,
+    )
     from pdfextraction_spark.pipeline import extract_dataframe
 
     n_cores = spark.sparkContext.defaultParallelism
@@ -390,7 +400,7 @@ def test_extraction_keeps_exchange_when_tiny_files_pack(
         assert turns.rdd.getNumPartitions() >= n_cores
         auto = extract_dataframe(turns, 8)
         assert "Exchange" not in _plan(auto)
-        forced = extract_dataframe(turns, 8, shuffle=True)
+        forced = extract_turns(prepare_for_extraction(turns, 8))
         assert _plan(forced).count("Exchange") == 1
         got = _canon(auto)
         assert len(got) == table.num_rows
