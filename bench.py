@@ -68,9 +68,8 @@ HEADLINE = [
     "ann_cosine_topk",
     "ann_lsh_topk",
     "ann_ivf_topk",
-    # PQ family at the PRODUCTION codebook size (k=256, Lloyd-trained,
-    # vectorized encode — the literal-expression plan the driver
-    # queries use for oracle-exactness stalls in planning at this k)
+    # PQ family at the PRODUCTION codebook size (k=256, Lloyd-trained;
+    # the driver queries run k=16 seed codebooks for oracle-exactness)
     "pq_encode",
     "pq_adc_topk",
     "ann_ivfpq_topk",
@@ -521,7 +520,6 @@ def production_queries() -> dict:
         ),
         "ann_ivf_topk": lambda s, d: ivf_topk(
             _emb(s, d), _queries(s, d), k=10, n_centroids=16, n_probe=4,
-            vectorized=True,
             # index BUILD (seed + Lloyd) is a one-time cost a
             # deployment amortizes across queries; build once per
             # data dir so the timed wall measures assignment + probe +
@@ -530,26 +528,20 @@ def production_queries() -> dict:
         ),
         # PQ at production scale: k=256 Lloyd-trained codebooks (the
         # driver queries run k=16 seed codebooks for oracle-exactness;
-        # at k=256 only the vectorized encode is a usable plan —
         # codebook build reported separately, like the IVF index)
-        "pq_encode": lambda s, d: pq_encode(
-            _emb(s, d), _pq_books(s, d), vectorized=True
-        ),
+        "pq_encode": lambda s, d: pq_encode(_emb(s, d), _pq_books(s, d)),
         "pq_adc_topk": lambda s, d: pq_adc_topk(
             _emb(s, d), _queries(s, d), _pq_books(s, d), k=10,
-            vectorized=True,
         ),
         "ann_ivfpq_topk": lambda s, d: ivfpq_topk(
             _emb(s, d), _queries(s, d), _pq_books(s, d),
             centroids=_ivf_centroids(s, d), k=10, n_probe=4,
-            vectorized=True,
         ),
         # production semantic dedup: Lloyd-trained coarse centroids
-        # (shared cached index) + numpy assignment; the driver query
-        # runs lloyd_iters=0 seeds for oracle-exactness
+        # (shared cached index); the driver query runs lloyd_iters=0
+        # seeds for oracle-exactness
         "semantic_dedup": lambda s, d: semantic_dedup(
             _emb(s, d), threshold=0.3, centroids=_ivf_centroids(s, d),
-            vectorized=True,
         ),
         # context assembly over the RAW bench transcripts (the driver
         # query composes extraction first — extraction throughput is
@@ -588,7 +580,7 @@ PQ_BUILD_WALLS = {}
 
 def _pq_books(spark, sf_dir):
     """Cached per-data-dir PQ codebooks at the production config
-    (m=8, k=256, one Lloyd refinement, vectorized assignment) — a
+    (m=8, k=256, one Lloyd refinement) — a
     one-time build a deployment amortizes, reported separately."""
     from pdfextraction_spark.functions.similarity import (
         pq_train_codebooks,
@@ -599,7 +591,7 @@ def _pq_books(spark, sf_dir):
             os.path.join(sf_dir, "embeddings.parquet"))
         t0 = time.time()
         _PQ_BOOK_CACHE[sf_dir] = pq_train_codebooks(
-            emb, m=8, k=256, dim=64, lloyd_iters=1, vectorized=True)
+            emb, m=8, k=256, dim=64, lloyd_iters=1)
         PQ_BUILD_WALLS[sf_dir] = round(time.time() - t0, 3)
     return _PQ_BOOK_CACHE[sf_dir]
 
@@ -614,7 +606,7 @@ def _ivf_centroids(spark, sf_dir):
             os.path.join(sf_dir, "embeddings.parquet"))
         t0 = time.time()
         _IVF_CENTROID_CACHE[sf_dir] = train_ivf_centroids(
-            emb, n_centroids=16, lloyd_iters=2, vectorized=True)
+            emb, n_centroids=16, lloyd_iters=2)
         IVF_BUILD_WALLS[sf_dir] = round(time.time() - t0, 3)
     return _IVF_CENTROID_CACHE[sf_dir]
 

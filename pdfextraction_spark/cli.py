@@ -37,7 +37,6 @@ def _cmd_extract(args: argparse.Namespace) -> int:
             manifest_path=args.manifest,
             run_id=args.run_id,
             num_partitions=args.num_partitions,
-            salt_turns=args.salt_turns,
             n_chunks=args.chunks,
             debug_dir=args.debug_dir,
         )
@@ -237,7 +236,6 @@ def main(argv=None) -> int:
     e.add_argument("--master", default=None)
     e.add_argument("--run-id", default=None)
     e.add_argument("--num-partitions", type=int, default=32)
-    e.add_argument("--salt-turns", type=int, default=256)
     e.add_argument("--chunks", type=int, default=4)
     e.add_argument("--debug-dir", default=None,
                    help="S9 debug sink: dump parse-failed turns here")

@@ -7,6 +7,10 @@
 - lsh_bucket_topk: random-hyperplane (sign) LSH — queries only join
   candidates sharing a bucket; the scale path (candidates/query drops
   from N to N/2^bits on average)
+- IVF / PQ / IVF-PQ / SemDeDup: coarse assignment, probe selection
+  and PQ encoding run as Arrow-batch numpy UDFs (np_*_udf) with the
+  codebooks in the UDF closure; everything downstream of them is
+  JVM-side
 """
 
 from __future__ import annotations
@@ -56,9 +60,9 @@ def _as_double(col):
 #
 # Scope discipline (measured, round 7): the unrolled chain is used
 # ONLY at the high-cardinality pair-verify sites, where one O(pairs)
-# stage carries a single dot. Unrolling every dot (norms, buckets,
-# 16-centroid score arrays) multiplies generated-code size past the
-# JIT sweet spot and pays a Janino compile per stage per query
+# stage carries a single dot. Unrolling every dot (norms, buckets)
+# multiplies generated-code size past the JIT sweet spot and pays a
+# Janino compile per stage per query
 # (generated sources embed fresh expression ids, so the codegen cache
 # cannot reuse them across queries) — a measured net LOSS at the
 # O(corpus-rows) sites, which stay on the compact HOF form.
@@ -318,7 +322,6 @@ def pq_train_codebooks(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     lloyd_iters: int = 0,
-    vectorized: Optional[bool] = None,
 ) -> List[List[List[float]]]:
     """Deterministic PQ codebooks: the strided seed sample's
     subvectors (same seeding discipline as train_ivf_centroids —
@@ -333,122 +336,89 @@ def pq_train_codebooks(
     ``lloyd_iters=0`` is the oracle-exact seed config the driver
     checks. Returns m codebooks of k centroids of dim/m floats."""
     d_sub = dim // m
-    vec = _resolve_vectorized(vectorized, k)
     seeds = _strided_seed_vectors(embeddings, k, id_col, vec_col)
     books = [
         [seed[j * d_sub:(j + 1) * d_sub] for seed in seeds]
         for j in range(m)
     ]
     for _ in range(lloyd_iters):
-        books = _pq_lloyd_step(embeddings, vec_col, books,
-                               vectorized=vec)
+        books = _pq_lloyd_step(embeddings, vec_col, books)
     return books
 
 
-def _pq_staged_codes(
-    embeddings: DataFrame,
-    codebooks: List[List[List[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep: Sequence[str] = (),
-) -> DataFrame:
-    """Expression-path PQ assignment, fully staged: returns (vec_id,
-    v, __sub0.., c0..) where c{j} is the 1-based index of the nearest
-    codebook-j centroid by squared L2 rounded to 6dp, first-wins ties
-    — reproducible across engines. The cast vector and every
-    per-subspace distance array are staged projection columns (the
-    interpreted-HOF staging rule)."""
-    m = len(codebooks)
-    d_sub = len(codebooks[0][0])
-    staged = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        *keep,
-        _as_double(F.col(vec_col)).alias("v"),
-    )
-    # per-subspace distance arrays as ONE SQL expression each: the
-    # squared-difference fold unrolls to a codegen chain with the
-    # identical addition order (values unchanged), and the whole m x k
-    # literal tree parses in one py4j call per subspace instead of
-    # ~m x k x d_sub Column calls (~1 s of driver time per query at
-    # the driver's k=16). Non-conforming subvector widths fall back to
-    # the exact interpreted form (zip_with pads nulls, as before).
-    for j, book in enumerate(codebooks):
-        sub = F.slice(F.col("v"), j * d_sub + 1, d_sub)
-        staged = staged.withColumn(f"__sub{j}", sub)
-        sname = f"__sub{j}"
-
-        def one(c, fixed: bool) -> str:
-            if fixed:
-                terms = " + ".join(
-                    f"({sname}[{i}] - {float(x)!r}D) * "
-                    f"({sname}[{i}] - {float(x)!r}D)"
-                    for i, x in enumerate(c)
-                )
-                acc = f"cast(0.0 as double) + {terms}"
-            else:
-                arr = ", ".join(f"{float(x)!r}D" for x in c)
-                acc = (
-                    f"aggregate(transform(zip_with({sname}, array({arr}), "
-                    f"(a, b) -> a - b), x -> x * x), "
-                    f"cast(0.0 as double), (acc, x) -> acc + x)"
-                )
-            return f"round({acc}, 6)"
-
-        fixed_arr = ", ".join(one(c, True) for c in book)
-        hof_arr = ", ".join(one(c, False) for c in book)
-        staged = staged.withColumn(
-            f"__d{j}",
-            F.expr(
-                f"CASE WHEN size({sname}) = {d_sub} "
-                f"THEN array({fixed_arr}) ELSE array({hof_arr}) END"
-            ),
-        )
-    code_cols = [
-        F.array_position(F.col(f"__d{j}"), F.array_min(F.col(f"__d{j}")))
-        .cast("int")
-        .alias(f"c{j}")
-        for j in range(m)
-    ]
-    return staged.select(
-        "vec_id", *keep, "v",
-        *[F.col(f"__sub{j}") for j in range(m)], *code_cols
-    )
+def _stack_rows(v: pd.Series, width: int):
+    """One Arrow batch of vectors as an (n, width) float64 matrix, the
+    same-shape mask of the elements actually present, and each row's
+    length (-1 for a null vector). A null vector, a null element
+    (Arrow hands it over as NaN) and every position past a short
+    vector's end are absent and stored as 0.0; a longer vector is cut
+    at ``width``. The numpy UDFs null exactly the outputs that would
+    read an absent element, so one malformed row never fails the
+    batch it rides in."""
+    M = np.zeros((len(v), width), dtype=np.float64)
+    lens = np.full(len(v), -1)
+    for i, x in enumerate(v):
+        if x is not None:
+            lens[i] = len(x)
+            w = min(len(x), width)
+            M[i, :w] = x[:w]
+    present = np.arange(width)[None, :] < lens[:, None]
+    nan = np.isnan(M)
+    present &= ~nan
+    M[nan] = 0.0
+    return M, present, lens
 
 
-def np_pq_encode_udf(codebooks: List[List[List[float]]]):
-    """Vectorized (Arrow-batch numpy) PQ encoder — the PRODUCTION
-    path. The expression form embeds m x k literal centroid arrays in
-    the plan; at production k=256 that is the same planning-cost wall
-    the IVF expression path hits near ~1k centroids. Here the
-    codebooks live in the UDF closure and a whole Arrow batch is
-    scored with one vectorized squared-difference reduction per
-    subspace — no giant plan, arbitrary k.
-
-    Tie/rounding policy matches the expression path: squared L2
-    rounded to 6dp, argmin first-wins (np.argmin = first occurrence;
-    np.round is half-to-even vs Spark's half-up — they differ only
-    for a distance landing exactly on a 5e-7 boundary, pinned absent
-    on the fixture by the equality test)."""
-    from pyspark.sql.functions import pandas_udf
-
+def _pq_nearest(codebooks: List[List[List[float]]]):
+    """Batch scorer shared by the PQ UDFs: for every row and subspace,
+    the 1-based nearest codeword by squared L2 rounded to 6dp,
+    argmin first-wins (np.argmin = first occurrence; np.round is
+    half-to-even vs the oracle's half-up — they differ only for a
+    distance landing exactly on a 5e-7 boundary, pinned absent on the
+    fixtures by the oracle tests), its distance, and whether the
+    subspace slice held d_sub present values (a code is only defined
+    where it did)."""
     B = np.asarray(codebooks, dtype=np.float64)  # (m, k, d_sub)
     m, _, d_sub = B.shape
 
-    @pandas_udf("array<int>")
-    def encode(v: pd.Series) -> pd.Series:
-        M = np.array([np.asarray(x, dtype=np.float64) for x in v],
-                     dtype=np.float64)
-        if M.size == 0:
-            return pd.Series([], dtype=object)
-        codes = np.empty((M.shape[0], m), dtype=np.int32)
+    def nearest(v: pd.Series):
+        M, present, _ = _stack_rows(v, m * d_sub)
+        n = M.shape[0]
+        codes = np.empty((n, m), dtype=np.int32)
+        best = np.empty((n, m), dtype=np.float64)
         for j in range(m):
             sub = M[:, j * d_sub:(j + 1) * d_sub]
-            # (rows, k, d_sub) diff tensor — same terms the expression
-            # path sums, so the 6dp-rounded argmin agrees
+            # (rows, k, d_sub) diff tensor: one vectorized
+            # squared-difference reduction per subspace
             diff = sub[:, None, :] - B[j][None, :, :]
             d = np.round(np.einsum("rkd,rkd->rk", diff, diff), 6)
-            codes[:, j] = np.argmin(d, axis=1) + 1
-        return pd.Series(list(codes))
+            c = np.argmin(d, axis=1)
+            codes[:, j] = c + 1
+            best[:, j] = d[np.arange(n), c]
+        ok = present.reshape(n, m, d_sub).all(axis=2)
+        return codes, best, ok
+
+    return nearest
+
+
+def np_pq_encode_udf(codebooks: List[List[List[float]]]):
+    """Arrow-batch numpy PQ encoder (array<int> of m 1-based codes).
+    The codebooks live in the UDF closure and a whole Arrow batch is
+    scored at once, so the plan stays small at any k (PQ-standard
+    k=256 included). A subspace whose slice is not d_sub non-null
+    values gets a null code; a null vector gets m null codes."""
+    from pyspark.sql.functions import pandas_udf
+
+    nearest = _pq_nearest(codebooks)
+
+    @pandas_udf("array<int>")
+    def encode(v: pd.Series) -> pd.Series:
+        codes, _, ok = nearest(v)
+        rows = list(codes)
+        for i in np.flatnonzero(~ok.all(axis=1)):
+            rows[i] = [int(c) if o else None
+                       for c, o in zip(codes[i], ok[i])]
+        return pd.Series(rows, dtype=object)
 
     # same §4.4 marking as np_centroid_assign_udf (the fused
     # assign+encode select must stay ONE ArrowEvalPython node)
@@ -461,25 +431,18 @@ def np_pq_recon_err_udf(codebooks: List[List[List[float]]]):
     tie/rounding contract) distance to the NEAREST codeword, summed
     over subspaces. That sum is exactly ||v - reconstruction(v)||^2
     for the code pq_encode would assign, so averaging it over a batch
-    gives the batch's quantization MSE without materializing codes."""
+    gives the batch's quantization MSE without materializing codes.
+    Null for a vector with any null code (no reconstruction)."""
     from pyspark.sql.functions import pandas_udf
 
-    B = np.asarray(codebooks, dtype=np.float64)  # (m, k, d_sub)
-    m, _, d_sub = B.shape
+    nearest = _pq_nearest(codebooks)
 
     @pandas_udf("double")
     def err(v: pd.Series) -> pd.Series:
-        M = np.array([np.asarray(x, dtype=np.float64) for x in v],
-                     dtype=np.float64)
-        if M.size == 0:
-            return pd.Series([], dtype=np.float64)
-        out = np.zeros(M.shape[0], dtype=np.float64)
-        for j in range(m):
-            sub = M[:, j * d_sub:(j + 1) * d_sub]
-            diff = sub[:, None, :] - B[j][None, :, :]
-            d = np.round(np.einsum("rkd,rkd->rk", diff, diff), 6)
-            out += d[np.arange(d.shape[0]), np.argmin(d, axis=1)]
-        return pd.Series(out)
+        _, best, ok = nearest(v)
+        # NaN leaves the UDF as null, which avg() skips
+        return pd.Series(np.where(ok.all(axis=1), best.sum(axis=1),
+                                  np.nan))
 
     return err
 
@@ -507,37 +470,16 @@ def pq_encode(
     codebooks: List[List[List[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: Optional[bool] = None,
-    keep: Sequence[str] = (),
 ) -> DataFrame:
-    """(vec_id, keep..., codes array<int>): per subspace, the 1-based
-    index of the nearest codebook centroid by squared L2, rounded to
-    6dp with first-wins ties — reproducible across engines. ``keep``
-    columns ride along (so a composed pipeline like IVF-PQ carries
-    list_id through the encode instead of re-joining the corpus).
-
-    ``vectorized=True`` (production): Arrow-batch numpy assignment
-    (np_pq_encode_udf) instead of literal-array column expressions —
-    same codes (equality pinned in tests), but the plan stays small
-    so k can grow to the PQ-standard 256. ``None`` auto-selects on
-    the codebook size k (the m x k literal plan is the wall), so a
-    k=256 codebook never silently takes the expression path; the
-    oracle-exact expression form stays the default at the driver's
-    k=16."""
-    m = len(codebooks)
-    vectorized = _resolve_vectorized(vectorized, len(codebooks[0]))
-    if vectorized:
-        return embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            *keep,
-            np_pq_encode_udf(codebooks)(_as_double(F.col(vec_col)))
-            .alias("codes"),
-        )
-    staged = _pq_staged_codes(embeddings, codebooks, id_col, vec_col,
-                              keep=keep)
-    return staged.select(
-        "vec_id", *keep,
-        F.array(*[F.col(f"c{j}") for j in range(m)]).alias("codes"),
+    """(vec_id, codes array<int>): per subspace, the 1-based index of
+    the nearest codebook centroid by squared L2, rounded to 6dp with
+    first-wins ties — reproducible across engines (pinned against the
+    DuckDB oracle in tests). Encoding is one Arrow-batch numpy pass
+    (np_pq_encode_udf)."""
+    return embeddings.select(
+        F.col(id_col).alias("vec_id"),
+        np_pq_encode_udf(codebooks)(_as_double(F.col(vec_col)))
+        .alias("codes"),
     )
 
 
@@ -545,7 +487,6 @@ def _pq_lloyd_step(
     embeddings: DataFrame,
     vec_col: str,
     codebooks: List[List[List[float]]],
-    vectorized: bool = False,
 ) -> List[List[List[float]]]:
     """One distributed per-subspace Lloyd iteration for ALL m
     subspaces in a single Spark job: assign every subvector to its
@@ -553,32 +494,23 @@ def _pq_lloyd_step(
     per-dimension mean of its members. The shuffle moves (j, code,
     pos, partial mean) — never vectors; the collect is bounded at
     m x k x d_sub = k x dim rows. Empty cells keep their previous
-    centroid (same policy as the IVF _lloyd_step).
+    centroid (same policy as the IVF _lloyd_step), and a subvector
+    with a null code (malformed slice) joins no cell.
 
-    Explode discipline: the assignment columns and subvector slices
-    are staged projections BEFORE the explode select, so the Generate
-    cannot lift the scoring above itself and re-run it per element
-    (the generate-lift trap documented on _staged_assign)."""
+    Explode discipline: the codes and subvector slices are staged
+    projections BEFORE the explode select, so the Generate cannot
+    lift the encode above itself and re-run it per element."""
     m = len(codebooks)
-    k = len(codebooks[0])
     d_sub = len(codebooks[0][0])
-    if vectorized:
-        staged = embeddings.select(
-            _as_double(F.col(vec_col)).alias("v")
-        ).withColumn(
-            "__codes", np_pq_encode_udf(codebooks)(F.col("v"))
-        )
-        for j in range(m):
-            staged = staged.withColumn(
-                f"__sub{j}", F.slice(F.col("v"), j * d_sub + 1, d_sub)
-            ).withColumn(f"c{j}", F.element_at("__codes", j + 1))
-    else:
-        # the Lloyd step needs no real id — a constant satisfies the
-        # staged-codes projection and is pruned by the explode select
-        staged = _pq_staged_codes(
-            embeddings.withColumn("__pq_id", F.lit(0)), codebooks,
-            id_col="__pq_id", vec_col=vec_col,
-        )
+    staged = embeddings.select(
+        _as_double(F.col(vec_col)).alias("v")
+    ).withColumn(
+        "__codes", np_pq_encode_udf(codebooks)(F.col("v"))
+    )
+    for j in range(m):
+        staged = staged.withColumn(
+            f"__sub{j}", F.slice(F.col("v"), j * d_sub + 1, d_sub)
+        ).withColumn(f"c{j}", F.element_at("__codes", j + 1))
     entries = F.array(*[
         F.struct(
             F.lit(j).alias("j"),
@@ -590,6 +522,7 @@ def _pq_lloyd_step(
     ex = (
         staged.withColumn("__e", entries)
         .select(F.explode("__e").alias("e"))
+        .filter(F.col("e.code").isNotNull())
         .select("e.j", "e.code", F.posexplode("e.sub").alias("pos", "val"))
     )
     means = (
@@ -602,7 +535,7 @@ def _pq_lloyd_step(
     for r in means:
         got.setdefault((r.j, r.code), [0.0] * d_sub)[r.pos] = r.mu
     for (j, code), vec in got.items():
-        new[j][code - 1] = vec  # code is 1-based (array_position)
+        new[j][code - 1] = vec  # codes are 1-based
     return new
 
 
@@ -614,7 +547,6 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    vectorized: Optional[bool] = None,
 ) -> DataFrame:
     """PQ search by asymmetric distance: corpus vectors are REDUCED TO
     CODES (pq_encode — at store scale only the codes are persisted);
@@ -632,8 +564,7 @@ def pq_adc_topk(
     the same exact-arithmetic stance as the repetition fractions.
     Recall vs exact brute force is pinned in pytest (approximation
     error is the quantization error; raise m/k to shrink it)."""
-    coded = pq_encode(embeddings, codebooks, id_col, vec_col,
-                      vectorized=vectorized)
+    coded = pq_encode(embeddings, codebooks, id_col, vec_col)
     tq = _adc_query_tables(queries, codebooks, query_id_col, vec_col)
     scored = (
         coded.crossJoin(F.broadcast(tq))
@@ -719,76 +650,66 @@ def _adc_rank(scored: DataFrame, k: int) -> DataFrame:
 def _coarse_assigned(
     df: DataFrame,
     centroids: List[List[float]],
-    vectorized: bool,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
     """(vec_id, v array<double>, list_id) — corpus-side coarse
     assignment to the nearest centroid by rounded-6dp cosine,
-    first-wins ties; single home for the assignment both IVF and
-    IVF-PQ search paths (and their green oracles) pin. Expression
-    path below the centroid wall, Arrow/numpy matmul above it."""
-    base = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col))
-    if vectorized:
-        return base.select(
-            "vec_id",
-            _as_double(F.col(vec_col)).alias("v"),
-            np_centroid_assign_udf(centroids)(F.col(vec_col))
-            .alias("list_id"),
-        )
-    return _staged_assign(base, vec_col, centroids, keep=("vec_id",))
+    first-wins ties (np_centroid_assign_udf); single home for the
+    assignment ivf_topk and semantic_dedup (and their green oracles)
+    pin."""
+    return df.select(
+        F.col(id_col).alias("vec_id"),
+        _as_double(F.col(vec_col)).alias("v"),
+        np_centroid_assign_udf(centroids)(F.col(vec_col))
+        .alias("list_id"),
+    )
+
+
+def _ivfpq_coded(
+    df: DataFrame,
+    centroids: List[List[float]],
+    codebooks: List[List[List[float]]],
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(vec_id, list_id, codes) — the IVF-PQ corpus side, shared by
+    ivfpq_topk and the persisted index. ONE ArrowEvalPython node: the
+    assign and encode UDFs both read the raw vector column and have
+    no interdependence, so evaluating them in the same select ships
+    the vectors across the Python boundary once instead of chaining
+    two Python stages (guide §4.1; measured ~0.35 s per extra
+    pandas-UDF stage at 32 tasks)."""
+    return df.select(
+        F.col(id_col).alias("vec_id"),
+        np_centroid_assign_udf(centroids)(F.col(vec_col))
+        .alias("list_id"),
+        np_pq_encode_udf(codebooks)(_as_double(F.col(vec_col)))
+        .alias("codes"),
+    )
 
 
 def _probe_lists(
     queries: DataFrame,
     centroids: List[List[float]],
     n_probe: int,
-    vectorized: bool,
     query_id_col: str,
     vec_col: str,
     keep_qv: bool = False,
 ) -> DataFrame:
     """(query_id[, qv], __probes array<int>) — each query's n_probe
-    nearest coarse lists, best-first, ties by smaller list id; the
-    single home for the probe tie/rounding policy both IVF and IVF-PQ
-    search paths (and their green oracles) pin. The expression path
-    stages qv and the score array as bound columns (the probe
-    expression consumes the scores once, but staging keeps the
-    n_centroids x dim literal tree out of the explode's parent)."""
-    if vectorized:
-        cols = [F.col(query_id_col).alias("query_id")]
-        if keep_qv:
-            cols.append(_as_double(F.col(vec_col)).alias("qv"))
-        return queries.select(
-            *cols,
-            np_probe_lists_udf(centroids, n_probe)(F.col(vec_col))
-            .alias("__probes"),
-        )
-    q0 = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-    ).withColumn(
-        "__nq", _norm(F.col("qv"))
-    ).withColumn(
-        "__qs", _centroid_scores_named("qv", "__nq", centroids),
+    nearest coarse lists, best-first, ties by smaller list id
+    (np_probe_lists_udf); the single home for the probe tie/rounding
+    policy both IVF and IVF-PQ search paths (and their green oracles)
+    pin."""
+    cols = [F.col(query_id_col).alias("query_id")]
+    if keep_qv:
+        cols.append(_as_double(F.col(vec_col)).alias("qv"))
+    return queries.select(
+        *cols,
+        np_probe_lists_udf(centroids, n_probe)(F.col(vec_col))
+        .alias("__probes"),
     )
-    probes = F.slice(
-        F.transform(
-            F.array_sort(
-                F.zip_with(
-                    F.col("__qs"),
-                    F.sequence(F.lit(1), F.lit(len(centroids))),
-                    lambda s, i: F.struct((-s).alias("neg"),
-                                          i.alias("i")),
-                )
-            ),
-            lambda st: st["i"],
-        ),
-        1,
-        n_probe,
-    )
-    out = ["query_id"] + (["qv"] if keep_qv else []) + ["__probes"]
-    return q0.withColumn("__probes", probes).select(*out)
 
 
 def ivfpq_topk(
@@ -803,7 +724,6 @@ def ivfpq_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     lloyd_iters: int = 0,
-    vectorized: Optional[bool] = None,
 ) -> DataFrame:
     """IVF-PQ — the search stack a 10^9-vector corpus actually runs
     (Jegou et al., PAMI 2011): the IVF coarse quantizer restricts
@@ -813,17 +733,13 @@ def ivfpq_topk(
     ~dim*4/m x compression.
 
     Plan shape: corpus side is encode (codes) + coarse assignment
-    (list_id) — both single-pass projections over one scan; query
-    side is the probe-list explode joined to the broadcast ADC tables
-    (bounded query set); the only shuffle is the per-query top-k
-    window. Each vector lives in exactly one list, so a (query,
+    (list_id) — one Arrow-batch pass over one scan (_ivfpq_coded);
+    query side is the probe-list explode joined to the broadcast ADC
+    tables (bounded query set); the only shuffle is the per-query
+    top-k window. Each vector lives in exactly one list, so a (query,
     candidate) pair appears at most once — no dedup aggregation
-    needed.
-
-    ``vectorized=None`` auto-selects the Arrow/numpy paths above
-    IVF_EXPR_CENTROID_MAX coarse centroids (the expression path's
-    literal-plan wall); the expression config (seed codebooks,
-    lloyd_iters=0) is the oracle-exact driver form.
+    needed. Seed codebooks and lloyd_iters=0 are the oracle-exact
+    driver config.
 
     Output: (query_id, vec_id, approx_dist_micros, rank), rank 1 =
     nearest by ADC distance, ties by vec_id."""
@@ -831,36 +747,11 @@ def ivfpq_topk(
         centroids = train_ivf_centroids(
             embeddings, n_centroids, id_col=id_col, vec_col=vec_col,
             lloyd_iters=lloyd_iters,
-            vectorized=_resolve_vectorized(vectorized, n_centroids),
         )
-    # the dial considers BOTH literal-plan walls: the coarse centroid
-    # count (assignment/probe expressions) and the PQ codebook size k
-    # (the m x k encode expressions) — a k=256 codebook must not
-    # silently take the expression encode behind a small coarse count
-    vec = _resolve_vectorized(
-        vectorized, max(len(centroids), len(codebooks[0]))
-    )
-    if vec:
-        # ONE ArrowEvalPython node: the assign and encode UDFs both
-        # read the raw vector column and have no interdependence, so
-        # evaluating them in the same select ships the vectors across
-        # the Python boundary once instead of chaining two Python
-        # stages (guide §4.1; measured ~0.35 s per extra pandas-UDF
-        # stage at 32 tasks). Same UDFs, same codes/list_ids.
-        coded = embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            np_centroid_assign_udf(centroids)(F.col(vec_col))
-            .alias("list_id"),
-            np_pq_encode_udf(codebooks)(_as_double(F.col(vec_col)))
-            .alias("codes"),
-        )
-    else:
-        assigned = _coarse_assigned(embeddings, centroids, vec,
-                                    id_col, vec_col)
-        coded = pq_encode(assigned, codebooks, "vec_id", "v",
-                          vectorized=vec, keep=("list_id",))
-    probes = _probe_lists(queries, centroids, n_probe, vec,
-                          query_id_col, vec_col)
+    coded = _ivfpq_coded(embeddings, centroids, codebooks, id_col,
+                         vec_col)
+    probes = _probe_lists(queries, centroids, n_probe, query_id_col,
+                          vec_col)
     probe_rows = probes.select(
         "query_id", F.explode("__probes").alias("list_id")
     )
@@ -930,105 +821,49 @@ def lsh_bucket_id(vec_name: str, planes: Sequence[Sequence[float]],
     return bucket
 
 
-def _centroid_scores_named(vec_name: str, norm_name: str,
-                           centroids: Sequence[Sequence[float]]):
-    """Array of rounded-6dp cosine scores against each centroid over a
-    BOUND array<double> column and its STAGED norm column. Rounding
-    pins the downstream argmax/top-probe decisions against last-ulp
-    drift, so the assignment is reproducible across engines (the
-    DuckDB oracle computes round(list_cosine_similarity(v, c), 6)).
-    The per-vector norm is computed once per row, not inlined into
-    every one of the k score expressions, and each centroid literal
-    array is one py4j call (_lit_arr) instead of dim calls. The dot
-    itself stays the compact HOF form — see the scope-discipline note
-    above (unrolling k x dim chains was a measured net loss here)."""
-    scores = []
-    for c in centroids:
-        nc = float(np.linalg.norm(np.asarray(c, dtype=np.float64))) or 1.0
-        scores.append(
-            F.round(
-                _dot(F.col(vec_name), _lit_arr(c))
-                / (F.col(norm_name) * F.lit(nc)),
-                6,
-            )
-        )
-    return F.array(*scores)
-
-
-def _staged_assign(df: DataFrame, vec_col: str,
-                   centroids: Sequence[Sequence[float]],
-                   keep: Sequence[str] = ()) -> DataFrame:
-    """(keep..., v array<double>, list_id int) with the scoring staged:
-    the cast vector, its norm, and the 16..k-score array are real
-    projection columns, so (a) the scoring runs once per ROW, not
-    once per downstream consumer, and (b) a later generate/explode
-    cannot lift the scoring above itself and re-run it per element —
-    the exact pathology that made each Lloyd step pay dim x the
-    assignment cost before staging (measured 21 s -> 2 s at sf0.1)."""
-    staged = df.select(
-        *keep, _as_double(F.col(vec_col)).alias("v")
-    ).withColumn(
-        "__nv", _norm(F.col("v"))
-    ).withColumn(
-        "__cs", _centroid_scores_named("v", "__nv", centroids)
-    )
-    return staged.select(
-        *keep,
-        "v",
-        F.array_position(F.col("__cs"), F.array_max(F.col("__cs")))
-        .cast("int")
-        .alias("list_id"),
-    )
-
-
-# Above this many coarse centroids the expression-path assignment is
-# the wrong plan: it embeds n_centroids x dim literal arrays, and
-# Catalyst analysis cost grows with the codebook (measured unusable
-# past ~1k centroids). The scale dial is automatic — callers passing
-# vectorized=None get the Arrow/numpy path whenever the codebook
-# crosses this line; both paths are equality-pinned in tests.
-IVF_EXPR_CENTROID_MAX = 512
-
-
-def _resolve_vectorized(override: Optional[bool],
-                        n_centroids: int) -> bool:
-    """The one home for the expression-vs-numpy scale dial: an
-    explicit True/False wins; None auto-selects numpy above
-    IVF_EXPR_CENTROID_MAX centroids."""
-    if override is not None:
-        return override
-    return n_centroids > IVF_EXPR_CENTROID_MAX
-
-
-def np_centroid_assign_udf(centroids: Sequence[Sequence[float]]):
-    """Vectorized (Arrow-batch numpy matmul) centroid assignment — the
-    PRODUCTION path. The expression form keeps the summation order
-    identical to the SQL oracle (sequential aggregate), but its plan
-    embeds n_centroids x dim literals: analysis cost grows with the
-    codebook and the approach is unusable past ~1k centroids. This
-    path broadcasts the codebook inside the UDF closure and scores a
-    whole Arrow batch with one BLAS matmul — O(batch x k x dim) flops,
-    no giant plan, arbitrary codebook size.
-
-    Tie policy matches the expression path: scores rounded to 6dp,
-    argmax first-wins (numpy argmax = first occurrence; np.round is
-    half-to-even vs Spark's half-up — they differ only for a cosine
-    landing exactly on a 5e-7 boundary, which test_dedup_similarity
-    pins as not occurring on the fixture)."""
-    from pyspark.sql.functions import pandas_udf
-
+def _centroid_scorer(centroids: Sequence[Sequence[float]]):
+    """Batch scorer shared by the IVF UDFs: each row's rounded-6dp
+    cosine against every centroid (one BLAS matmul per Arrow batch;
+    rounding pins the argmax/top-probe decisions against last-ulp
+    drift, as the DuckDB oracle's round(list_cosine_similarity, 6)
+    does), and whether the row is a dim-wide vector with no null
+    element — the only rows whose assignment is defined."""
     C = np.asarray(centroids, dtype=np.float64)
     Cn = np.linalg.norm(C, axis=1)
     Cn[Cn == 0] = 1.0
+    dim = C.shape[1]
+
+    def score(v: pd.Series):
+        M, present, lens = _stack_rows(v, dim)
+        ok = (lens == dim) & present.all(axis=1)
+        Mn = np.linalg.norm(M, axis=1, keepdims=True)
+        Mn[Mn == 0] = 1.0
+        return np.round((M @ C.T) / (Mn * Cn[None, :]), 6), ok
+
+    return score
+
+
+def np_centroid_assign_udf(centroids: Sequence[Sequence[float]]):
+    """Arrow-batch numpy centroid assignment (int list_id, 1-based).
+    The codebook lives in the UDF closure and a whole Arrow batch is
+    scored with one BLAS matmul — O(batch x k x dim) flops, a small
+    plan at any codebook size.
+
+    Ties: argmax first-wins (numpy argmax = first occurrence; np.round
+    is half-to-even vs the oracle's half-up — they differ only for a
+    cosine landing exactly on a 5e-7 boundary, pinned absent on the
+    fixtures by the oracle tests). A null vector, a null element or a
+    width other than dim gets a null list_id."""
+    from pyspark.sql.functions import pandas_udf
+
+    score = _centroid_scorer(centroids)
 
     @pandas_udf("int")
     def assign(v: pd.Series) -> pd.Series:
-        M = np.array([np.asarray(x, dtype=np.float64) for x in v],
-                     dtype=np.float64)
-        Mn = np.linalg.norm(M, axis=1, keepdims=True)
-        Mn[Mn == 0] = 1.0
-        sims = np.round((M @ C.T) / (Mn * Cn[None, :]), 6)
-        return pd.Series(np.argmax(sims, axis=1) + 1, dtype="int32")
+        sims, ok = score(v)
+        ids = pd.Series(np.argmax(sims, axis=1) + 1, dtype="Int32")
+        ids[~ok] = pd.NA
+        return ids
 
     # nondeterministic marking (guide §4.4): join-key null filters the
     # optimizer infers (isnotnull(list_id)) otherwise get pushed BELOW
@@ -1041,25 +876,24 @@ def np_centroid_assign_udf(centroids: Sequence[Sequence[float]]):
 
 def np_probe_lists_udf(centroids: Sequence[Sequence[float]],
                        n_probe: int):
-    """Vectorized query-side probe selection: the 1-based ids of the
-    ``n_probe`` highest-cosine centroids, ordered best-first with ties
-    broken by smaller id (stable argsort on -score — identical to the
-    expression path's array_sort over struct(-score, id))."""
+    """Arrow-batch numpy query-side probe selection: the 1-based ids
+    of the ``n_probe`` highest-cosine centroids, ordered best-first
+    with ties broken by smaller id (stable argsort on -score — the
+    oracle's ORDER BY score DESC, id ASC). Null probes (the query
+    joins no list) for the rows np_centroid_assign_udf leaves
+    unassigned."""
     from pyspark.sql.functions import pandas_udf
 
-    C = np.asarray(centroids, dtype=np.float64)
-    Cn = np.linalg.norm(C, axis=1)
-    Cn[Cn == 0] = 1.0
+    score = _centroid_scorer(centroids)
 
     @pandas_udf("array<int>")
     def probe(v: pd.Series) -> pd.Series:
-        M = np.array([np.asarray(x, dtype=np.float64) for x in v],
-                     dtype=np.float64)
-        Mn = np.linalg.norm(M, axis=1, keepdims=True)
-        Mn[Mn == 0] = 1.0
-        sims = np.round((M @ C.T) / (Mn * Cn[None, :]), 6)
+        sims, ok = score(v)
         order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe] + 1
-        return pd.Series([row.astype("int32") for row in order])
+        rows = list(order.astype(np.int32))
+        for i in np.flatnonzero(~ok):
+            rows[i] = None
+        return pd.Series(rows, dtype=object)
 
     # same §4.4 marking as np_centroid_assign_udf: the explode over
     # __probes infers a size(__probes) > 0 filter that was pushed
@@ -1068,22 +902,18 @@ def np_probe_lists_udf(centroids: Sequence[Sequence[float]],
 
 
 def _lloyd_step(embeddings: DataFrame, vec_col: str,
-                centroids: List[List[float]],
-                vectorized: bool = False) -> List[List[float]]:
+                centroids: List[List[float]]) -> List[List[float]]:
     """One distributed Lloyd iteration: assign every vector to its
     nearest centroid, recompute centroids as per-list per-dimension
     means. The shuffle moves (list_id, dim, partial mean) — never
     vectors; the collect is n_centroids x dim rows. Empty lists keep
-    their previous centroid."""
-    if vectorized:
-        staged = embeddings.select(
-            _as_double(F.col(vec_col)).alias("v"),
-            np_centroid_assign_udf(centroids)(F.col(vec_col))
-            .alias("list_id"),
-        )
-    else:
-        staged = _staged_assign(embeddings, vec_col, centroids)
-    assigned = staged.select(
+    their previous centroid; unassigned (malformed) vectors join no
+    list."""
+    assigned = embeddings.select(
+        _as_double(F.col(vec_col)).alias("v"),
+        np_centroid_assign_udf(centroids)(F.col(vec_col))
+        .alias("list_id"),
+    ).filter(F.col("list_id").isNotNull()).select(
         "list_id", F.posexplode(F.col("v")).alias("pos", "val")
     )
     means = (
@@ -1097,7 +927,7 @@ def _lloyd_step(embeddings: DataFrame, vec_col: str,
     for r in means:
         got.setdefault(r.list_id, [0.0] * dim)[r.pos] = r.m
     for lid, vec in got.items():
-        new[lid - 1] = vec  # list_id is 1-based (array_position)
+        new[lid - 1] = vec  # list_id is 1-based
     return new
 
 
@@ -1107,21 +937,16 @@ def train_ivf_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     lloyd_iters: int = 2,
-    vectorized: Optional[bool] = None,
 ) -> List[List[float]]:
     """IVF index build: deterministic strided seed sample refined by
     ``lloyd_iters`` distributed Lloyd iterations. Each iteration is
     one Spark aggregation (posexplode -> per-(list, dim) mean) whose
     collect is bounded at n_centroids x dim rows — vectors never leave
-    the cluster. Returned codebook feeds ivf_topk(centroids=...).
-    ``vectorized=None`` auto-selects the numpy assignment path above
-    IVF_EXPR_CENTROID_MAX centroids (explicit True/False wins)."""
-    vec = _resolve_vectorized(vectorized, n_centroids)
+    the cluster. Returned codebook feeds ivf_topk(centroids=...)."""
     centroids = _strided_seed_vectors(embeddings, n_centroids, id_col,
                                       vec_col)
     for _ in range(lloyd_iters):
-        centroids = _lloyd_step(embeddings, vec_col, centroids,
-                                vectorized=vec)
+        centroids = _lloyd_step(embeddings, vec_col, centroids)
     return centroids
 
 
@@ -1153,7 +978,6 @@ def ivf_topk(
     query_id_col: str = "query_id",
     centroids: Optional[List[List[float]]] = None,
     lloyd_iters: int = 2,
-    vectorized: Optional[bool] = None,
 ) -> DataFrame:
     """IVF-style ANN: vectors are inverted-listed by nearest centroid;
     each query probes its n_probe nearest lists and scores only those
@@ -1165,15 +989,13 @@ def ivf_topk(
     result is a bounded n_centroids x dim collect; vectors never leave
     the cluster. Recall measured vs brute force in tests.
 
-    ``vectorized``: corpus-side assignment as an Arrow-batch numpy
-    matmul (np_centroid_assign_udf) instead of the literal-array
-    column expressions — same rounded-6dp/first-wins assignment
-    (equality pinned in tests), but the codebook lives in the UDF
-    closure, so the plan stays small and n_centroids can grow to
-    IVF-realistic sizes (thousands). The default ``None`` picks the
-    path automatically: expression below IVF_EXPR_CENTROID_MAX
-    centroids (oracle-exact, what the driver query runs at 16),
-    numpy above it — callers never need to know the planning wall.
+    Corpus-side assignment and query-side probing are Arrow-batch
+    numpy matmuls (np_centroid_assign_udf, np_probe_lists_udf) with
+    the codebook in the UDF closure, so the plan stays small and
+    n_centroids can grow to IVF-realistic sizes (thousands); the
+    rounded-6dp/first-wins assignment is pinned against the DuckDB
+    oracle in tests. A malformed corpus vector (null, null element,
+    width other than dim) lands in no list and never matches.
 
     Index-build vs query: centroid training is the BUILD step a
     production deployment runs once and reuses across queries — call
@@ -1182,17 +1004,11 @@ def ivf_topk(
     if centroids is None:
         centroids = train_ivf_centroids(
             embeddings, n_centroids, id_col=id_col, vec_col=vec_col,
-            lloyd_iters=lloyd_iters, vectorized=vectorized,
+            lloyd_iters=lloyd_iters,
         )
-    # the scale dial is automatic: above IVF_EXPR_CENTROID_MAX actual
-    # centroids the literal-expression plan hits its planning wall, so
-    # vectorized=None switches to the numpy path without the caller
-    # having to know the threshold (What's-wrong #3, round 3)
-    vectorized = _resolve_vectorized(vectorized, len(centroids))
-    e = _coarse_assigned(embeddings, centroids, vectorized,
-                         id_col, vec_col)
-    q0 = _probe_lists(queries, centroids, n_probe, vectorized,
-                      query_id_col, vec_col, keep_qv=True)
+    e = _coarse_assigned(embeddings, centroids, id_col, vec_col)
+    q0 = _probe_lists(queries, centroids, n_probe, query_id_col,
+                      vec_col, keep_qv=True)
     q = q0.select(
         "query_id", "qv", F.explode(F.col("__probes")).alias("list_id")
     )
@@ -1285,7 +1101,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     centroids: Optional[List[List[float]]] = None,
     lloyd_iters: int = 0,
-    vectorized: Optional[bool] = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space coarsely, then
@@ -1304,9 +1119,10 @@ def semantic_dedup(
     so the quadratic term is sum(cluster_size^2) — production dials
     n_centroids ~ sqrt(n) (the paper uses ~100k clusters for 10^9
     LAION embeddings), keeping each cluster a few thousand vectors.
-    Assignment is the shared staged-expression / numpy-matmul pair
-    (auto-dialed above IVF_EXPR_CENTROID_MAX); cosines are rounded to
-    6dp so the DuckDB oracle reproduces the keep set bit-for-bit.
+    Assignment is the shared numpy-matmul UDF (_coarse_assigned); a
+    malformed vector gets a null list_id, joins no pair and is kept.
+    Cosines are rounded to 6dp so the DuckDB oracle reproduces the
+    keep set bit-for-bit.
     ``lloyd_iters=0`` (strided seeds) is the oracle config; production
     refines with train_ivf_centroids.
     """
@@ -1314,21 +1130,8 @@ def semantic_dedup(
         centroids = train_ivf_centroids(
             embeddings, n_centroids=n_centroids, id_col=id_col,
             vec_col=vec_col, lloyd_iters=lloyd_iters,
-            vectorized=vectorized,
         )
-    vec = _resolve_vectorized(vectorized, len(centroids))
-    if vec:
-        assigned = embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            _as_double(F.col(vec_col)).alias("v"),
-            np_centroid_assign_udf(centroids)(F.col(vec_col))
-            .alias("list_id"),
-        )
-    else:
-        assigned = _staged_assign(
-            embeddings.select(F.col(id_col).alias("vec_id"), vec_col),
-            vec_col, centroids, keep=("vec_id",),
-        )
+    assigned = _coarse_assigned(embeddings, centroids, id_col, vec_col)
     # stage the norm once per vector; the pair expression is then one
     # dot product + a division (the cosine_near_pairs discipline)
     assigned = assigned.withColumn("n", _norm(F.col("v")))

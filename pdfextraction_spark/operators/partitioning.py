@@ -45,6 +45,5 @@ def sort_within(df: DataFrame) -> DataFrame:
 def prepare_for_extraction(
     df: DataFrame,
     num_partitions: int = DEFAULT_NUM_PARTITIONS,
-    salt_turns: int = MEGA_CONV_TURNS_PER_SALT,
 ) -> DataFrame:
-    return sort_within(salted_repartition(df, num_partitions, salt_turns))
+    return sort_within(salted_repartition(df, num_partitions))

@@ -405,7 +405,12 @@ def ann_ivf_topk_sql(table: str = "embeddings", n_centroids: int = 16,
                      n_queries: int = 5) -> str:
     """Mirror of ivf_topk(lloyd_iters=0): strided deterministic seed
     centroids, rounded-cosine argmax list assignment, top-n_probe list
-    probing, exact cosine ranking of probed candidates."""
+    probing, exact cosine ranking of probed candidates. Spark scores
+    the assignment and probes in numpy (np_centroid_assign_udf,
+    np_probe_lists_udf): a BLAS matmul instead of a sequential sum,
+    and half-to-even instead of DuckDB's half-away round. The 6dp
+    rounding absorbs the summation order; the rounding modes differ
+    only on an exact 5e-7 boundary."""
     return f"""
         WITH e AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}
@@ -785,7 +790,10 @@ def cosine_near_join_sql(left_mod: int = 7, table: str = "embeddings",
 def _pq_ctes(table: str, m: int, k: int, d: int) -> str:
     """Shared PQ CTE chain ending in codes(vec_id, j, code) plus the
     intermediate dists — one home for the codebook-derivation SQL so
-    the encode and ADC oracles can never desynchronize."""
+    the encode and ADC oracles can never desynchronize. Spark
+    computes the codes in numpy (np_pq_encode_udf), with the same
+    6dp rounding and first-wins argmin (see ann_ivf_topk_sql on the
+    rounding mode)."""
     return f"""e AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}
         ), st AS (
@@ -1190,7 +1198,8 @@ def semantic_dedup_sql(table: str = "embeddings", n_centroids: int = 16,
                        threshold: float = 0.6) -> str:
     """Mirror of functions/similarity.semantic_dedup(lloyd_iters=0):
     strided deterministic seed centroids, rounded-cosine argmax
-    assignment (the shared ann_ivf seed/assign CTE shape), then the
+    assignment (the shared ann_ivf seed/assign CTE shape; Spark's
+    side is np_centroid_assign_udf), then the
     within-cluster pairwise epsilon-ball prune — a vector is dropped
     iff a smaller-id member of its own cluster has rounded cosine >=
     threshold."""

@@ -38,7 +38,7 @@ import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import __version__
-from .config import DEFAULT_NUM_PARTITIONS, MEGA_CONV_TURNS_PER_SALT
+from .config import DEFAULT_NUM_PARTITIONS
 from .operators.extract import extract_turns
 from .operators.partitioning import (
     logical_partition_id,
@@ -58,7 +58,6 @@ from .sources.transcripts import read_transcripts
 def extract_dataframe(
     turns: DataFrame,
     num_partitions: int = DEFAULT_NUM_PARTITIONS,
-    salt_turns: int = MEGA_CONV_TURNS_PER_SALT,
 ) -> DataFrame:
     """Pure transformation: transcripts -> extracted turns (no sinks).
 
@@ -83,7 +82,7 @@ def extract_dataframe(
     if (turns.rdd.getNumPartitions()
             >= turns.sparkSession.sparkContext.defaultParallelism):
         return extract_turns(turns)
-    return extract_turns(prepare_for_extraction(turns, num_partitions, salt_turns))
+    return extract_turns(prepare_for_extraction(turns, num_partitions))
 
 
 def run_extraction_job(
@@ -93,7 +92,6 @@ def run_extraction_job(
     manifest_path: str,
     run_id: Optional[str] = None,
     num_partitions: int = DEFAULT_NUM_PARTITIONS,
-    salt_turns: int = MEGA_CONV_TURNS_PER_SALT,
     n_chunks: int = 4,
     fail_after_chunks: Optional[int] = None,
     fail_before_manifest_chunk: Optional[int] = None,
@@ -137,7 +135,7 @@ def run_extraction_job(
     with writer_lock(output_path):
         return _run_locked(
             spark, input_path, output_path, manifest_path, run_id,
-            num_partitions, salt_turns, n_chunks, fail_after_chunks,
+            num_partitions, n_chunks, fail_after_chunks,
             fail_before_manifest_chunk, debug_dir,
         )
 
@@ -261,7 +259,6 @@ def _run_locked(
     manifest_path: str,
     run_id: Optional[str],
     num_partitions: int,
-    salt_turns: int,
     n_chunks: int,
     fail_after_chunks: Optional[int],
     fail_before_manifest_chunk: Optional[int],
@@ -295,7 +292,7 @@ def _run_locked(
     observed = {"turns": 0, "parse_failures": 0, "blocks_dropped": 0}
     for ci, part_group in enumerate(chunks):
         chunk_df = turns.filter(F.col("partition_id").isin(part_group))
-        extracted = extract_dataframe(chunk_df, len(part_group), salt_turns)
+        extracted = extract_dataframe(chunk_df, len(part_group))
         # partition_id is a pure function of conv_id -> recompute after
         # the Arrow stage instead of shipping it through the kernel
         out = logical_partition_id(extracted, num_partitions)

@@ -38,8 +38,9 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with deterministic strided seed centroids and 0 Lloyd
     iterations — the oracle-exact configuration (assignment = argmax
-    of round(cosine, 6), reproducible in SQL). Lloyd refinement stays
-    available (lloyd_iters>0) and is recall-pinned in pytest."""
+    of round(cosine, 6), computed by the Arrow-batch numpy UDFs and
+    reproducible in SQL). Lloyd refinement stays available
+    (lloyd_iters>0) and is recall-pinned in pytest."""
     from pdfextraction_spark.functions.similarity import ivf_topk
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -96,8 +97,8 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookups per candidate. Oracle config: lloyd_iters=0 seeds for
     both quantizers (n_centroids == k so coarse centroids and the
     codebook seed sample coincide — mirrored by the shared `seed`
-    CTE in the SQL); production runs trained codebooks + the
-    vectorized paths (recall pinned in pytest)."""
+    CTE in the SQL); production runs Lloyd-trained codebooks through
+    the same Arrow-batch numpy UDFs (recall pinned in pytest)."""
     from pdfextraction_spark.functions.similarity import (
         ivfpq_topk,
         pq_train_codebooks,
@@ -111,7 +112,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     return ivfpq_topk(emb, queries, books, centroids=cents, k=10,
-                      n_probe=4, vectorized=False)
+                      n_probe=4)
 
 
 def q_ann_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,10 +142,9 @@ def q_ann_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(root, ".ann_index_cache", tag)
     idx = build_ann_index(
         emb, path, n_centroids=16, m=8, k=16, dim=64,
-        lloyd_iters=0, pq_lloyd_iters=0, vectorized=False,
+        lloyd_iters=0, pq_lloyd_iters=0,
     )
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return ivfpq_topk_indexed(idx, queries, k=10, n_probe=4,
-                              vectorized=False)
+    return ivfpq_topk_indexed(idx, queries, k=10, n_probe=4)

@@ -20,9 +20,10 @@ plan, asserted in tests) — the corpus outside the probed lists is
 never read, which is what makes serving reads O(probed fraction)
 instead of O(corpus).
 
-Search reuses the exact ivfpq_topk machinery (_probe_lists,
-_adc_query_tables, _adc_score, _adc_rank — single homes for the
-tie/rounding contracts), so indexed results are row-identical to the
+Build, append and search reuse the exact ivfpq_topk machinery
+(_ivfpq_coded, _probe_lists, _adc_query_tables, _adc_score,
+_adc_rank — single homes for the tie/rounding contracts), so
+indexed results are row-identical to the
 in-memory composition; pinned in tests. Centroid/codebook collects
 are bounded metadata (n_centroids x dim + m x k x d_sub doubles) —
 the same stance as the IVF training collect.
@@ -40,10 +41,8 @@ from ..functions.similarity import (
     _adc_query_tables,
     _adc_rank,
     _adc_score,
-    _coarse_assigned,
+    _ivfpq_coded,
     _probe_lists,
-    _resolve_vectorized,
-    pq_encode,
     pq_quantization_mse,
     pq_train_codebooks,
     train_ivf_centroids,
@@ -101,7 +100,6 @@ def build_ann_index(
     pq_lloyd_iters: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: Optional[bool] = None,
     centroids: Optional[List[List[float]]] = None,
     codebooks: Optional[List[List[List[float]]]] = None,
 ) -> AnnIndex:
@@ -109,9 +107,8 @@ def build_ann_index(
     one pass, and persist the whole index under ``path``.
 
     The coded write is the only corpus-sized job (one scan -> one
-    partitioned write); everything else is bounded metadata. The
-    production config dial (`vectorized=None`) flips the Arrow/numpy
-    paths above the literal-plan walls exactly like ivfpq_topk.
+    partitioned write, the same Arrow-batch encode + coarse
+    assignment ivfpq_topk runs); everything else is bounded metadata.
 
     Pass ``centroids``/``codebooks`` to build with FROZEN quantizers
     instead of training — the rebuild-after-appends shape (and the
@@ -120,19 +117,15 @@ def build_ann_index(
     if centroids is None:
         centroids = train_ivf_centroids(
             embeddings, n_centroids, id_col=id_col, vec_col=vec_col,
-            lloyd_iters=lloyd_iters, vectorized=vectorized,
+            lloyd_iters=lloyd_iters,
         )
     if codebooks is None:
         codebooks = pq_train_codebooks(
             embeddings, m=m, k=k, dim=dim, id_col=id_col,
             vec_col=vec_col, lloyd_iters=pq_lloyd_iters,
-            vectorized=vectorized,
         )
-    vec = _resolve_vectorized(vectorized, max(len(centroids), k))
-    assigned = _coarse_assigned(embeddings, centroids, vec,
-                                id_col, vec_col)
-    coded = pq_encode(assigned, codebooks, "vec_id", "v",
-                      vectorized=vec, keep=("list_id",))
+    coded = _ivfpq_coded(embeddings, centroids, codebooks, id_col,
+                         vec_col)
     coded.select("vec_id", "codes", "list_id").write.partitionBy(
         "list_id"
     ).mode("overwrite").parquet(os.path.join(path, "coded"))
@@ -203,7 +196,6 @@ def append_to_ann_index(
     embeddings: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: Optional[bool] = None,
 ) -> dict:
     """Incremental index maintenance: encode a new batch with the
     index's FROZEN quantizers and append it to the matching
@@ -238,13 +230,8 @@ def append_to_ann_index(
     spark = index.spark
     with writer_lock(index.path):
         meta = _read_meta(spark, index.path)
-        vec = _resolve_vectorized(
-            vectorized, max(len(index.centroids), meta.k)
-        )
-        assigned = _coarse_assigned(embeddings, index.centroids, vec,
-                                    id_col, vec_col)
-        coded = pq_encode(assigned, index.codebooks, "vec_id", "v",
-                          vectorized=vec, keep=("list_id",))
+        coded = _ivfpq_coded(embeddings, index.centroids,
+                             index.codebooks, id_col, vec_col)
         coded.select("vec_id", "codes", "list_id").write.partitionBy(
             "list_id"
         ).mode("append").parquet(os.path.join(index.path, "coded"))
@@ -276,7 +263,6 @@ def ivfpq_topk_indexed(
     n_probe: int = 4,
     query_id_col: str = "query_id",
     vec_col: str = "embedding",
-    vectorized: Optional[bool] = None,
     exclude_self: bool = True,
 ) -> DataFrame:
     """IVF-PQ search over a PERSISTED index: probe lists are computed
@@ -291,10 +277,7 @@ def ivfpq_topk_indexed(
     queries are corpus rows (self-search). Pass ``exclude_self=False``
     when the query ids come from a DIFFERENT keyspace: a numeric
     coincidence would otherwise silently delete a true neighbor."""
-    vec = _resolve_vectorized(
-        vectorized, max(len(index.centroids), len(index.codebooks[0]))
-    )
-    probes = _probe_lists(queries, index.centroids, n_probe, vec,
+    probes = _probe_lists(queries, index.centroids, n_probe,
                           query_id_col, vec_col)
     probe_rows = probes.select(
         "query_id", F.explode("__probes").alias("list_id")

@@ -33,6 +33,16 @@ def docs(spark):
     return df
 
 
+def _duckdb_oracle(emb, sql):
+    """Run a portable_sql oracle over ``emb`` registered as the
+    ``embeddings`` table (pandas result)."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.register("embeddings", emb.toPandas())
+    return con.execute(sql).fetchdf()
+
+
 @pytest.fixture(scope="module")
 def emb(spark):
     """Clustered embeddings (30 centroids x 10 points, small noise) —
@@ -255,39 +265,31 @@ class TestIVF:
         merged = bf.merge(ivf, on=["query_id", "vec_id"], suffixes=("_t", "_g"))
         assert (merged["sim_t"] == merged["sim_g"]).all()
 
-    def test_vectorized_assignment_equals_expression(self, emb):
-        """The numpy-matmul production assignment must produce the
-        exact same (vec_id -> list_id) mapping and the same ivf_topk
-        output as the literal-expression oracle path (both round to
-        6dp, argmax first-wins)."""
+    def test_vectorized_assignment_matches_duckdb(self, emb):
+        """The numpy-matmul assignment and probe UDFs must reproduce
+        the DuckDB oracle's IVF search (argmax / top-n_probe of
+        round(cosine, 6), first-wins ties) on this fixture: same
+        rows, ranks and sims. The per-vector list_ids are pinned
+        against the oracle by the SemDeDup parity test."""
         from pyspark.sql import functions as F
 
-        rows = (emb.orderBy("vec_id").limit(16)
-                .select("embedding").collect())
-        cents = [list(map(float, r[0])) for r in rows]
-        expr = S._staged_assign(
-            emb.select(F.col("vec_id"), F.col("embedding")),
-            "embedding", cents, keep=("vec_id",),
-        ).select("vec_id", "list_id").toPandas().set_index("vec_id")
-        vec = emb.select(
-            "vec_id",
-            S.np_centroid_assign_udf(cents)(F.col("embedding"))
-            .alias("list_id"),
-        ).toPandas().set_index("vec_id")
-        assert expr["list_id"].sort_index().equals(
-            vec["list_id"].sort_index().astype(expr["list_id"].dtype))
+        from pdfextraction_spark.oracle import portable_sql as P
 
         queries = emb.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
-        a = S.ivf_topk(emb, queries, k=10, n_centroids=16, n_probe=4,
-                       lloyd_iters=1, vectorized=False).toPandas()
-        b = S.ivf_topk(emb, queries, k=10, n_centroids=16, n_probe=4,
-                       lloyd_iters=1, vectorized=True).toPandas()
-        key = ["query_id", "vec_id"]
-        a = a.sort_values(key).reset_index(drop=True)
-        b = b.sort_values(key).reset_index(drop=True)
-        assert a[key + ["sim", "rank"]].equals(b[key + ["sim", "rank"]])
+        key = ["query_id", "rank"]
+        got = (S.ivf_topk(emb, queries, k=10, n_centroids=16, n_probe=4,
+                          lloyd_iters=0).toPandas()
+               .sort_values(key).reset_index(drop=True))
+        exp = (_duckdb_oracle(emb, P.ann_ivf_topk_sql(
+                   n_centroids=16, n_probe=4, k=10, n_queries=5))
+               .sort_values(key).reset_index(drop=True))
+        assert len(got) == 50
+        assert list(got.query_id) == list(exp.query_id)
+        assert list(got.vec_id) == list(exp.vec_id)
+        assert list(got["rank"]) == list(exp["rank"])
+        assert np.allclose(got.sim, exp.sim)
 
 
 @pytest.mark.slow
@@ -591,9 +593,8 @@ class TestPQ:
         books = S.pq_train_codebooks(emb, m=8, k=16, dim=32)
         cents = S.train_ivf_centroids(emb, n_centroids=16,
                                       lloyd_iters=0)
-        assigned = S._staged_assign(
-            emb.select("vec_id", "embedding"), "embedding", cents,
-            keep=("vec_id",),
+        assigned = S._coarse_assigned(
+            emb, cents, "vec_id", "embedding"
         ).select("vec_id", "list_id")
         corpus = emb.join(assigned, "vec_id")
         queries = emb.filter(F.col("vec_id") < 5).select(
@@ -616,26 +617,43 @@ class TestPQ:
         assert sum(recalls) / len(recalls) >= 0.5
 
     def test_vectorized_encode_equality(self, emb):
-        """The Arrow/numpy encoder must produce the exact codes the
-        expression path does (same 6dp rounding + first-wins argmin)
-        — the k=256 production path is only trustworthy if it is
-        bit-equal where both paths run."""
+        """The Arrow/numpy encoder must produce exactly the DuckDB
+        oracle's codes (6dp-rounded squared L2, first-wins argmin)
+        for the seed codebooks, and ADC search over those codes the
+        oracle's integer distances and ranks."""
+        from pyspark.sql import functions as F
+
+        from pdfextraction_spark.oracle import portable_sql as P
+
         books = S.pq_train_codebooks(emb, m=8, k=16, dim=32)
-        a = (S.pq_encode(emb, books).toPandas()
-             .sort_values("vec_id").reset_index(drop=True))
-        b = (S.pq_encode(emb, books, vectorized=True).toPandas()
-             .sort_values("vec_id").reset_index(drop=True))
-        assert (a.codes.map(tuple) == b.codes.map(tuple)).all()
+        got = (S.pq_encode(emb, books).toPandas()
+               .sort_values("vec_id").reset_index(drop=True))
+        exp = (_duckdb_oracle(emb, P.pq_encode_sql(m=8, k=16, dim=32))
+               .sort_values("vec_id").reset_index(drop=True))
+        assert list(got.vec_id) == list(exp.vec_id)
+        assert list(got.codes.map(lambda cs: ",".join(map(str, cs)))) \
+            == list(exp.codes)
+
+        queries = emb.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+        key = ["query_id", "vec_id", "approx_dist_micros", "rank"]
+        a = (S.pq_adc_topk(emb, queries, books, k=10).toPandas()[key]
+             .sort_values(key).reset_index(drop=True))
+        b = (_duckdb_oracle(emb, P.pq_adc_topk_sql(
+                 m=8, k_cent=16, dim=32, k=10, n_queries=5))[key]
+             .sort_values(key).reset_index(drop=True))
+        assert len(a) == 50
+        assert a.astype("int64").equals(b.astype("int64"))
 
     def test_vectorized_encode_large_k(self, emb):
-        """k=256 — the PQ-standard codebook size where the
-        literal-expression plan hits its planning wall — runs fine on
-        the numpy path and yields in-range codes."""
+        """k=256 — the PQ-standard codebook size — encodes every
+        vector to in-range codes."""
         books = S.pq_train_codebooks(emb, m=8, k=256, dim=32)
         # fixture has 300 vectors; strided seeding caps distinct seeds,
         # but the codebook shape is what matters for the path
         assert len(books[0]) == 256
-        out = S.pq_encode(emb, books, vectorized=True).toPandas()
+        out = S.pq_encode(emb, books).toPandas()
         assert len(out) == emb.count()
         assert out.codes.map(
             lambda cs: all(1 <= c <= 256 for c in cs)).all()
@@ -688,80 +706,229 @@ class TestPQ:
         assert recall(trained) >= recall(seed)
 
     def test_lloyd_vectorized_parity(self, emb):
-        """The numpy-assignment Lloyd path must train the same
-        codebooks as the expression path (same rounding/tie policy ->
-        same assignments -> same means)."""
-        a = S.pq_train_codebooks(emb, m=8, k=16, dim=32,
-                                 lloyd_iters=1)
-        b = S.pq_train_codebooks(emb, m=8, k=16, dim=32,
-                                 lloyd_iters=1, vectorized=True)
-        assert np.allclose(np.asarray(a), np.asarray(b), atol=1e-12)
+        """The distributed Lloyd steps must train what a plain NumPy
+        Lloyd iteration trains from the same seeds: per-subspace
+        (PQ) and whole-vector (IVF) nearest assignment under the
+        6dp-rounded first-wins policy, member means, empty cells
+        keeping their previous centroid."""
+        rows = emb.orderBy("vec_id").toPandas()
+        M = np.array([np.asarray(v, dtype=np.float64)
+                      for v in rows.embedding])
+
+        seed = np.asarray(S.pq_train_codebooks(emb, m=8, k=16, dim=32))
+        want = seed.copy()
+        for j in range(8):
+            sub = M[:, j * 4:(j + 1) * 4]
+            d = np.round(((sub[:, None, :] - seed[j][None]) ** 2)
+                         .sum(-1), 6)
+            code = np.argmin(d, axis=1)
+            for c in np.unique(code):
+                want[j, c] = sub[code == c].mean(axis=0)
+        got = S.pq_train_codebooks(emb, m=8, k=16, dim=32,
+                                   lloyd_iters=1)
+        assert np.allclose(np.asarray(got), want, atol=1e-12)
+
+        cents = np.asarray(S.train_ivf_centroids(emb, n_centroids=16,
+                                                 lloyd_iters=0))
+        cos = np.round(
+            (M @ cents.T)
+            / (np.linalg.norm(M, axis=1)[:, None]
+               * np.linalg.norm(cents, axis=1)[None, :]), 6)
+        lid = np.argmax(cos, axis=1)
+        want_c = cents.copy()
+        for c in np.unique(lid):
+            want_c[c] = M[lid == c].mean(axis=0)
+        got_c = S.train_ivf_centroids(emb, n_centroids=16,
+                                      lloyd_iters=1)
+        assert np.allclose(np.asarray(got_c), want_c, atol=1e-12)
 
     def test_ivfpq_topk(self, emb):
-        """The composed ivfpq_topk function (driver query shape):
-        recall vs brute force stays useful, the two execution paths
-        agree, and ADC distances are non-decreasing in rank."""
+        """The composed ivfpq_topk function (driver query shape): the
+        seed config (coarse centroids == the k=16 codebook seed
+        sample, as the oracle ties them) reproduces the DuckDB
+        oracle's rows exactly; with trained codebooks recall vs brute
+        force stays useful and ADC distances are non-decreasing in
+        rank."""
         from pyspark.sql import functions as F
 
-        books = S.pq_train_codebooks(emb, m=8, k=16, dim=32,
-                                     lloyd_iters=2)
+        from pdfextraction_spark.oracle import portable_sql as P
+
         cents = S.train_ivf_centroids(emb, n_centroids=16,
                                       lloyd_iters=0)
         queries = emb.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
-        expr = S.ivfpq_topk(emb, queries, books, centroids=cents,
-                            k=10, n_probe=4, vectorized=False).toPandas()
-        vec = S.ivfpq_topk(emb, queries, books, centroids=cents,
-                           k=10, n_probe=4, vectorized=True).toPandas()
+        seed_books = S.pq_train_codebooks(emb, m=8, k=16, dim=32)
         key = ["query_id", "vec_id", "approx_dist_micros", "rank"]
-        a = expr[key].sort_values(key).reset_index(drop=True)
-        b = vec[key].sort_values(key).reset_index(drop=True)
-        assert a.equals(b)
+        a = (S.ivfpq_topk(emb, queries, seed_books, centroids=cents,
+                          k=10, n_probe=4).toPandas()[key]
+             .sort_values(key).reset_index(drop=True))
+        b = (_duckdb_oracle(emb, P.ann_ivfpq_topk_sql(
+                 m=8, k_cent=16, dim=32, n_probe=4, k=10,
+                 n_queries=5))[key]
+             .sort_values(key).reset_index(drop=True))
+        assert len(a) > 0
+        assert a.astype("int64").equals(b.astype("int64"))
+
+        books = S.pq_train_codebooks(emb, m=8, k=16, dim=32,
+                                     lloyd_iters=2)
+        got = S.ivfpq_topk(emb, queries, books, centroids=cents,
+                           k=10, n_probe=4).toPandas()
         bf = S.brute_force_topk(emb, queries, k=10).toPandas()
         recalls = []
         for q in range(5):
             t = set(bf[bf.query_id == q].vec_id)
             recalls.append(
-                len(t & set(expr[expr.query_id == q].vec_id)) / len(t))
+                len(t & set(got[got.query_id == q].vec_id)) / len(t))
         assert np.mean(recalls) >= 0.5
         for q in range(5):
-            d = list(expr[expr.query_id == q].sort_values("rank")
+            d = list(got[got.query_id == q].sort_values("rank")
                      .approx_dist_micros)
             assert d == sorted(d)
 
-    def test_resolve_vectorized_dial(self):
-        """The expression-vs-numpy switch: explicit override always
-        wins; None flips to numpy above IVF_EXPR_CENTROID_MAX."""
-        assert S._resolve_vectorized(True, 4) is True
-        assert S._resolve_vectorized(False, 10_000) is False
-        assert S._resolve_vectorized(
-            None, S.IVF_EXPR_CENTROID_MAX) is False
-        assert S._resolve_vectorized(
-            None, S.IVF_EXPR_CENTROID_MAX + 1) is True
-
-    def test_ivf_auto_switch_plan(self, emb, monkeypatch):
-        """Above the centroid threshold ivf_topk must pick the Arrow
-        path without the caller setting any dial: the executed plan
-        contains ArrowEvalPython stages instead of the literal
-        expression tree."""
+    def test_default_paths_plan_arrow_udfs(self, emb, monkeypatch):
+        """pq_encode with a PQ-standard k=256 codebook, ivf_topk,
+        ivfpq_topk and semantic_dedup, each called with default
+        arguments, plan the Arrow-batch numpy UDFs
+        (ArrowEvalPython), never an m x k / n_centroids x dim literal
+        expression tree. semantic_dedup checkpoints its assignment,
+        so its plan is read where the checkpoint is taken."""
         from pyspark.sql import functions as F
 
+        def plan_of(df):
+            return df._jdf.queryExecution().executedPlan().toString()
+
+        checkpointed = []
+        frame_cls = type(emb)
+        real_checkpoint = frame_cls.localCheckpoint
+
+        def spy(df, *args, **kwargs):
+            checkpointed.append(plan_of(df))
+            return real_checkpoint(df, *args, **kwargs)
+
+        monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+
+        books256 = S.pq_train_codebooks(emb, m=8, k=256, dim=32)
+        assert len(books256[0]) == 256
+        books = S.pq_train_codebooks(emb, m=8, k=16, dim=32)
         cents = S.train_ivf_centroids(emb, n_centroids=16,
                                       lloyd_iters=0)
         queries = emb.filter(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"), "embedding"
         )
-        monkeypatch.setattr(S, "IVF_EXPR_CENTROID_MAX", 8)
-        auto = S.ivf_topk(emb, queries, k=5, centroids=cents,
-                          n_probe=2)
-        plan = auto._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" in plan
-        monkeypatch.setattr(S, "IVF_EXPR_CENTROID_MAX", 512)
-        expr = S.ivf_topk(emb, queries, k=5, centroids=cents,
-                          n_probe=2)
-        plan2 = expr._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan2
+        S.semantic_dedup(emb, threshold=0.9, centroids=cents)
+        assert len(checkpointed) == 1
+        plans = checkpointed + [plan_of(df) for df in (
+            S.pq_encode(emb, books256),
+            S.ivf_topk(emb, queries, k=5, centroids=cents),
+            S.ivfpq_topk(emb, queries, books256, centroids=cents, k=5),
+            S.ivfpq_topk(emb, queries, books, centroids=cents, k=5),
+        )]
+        for plan in plans:
+            assert "ArrowEvalPython" in plan
+            assert "array_position" not in plan
+
+
+@pytest.mark.slow
+class TestMalformedVectors:
+    """One malformed vector must not fail the Arrow batch it rides in.
+    Rows: a null vector (9001), a short one (9002, 10 of 32 values),
+    one with a null element (9003, vector 7 with element 9 nulled)
+    and one too wide (9004, vector 7 plus one value). IVF assignment
+    and probing need exactly dim non-null values (else null list_id /
+    null probes: the row joins no list); PQ nulls each code whose
+    d_sub-wide slice is not fully present."""
+
+    @pytest.fixture(scope="class")
+    def dirty(self, emb):
+        v7 = [float(x) for x in
+              emb.filter("vec_id = 7").collect()[0].embedding]
+        nulled = list(v7)
+        nulled[9] = None
+        bad = emb.sparkSession.createDataFrame(
+            [(9001, None), (9002, [0.5] * 10), (9003, nulled),
+             (9004, v7 + [1.0])],
+            emb.schema,
+        )
+        return emb.unionByName(bad)
+
+    def test_pq_codes_null_per_subspace(self, emb, dirty):
+        books = S.pq_train_codebooks(emb, m=8, k=16, dim=32)
+        codes = {r.vec_id: r.codes
+                 for r in S.pq_encode(dirty, books).collect()}
+        B = np.asarray(books)
+        half = [int(np.argmin(np.round(((0.5 - B[j]) ** 2).sum(-1), 6)))
+                + 1 for j in range(2)]
+        assert codes[9001] == [None] * 8
+        assert codes[9002] == half + [None] * 6
+        assert codes[9003] == codes[7][:2] + [None] + codes[7][3:]
+        assert codes[9004] == codes[7]
+        assert all(None not in codes[i] for i in range(300))
+
+        err = {r.vec_id: r.e for r in dirty.select(
+            "vec_id",
+            S.np_pq_recon_err_udf(books)(
+                S._as_double(dirty.embedding)).alias("e"),
+        ).collect()}
+        assert err[9001] is None and err[9002] is None
+        assert err[9003] is None
+        assert err[9004] == err[7]
+        assert all(err[i] is not None for i in range(300))
+
+    def test_ivf_and_ivfpq_drop_malformed_rows(self, emb, dirty):
+        from pyspark.sql import functions as F
+
+        cents = S.train_ivf_centroids(emb, n_centroids=16,
+                                      lloyd_iters=0)
+        books = S.pq_train_codebooks(emb, m=8, k=16, dim=32)
+        good_q = emb.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        # malformed QUERY vectors get null probes: no result rows
+        dirty_q = dirty.filter(
+            (F.col("vec_id") < 5) | (F.col("vec_id") > 9000)
+        ).select(F.col("vec_id").alias("query_id"), "embedding")
+
+        def rows(df):
+            return sorted(map(tuple, df.collect()))
+
+        clean = rows(S.ivf_topk(emb, good_q, k=10, centroids=cents))
+        assert len(clean) == 50
+        assert rows(S.ivf_topk(dirty, dirty_q, k=10,
+                               centroids=cents)) == clean
+        clean_pq = rows(S.ivfpq_topk(emb, good_q, books,
+                                     centroids=cents, k=10))
+        assert rows(S.ivfpq_topk(dirty, good_q, books,
+                                 centroids=cents, k=10)) == clean_pq
+
+    def test_semantic_dedup_keeps_unassigned(self, emb, dirty):
+        cents = S.train_ivf_centroids(emb, n_centroids=8,
+                                      lloyd_iters=0)
+        clean = {r.vec_id: (r.list_id, r.is_kept) for r in
+                 S.semantic_dedup(emb, threshold=0.9,
+                                  centroids=cents).collect()}
+        got = {r.vec_id: (r.list_id, r.is_kept) for r in
+               S.semantic_dedup(dirty, threshold=0.9,
+                                centroids=cents).collect()}
+        for i in (9001, 9002, 9003, 9004):
+            assert got.pop(i) == (None, True)
+        assert got == clean
+
+    def test_lloyd_steps_skip_malformed_rows(self, emb, dirty):
+        cents = S.train_ivf_centroids(emb, n_centroids=16,
+                                      lloyd_iters=0)
+        assert np.allclose(
+            S._lloyd_step(dirty, "embedding", cents),
+            S._lloyd_step(emb, "embedding", cents), atol=1e-12)
+        books = S.pq_train_codebooks(emb, m=8, k=16, dim=32)
+        with_null = emb.unionByName(
+            dirty.filter("vec_id = 9001"))
+        assert np.allclose(
+            S._pq_lloyd_step(with_null, "embedding", books),
+            S._pq_lloyd_step(emb, "embedding", books), atol=1e-12)
+        trained = np.asarray(
+            S._pq_lloyd_step(dirty, "embedding", books))
+        assert trained.shape == (8, 16, 4)
+        assert np.isfinite(trained).all()
 
 
 @pytest.mark.slow
@@ -911,14 +1078,22 @@ class TestSemanticDedup:
         assert set(out.columns) == {"vec_id", "list_id", "is_kept"}
 
     def test_vectorized_assignment_parity(self, emb):
-        a = S.semantic_dedup(emb, threshold=0.9, n_centroids=8,
-                             lloyd_iters=0, vectorized=False).toPandas()
-        b = S.semantic_dedup(emb, threshold=0.9, n_centroids=8,
-                             lloyd_iters=0, vectorized=True).toPandas()
-        pd.testing.assert_frame_equal(
-            a.sort_values("vec_id").reset_index(drop=True),
-            b.sort_values("vec_id").reset_index(drop=True),
-        )
+        """Every vector's list_id and keep verdict equal the DuckDB
+        oracle's (rounded-cosine argmax assignment, within-cluster
+        epsilon-ball prune)."""
+        from pdfextraction_spark.oracle import portable_sql as P
+
+        got = (S.semantic_dedup(emb, threshold=0.9, n_centroids=8,
+                                lloyd_iters=0).toPandas()
+               .sort_values("vec_id").reset_index(drop=True))
+        exp = (_duckdb_oracle(emb, P.semantic_dedup_sql(
+                   n_centroids=8, threshold=0.9))
+               .sort_values("vec_id").reset_index(drop=True))
+        assert len(got) == 300
+        assert list(got.vec_id) == list(exp.vec_id)
+        assert list(got.list_id) == list(exp.list_id)
+        assert list(got.is_kept) == list(exp.is_kept)
+        assert (~got.is_kept).any()
 
 
 class TestIncrementalUpdate:
