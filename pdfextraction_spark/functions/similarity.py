@@ -587,14 +587,19 @@ def _adc_query_tables(
     corpus however many queries there are (a per-query union would
     re-derive the encode lineage per query). Queries are collected
     driver-side (the query set is bounded, same stance as the IVF
-    centroid collect)."""
+    centroid collect). A query whose first m * d_sub values are not
+    all present (null vector, too short, null element) has no table,
+    so it joins nothing and returns no rows."""
     d_sub = len(codebooks[0][0])
+    dim = len(codebooks) * d_sub
     q_rows = queries.select(
         F.col(query_id_col).alias("query_id"),
         _as_double(F.col(vec_col)).alias("qv"),
     ).collect()
     tables = []
     for r in q_rows:
+        if r.qv is None or len(r.qv) < dim or None in r.qv[:dim]:
+            continue
         qv = list(map(float, r.qv))
         tables.append((
             int(r.query_id),
@@ -637,12 +642,15 @@ def _adc_score():
 def _adc_rank(scored: DataFrame, k: int) -> DataFrame:
     """Per-query ADC top-k: rank 1 = smallest integer distance, ties
     by vec_id — the single home for the rank contract both pq_adc_topk
-    and ivfpq_topk (and their green oracles) pin."""
+    and ivfpq_topk (and their green oracles) pin. A candidate with a
+    null code has a null distance and is no candidate (it would
+    otherwise rank first)."""
     w = Window.partitionBy("query_id").orderBy(
         F.asc("approx_dist_micros"), F.asc("vec_id")
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        scored.filter(F.col("approx_dist_micros").isNotNull())
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 

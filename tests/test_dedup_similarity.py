@@ -837,7 +837,9 @@ class TestMalformedVectors:
     and one too wide (9004, vector 7 plus one value). IVF assignment
     and probing need exactly dim non-null values (else null list_id /
     null probes: the row joins no list); PQ nulls each code whose
-    d_sub-wide slice is not fully present."""
+    d_sub-wide slice is not fully present. ADC search needs a query's
+    first dim values (else no table) and every code of a candidate
+    (else no distance)."""
 
     @pytest.fixture(scope="class")
     def dirty(self, emb):
@@ -899,6 +901,26 @@ class TestMalformedVectors:
                                      centroids=cents, k=10))
         assert rows(S.ivfpq_topk(dirty, good_q, books,
                                  centroids=cents, k=10)) == clean_pq
+        assert rows(S.ivfpq_topk(dirty, dirty_q, books,
+                                 centroids=cents, k=10)) == clean_pq
+
+    def test_pq_adc_drops_malformed_rows(self, emb, dirty):
+        from pyspark.sql import functions as F
+
+        books = S.pq_train_codebooks(emb, m=8, k=16, dim=32)
+        good_q = emb.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        # 9001-9003 lack values of their first dim: as queries they get
+        # no ADC table, as corpus rows a null code (no distance); 9004
+        # codes as vector 7 and stays a candidate, so it is left out
+        bad = dirty.filter("vec_id <> 9004")
+        bad_q = bad.filter(
+            (F.col("vec_id") < 5) | (F.col("vec_id") > 9000)
+        ).select(F.col("vec_id").alias("query_id"), "embedding")
+        got = S.pq_adc_topk(bad, bad_q, books, k=10).collect()
+        want = S.pq_adc_topk(emb, good_q, books, k=10).collect()
+        assert len(want) == 50
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
     def test_semantic_dedup_keeps_unassigned(self, emb, dirty):
         cents = S.train_ivf_centroids(emb, n_centroids=8,
