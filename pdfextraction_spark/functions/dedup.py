@@ -11,8 +11,8 @@ All built from DataFrame primitives so Catalyst keeps pushdown/pruning:
 - minhash_lsh_pairs: k permutation-free minhashes via xxhash64(seeded)
   min-aggregated per doc; bands of r signatures hashed to buckets;
   bucket equi-join yields candidates, verified by exact Jaccard
-- simhash64: 64-bit sign-sum sketch over shingle hashes; near-dups =
-  pairs within Hamming distance d (bit_count(xor) <= d)
+- simhash_portable60: 60-bit sign-sum sketch over md5 shingle hashes;
+  near-dups = pairs within Hamming distance d (bit_count(xor) <= d)
 
 At cluster scale every join here is an equi-join on a hashed key (AQE
 handles bucket skew from hot shingles); common-shingle stoplists drop
@@ -26,15 +26,15 @@ from pyspark.sql import Column, DataFrame, functions as F
 # --------------------------------------------------------------------------
 # hash families
 #
-# Every sketch here comes in two flavors sharing one pipeline shape:
-#
-# - xxhash64 (default): the production Spark path — JVM-native, zero
-#   allocation, the right 100 TB choice.
-# - md5-portable: bit-identical on ANY engine with md5() — the driver's
-#   DuckDB oracle recomputes the ENTIRE sketch + blocking + verify
-#   pipeline in SQL and must land on the same rows/hashes, which a
-#   Spark-private hash cannot give it. Slower (md5 + hex decode), used
-#   for oracle-checked queries and cross-engine reproducibility.
+# The sketches here hash with md5 (md5_prefix60 and md5 hex prefixes):
+# bit-identical on ANY engine with md5(), so the DuckDB oracle
+# recomputes the ENTIRE sketch + blocking + verify pipeline in
+# SQL and lands on the same rows/hashes, which a Spark-private hash
+# cannot give it. minhash_lsh_pairs (and the joins built on it) keeps
+# a second, xxhash64 family behind ``portable=False``: the CLI
+# ``curate`` path runs it, and it measured 4.9x faster than md5 on
+# 5000 sf0.1 documents (ROADMAP item 4). For SimHash the two families
+# timed within noise, so it has only the md5 one.
 
 
 def md5_prefix60(col: Column) -> Column:
@@ -553,14 +553,20 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     )
 
 
-def _simhash(df: DataFrame, text_col: str, id_col: str, n: int,
-             hash_fn, bits: int) -> DataFrame:
-    """Shared SimHash pipeline: per bit, sign of the sum over shingles
-    of (+1 if hash bit set else -1). One explode + one grouped
-    aggregation with ``bits`` map-side-combined SUM columns."""
+SIMHASH_BITS = 60
+
+
+def simhash_portable60(df: DataFrame, text_col: str = "text",
+                       id_col: str = "doc_id", n: int = 2) -> DataFrame:
+    """60-bit SimHash over md5_prefix60 shingle hashes — the sketch the
+    DuckDB oracle recomputes bit-for-bit in SQL (60 bits = 15 md5 hex
+    chars; keeps the value positive in signed int64 on every engine).
+    Per bit, the sign of the sum over shingles of (+1 if the hash bit
+    is set else -1): one explode + one grouped aggregation with 60
+    map-side-combined SUM columns."""
     sh = with_shingles(df, text_col, id_col, n)
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
-    h = ex.withColumn("h", hash_fn(F.col("s")))
+    h = ex.withColumn("h", md5_prefix60(F.col("s")))
     # bit tests/reconstruction via shifts — 1<<63 overflows a literal
     # long, so the reconstruction keeps shiftleft(1L, b). Both the 60+
     # per-bit sum columns and the reconstruction chain are parsed SQL
@@ -572,30 +578,16 @@ def _simhash(df: DataFrame, text_col: str, id_col: str, n: int,
             f"sum(CASE WHEN (shiftrightunsigned(h, {b}) & 1) = 1 "
             f"THEN 1 ELSE -1 END)"
         ).alias(f"b{b}")
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     ]
     agg = h.groupBy("doc_id").agg(*bit_cols)
     sim_terms = " + ".join(
         f"CASE WHEN b{b} > 0 THEN shiftleft(cast(1 as bigint), {b}) "
         f"ELSE cast(0 as bigint) END"
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     )
     sim = F.expr(f"cast(0 as bigint) + {sim_terms}")
     return agg.select("doc_id", sim.alias("simhash"))
-
-
-def simhash64(df: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id", n: int = 2) -> DataFrame:
-    """64-bit SimHash over xxhash64 shingle hashes (production)."""
-    return _simhash(df, text_col, id_col, n, F.xxhash64, 64)
-
-
-def simhash_portable60(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", n: int = 2) -> DataFrame:
-    """60-bit SimHash over md5_prefix60 shingle hashes — the sketch the
-    DuckDB oracle recomputes bit-for-bit in SQL (60 bits = 15 md5 hex
-    chars; keeps the value positive in signed int64 on every engine)."""
-    return _simhash(df, text_col, id_col, n, md5_prefix60, 60)
 
 
 def _band_bounds(bits: int, bands: int):
@@ -612,41 +604,32 @@ def _band_bounds(bits: int, bands: int):
 
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", max_hamming: int = 3,
-                       bands: int | None = None,
-                       portable: bool = False) -> DataFrame:
+                       id_col: str = "doc_id",
+                       max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, banded blocking
-    (Manku et al., WWW'07 style).
+    (Manku et al., WWW'07 style), over the 60-bit md5 sketch
+    (simhash_portable60) — the DuckDB oracle reproduces sketch,
+    banding and verification exactly.
 
-    The sketch bits split into ``bands`` contiguous chunks; a candidate
-    pair must collide in at least one (band, chunk-value) bucket. With
-    bands >= max_hamming + 1 (the default) recall is GUARANTEED by
-    pigeonhole: d differing bits can dirty at most d bands, leaving one
-    identical band. Candidates are verified by exact bit_count(xor).
+    The sketch bits split into max_hamming + 1 contiguous bands; a
+    candidate pair must collide in at least one (band, chunk-value)
+    bucket. Recall is GUARANTEED by pigeonhole: d differing bits can
+    dirty at most d bands, leaving one identical band. Candidates are
+    verified by exact bit_count(xor).
 
-    The DEFAULT is the scale-safe standard config: d=3 with 4 wide
-    bands (Manku WWW'07) — 16-bit bands give expected n/2^16 docs per
-    bucket, web-corpus territory. Larger d is an explicit opt-in cost
-    dial: more bands -> narrower chunks -> bigger buckets (band width
-    w ~> n/2^w docs each); d=12 forces 13 ~5-bit bands, which is
-    10^7-doc territory, not 10^9.
-
-    ``portable=True`` uses the 60-bit md5 sketch (simhash_portable60)
-    so the DuckDB oracle reproduces sketch, banding, and verification
-    exactly; default stays xxhash64/64-bit."""
-    if bands is None:
-        bands = max_hamming + 1
-    total_bits = 60 if portable else 64
+    d=3 gives 4 wide bands (the Manku WWW'07 config) — 15-bit bands
+    give expected n/2^15 docs per bucket, web-corpus territory. Larger
+    d is a cost dial: more bands -> narrower chunks -> bigger buckets
+    (band width w ~> n/2^w docs each); d=12 forces 13 ~5-bit bands,
+    which is 10^7-doc territory, not 10^9."""
     # the sketch is tiny (doc_id + one long) but its lineage is the
-    # full shingle explode + bits-wide sum aggregation, and BOTH sides
+    # full shingle explode + 60-wide sum aggregation, and BOTH sides
     # of the banded self-join contain it — cut once, sketch once
-    sh = (simhash_portable60 if portable else simhash64)(
-        df, text_col, id_col
-    ).localCheckpoint()
+    sh = simhash_portable60(df, text_col, id_col).localCheckpoint()
 
     def _band_key(start: int, width: int):
         shifted = F.shiftrightunsigned("simhash", start)
-        if start + width >= total_bits:  # top band: shift already truncates
+        if start + width >= SIMHASH_BITS:  # top band: shift truncates
             return shifted
         return shifted.bitwiseAND(F.lit((1 << width) - 1))
 
@@ -661,7 +644,7 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
                         _band_key(start, width).alias("key"),
                     )
                     for bi, (start, width) in enumerate(
-                        _band_bounds(total_bits, bands)
+                        _band_bounds(SIMHASH_BITS, max_hamming + 1)
                     )
                 ]
             )

@@ -4,9 +4,9 @@
   codegen, no Python
 - brute_force_topk: exact top-k per query (cross join; broadcast the
   query side — correct baseline and the verifier for the ANN path)
-- lsh_bucket_topk: random-hyperplane (sign) LSH — queries only join
-  candidates sharing a bucket; the scale path (candidates/query drops
-  from N to N/2^bits on average)
+- lsh_bucket_topk: sign-hyperplane LSH over md5-derived integer planes
+  — queries only join candidates sharing a bucket; the scale path
+  (candidates/query drops from N to N/2^bits on average)
 - IVF / PQ / IVF-PQ / SemDeDup: coarse assignment, probe selection
   and PQ encoding run as Arrow-batch numpy UDFs (np_*_udf) with the
   codebooks in the UDF closure; everything downstream of them is
@@ -133,11 +133,30 @@ def brute_force_topk(
             F.round(cosine_sim(F.col("qv"), F.col("v")), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
+    return _topk(scored, k)
+
+
+def _topk(scored: DataFrame, k: int, score: str = "sim") -> DataFrame:
+    """Per-query top-k: rank 1 = highest cosine ``sim`` (or smallest
+    ADC ``approx_dist_micros``), ties by vec_id — the single home for
+    the rank contract every search here and its DuckDB oracle share.
+    A null score (a null vector, a null element or code, or two widths
+    that differ, on either side) is no candidate: it would otherwise
+    still fill a slot of a short top-k."""
+    order = F.desc(score) if score == "sim" else F.asc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        scored.filter(F.col(score).isNotNull())
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
+
+
+def _hamming1_probes(bucket, bits: int):
+    """The bucket plus every bucket at Hamming distance 1 (one sign
+    flipped) — the multiprobe-LSH recall boost; bits + 1 probes."""
+    return F.array(bucket, *[bucket.bitwiseXOR(F.lit(1 << i).cast("long"))
+                             for i in range(bits)])
 
 
 def cosine_near_pairs(
@@ -148,25 +167,20 @@ def cosine_near_pairs(
     blocked: bool = True,
     bits: int = 8,
     dim: int = 64,
-    planes: Optional[List[List[float]]] = None,
-    multiprobe: bool = True,
-    portable: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a<b, cosine >= threshold).
 
     ``blocked=True`` (the scale path): candidates must share a sign-LSH
-    bucket — one side additionally probes its Hamming-distance-1
-    buckets (multiprobe), then exact cosine verifies. Shuffles
-    (id, bucket, vector) once; no all-pairs. Recall is probabilistic
-    (~(1 - theta/pi)^bits per bucket, boosted by multiprobe) —
-    measured vs the exact form in tests.
+    bucket (lsh_bucket_id over det_int_planes(dim, bits)) — one side
+    additionally probes its Hamming-distance-1 buckets (multiprobe),
+    then exact cosine verifies. Shuffles (id, bucket, vector) once; no
+    all-pairs. Recall is probabilistic (~(1 - theta/pi)^bits per
+    bucket, boosted by multiprobe) — measured vs the exact form in
+    tests. The DuckDB oracle reproduces the blocked candidate set
+    exactly.
 
     ``blocked=False``: exact all-pairs cross join — the verifier and
-    the small-N path; O(n^2), never run this on a corpus.
-
-    ``portable=True`` (blocked path only): md5-derived integer planes
-    + quantized bucketing so the DuckDB oracle reproduces the blocked
-    candidate set exactly."""
+    the small-N path; O(n^2), never run this on a corpus."""
     # compute each vector's norm ONCE: the pair expression is then a
     # dot product and one division — recomputing both norms per pair
     # would triple the flops on an O(pairs) expression
@@ -194,23 +208,14 @@ def cosine_near_pairs(
             )
             .filter(F.col("cos_sim") >= threshold)
         )
-    if portable and planes is None:
-        planes = det_int_planes(dim, bits)
-    planes = planes or random_hyperplanes(dim, bits)
-    bucket = lsh_bucket_id("v", planes, quantize=portable, is_double=True)
-    eb = e.withColumn("bucket", bucket)
-    probe_list = (
-        F.array(F.col("bucket"),
-                *[F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                  for i in range(len(planes))])
-        if multiprobe
-        else F.array(F.col("bucket"))
+    eb = e.withColumn(
+        "bucket", lsh_bucket_id("v", det_int_planes(dim, bits), is_double=True)
     )
     pb = eb.select(
         F.col("vec_id").alias("id_b"),
         F.col("v").alias("v_b"),
         F.col("n").alias("n_b"),
-        F.explode(probe_list).alias("bucket"),
+        F.explode(_hamming1_probes(F.col("bucket"), bits)).alias("bucket"),
     )
     pa = eb.select(
         F.col("vec_id").alias("id_a"),
@@ -242,9 +247,6 @@ def cosine_near_join(
     vec_col: str = "embedding",
     bits: int = 8,
     dim: int = 64,
-    planes: Optional[List[List[float]]] = None,
-    multiprobe: bool = True,
-    portable: bool = False,
 ) -> DataFrame:
     """ASYMMETRIC embedding near-dup join — incremental dedup on the
     embedding column: (left_id, right_id, cos_sim >= threshold) across
@@ -253,9 +255,7 @@ def cosine_near_join(
     Hamming-1 buckets — the smaller side pays the probe fan-out);
     exact cosine verifies before emit. Same plane family and recall
     model as cosine_near_pairs(blocked=True)."""
-    if portable and planes is None:
-        planes = det_int_planes(dim, bits)
-    planes = planes or random_hyperplanes(dim, bits)
+    planes = det_int_planes(dim, bits)
 
     def side(df: DataFrame, out_id: str):
         e = df.select(
@@ -264,23 +264,16 @@ def cosine_near_join(
         ).withColumn("n", _norm(F.col("v")))
         return e.withColumn(
             "bucket",
-            lsh_bucket_id("v", planes, quantize=portable, is_double=True),
+            lsh_bucket_id("v", planes, is_double=True),
         )
 
     el = side(left, "left_id")
     er = side(right, "right_id")
-    probe_list = (
-        F.array(F.col("bucket"),
-                *[F.col("bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                  for i in range(len(planes))])
-        if multiprobe
-        else F.array(F.col("bucket"))
-    )
     pl = el.select(
         "left_id",
         F.col("v").alias("v_l"),
         F.col("n").alias("n_l"),
-        F.explode(probe_list).alias("bucket"),
+        F.explode(_hamming1_probes(F.col("bucket"), bits)).alias("bucket"),
     )
     pr = er.select(
         "right_id",
@@ -572,7 +565,7 @@ def pq_adc_topk(
         .select("query_id", "vec_id",
                 _adc_score().alias("approx_dist_micros"))
     )
-    return _adc_rank(scored, k)
+    return _topk(scored, k, "approx_dist_micros")
 
 
 def _adc_query_tables(
@@ -636,22 +629,6 @@ def _adc_score():
         ),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
-    )
-
-
-def _adc_rank(scored: DataFrame, k: int) -> DataFrame:
-    """Per-query ADC top-k: rank 1 = smallest integer distance, ties
-    by vec_id — the single home for the rank contract both pq_adc_topk
-    and ivfpq_topk (and their green oracles) pin. A candidate with a
-    null code has a null distance and is no candidate (it would
-    otherwise rank first)."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_dist_micros"), F.asc("vec_id")
-    )
-    return (
-        scored.filter(F.col("approx_dist_micros").isNotNull())
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
     )
 
 
@@ -771,15 +748,10 @@ def ivfpq_topk(
         .select("query_id", "vec_id",
                 _adc_score().alias("approx_dist_micros"))
     )
-    return _adc_rank(scored, k)
+    return _topk(scored, k, "approx_dist_micros")
 
 
-def random_hyperplanes(dim: int, bits: int = 8, seed: int = 42) -> List[List[float]]:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((bits, dim)).tolist()
-
-
-# quantization scale for the portable bucket path: embeddings are
+# quantization scale for sign-LSH bucketing: embeddings are
 # rounded to integers at this scale before the plane dot product, so
 # the arithmetic is exact-integer (doubles are exact below 2^53) and
 # the bucket id is bit-identical on any engine — no sign flips from
@@ -793,8 +765,9 @@ def det_int_planes(dim: int, bits: int) -> List[List[int]]:
     Any engine with md5 can rebuild the identical planes — the DuckDB
     oracle does, via strpos('0123456789abcdef', substring(md5(...),1,1))
     - 9. Uniform small-int components are fine for SIGN-LSH bucketing
-    (only the sign of the projection matters); the Gaussian planes
-    remain the default for the non-oracle path."""
+    (only the sign of the projection matters); at sf0.1 they timed
+    and recalled within noise of Gaussian planes, so they are the only
+    plane family."""
     import hashlib
 
     return [
@@ -807,20 +780,18 @@ def det_int_planes(dim: int, bits: int) -> List[List[int]]:
 
 
 def lsh_bucket_id(vec_name: str, planes: Sequence[Sequence[float]],
-                  quantize: bool = False, is_double: bool = False):
-    """Sign-LSH bucket: bit i set iff dot(vec, plane_i) > 0.
-
-    ``quantize=True`` (portable path): the vector is rounded to
-    integers at QUANT_SCALE first, making the dot product exact
-    integer arithmetic — reproducible bit-for-bit across engines.
+                  is_double: bool = False):
+    """Sign-LSH bucket: bit i set iff dot(round(vec * QUANT_SCALE),
+    plane_i) > 0. Rounding the vector to integers first makes the dot
+    product exact integer arithmetic — reproducible bit-for-bit across
+    engines.
 
     ``vec_name`` is a column name; plane literal arrays are built in
     one py4j call each (_lit_arr). ``is_double=True`` skips the
     element cast for columns already staged as array<double> (the
     cast is a no-op on doubles, so bucket values are unchanged)."""
     v = F.col(vec_name) if is_double else _as_double(F.col(vec_name))
-    if quantize:
-        v = F.transform(v, lambda x: F.round(x * QUANT_SCALE))
+    v = F.transform(v, lambda x: F.round(x * QUANT_SCALE))
     bucket = F.lit(0).cast("long")
     for i, plane in enumerate(planes):
         bucket = bucket + F.when(
@@ -1031,11 +1002,7 @@ def ivf_topk(
         .groupBy("query_id", "vec_id")
         .agg(F.max("sim").alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k)
 
 
 def lsh_bucket_topk(
@@ -1047,41 +1014,31 @@ def lsh_bucket_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    planes: Optional[List[List[float]]] = None,
-    multiprobe: bool = True,
-    portable: bool = False,
 ) -> DataFrame:
     """Approximate top-k: only candidates in the query's LSH bucket(s)
-    are scored.
+    are scored. Buckets are exact-integer sign-LSH ids over
+    det_int_planes(dim, bits), so the DuckDB oracle rebuilds the
+    identical candidate sets.
 
-    ``multiprobe``: the QUERY side additionally probes every bucket at
-    Hamming distance 1 (one sign flipped) — the standard multiprobe-LSH
-    recall boost. Cost scales the query side only (bits+1 probe rows
-    per query, still broadcast); the corpus is hashed exactly once.
-    Recall measured against brute_force_topk in tests.
-
-    ``portable=True``: md5-derived integer planes + quantized exact-
-    integer bucketing (det_int_planes) so the DuckDB oracle rebuilds
-    the identical candidate sets; default keeps Gaussian planes."""
-    if portable and planes is None:
-        planes = det_int_planes(dim, bits)
-    planes = planes or random_hyperplanes(dim, bits)
+    The QUERY side also probes every bucket at Hamming distance 1 (one
+    sign flipped) — the standard multiprobe-LSH recall boost. Cost
+    scales the query side only (bits+1 probe rows per query, still
+    broadcast); the corpus is hashed exactly once. Recall measured
+    against brute_force_topk in tests. A malformed vector on either
+    side (null, null element, other width) scores a null sim and is
+    never ranked."""
+    planes = det_int_planes(dim, bits)
     e = embeddings.select(
         F.col(id_col).alias("vec_id"),
         _as_double(F.col(vec_col)).alias("v"),
-        lsh_bucket_id(vec_col, planes, quantize=portable).alias("bucket"),
-    )
-    qb = lsh_bucket_id(vec_col, planes, quantize=portable)
-    probe_list = (
-        F.array(qb, *[qb.bitwiseXOR(F.lit(1 << i).cast("long"))
-                      for i in range(len(planes))])
-        if multiprobe
-        else F.array(qb)
+        lsh_bucket_id(vec_col, planes).alias("bucket"),
     )
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         _as_double(F.col(vec_col)).alias("qv"),
-        F.explode(probe_list).alias("bucket"),
+        F.explode(
+            _hamming1_probes(lsh_bucket_id(vec_col, planes), bits)
+        ).alias("bucket"),
     )
     scored = (
         e.join(F.broadcast(q), "bucket")
@@ -1094,11 +1051,7 @@ def lsh_bucket_topk(
         .groupBy("query_id", "vec_id")
         .agg(F.max("sim").alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k)
 
 
 def semantic_dedup(

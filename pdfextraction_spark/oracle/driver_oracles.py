@@ -203,22 +203,7 @@ def oracle_sql() -> dict[str, str]:
             JOIN sizes sb ON sb.doc_id = id_b
             WHERE n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter) >= 0.2
         """,
-        "ann_cosine_topk": """
-            WITH scored AS (
-              SELECT q.vec_id AS query_id, e.vec_id AS vec_id,
-                     list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                            CAST(e.embedding AS DOUBLE[])) AS raw
-              FROM embeddings q, embeddings e
-              WHERE q.vec_id < 5 AND e.vec_id <> q.vec_id
-            ), ranked AS (
-              SELECT query_id, vec_id, round(raw, 6) AS sim,
-                     CAST(row_number() OVER (PARTITION BY query_id
-                                             ORDER BY raw DESC, vec_id ASC)
-                          AS INTEGER) AS rank
-              FROM scored
-            )
-            SELECT query_id, vec_id, sim, rank FROM ranked WHERE rank <= 10
-        """,
+        "ann_cosine_topk": P.ann_cosine_topk_sql(k=10, n_queries=5),
         "cosine_near_pairs": """
             WITH e AS (
               SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v

@@ -1,8 +1,9 @@
 """DuckDB oracle SQL for the approximate dedup/ANN driver queries.
 
 Closes VERDICT r2 item 1: the four `no_oracle` rows. Each Spark query
-runs its PORTABLE hash variant (md5-derived sketches / deterministic
-integer hyperplanes — functions/dedup.py, functions/similarity.py),
+runs the md5 hash family (md5-derived sketches / deterministic
+integer hyperplanes — functions/dedup.py, functions/similarity.py;
+only minhash also has an xxhash64 variant, which no query runs),
 and the SQL here re-derives the ENTIRE pipeline — sketch, banding/
 bucketing, candidate enumeration, exact verification, ranking — from
 the raw base tables, so the driver's row/schema/value-hash compare is
@@ -115,17 +116,19 @@ def minhash_lsh_pairs_sql(table: str = "documents", n: int = 3,
     """
 
 
-def _simhash_sketch_ctes(table: str, n: int, bits: int = 60) -> str:
+def _simhash_sketch_ctes(table: str, n: int) -> str:
     """CTE chain ending in sk(doc_id, simhash) — mirror of
     simhash_portable60."""
+    from ..functions.dedup import SIMHASH_BITS
+
     h60 = _MD5_60.format(expr="s")
     bit_sums = ",\n                 ".join(
         f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     )
     recon = "\n                 + ".join(
         f"(CASE WHEN b{b} > 0 THEN CAST(1 AS BIGINT) << {b} ELSE 0 END)"
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     )
     return f"""{_shingle_cte(table, n)},
         hv AS (
@@ -150,17 +153,16 @@ def simhash_sketch_sql(table: str = "documents", n: int = 2) -> str:
 
 
 def simhash_pairs_sql(table: str = "documents", n: int = 2,
-                      max_hamming: int = 3,
-                      bands: int | None = None) -> str:
-    """Mirror of simhash_near_pairs(portable=True): banded blocking
-    over the 60-bit sketch, exact Hamming verification."""
-    from ..functions.dedup import _band_bounds
+                      max_hamming: int = 3) -> str:
+    """Mirror of simhash_near_pairs: banded blocking over the 60-bit
+    sketch (max_hamming + 1 bands), exact Hamming verification."""
+    from ..functions.dedup import SIMHASH_BITS, _band_bounds
 
-    if bands is None:
-        bands = max_hamming + 1
     band_keys = []
-    for bi, (start, width) in enumerate(_band_bounds(60, bands)):
-        if start + width >= 60:
+    for bi, (start, width) in enumerate(
+        _band_bounds(SIMHASH_BITS, max_hamming + 1)
+    ):
+        if start + width >= SIMHASH_BITS:
             expr = f"(simhash >> {start})"
         else:
             expr = f"((simhash >> {start}) & {(1 << width) - 1})"
@@ -305,15 +307,34 @@ def _plane_cte(bits: int, dim: int) -> str:
         )"""
 
 
-def _bucket_ctes(table: str, bits: int, dim: int) -> str:
-    """CTE chain ending in buck(vec_id, v, bucket) — mirror of
-    lsh_bucket_id(quantize=True) over det_int_planes."""
+def _vectors_cte(table: str) -> str:
+    """e(vec_id, v): the vectors with no null element. Spark scores a
+    null cosine (never a candidate) for a null vector or one with a
+    null element, so the oracles drop those rows up front; pairs of
+    unequal width are excluded where the cosine is taken
+    (``len(a.v) = len(b.v)``). list_filter rebuilds the lists: DuckDB's
+    list_cosine_similarity rejects a null element anywhere in its
+    input vector, even in a row a filter has already dropped."""
     return f"""
         e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}
-        ), q AS (
+          SELECT vec_id,
+                 list_filter(CAST(embedding AS DOUBLE[]), x -> x IS NOT NULL)
+                   AS v
+          FROM {table}
+          WHERE list_count(embedding) = len(embedding)
+        )"""
+
+
+def _bucket_ctes(table: str, bits: int, dim: int) -> str:
+    """CTE chain ending in buck(vec_id, v, bucket) — mirror of
+    lsh_bucket_id over det_int_planes. A vector whose width is not
+    ``dim`` gets bucket 0, as in Spark (its plane dot products are
+    null)."""
+    return f"""{_vectors_cte(table)}, q AS (
           SELECT vec_id, v,
-                 [round(v[d] * 1000) for d in generate_series(1, {dim})] AS qv
+                 CASE WHEN len(v) = {dim} THEN
+                   [round(v[d] * 1000) for d in generate_series(1, {dim})]
+                 END AS qv
           FROM e
         ), {_plane_cte(bits, dim)},
         proj AS (
@@ -333,6 +354,7 @@ def _bucket_ctes(table: str, bits: int, dim: int) -> str:
 _TOPK_TAIL = """
         agg AS (
           SELECT query_id, vec_id, MAX(sim) AS sim FROM scored
+          WHERE sim IS NOT NULL
           GROUP BY query_id, vec_id
         ), ranked AS (
           SELECT query_id, vec_id, sim,
@@ -348,9 +370,9 @@ _TOPK_TAIL = """
 def ann_lsh_topk_sql(table: str = "embeddings", bits: int = 4,
                      dim: int = 64, k: int = 10,
                      n_queries: int = 5) -> str:
-    """Mirror of lsh_bucket_topk(portable=True, multiprobe=True):
-    quantized sign-LSH buckets, query-side Hamming-1 multiprobe,
-    exact cosine ranking of bucket candidates."""
+    """Mirror of lsh_bucket_topk: quantized sign-LSH buckets,
+    query-side Hamming-1 multiprobe, exact cosine ranking of bucket
+    candidates."""
     return f"""
         WITH {_bucket_ctes(table, bits, dim)},
         probes AS (
@@ -367,7 +389,22 @@ def ann_lsh_topk_sql(table: str = "embeddings", bits: int = 4,
           FROM probes p
           JOIN buck c ON c.bucket = p.bucket
           JOIN e qe ON qe.vec_id = p.query_id
-          WHERE c.vec_id <> p.query_id
+          WHERE c.vec_id <> p.query_id AND len(qe.v) = len(c.v)
+        ),{_TOPK_TAIL.format(k=k)}
+    """
+
+
+def ann_cosine_topk_sql(k: int = 10, n_queries: int = 5) -> str:
+    """Mirror of brute_force_topk for the queries vec_id < n_queries:
+    exact cosine against every other vector, top-k per query."""
+    return f"""
+        WITH {_vectors_cte("embeddings")},
+        scored AS (
+          SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
+                 round(list_cosine_similarity(q.v, c.v), 6) AS sim
+          FROM e q, e c
+          WHERE q.vec_id < {n_queries} AND c.vec_id <> q.vec_id
+            AND len(q.v) = len(c.v)
         ),{_TOPK_TAIL.format(k=k)}
     """
 
@@ -375,9 +412,9 @@ def ann_lsh_topk_sql(table: str = "embeddings", bits: int = 4,
 def cosine_near_pairs_blocked_sql(table: str = "embeddings",
                                   threshold: float = 0.4, bits: int = 8,
                                   dim: int = 64) -> str:
-    """Mirror of cosine_near_pairs(blocked=True, portable=True,
-    multiprobe=True): pairs sharing a bucket (one side probing its
-    Hamming-1 buckets), verified by exact cosine >= threshold."""
+    """Mirror of cosine_near_pairs(blocked=True): pairs sharing a
+    bucket (one side probing its Hamming-1 buckets), verified by exact
+    cosine >= threshold."""
     return f"""
         WITH {_bucket_ctes(table, bits, dim)},
         pb AS (
@@ -396,7 +433,8 @@ def cosine_near_pairs_blocked_sql(table: str = "embeddings",
         FROM pairs p
         JOIN e ea ON ea.vec_id = p.id_a
         JOIN e eb ON eb.vec_id = p.id_b
-        WHERE round(list_cosine_similarity(ea.v, eb.v), 6) >= {threshold}
+        WHERE len(ea.v) = len(eb.v)
+          AND round(list_cosine_similarity(ea.v, eb.v), 6) >= {threshold}
     """
 
 
@@ -759,9 +797,9 @@ def minhash_lsh_join_sql(left_mod: int = 7, table: str = "documents",
 def cosine_near_join_sql(left_mod: int = 7, table: str = "embeddings",
                          threshold: float = 0.4, bits: int = 8,
                          dim: int = 64) -> str:
-    """Mirror of cosine_near_join(portable=True, multiprobe=True) with
-    the driver's split: left = vec_id % left_mod == 0 (probes its
-    Hamming-1 buckets), right = the rest."""
+    """Mirror of cosine_near_join with the registry query's split:
+    left = vec_id % left_mod == 0 (probes its Hamming-1 buckets),
+    right = the rest."""
     return f"""
         WITH {_bucket_ctes(table, bits, dim)},
         probes_l AS (
@@ -783,7 +821,8 @@ def cosine_near_join_sql(left_mod: int = 7, table: str = "embeddings",
         FROM pairs p
         JOIN e el ON el.vec_id = p.left_id
         JOIN e er ON er.vec_id = p.right_id
-        WHERE round(list_cosine_similarity(el.v, er.v), 6) >= {threshold}
+        WHERE len(el.v) = len(er.v)
+          AND round(list_cosine_similarity(el.v, er.v), 6) >= {threshold}
     """
 
 

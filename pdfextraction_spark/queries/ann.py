@@ -22,17 +22,17 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH bucketed ANN with Hamming-1 multiprobe, portable
-    planes: deterministic md5-derived integer hyperplanes + quantized
-    projections make the bucket ids engine-exact, so the DuckDB oracle
-    rebuilds the identical candidate sets and ranking."""
+    """Sign-LSH bucketed ANN with Hamming-1 multiprobe: deterministic
+    md5-derived integer hyperplanes + quantized projections make the
+    bucket ids engine-exact, so the DuckDB oracle rebuilds the
+    identical candidate sets and ranking."""
     from pdfextraction_spark.functions.similarity import lsh_bucket_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return lsh_bucket_topk(emb, queries, k=10, bits=4, portable=True)
+    return lsh_bucket_topk(emb, queries, k=10, bits=4)
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -85,13 +85,11 @@ def q_simhash_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs at the scale-safe standard config
     (d=3, 4 wide bands — Manku WWW'07); d=12 remains an explicit
-    opt-in cost dial on the function. Portable sketch -> full DuckDB
+    opt-in cost dial on the function. md5 sketch -> full DuckDB
     oracle (banding + exact Hamming verify)."""
     from pdfextraction_spark.functions.dedup import simhash_near_pairs
 
-    return simhash_near_pairs(
-        _t(spark, sf_dir, "documents"), max_hamming=3, portable=True
-    )
+    return simhash_near_pairs(_t(spark, sf_dir, "documents"), max_hamming=3)
 
 
 def q_cosine_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -107,14 +105,15 @@ def q_cosine_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cosine_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs on the SCALE path (LSH-blocked +
-    multiprobe — the plan you'd run at corpus size, VERDICT r2 item 2),
-    with portable planes so the blocked candidate set is oracle-exact.
-    The exact O(n^2) form stays as the small-N verifier query."""
+    multiprobe — the plan you'd run at corpus size, VERDICT r2 item 2).
+    Its md5-derived integer planes make the blocked candidate set
+    oracle-exact. The exact O(n^2) form stays as the small-N verifier
+    query."""
     from pdfextraction_spark.functions.similarity import cosine_near_pairs
 
     return cosine_near_pairs(
         _t(spark, sf_dir, "embeddings"), threshold=0.4, blocked=True,
-        bits=4, portable=True,
+        bits=4,
     )
 
 
@@ -186,8 +185,7 @@ def q_cosine_near_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     new_batch = emb.filter(F.col("vec_id") % 7 == 0)
     corpus = emb.filter(F.col("vec_id") % 7 != 0)
-    return cosine_near_join(new_batch, corpus, threshold=0.4, bits=4,
-                            portable=True)
+    return cosine_near_join(new_batch, corpus, threshold=0.4, bits=4)
 
 
 def q_hot_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,7 +22,7 @@ instead of O(corpus).
 
 Build, append and search reuse the exact ivfpq_topk machinery
 (_ivfpq_coded, _probe_lists, _adc_query_tables, _adc_score,
-_adc_rank — single homes for the tie/rounding contracts), so
+_topk — single homes for the tie/rounding contracts), so
 indexed results are row-identical to the
 in-memory composition; pinned in tests. Centroid/codebook collects
 are bounded metadata (n_centroids x dim + m x k x d_sub doubles) —
@@ -39,10 +39,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.similarity import (
     _adc_query_tables,
-    _adc_rank,
     _adc_score,
     _ivfpq_coded,
     _probe_lists,
+    _topk,
     pq_quantization_mse,
     pq_train_codebooks,
     train_ivf_centroids,
@@ -296,4 +296,4 @@ def ivfpq_topk_indexed(
     scored = scored.select(
         "query_id", "vec_id", _adc_score().alias("approx_dist_micros")
     )
-    return _adc_rank(scored, k)
+    return _topk(scored, k, "approx_dist_micros")

@@ -162,7 +162,7 @@ class TestDedup:
         assert (cluster.component == 0).all()
 
     def test_simhash_exact_dups_collide(self, docs, spark):
-        sh = D.simhash64(docs).toPandas()
+        sh = D.simhash_portable60(docs).toPandas()
         texts = docs.toPandas().set_index("doc_id")["text"]
         by_text = {}
         for _, r in sh.iterrows():
@@ -315,15 +315,16 @@ def test_asof_join_formulations_agree(spark):
 
 def test_simhash_banded_recall_exact(spark, docs):
     """Banded blocking (bands = d+1) must find EVERY pair within
-    Hamming distance d — pigeonhole guarantee — verified against an
-    exact all-pairs Hamming join."""
+    Hamming distance d of the 60-bit sketch — pigeonhole guarantee —
+    verified against an exact all-pairs Hamming join."""
     import itertools
 
     d = 12
-    sims = {r.doc_id: r.simhash for r in D.simhash64(docs).collect()}
+    sims = {r.doc_id: r.simhash
+            for r in D.simhash_portable60(docs).collect()}
 
-    def ham(a, b):  # simhashes are signed longs: mask to 64 bits
-        return bin((sims[a] ^ sims[b]) & ((1 << 64) - 1)).count("1")
+    def ham(a, b):  # 60-bit sketches are non-negative longs
+        return bin(sims[a] ^ sims[b]).count("1")
 
     exact = {
         (a, b, ham(a, b))
@@ -377,8 +378,8 @@ def test_ngram_stoplist_skew_equivalence(spark):
 
 @pytest.mark.slow
 def test_multiprobe_and_lloyd_improve_recall(emb):
-    """Multiprobe LSH must dominate single-probe recall; Lloyd-refined
-    IVF centroids must dominate seed-only centroids on the clustered
+    """Multiprobe LSH keeps top-10 recall high; Lloyd-refined IVF
+    centroids must dominate seed-only centroids on the clustered
     corpus (same candidates scored by the same exact scorer)."""
     from pyspark.sql import functions as F
 
@@ -395,13 +396,8 @@ def test_multiprobe_and_lloyd_improve_recall(emb):
             rs.append(len(t & g) / len(t))
         return float(np.mean(rs))
 
-    single = mean_recall(
-        S.lsh_bucket_topk(emb, queries, k=10, bits=4, dim=32,
-                          multiprobe=False).toPandas())
     multi = mean_recall(
-        S.lsh_bucket_topk(emb, queries, k=10, bits=4, dim=32,
-                          multiprobe=True).toPandas())
-    assert multi >= single
+        S.lsh_bucket_topk(emb, queries, k=10, bits=4, dim=32).toPandas())
     assert multi >= 0.8
 
     seed_only = mean_recall(
@@ -839,7 +835,9 @@ class TestMalformedVectors:
     null probes: the row joins no list); PQ nulls each code whose
     d_sub-wide slice is not fully present. ADC search needs a query's
     first dim values (else no table) and every code of a candidate
-    (else no distance)."""
+    (else no distance). Cosine top-k scores a null sim against a
+    malformed vector (null, null element, other width), and a null
+    sim is never ranked."""
 
     @pytest.fixture(scope="class")
     def dirty(self, emb):
@@ -921,6 +919,60 @@ class TestMalformedVectors:
         want = S.pq_adc_topk(emb, good_q, books, k=10).collect()
         assert len(want) == 50
         assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+    def test_cosine_topk_drop_malformed_rows(self, emb, dirty):
+        """k exceeds the corpus, so every scored candidate would show:
+        malformed corpus rows must not rank, and a malformed query
+        returns no rows."""
+        from pyspark.sql import functions as F
+
+        def q(df):
+            return df.select(F.col("vec_id").alias("query_id"),
+                             "embedding")
+
+        good_q = q(emb.filter(F.col("vec_id") < 5))
+        dirty_q = q(dirty.filter(
+            (F.col("vec_id") < 5) | (F.col("vec_id") > 9000)))
+        for topk in (
+            lambda e, qs: S.brute_force_topk(e, qs, k=400),
+            lambda e, qs: S.lsh_bucket_topk(e, qs, k=400, bits=4, dim=32),
+        ):
+            clean = sorted(map(tuple, topk(emb, good_q).collect()))
+            assert clean
+            got = sorted(map(tuple, topk(dirty, dirty_q).collect()))
+            assert got == clean
+
+    def test_cosine_oracles_match_on_malformed_rows(self, dirty):
+        """The DuckDB oracles of brute_force_topk, lsh_bucket_topk and
+        blocked cosine_near_pairs run on the malformed rows and drop
+        them as Spark does."""
+        from pyspark.sql import functions as F
+
+        from pdfextraction_spark.oracle import portable_sql as P
+
+        queries = dirty.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        for got, sql in (
+            (S.brute_force_topk(dirty, queries, k=400),
+             P.ann_cosine_topk_sql(k=400, n_queries=5)),
+            (S.lsh_bucket_topk(dirty, queries, k=400, bits=4, dim=32),
+             P.ann_lsh_topk_sql(bits=4, dim=32, k=400, n_queries=5)),
+        ):
+            key = ["query_id", "rank"]
+            g = got.toPandas().sort_values(key).reset_index(drop=True)
+            e = (_duckdb_oracle(dirty, sql)
+                 .sort_values(key).reset_index(drop=True))
+            assert len(g) > 0
+            assert list(g["vec_id"]) == list(e["vec_id"])
+            assert list(g["rank"]) == list(e["rank"])
+            assert np.allclose(g["sim"], e["sim"])
+        pairs = S.cosine_near_pairs(dirty, threshold=0.6, blocked=True,
+                                    bits=4, dim=32).toPandas()
+        exp = _duckdb_oracle(dirty, P.cosine_near_pairs_blocked_sql(
+            threshold=0.6, bits=4, dim=32))
+        assert len(pairs) > 0
+        assert (set(zip(pairs.id_a, pairs.id_b))
+                == set(zip(exp.id_a, exp.id_b)))
 
     def test_semantic_dedup_keeps_unassigned(self, emb, dirty):
         cents = S.train_ivf_centroids(emb, n_centroids=8,
