@@ -115,7 +115,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from pdfextraction_spark.sources.transcripts import ensure_fixture_parquet
 
     turns = spark.read.parquet(ensure_fixture_parquet("xs"))
-    return extract_dataframe(turns, num_partitions=4)
+    return extract_dataframe(turns)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -349,15 +349,11 @@ def extract_worker(master: str, parquet: str, out_path: str) -> None:
                           shuffle_partitions=max(n_cores, 32))
     turns = spark.read.parquet(parquet)
     n_turns = turns.count()
-    # equal batch sizes (~19k rows) for both configs — keeps the
-    # dictionary-encoding amortization of the kernels; finer
-    # granularity measured slower on this host
-    n_parts = max(n_cores * 2, 32)
     # warm up with the FULL job once: spawns a python worker per core
     # (a tiny warmup warms only one) and fills the page cache — the
     # measured number is steady-state throughput, the regime a
     # long-running extraction job lives in
-    out = extract_dataframe(turns, num_partitions=n_parts)
+    out = extract_dataframe(turns)
     n_out = out.count()
     # several timed runs; the caller pools walls across interleaved
     # subprocesses to cancel noisy-neighbor drift on this host
@@ -365,7 +361,7 @@ def extract_worker(master: str, parquet: str, out_path: str) -> None:
     walls = []
     for _ in range(n_runs):
         t0 = time.time()
-        extract_dataframe(turns, num_partitions=n_parts).count()
+        extract_dataframe(turns).count()
         walls.append(time.time() - t0)
     wall = sorted(walls)[len(walls) // 2]
     spark.stop()
@@ -1400,11 +1396,11 @@ def main() -> None:
     n_turns = turns.count()
     from pdfextraction_spark.pipeline import extract_dataframe
 
-    extract_dataframe(turns, num_partitions=max(CPUS * 2, 32)).count()  # warm
+    extract_dataframe(turns).count()  # warm
     walls = []
     for _ in range(5):
         t0 = time.time()
-        extract_dataframe(turns, num_partitions=max(CPUS * 2, 32)).count()
+        extract_dataframe(turns).count()
         walls.append(time.time() - t0)
     wall = sorted(walls)[2]  # median of 5: noisy-neighbor host
     times["extract_turns"] = round(wall, 3)

@@ -179,7 +179,8 @@ def cmd_extract_growth(runs=3):
 
 def cmd_extract_profile(runs=3):
     """Stage-isolated timing of the headline extraction job: scan only,
-    scan+exchange+sort (kernels skipped), and the full job — tells
+    scan plus the exchange the engine plans for it (kernels skipped),
+    and the full job — tells
     which part of the 600k-turn pipeline owns the wall."""
     from pyspark.sql import functions as F
 
@@ -192,7 +193,6 @@ def cmd_extract_profile(runs=3):
     parquet = bench.ensure_bench_fixture()
     turns = spark.read.parquet(parquet)
     n = turns.count()
-    n_parts = max(bench.CPUS * 2, 32)
 
     def timed(label, mk):
         mk().count() if label != "noop" else None
@@ -208,9 +208,9 @@ def cmd_extract_profile(runs=3):
     timed("scan_count", lambda: turns)
     timed("scan_full", lambda: turns.select(
         F.bit_xor(F.xxhash64("conv_id", "turn_idx", "role", "text"))))
-    timed("prepare_only", lambda: prepare_for_extraction(turns, n_parts))
+    timed("prepare_only", lambda: prepare_for_extraction(turns))
     timed("full_extract", lambda: extract_turns(
-        prepare_for_extraction(turns, n_parts)))
+        prepare_for_extraction(turns)))
     spark.stop()
 
 

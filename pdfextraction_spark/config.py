@@ -78,4 +78,3 @@ PDF_ENVELOPE_PREFIX = '{"kind": "pdf_layout"'
 
 # --- partitioning defaults for the distributed job
 DEFAULT_NUM_PARTITIONS = 32
-MEGA_CONV_TURNS_PER_SALT = 256  # turns per salt bucket for skewed convs

@@ -2,23 +2,23 @@
 
 - ``logical_partition_id``: stable bucket = pmod(xxhash64(conv_id), N)
   — the checkpoint-manifest key, independent of physical layout.
-- ``salted_repartition``: physical shuffle on (conv_id-hash, salt)
-  where salt = turn_idx div K, so a mega-conversation with 10^5 turns
-  spreads over ceil(turns/K) partitions instead of hot-spotting one
-  executor. Safe because per-turn extraction never crosses turns; a
-  conversation-level merge (operators/merge.py) re-shuffles unsalted.
-- ``sort_within``: (conv_id, turn_idx) order inside every partition
-  after that shuffle, whose arrival order is not deterministic. It
-  runs only with the exchange, for undersplit scans; a scan-parallel
-  input keeps its file order. Per-turn values never depend on it
-  (the kernel is row-local), only the row order within a file.
+- ``prepare_for_extraction``: the extraction stage's only exchange.
+  An input whose scan already has ``defaultParallelism`` partitions
+  runs as it is scanned. An undersplit one (a single pandas-written
+  file scans as ONE task) is hashed on (conv_id, turn_idx) into
+  ``defaultParallelism`` partitions: one wave of Python tasks per
+  core. Keying on the turn spreads a mega-conversation evenly, with no
+  salt width to tune, and is safe because per-turn extraction never
+  crosses turns; a conversation-level merge (operators/merge.py)
+  shuffles on conv_id alone. Row order inside a partition is not part
+  of the contract.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..config import DEFAULT_NUM_PARTITIONS, MEGA_CONV_TURNS_PER_SALT
+from ..config import DEFAULT_NUM_PARTITIONS
 
 
 def logical_partition_id(df: DataFrame, num_buckets: int = DEFAULT_NUM_PARTITIONS,
@@ -29,21 +29,14 @@ def logical_partition_id(df: DataFrame, num_buckets: int = DEFAULT_NUM_PARTITION
     )
 
 
-def salted_repartition(
-    df: DataFrame,
-    num_partitions: int = DEFAULT_NUM_PARTITIONS,
-    salt_turns: int = MEGA_CONV_TURNS_PER_SALT,
-) -> DataFrame:
-    salt = (F.col("turn_idx") / F.lit(salt_turns)).cast("int")
-    return df.repartition(num_partitions, F.xxhash64(F.col("conv_id")), salt)
-
-
-def sort_within(df: DataFrame) -> DataFrame:
-    return df.sortWithinPartitions("conv_id", "turn_idx")
-
-
-def prepare_for_extraction(
-    df: DataFrame,
-    num_partitions: int = DEFAULT_NUM_PARTITIONS,
-) -> DataFrame:
-    return sort_within(salted_repartition(df, num_partitions))
+def prepare_for_extraction(df: DataFrame) -> DataFrame:
+    """``df`` itself when its planned scan has at least
+    ``defaultParallelism`` partitions, counted the way Spark will run
+    it; else ``df`` hash-repartitioned on (conv_id, turn_idx) to
+    ``defaultParallelism`` partitions. File count is not that proxy:
+    Spark bin-packs tiny files into shared splits and splits a large
+    file with many row groups into several."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= cores:
+        return df
+    return df.repartition(cores, "conv_id", "turn_idx")

@@ -204,16 +204,7 @@ def oracle_sql() -> dict[str, str]:
             WHERE n_inter * 1.0 / (sa.n_sh + sb.n_sh - n_inter) >= 0.2
         """,
         "ann_cosine_topk": P.ann_cosine_topk_sql(k=10, n_queries=5),
-        "cosine_near_pairs": """
-            WITH e AS (
-              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-              FROM embeddings
-            )
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(list_cosine_similarity(a.v, b.v), 6) AS cos_sim
-            FROM e a JOIN e b ON a.vec_id < b.vec_id
-            WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.4
-        """,
+        "cosine_near_pairs": P.cosine_near_pairs_sql(threshold=0.4),
         "monthly_rollup": """
             SELECT n_name AS nation, strftime(o_orderdate, '%Y-%m') AS month,
                    COUNT(*) AS n_orders, round(SUM(o_totalprice), 2) AS revenue

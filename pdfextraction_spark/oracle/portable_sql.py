@@ -307,16 +307,16 @@ def _plane_cte(bits: int, dim: int) -> str:
         )"""
 
 
-def _vectors_cte(table: str) -> str:
-    """e(vec_id, v): the vectors with no null element. Spark scores a
-    null cosine (never a candidate) for a null vector or one with a
-    null element, so the oracles drop those rows up front; pairs of
+def _vectors_cte(table: str, name: str = "e") -> str:
+    """{name}(vec_id, v): the vectors with no null element. Spark
+    scores a null cosine (never a candidate) for a null vector or one
+    with a null element, so the oracles drop those rows up front; pairs of
     unequal width are excluded where the cosine is taken
     (``len(a.v) = len(b.v)``). list_filter rebuilds the lists: DuckDB's
     list_cosine_similarity rejects a null element anywhere in its
     input vector, even in a row a filter has already dropped."""
     return f"""
-        e AS (
+        {name} AS (
           SELECT vec_id,
                  list_filter(CAST(embedding AS DOUBLE[]), x -> x IS NOT NULL)
                    AS v
@@ -409,6 +409,54 @@ def ann_cosine_topk_sql(k: int = 10, n_queries: int = 5) -> str:
     """
 
 
+def cosine_near_pairs_sql(table: str = "embeddings",
+                          threshold: float = 0.4) -> str:
+    """Mirror of cosine_near_pairs(blocked=False): every pair a<b of
+    equal width with exact cosine >= threshold."""
+    return f"""
+        WITH {_vectors_cte(table)}
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+               round(list_cosine_similarity(a.v, b.v), 6) AS cos_sim
+        FROM e a JOIN e b ON a.vec_id < b.vec_id
+        WHERE len(a.v) = len(b.v)
+          AND round(list_cosine_similarity(a.v, b.v), 6) >= {threshold}
+    """
+
+
+def _ivf_assigned_ctes(table: str, n_centroids: int) -> str:
+    """CTE chain ending in assigned(vec_id, v, s, list_id) — mirror of
+    train_ivf_centroids(lloyd_iters=0) + _coarse_assigned: strided
+    seed centroids (the step counts every input row, as Spark's
+    _strided_seed_vectors does), then each row's rounded-cosine
+    scores against them and the first-wins argmax. Only rows with no
+    null element and the centroids' width are assigned; Spark gives
+    the others a null list_id. Spark scores in numpy
+    (np_centroid_assign_udf): a BLAS matmul instead of a sequential
+    sum, and half-to-even instead of DuckDB's half-away round. The
+    6dp rounding absorbs the summation order; the rounding modes
+    differ only on an exact 5e-7 boundary."""
+    return f"""{_vectors_cte(table)}, st AS (
+          SELECT greatest(COUNT(*) // {n_centroids}, 1) AS step
+          FROM {table}
+        ), cent AS (
+          SELECT e.vec_id, e.v FROM e, st
+          WHERE e.vec_id % st.step = 0
+          ORDER BY e.vec_id LIMIT {n_centroids}
+        ), cl AS (
+          SELECT list(v ORDER BY vec_id) AS cents FROM cent
+        ), scores AS (
+          SELECT e.vec_id, e.v,
+                 [round(list_cosine_similarity(e.v, c), 6)
+                  for c in cl.cents] AS s
+          FROM e, cl
+          WHERE len(e.v) = len(cl.cents[1])
+        ), assigned AS (
+          SELECT vec_id, v, s,
+                 CAST(list_position(s, list_max(s)) AS INTEGER) AS list_id
+          FROM scores
+        )"""
+
+
 def cosine_near_pairs_blocked_sql(table: str = "embeddings",
                                   threshold: float = 0.4, bits: int = 8,
                                   dim: int = 64) -> str:
@@ -441,35 +489,12 @@ def cosine_near_pairs_blocked_sql(table: str = "embeddings",
 def ann_ivf_topk_sql(table: str = "embeddings", n_centroids: int = 16,
                      n_probe: int = 4, k: int = 10,
                      n_queries: int = 5) -> str:
-    """Mirror of ivf_topk(lloyd_iters=0): strided deterministic seed
-    centroids, rounded-cosine argmax list assignment, top-n_probe list
-    probing, exact cosine ranking of probed candidates. Spark scores
-    the assignment and probes in numpy (np_centroid_assign_udf,
-    np_probe_lists_udf): a BLAS matmul instead of a sequential sum,
-    and half-to-even instead of DuckDB's half-away round. The 6dp
-    rounding absorbs the summation order; the rounding modes differ
-    only on an exact 5e-7 boundary."""
+    """Mirror of ivf_topk(lloyd_iters=0): the seed-centroid
+    assignment of _ivf_assigned_ctes, top-n_probe list probing, exact
+    cosine ranking of probed candidates."""
     return f"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}
-        ), st AS (
-          SELECT greatest(COUNT(*) // {n_centroids}, 1) AS step FROM e
-        ), cent AS (
-          SELECT e.vec_id, e.v FROM e, st
-          WHERE e.vec_id % st.step = 0
-          ORDER BY e.vec_id LIMIT {n_centroids}
-        ), cl AS (
-          SELECT list(v ORDER BY vec_id) AS cents FROM cent
-        ), scores AS (
-          SELECT e.vec_id, e.v,
-                 [round(list_cosine_similarity(e.v, c), 6)
-                  for c in cl.cents] AS s
-          FROM e, cl
-        ), assigned AS (
-          SELECT vec_id, v, s,
-                 CAST(list_position(s, list_max(s)) AS INTEGER) AS list_id
-          FROM scores
-        ), probes AS (
+        WITH {_ivf_assigned_ctes(table, n_centroids)},
+        probes AS (
           SELECT vec_id AS query_id, i AS list_id
           FROM (
             SELECT a.vec_id, u.i,
@@ -485,7 +510,7 @@ def ann_ivf_topk_sql(table: str = "embeddings", n_centroids: int = 16,
           FROM probes p
           JOIN assigned c ON c.list_id = p.list_id
           JOIN e qe ON qe.vec_id = p.query_id
-          WHERE c.vec_id <> p.query_id
+          WHERE c.vec_id <> p.query_id AND len(qe.v) = len(c.v)
         ),{_TOPK_TAIL.format(k=k)}
     """
 
@@ -831,7 +856,7 @@ def _pq_ctes(table: str, m: int, k: int, d: int) -> str:
     intermediate dists — one home for the codebook-derivation SQL so
     the encode and ADC oracles can never desynchronize. Spark
     computes the codes in numpy (np_pq_encode_udf), with the same
-    6dp rounding and first-wins argmin (see ann_ivf_topk_sql on the
+    6dp rounding and first-wins argmin (see _ivf_assigned_ctes on the
     rounding mode)."""
     return f"""e AS (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}
@@ -1151,13 +1176,15 @@ def ann_ivfpq_topk_sql(table: str = "embeddings", m: int = 8,
     centroid list — mirroring the Spark driver config exactly."""
     d = dim // m
     return f"""
-        WITH {_pq_ctes(table, m, k_cent, d)}, cl AS (
+        WITH {_pq_ctes(table, m, k_cent, d)},
+        {_vectors_cte(table, "ev")}, cl AS (
           SELECT list(v ORDER BY vec_id) AS cents FROM seed
         ), cscores AS (
-          SELECT e.vec_id,
-                 [round(list_cosine_similarity(e.v, c), 6)
+          SELECT ev.vec_id,
+                 [round(list_cosine_similarity(ev.v, c), 6)
                   for c in cl.cents] AS s
-          FROM e, cl
+          FROM ev, cl
+          WHERE len(ev.v) = {dim}
         ), asg AS (
           SELECT vec_id,
                  CAST(list_position(s, list_max(s)) AS INTEGER)
@@ -1236,41 +1263,24 @@ def cluster_representatives_sql(table: str = "documents", n: int = 3,
 def semantic_dedup_sql(table: str = "embeddings", n_centroids: int = 16,
                        threshold: float = 0.6) -> str:
     """Mirror of functions/similarity.semantic_dedup(lloyd_iters=0):
-    strided deterministic seed centroids, rounded-cosine argmax
-    assignment (the shared ann_ivf seed/assign CTE shape; Spark's
-    side is np_centroid_assign_udf), then the
+    the seed-centroid assignment of _ivf_assigned_ctes, then the
     within-cluster pairwise epsilon-ball prune — a vector is dropped
     iff a smaller-id member of its own cluster has rounded cosine >=
-    threshold."""
+    threshold. An unassigned row has a null list_id and is kept."""
     return f"""
-        WITH e AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}
-        ), st AS (
-          SELECT greatest(COUNT(*) // {n_centroids}, 1) AS step FROM e
-        ), cent AS (
-          SELECT e.vec_id, e.v FROM e, st
-          WHERE e.vec_id % st.step = 0
-          ORDER BY e.vec_id LIMIT {n_centroids}
-        ), cl AS (
-          SELECT list(v ORDER BY vec_id) AS cents FROM cent
-        ), scores AS (
-          SELECT e.vec_id, e.v,
-                 [round(list_cosine_similarity(e.v, c), 6)
-                  for c in cl.cents] AS s
-          FROM e, cl
-        ), assigned AS (
-          SELECT vec_id, v,
-                 CAST(list_position(s, list_max(s)) AS INTEGER) AS list_id
-          FROM scores
-        ), dups AS (
+        WITH {_ivf_assigned_ctes(table, n_centroids)},
+        dups AS (
           SELECT DISTINCT b.vec_id
           FROM assigned a
           JOIN assigned b
             ON a.list_id = b.list_id AND a.vec_id < b.vec_id
-          WHERE round(list_cosine_similarity(a.v, b.v), 6) >= {threshold}
+          WHERE len(a.v) = len(b.v)
+            AND round(list_cosine_similarity(a.v, b.v), 6) >= {threshold}
         )
-        SELECT a.vec_id, a.list_id, d.vec_id IS NULL AS is_kept
-        FROM assigned a LEFT JOIN dups d ON a.vec_id = d.vec_id
+        SELECT t.vec_id, a.list_id, d.vec_id IS NULL AS is_kept
+        FROM {table} t
+        LEFT JOIN assigned a ON a.vec_id = t.vec_id
+        LEFT JOIN dups d ON d.vec_id = t.vec_id
     """
 
 

@@ -2,19 +2,22 @@
 
     transcripts scan
       -> anti-join committed partitions (resume)
-      -> [undersplit scan only] salted repartition by hash(conv_id)
-         (+ turn-range salt), then sortWithinPartitions(conv_id, turn_idx)
+      -> [undersplit scan only] repartition by hash(conv_id, turn_idx)
+         to defaultParallelism, decided once per job
       -> fused mapInArrow extraction stage
       -> append output parquet (lineage columns)
       -> append per-partition manifest rows (metrics)
 
 Chunked commits: logical partitions are processed in ``n_chunks``
-groups. A group is a filter on ``partition_id`` (a pure function of
-conv_id, so no exchange is needed to find its rows), extracted through
-``extract_dataframe``, and runs ONE Spark job, the output append. The
-Spark driver then does the chunk's bookkeeping with pyarrow: it groups
-the metric columns of the chunk's committed files into per-partition
-stats and commits the manifest rows (sources/manifest.py). The job summary's
+groups. The job prepares the input once (``prepare_for_extraction``:
+one planning pass for its split count). A group is a filter on
+``partition_id`` (a pure function of conv_id, so no exchange is needed
+to find its rows; Spark pushes it below the exchange into the scan),
+extracted by ``extract_turns``, and runs ONE Spark job, the output
+append. The Spark driver then does the chunk's bookkeeping with
+pyarrow: it groups the metric columns of the chunk's committed files
+into per-partition stats and commits the manifest rows
+(sources/manifest.py). The job summary's
 ``observed_metrics`` are sums of those manifest rows, so the summary
 and the manifest count the same committed rows. A killed run resumes
 at chunk granularity with no duplicate rows (tests/test_resume.py).
@@ -55,34 +58,20 @@ from .sources.manifest import (
 from .sources.transcripts import read_transcripts
 
 
-def extract_dataframe(
-    turns: DataFrame,
-    num_partitions: int = DEFAULT_NUM_PARTITIONS,
-) -> DataFrame:
+def extract_dataframe(turns: DataFrame) -> DataFrame:
     """Pure transformation: transcripts -> extracted turns (no sinks).
 
     Per-turn extraction is row-local (``extract_turns`` is a narrow
-    map with no cross-row state), so the salted exchange contributes
-    nothing to correctness here — it exists to give undersplit inputs
-    parallelism (a single pandas-written parquet file scans as ONE
-    task). When the scan itself already spreads the corpus across the
-    cluster, shuffling every byte before a per-row kernel doubles the
-    I/O for zero gain; at warehouse scale that is a full extra pass
-    over the corpus (guide §2.1: remove shuffles outright).
-
-    The exchange is kept only when the input's planned scan has fewer
-    than ``defaultParallelism`` partitions — "the scan alone saturates
-    the cluster", counted the way Spark will run it. File count is not
-    that proxy: Spark bin-packs tiny files into shared splits (many
-    tiny files can scan as one task and need the exchange), and splits
-    a large file with many row groups into several (it needs none).
-    Values are identical on both paths (pinned by test); output ROW
-    ORDER is not part of the contract either way.
+    map with no cross-row state), so the exchange contributes nothing
+    to correctness here. It exists to give undersplit inputs
+    parallelism; when the scan itself already spreads the corpus
+    across the cluster, shuffling every byte before a per-row kernel
+    doubles the I/O for zero gain (guide §2.1: remove shuffles
+    outright). ``prepare_for_extraction`` holds that gate. Values are
+    identical on both paths (pinned by test); output ROW ORDER is not
+    part of the contract either way.
     """
-    if (turns.rdd.getNumPartitions()
-            >= turns.sparkSession.sparkContext.defaultParallelism):
-        return extract_turns(turns)
-    return extract_turns(prepare_for_extraction(turns, num_partitions))
+    return extract_turns(prepare_for_extraction(turns))
 
 
 def run_extraction_job(
@@ -288,11 +277,14 @@ def _run_locked(
         todo[i::n_chunks] for i in range(n_chunks) if todo[i::n_chunks]
     ]
 
+    # the exchange gate plans the input scan, so it runs once per job
+    # with work, never per chunk and never on a no-op resume
+    prepared = prepare_for_extraction(turns) if chunks else turns
     total_rows = 0
     observed = {"turns": 0, "parse_failures": 0, "blocks_dropped": 0}
     for ci, part_group in enumerate(chunks):
-        chunk_df = turns.filter(F.col("partition_id").isin(part_group))
-        extracted = extract_dataframe(chunk_df, len(part_group))
+        extracted = extract_turns(
+            prepared.filter(F.col("partition_id").isin(part_group)))
         # partition_id is a pure function of conv_id -> recompute after
         # the Arrow stage instead of shipping it through the kernel
         out = logical_partition_id(extracted, num_partitions)

@@ -228,7 +228,7 @@ def q_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfextraction_spark.functions.chunking import context_windows
     from pdfextraction_spark.pipeline import extract_dataframe
 
-    ex = extract_dataframe(_fixture_turns(spark, sf_dir), num_partitions=8)
+    ex = extract_dataframe(_fixture_turns(spark, sf_dir))
     return context_windows(ex, budget=100, text_col="extracted_text")
 
 
@@ -247,10 +247,9 @@ def q_sft_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one extraction pass: the two consumers below (window build and
     # the role/parse gate) would otherwise each re-derive the full
     # extract lineage — materialize the slim projection once
-    ex = extract_dataframe(
-        _fixture_turns(spark, sf_dir), num_partitions=8
-    ).select("conv_id", "turn_idx", "role", "parse_failed",
-             "extracted_text").localCheckpoint()
+    ex = extract_dataframe(_fixture_turns(spark, sf_dir)).select(
+        "conv_id", "turn_idx", "role", "parse_failed", "extracted_text"
+    ).localCheckpoint()
     cw = context_windows(ex, budget=100, text_col="extracted_text")
     meta = ex.select("conv_id", "turn_idx", "role", "parse_failed")
     return (
@@ -289,7 +288,7 @@ def q_training_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfextraction_spark.functions import text as X
     from pdfextraction_spark.pipeline import extract_dataframe
 
-    ex = extract_dataframe(_fixture_turns(spark, sf_dir), num_partitions=8)
+    ex = extract_dataframe(_fixture_turns(spark, sf_dir))
     t = F.col("extracted_text")
     return (
         ex.filter(~F.col("parse_failed"))

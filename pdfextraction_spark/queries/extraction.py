@@ -15,7 +15,7 @@ def q_extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the loop-oracle golden parquet."""
     from pdfextraction_spark.pipeline import extract_dataframe
 
-    ex = extract_dataframe(_fixture_turns(spark, sf_dir), num_partitions=8)
+    ex = extract_dataframe(_fixture_turns(spark, sf_dir))
     span_str = F.array_join(
         F.transform(
             "spans", lambda s: F.concat_ws(":", s["label"], s["start"], s["end"])
@@ -28,7 +28,7 @@ def q_extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfextraction_spark.pipeline import extract_dataframe
 
-    ex = extract_dataframe(_fixture_turns(spark, sf_dir), num_partitions=8)
+    ex = extract_dataframe(_fixture_turns(spark, sf_dir))
     return ex.groupBy("payload_kind").agg(
         F.count("*").alias("n_turns"),
         F.sum("blocks_kept").alias("blocks_kept"),
@@ -41,7 +41,7 @@ def q_merge_conv_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfextraction_spark.operators.merge import merge_conversation_fields
     from pdfextraction_spark.pipeline import extract_dataframe
 
-    ex = extract_dataframe(_fixture_turns(spark, sf_dir), num_partitions=8)
+    ex = extract_dataframe(_fixture_turns(spark, sf_dir))
     return merge_conversation_fields(ex)
 
 
@@ -105,7 +105,7 @@ def q_conv_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfextraction_spark.operators.merge import merge_conversation_fields
     from pdfextraction_spark.pipeline import extract_dataframe
 
-    ex = extract_dataframe(_fixture_turns(spark, sf_dir), num_partitions=8)
+    ex = extract_dataframe(_fixture_turns(spark, sf_dir))
     return merge_conversation_fields(ex).groupBy("conv_id").agg(
         F.array_join(F.array_sort(F.collect_set("field")), ",").alias("form_fields"),
         F.count("*").alias("n_fields"),
@@ -134,7 +134,7 @@ def q_final_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     turns = _fixture_turns(spark, sf_dir)
     return assemble_conversation_json(
-        extract_dataframe(turns, num_partitions=8), extract_tables(turns)
+        extract_dataframe(turns), extract_tables(turns)
     )
 
 
@@ -158,7 +158,7 @@ def q_extraction_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     turns = _fixture_turns(spark, sf_dir)
     return extraction_anomalies(
-        extract_dataframe(turns, num_partitions=8), extract_tables(turns)
+        extract_dataframe(turns), extract_tables(turns)
     )
 
 
@@ -175,7 +175,7 @@ def q_apply_corrections(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfextraction_spark.pipeline import extract_dataframe
 
     turns = _fixture_turns(spark, sf_dir)
-    merged = merge_conversation_fields(extract_dataframe(turns, num_partitions=8))
+    merged = merge_conversation_fields(extract_dataframe(turns))
     return apply_corrections(merged, fixture_corrections(turns))
 
 
@@ -195,7 +195,7 @@ def q_template_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdfextraction_spark.pipeline import extract_dataframe
 
     turns = _fixture_turns(spark, sf_dir)
-    ex = extract_dataframe(turns, num_partitions=8)
+    ex = extract_dataframe(turns)
     return template_apply(
         ex, fixture_validated_pages(ex), fixture_corrections(turns)
     ).select(

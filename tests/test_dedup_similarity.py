@@ -173,26 +173,39 @@ class TestDedup:
         assert len(pairs) >= 6  # exact dups at hamming 0
 
 
+def _mean_recall(truth, approx, n_queries=10):
+    """Mean per-query top-k recall of ``approx`` against ``truth``."""
+    rs = []
+    for q in range(n_queries):
+        t = set(truth[truth.query_id == q].vec_id)
+        g = set(approx[approx.query_id == q].vec_id)
+        rs.append(len(t & g) / len(t))
+    return float(np.mean(rs))
+
+
+@pytest.fixture(scope="module")
+def top10(emb):
+    """Queries 0-9 of ``emb`` with their exact and 4-bit sign-LSH
+    top-10 (pandas), computed once for the recall tests."""
+    from pyspark.sql import functions as F
+
+    queries = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    bf = S.brute_force_topk(emb, queries, k=10).toPandas()
+    lsh = S.lsh_bucket_topk(emb, queries, k=10, bits=4, dim=32).toPandas()
+    return queries, bf, lsh
+
+
 @pytest.mark.slow
 class TestSimilarity:
-    def test_lsh_recall_vs_brute_force(self, emb):
-        from pyspark.sql import functions as F
-
-        queries = emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        bf = S.brute_force_topk(emb, queries, k=10).toPandas()
-        approx = S.lsh_bucket_topk(emb, queries, k=10, bits=4, dim=32).toPandas()
-        recalls = []
-        for q in range(10):
-            t = set(bf[bf.query_id == q].vec_id)
-            g = set(approx[approx.query_id == q].vec_id)
-            recalls.append(len(t & g) / len(t))
-        # 4-bit sign LSH keeps ~1/16 of candidates; same-cluster
-        # neighbors (cos ~0.95) land in the query's bucket most bits
-        assert np.mean(recalls) >= 0.5
+    def test_lsh_recall_vs_brute_force(self, top10):
+        """Multiprobe LSH keeps top-10 recall high and scores its
+        candidates exactly."""
+        _, bf, lsh = top10
+        assert _mean_recall(bf, lsh) >= 0.8
         # approx sims must be a subset of exact sims (same scorer)
-        merged = bf.merge(approx, on=["query_id", "vec_id"],
+        merged = bf.merge(lsh, on=["query_id", "vec_id"],
                           suffixes=("_t", "_g"))
         assert (merged["sim_t"] == merged["sim_g"]).all()
 
@@ -377,28 +390,15 @@ def test_ngram_stoplist_skew_equivalence(spark):
 
 
 @pytest.mark.slow
-def test_multiprobe_and_lloyd_improve_recall(emb):
-    """Multiprobe LSH keeps top-10 recall high; Lloyd-refined IVF
-    centroids must dominate seed-only centroids on the clustered
-    corpus (same candidates scored by the same exact scorer)."""
-    from pyspark.sql import functions as F
-
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    bf = S.brute_force_topk(emb, queries, k=10).toPandas()
+def test_multiprobe_and_lloyd_improve_recall(emb, top10):
+    """Lloyd-refined IVF centroids must dominate seed-only centroids
+    on the clustered corpus (same candidates scored by the same exact
+    scorer). The multiprobe LSH recall is checked on the same top-10
+    jobs by TestSimilarity.test_lsh_recall_vs_brute_force."""
+    queries, bf, _ = top10
 
     def mean_recall(approx):
-        rs = []
-        for q in range(10):
-            t = set(bf[bf.query_id == q].vec_id)
-            g = set(approx[approx.query_id == q].vec_id)
-            rs.append(len(t & g) / len(t))
-        return float(np.mean(rs))
-
-    multi = mean_recall(
-        S.lsh_bucket_topk(emb, queries, k=10, bits=4, dim=32).toPandas())
-    assert multi >= 0.8
+        return _mean_recall(bf, approx)
 
     seed_only = mean_recall(
         S.ivf_topk(emb, queries, k=10, n_centroids=16, n_probe=4,
@@ -943,9 +943,9 @@ class TestMalformedVectors:
             assert got == clean
 
     def test_cosine_oracles_match_on_malformed_rows(self, dirty):
-        """The DuckDB oracles of brute_force_topk, lsh_bucket_topk and
-        blocked cosine_near_pairs run on the malformed rows and drop
-        them as Spark does."""
+        """The DuckDB oracles of brute_force_topk, lsh_bucket_topk,
+        ivf_topk and exact and blocked cosine_near_pairs run on the
+        malformed rows and drop them as Spark does."""
         from pyspark.sql import functions as F
 
         from pdfextraction_spark.oracle import portable_sql as P
@@ -957,6 +957,10 @@ class TestMalformedVectors:
              P.ann_cosine_topk_sql(k=400, n_queries=5)),
             (S.lsh_bucket_topk(dirty, queries, k=400, bits=4, dim=32),
              P.ann_lsh_topk_sql(bits=4, dim=32, k=400, n_queries=5)),
+            (S.ivf_topk(dirty, queries, k=10, n_centroids=16, n_probe=4,
+                        lloyd_iters=0),
+             P.ann_ivf_topk_sql(n_centroids=16, n_probe=4, k=10,
+                                n_queries=5)),
         ):
             key = ["query_id", "rank"]
             g = got.toPandas().sort_values(key).reset_index(drop=True)
@@ -966,13 +970,59 @@ class TestMalformedVectors:
             assert list(g["vec_id"]) == list(e["vec_id"])
             assert list(g["rank"]) == list(e["rank"])
             assert np.allclose(g["sim"], e["sim"])
-        pairs = S.cosine_near_pairs(dirty, threshold=0.6, blocked=True,
-                                    bits=4, dim=32).toPandas()
-        exp = _duckdb_oracle(dirty, P.cosine_near_pairs_blocked_sql(
-            threshold=0.6, bits=4, dim=32))
-        assert len(pairs) > 0
-        assert (set(zip(pairs.id_a, pairs.id_b))
-                == set(zip(exp.id_a, exp.id_b)))
+        for blocked, sql in (
+            (True, P.cosine_near_pairs_blocked_sql(threshold=0.6, bits=4,
+                                                   dim=32)),
+            (False, P.cosine_near_pairs_sql(threshold=0.6)),
+        ):
+            pairs = S.cosine_near_pairs(dirty, threshold=0.6,
+                                        blocked=blocked, bits=4,
+                                        dim=32).toPandas()
+            exp = _duckdb_oracle(dirty, sql)
+            assert len(pairs) > 0
+            assert (set(zip(pairs.id_a, pairs.id_b))
+                    == set(zip(exp.id_a, exp.id_b)))
+
+    def test_assignment_oracles_match_on_malformed_rows(self, dirty):
+        """The DuckDB oracles of ivfpq_topk and semantic_dedup run on
+        the malformed rows and match Spark: only rows with no null
+        element and the centroids' width are assigned, and
+        semantic_dedup keeps the others with a null list_id."""
+        from pyspark.sql import functions as F
+
+        from pdfextraction_spark.oracle import portable_sql as P
+
+        queries = dirty.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        books = S.pq_train_codebooks(dirty, m=8, k=16, dim=32)
+        cents = S.train_ivf_centroids(dirty, n_centroids=16,
+                                      lloyd_iters=0)
+        key = ["query_id", "vec_id", "approx_dist_micros", "rank"]
+        a = (S.ivfpq_topk(dirty, queries, books, centroids=cents, k=10,
+                          n_probe=4).toPandas()[key]
+             .sort_values(key).reset_index(drop=True))
+        b = (_duckdb_oracle(dirty, P.ann_ivfpq_topk_sql(
+                 m=8, k_cent=16, dim=32, n_probe=4, k=10,
+                 n_queries=5))[key]
+             .sort_values(key).reset_index(drop=True))
+        assert len(a) == 50
+        assert a.astype("int64").equals(b.astype("int64"))
+
+        got = (S.semantic_dedup(dirty, threshold=0.9, n_centroids=8,
+                                lloyd_iters=0).toPandas()
+               .sort_values("vec_id").reset_index(drop=True))
+        exp = (_duckdb_oracle(dirty, P.semantic_dedup_sql(
+                   n_centroids=8, threshold=0.9))
+               .sort_values("vec_id").reset_index(drop=True))
+
+        def ids(col):
+            return [None if pd.isna(x) else int(x) for x in col]
+
+        assert len(got) == 304
+        assert list(got.vec_id) == list(exp.vec_id)
+        assert ids(got.list_id) == ids(exp.list_id)
+        assert list(got.is_kept) == list(exp.is_kept)
+        assert ids(exp.list_id[exp.vec_id > 9000]) == [None] * 4
 
     def test_semantic_dedup_keeps_unassigned(self, emb, dirty):
         cents = S.train_ivf_centroids(emb, n_centroids=8,

@@ -207,7 +207,7 @@ def test_resume_on_scan_parallel_input(spark, tmp_path, xs_parquet,
     is extracted chunk by chunk with no exchange. A crash after one
     chunk and a resume leave no duplicate rows and the same rows as the
     job on the single-file fixture, whose undersplit scan keeps the
-    salted exchange."""
+    exchange."""
     import pdfextraction_spark.pipeline as pipeline
 
     wide = str(tmp_path / "wide")
@@ -216,14 +216,14 @@ def test_resume_on_scan_parallel_input(spark, tmp_path, xs_parquet,
             >= spark.sparkContext.defaultParallelism)
 
     plans = []
-    real_extract = pipeline.extract_dataframe
+    real_extract = pipeline.extract_turns
 
     def capture_plan(*args):
         df = real_extract(*args)
         plans.append(df._jdf.queryExecution().executedPlan().toString())
         return df
 
-    monkeypatch.setattr(pipeline, "extract_dataframe", capture_plan)
+    monkeypatch.setattr(pipeline, "extract_turns", capture_plan)
 
     out, mf = str(tmp_path / "out"), str(tmp_path / "mf")
     with pytest.raises(RuntimeError, match="injected failure"):
@@ -254,3 +254,43 @@ def test_resume_on_scan_parallel_input(spark, tmp_path, xs_parquet,
     assert got.exceptAll(ref).count() == 0 == ref.exceptAll(got).count()
     mf_rows = pq.read_table(mf, columns=["row_count"]).column("row_count")
     assert sum(mf_rows.to_pylist()) == n
+
+
+@pytest.mark.slow
+def test_job_plans_split_count_once(spark, tmp_path, xs_parquet,
+                                    monkeypatch):
+    """The exchange gate plans the input scan to count its splits. The
+    count does not depend on a chunk's ``partition_id`` filter, so a
+    run with work asks it once, however many chunks it has, and a
+    no-op resume never."""
+    from pyspark import RDD
+
+    import pdfextraction_spark.pipeline as pipeline
+
+    gates, counts = [], []
+    real_gate = pipeline.prepare_for_extraction
+    real_count = RDD.getNumPartitions
+
+    def gate(*args):
+        gates.append(1)
+        return real_gate(*args)
+
+    def count(rdd):
+        counts.append(1)
+        return real_count(rdd)
+
+    monkeypatch.setattr(pipeline, "prepare_for_extraction", gate)
+    monkeypatch.setattr(RDD, "getNumPartitions", count)
+
+    out, mf = str(tmp_path / "out"), str(tmp_path / "mf")
+    first = pipeline.run_extraction_job(spark, xs_parquet, out, mf,
+                                        num_partitions=8, n_chunks=4)
+    assert first["partitions_processed"] == 8
+    assert (len(gates), len(counts)) == (1, 1)
+
+    gates.clear()
+    counts.clear()
+    again = pipeline.run_extraction_job(spark, xs_parquet, out, mf,
+                                        num_partitions=8, n_chunks=4)
+    assert again["partitions_processed"] == 0
+    assert (len(gates), len(counts)) == (0, 0)

@@ -15,7 +15,7 @@ def test_spark_pipeline_matches_golden(spark, xs_parquet):
     golden = golden_frame(gen_transcripts("xs"))
     turns = spark.read.parquet(xs_parquet)
     result = (
-        extract_dataframe(turns, num_partitions=4)
+        extract_dataframe(turns)
         .orderBy("conv_id", "turn_idx")
         .toPandas()
     )
@@ -76,7 +76,7 @@ def test_pathological_inputs_survive(spark, tmp_path):
     p = str(tmp_path / "pathological.parquet")
     df.to_parquet(p, index=False)
     out = (
-        extract_dataframe(spark.read.parquet(p), num_partitions=2)
+        extract_dataframe(spark.read.parquet(p))
         .orderBy("turn_idx")
         .toPandas()
     )

@@ -1,16 +1,25 @@
 """Physical-plan audits: the properties that make the engine hold at
 100 TB must survive refactors — filter pushdown to the scan, column
 pruning, broadcast of small dims, map-side partial aggregation, and
-at most ONE exchange in the extraction pipeline: the salted
-repartition, planned only when the scan is undersplit (fewer
-partitions than ``defaultParallelism``), none for a scan-parallel
-input."""
+at most ONE exchange in the extraction pipeline: a hash repartition
+on (conv_id, turn_idx) to ``defaultParallelism``, planned only when
+the scan is undersplit (fewer partitions than ``defaultParallelism``),
+none for a scan-parallel input."""
+
+import re
 
 import pytest
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _extraction_exchanges(plan: str, n: int) -> int:
+    """Exchanges of the extraction gate's shape in ``plan``."""
+    return len(re.findall(
+        rf"Exchange hashpartitioning\(conv_id#\d+, turn_idx#\d+, {n}\)",
+        plan))
 
 
 def _canon(df):
@@ -48,8 +57,13 @@ class TestPlans:
         from pdfextraction_spark.pipeline import extract_dataframe
 
         turns = spark.read.parquet(xs_parquet)
-        plan = _plan(extract_dataframe(turns, 8))
-        assert plan.count("Exchange") == 1  # only the salted repartition
+        plan = _plan(extract_dataframe(turns))
+        # the single-file fixture scans undersplit: one hash exchange
+        # on the turn key, sized to the cores, and no sort
+        assert plan.count("Exchange") == 1
+        assert _extraction_exchanges(
+            plan, spark.sparkContext.defaultParallelism) == 1
+        assert re.search(r"\bSort\b", plan) is None
         # tool is pruned at the scan; ts passes through for event-time
         assert "tool" not in plan.split("ReadSchema:")[1]
         assert ("ReadSchema: struct<conv_id:string,turn_idx:int,"
@@ -58,27 +72,23 @@ class TestPlans:
     def test_extraction_skips_exchange_on_wide_scans(
             self, spark, xs_parquet, tmp_path_factory):
         """Per-turn extraction is row-local, so when the scan already
-        yields >= defaultParallelism partitions the salted exchange is
-        skipped (guide: remove shuffles outright) — and the two paths
-        are value-identical (the contract the gate rests on)."""
+        yields >= defaultParallelism partitions the exchange is skipped
+        (guide: remove shuffles outright) — and the wide copy extracts
+        to the same values as the undersplit single file, which keeps
+        the exchange (the contract the gate rests on)."""
         import pandas as pd
 
-        from pdfextraction_spark.operators.extract import extract_turns
-        from pdfextraction_spark.operators.partitioning import (
-            prepare_for_extraction,
-        )
         from pdfextraction_spark.pipeline import extract_dataframe
 
-        src = spark.read.parquet(xs_parquet)
+        single = spark.read.parquet(xs_parquet)
         wide = str(tmp_path_factory.mktemp("fixtures") / "transcripts_wide")
-        src.repartition(8).write.parquet(wide)
-        turns = spark.read.parquet(wide)
-        auto = extract_dataframe(turns, 8)
+        single.repartition(8).write.parquet(wide)
+        auto = extract_dataframe(spark.read.parquet(wide))
         assert "Exchange" not in _plan(auto)  # scan-parallel: no shuffle
-        forced = extract_turns(prepare_for_extraction(turns, 8))
-        assert _plan(forced).count("Exchange") == 1
+        shuffled = extract_dataframe(single)
+        assert _plan(shuffled).count("Exchange") == 1
 
-        pd.testing.assert_frame_equal(_canon(auto), _canon(forced))
+        pd.testing.assert_frame_equal(_canon(auto), _canon(shuffled))
 
     def test_ann_broadcasts_queries(self, spark):
         import __spark_entry__ as em
@@ -348,17 +358,13 @@ def test_extraction_keeps_exchange_when_tiny_files_pack(
         spark, tmp_path, xs_parquet):
     """The auto shuffle gate counts planned scan partitions, not files.
     Tiny files that Spark bin-packs into one split scan as one task, so
-    the salted exchange must stay to give the kernel parallelism. The
-    opposite layout, a few files whose row groups Spark splits into at
-    least ``defaultParallelism`` partitions, needs no exchange and gives
-    the same values as the shuffled path."""
+    the exchange must stay to give the kernel parallelism. The opposite
+    layout, a few files whose row groups Spark splits into at least
+    ``defaultParallelism`` partitions, needs no exchange and gives the
+    same values as the shuffled single-file fixture."""
     import pandas as pd
     import pyarrow.parquet as pq
 
-    from pdfextraction_spark.operators.extract import extract_turns
-    from pdfextraction_spark.operators.partitioning import (
-        prepare_for_extraction,
-    )
     from pdfextraction_spark.pipeline import extract_dataframe
 
     n_cores = spark.sparkContext.defaultParallelism
@@ -376,11 +382,16 @@ def test_extraction_keeps_exchange_when_tiny_files_pack(
         turns = spark.read.parquet(str(src))
         assert len(turns.inputFiles()) >= n_cores
         assert turns.rdd.getNumPartitions() == 1
-        out = extract_dataframe(turns, 8)
-        assert _plan(out).count("Exchange") == 1
+        out = extract_dataframe(turns)
+        assert _extraction_exchanges(_plan(out), n_cores) == 1
         assert out.count() == 2 * n_cores
     finally:
         spark.conf.unset("spark.sql.files.minPartitionNum")
+
+    # the undersplit single file, shuffled, before the split size shrinks
+    shuffled = extract_dataframe(spark.read.parquet(xs_parquet))
+    assert _plan(shuffled).count("Exchange") == 1
+    want = _canon(shuffled)
 
     # two files of many row groups, split by a small partition size
     table = pq.read_table(xs_parquet)
@@ -398,12 +409,10 @@ def test_extraction_keeps_exchange_when_tiny_files_pack(
         turns = spark.read.parquet(str(big))
         assert len(turns.inputFiles()) == 2 < n_cores
         assert turns.rdd.getNumPartitions() >= n_cores
-        auto = extract_dataframe(turns, 8)
+        auto = extract_dataframe(turns)
         assert "Exchange" not in _plan(auto)
-        forced = extract_turns(prepare_for_extraction(turns, 8))
-        assert _plan(forced).count("Exchange") == 1
         got = _canon(auto)
         assert len(got) == table.num_rows
-        pd.testing.assert_frame_equal(got, _canon(forced))
+        pd.testing.assert_frame_equal(got, want)
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")

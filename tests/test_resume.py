@@ -55,29 +55,34 @@ def test_resume_no_duplicates_identical_output(spark, s_parquet, tmp_path):
 
 @pytest.mark.slow
 def test_skew_salting_bounds_partition_size(spark, s_parquet):
-    """The 's' tier plants 2 mega-conversations holding ~20% of turns;
-    salted repartition must spread each across multiple partitions
-    while leaving output values unchanged (checked by the resume test
-    above via full-equality; here we check the physical spread)."""
+    """The 's' tier plants 2 mega-conversations holding ~20% of turns.
+    The extraction exchange keys on the turn, so on this undersplit
+    single-file input the biggest conversation must land on every one
+    of the ``defaultParallelism`` partitions, none above twice its fair
+    share (output values are checked by the resume tests' full
+    equality; here we check the physical spread)."""
     from pyspark.sql import functions as F
 
-    from pdfextraction_spark.operators.partitioning import salted_repartition
-
-    turns = spark.read.parquet(s_parquet)
-    mega = (
-        turns.groupBy("conv_id").count().orderBy(F.desc("count")).first()["conv_id"]
+    from pdfextraction_spark.operators.partitioning import (
+        prepare_for_extraction,
     )
+
+    n_cores = spark.sparkContext.defaultParallelism
+    turns = spark.read.parquet(s_parquet)
+    assert turns.rdd.getNumPartitions() < n_cores
+    mega, n_mega = turns.groupBy("conv_id").count().orderBy(
+        F.desc("count")).first()
     parts = (
-        salted_repartition(turns.filter(F.col("conv_id") == mega),
-                           num_partitions=8, salt_turns=64)
+        prepare_for_extraction(turns)
+        .filter(F.col("conv_id") == mega)
         .withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
         .count()
         .toPandas()
     )
-    assert len(parts) > 1, "mega-conversation stayed on one partition"
-    # no partition should hold more than ~2 salt buckets of the conv
-    assert parts["count"].max() <= 64 * 3
+    assert sorted(parts["pid"]) == list(range(n_cores))
+    assert parts["count"].sum() == n_mega
+    assert parts["count"].max() <= 2 * n_mega / n_cores
 
 
 @pytest.mark.slow
