@@ -4,7 +4,7 @@ Pretraining pipelines cut documents into fixed-size token windows with
 overlap (stride < window) before packing/tokenization. This is a pure
 per-row transform — no shuffle at all: the chunk array is a staged
 ``transform`` over the bound token array (the staging rule from
-functions/similarity.py), then one explode.
+functions/similarity.py), then one ``text.explode_rows``.
 
 Chunk layout (the standard sliding-window convention): starts at
 0, stride, 2*stride, ...; chunk i covers tokens
@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .sampling import hash_uniform
+from .text import explode_rows
 
 
 def chunk_documents(
@@ -57,7 +58,7 @@ def chunk_documents(
         ),
     )
     staged = base.withColumn("cs", chunks)
-    return staged.select("doc_id", F.explode("cs").alias("c")).select(
+    return explode_rows(staged, "cs", "c", "doc_id").select(
         "doc_id",
         F.col("c.chunk_idx").alias("chunk_idx"),
         F.col("c.n_tokens").alias("n_tokens"),

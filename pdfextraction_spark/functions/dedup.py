@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .text import explode_rows, norm_ws_lower, winnowed
+
 # --------------------------------------------------------------------------
 # hash families
 #
@@ -59,7 +61,13 @@ def with_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     interpreted lambda re-evaluates non-attribute subexpressions per
     element — an inline split() would be recomputed for every shingle
     (O(words^2) per doc; measured 3.5x even on 300-char docs).
-    Referencing the staged attribute keeps it O(words)."""
+    Referencing the staged attribute keeps it O(words).
+
+    Explode ``shingles`` with ``text.explode_rows``, not ``F.explode``
+    or a ``size(shingles) > 0`` filter: Catalyst pushes either
+    emptiness test below this staging and re-inlines the whole chain,
+    split() included, into it (see ``explode_rows``). A table that
+    was ``localCheckpoint``ed first is safe to explode directly."""
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     staged = df.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
     t = F.col("_toks")
@@ -81,8 +89,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     xxhash64 collisions conflate two distinct texts into one group
     (P ~ n^2 / 2^65; ~3e-9 at 10^9 docs). Where that is unacceptable,
     add a second independent seed column to the key."""
-    from .text import norm_ws_lower
-
     norm = norm_ws_lower(F.col(text_col))
     return (
         df.select(F.col(id_col).alias("doc_id"), norm.alias("norm_text"))
@@ -120,7 +126,7 @@ def hot_shingles(df: DataFrame, text_col: str = "text",
     derives the threshold set from the shared hashed definition
     (_hot_shingle_hashes); one column ``sh``."""
     sh = with_shingles(df, text_col, id_col, n)
-    ex = sh.select(F.explode("shingles").alias("sh")).withColumn(
+    ex = explode_rows(sh, "shingles", "sh").withColumn(
         "h", F.xxhash64("sh")
     )
     hot = _hot_shingle_hashes(ex.select("h"), max_df)
@@ -327,7 +333,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     # explode once, then num_hashes columnar min-aggregations (partial
     # agg map-side) — far cheaper than evaluating num_hashes array
     # transforms per row
-    ex = sh.select("doc_id", F.explode("shingles").alias("s"))
+    ex = explode_rows(sh, "shingles", "s", "doc_id")
     # each min-hash aggregate is ONE parsed SQL expression: the
     # Column-by-Column construction cost ~6 py4j round trips per seed
     # (~0.2-0.4 s of pure driver time per query at num_hashes=32);
@@ -565,7 +571,7 @@ def simhash_portable60(df: DataFrame, text_col: str = "text",
     is set else -1): one explode + one grouped aggregation with 60
     map-side-combined SUM columns."""
     sh = with_shingles(df, text_col, id_col, n)
-    ex = sh.select("doc_id", F.explode("shingles").alias("s"))
+    ex = explode_rows(sh, "shingles", "s", "doc_id")
     h = ex.withColumn("h", md5_prefix60(F.col("s")))
     # bit tests/reconstruction via shifts — 1<<63 overflows a literal
     # long, so the reconstruction keeps shiftleft(1L, b). Both the 60+
@@ -705,13 +711,11 @@ def winnow_containment_pairs(
     bounded per-doc hot-fp arrays, so the reported containment stays
     exact for every surfaced pair). Fingerprints are the md5 family
     ``winnowed`` emits, which the DuckDB oracle re-derives."""
-    from .text import winnowed
-
     base = winnowed(
         df.select(F.col(id_col).alias("doc_id"),
                   F.col(text_col).alias("text")),
         k=k, window=window, out_col="_fps",
-    ).select("doc_id", "_fps").filter(F.size("_fps") > 0)
+    )
     # materialize the exploded fingerprint rows ONCE: six downstream
     # plans consume them (df-count agg, tagged probe, both sides of
     # the cold self-join, hot arrays, per-doc sizes) and the winnow
@@ -719,9 +723,7 @@ def winnow_containment_pairs(
     # as the funnel's pair list. The fingerprint table is the
     # standard persisted artifact of a winnowing index (~2/(w+1) of
     # corpus chars).
-    fps = base.select(
-        "doc_id", F.explode("_fps").alias("fp")
-    ).localCheckpoint()
+    fps = explode_rows(base, "_fps", "fp", "doc_id").localCheckpoint()
     fp_df = fps.groupBy("fp").agg(F.count("*").alias("fp_df"))
     tagged = fps.join(fp_df, "fp")
     cold = tagged.filter(F.col("fp_df") <= max_fp_df)
@@ -790,8 +792,6 @@ def corpus_diff(
     different surrounding whitespace is 'unchanged', not 'changed'.
     Plan: one full outer join on the id — both sides shuffle once on
     a fixed-width key; no other stage."""
-    from .text import norm_ws_lower
-
     fp = F.md5(F.encode(norm_ws_lower(F.col(text_col)), "UTF-8"))
 
     def side(df: DataFrame, fp_name: str) -> DataFrame:
@@ -825,8 +825,6 @@ def dup_rate_by_source(
     fingerprints (the exact_dedup key family) and dup_rate =
     1 - n_unique/n_docs rounded to 6dp. One hash aggregation; the
     shuffle key is the group column."""
-    from .text import norm_ws_lower
-
     fp = F.md5(F.encode(norm_ws_lower(F.col(text_col)), "UTF-8"))
     return (
         df.select(F.col(group_col).alias("source"), fp.alias("fp"))
@@ -955,8 +953,6 @@ def conversation_dedup(
     turn_idx is unique within a conversation (the input contract the
     extraction pipeline enforces); duplicate turn_idx would make the
     within-array tie order engine-specific."""
-    from .text import norm_ws_lower
-
     # per-TURN digest first: only fixed-width 32-char md5 strings
     # cross the groupBy exchange (the exact_dedup wire rule — raw
     # corpus text never ships), and a turn text containing a literal

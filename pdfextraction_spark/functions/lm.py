@@ -34,7 +34,7 @@ from typing import Tuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .text import norm_ws_lower
+from .text import explode_rows, norm_ws_lower
 
 DEFAULT_VOCAB = 10_000
 DEFAULT_ALPHA = 1.0
@@ -117,8 +117,10 @@ def perplexity_score(
     (id_col, n_tokens, ppl)."""
     toks = docs.select(
         F.col(id_col), _tokens(F.col(text_col)).alias("__toks")
-    ).filter(F.size("__toks") > 0)
-    ex = toks.select(id_col, F.explode("__toks").alias("token"))
+    )
+    # a zero-token doc explodes to no row, so it never reaches the
+    # per-doc aggregate
+    ex = explode_rows(toks, "__toks", "token", id_col)
     scored = ex.join(F.broadcast(lm), "token", "left").withColumn(
         "__lp", F.coalesce(F.col("logp"), F.lit(oov_logp))
     )

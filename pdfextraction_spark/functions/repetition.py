@@ -38,13 +38,18 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .text import explode_rows
+
 
 def word_ngrams(toks: Column, n: int) -> Column:
     """Array of space-joined word n-grams from a BOUND token-array
     attribute (callers must stage ``split(text, ' ')`` as a real
     column first — a non-attribute input under the interpreted
     ``transform`` would be re-evaluated per element). Empty array when
-    the doc has fewer than ``n`` tokens."""
+    the doc has fewer than ``n`` tokens. Stage the result as a column
+    too and explode it with ``text.explode_rows``: a plain explode
+    infers a ``size(...) > 0`` filter that Catalyst pushes below the
+    stages with this transform inlined into it."""
     if n <= 1:
         return toks
     return F.when(
@@ -101,7 +106,7 @@ def ngram_repetition_stats(
         n = ns[0]
         staged1 = base.withColumn("gs", word_ngrams(F.col("toks"), n))
         counted1 = (
-            staged1.select("doc_id", F.explode("gs").alias("gram"))
+            explode_rows(staged1, "gs", "gram", "doc_id")
             .groupBy("doc_id", "gram")
             .agg(F.count("*").alias("cnt"))
         )
@@ -135,12 +140,13 @@ def ngram_repetition_stats(
         for n in ns
     ]
     # stage the combined array as a real column: an explode above an
-    # unstaged expression would re-evaluate it per element
+    # unstaged expression would re-evaluate it per element. Explode it
+    # with explode_rows: F.explode's inferred size(gs) > 0 filter is
+    # pushed below this projection with the transforms inlined
     staged = base.withColumn("gs", F.flatten(F.array(*tagged_arrays)))
-    ex = staged.select(
-        "doc_id",
-        F.explode("gs").alias("g"),
-    ).select("doc_id", F.col("g.n").alias("n"), F.col("g.gram").alias("gram"))
+    ex = explode_rows(staged, "gs", "g", "doc_id").select(
+        "doc_id", F.col("g.n").alias("n"), F.col("g.gram").alias("gram")
+    )
     counted = ex.groupBy("doc_id", "n", "gram").agg(
         F.count("*").alias("cnt")
     )
@@ -271,7 +277,7 @@ def contamination_hits(
             F.col(idc).alias(out_id),
             F.split(F.col(text_col), " ").alias("toks"),
         ).withColumn("g", word_ngrams(F.col("toks"), n))
-        return base.select(out_id, F.explode("g").alias("gram")).distinct()
+        return explode_rows(base, "g", "gram", out_id).distinct()
 
     dg = gram_set(docs, id_col, "doc_id")
     eg = gram_set(eval_docs, eval_id_col, "eval_id")

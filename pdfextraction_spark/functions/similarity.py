@@ -21,6 +21,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .text import explode_rows
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -208,8 +210,8 @@ def cosine_near_pairs(
             )
             .filter(F.col("cos_sim") >= threshold)
         )
-    eb = e.withColumn(
-        "bucket", lsh_bucket_id("v", det_int_planes(dim, bits), is_double=True)
+    eb = e.withColumn("q", lsh_quantized(F.col("v"))).withColumn(
+        "bucket", lsh_bucket_id("q", det_int_planes(dim, bits))
     )
     pb = eb.select(
         F.col("vec_id").alias("id_b"),
@@ -262,9 +264,8 @@ def cosine_near_join(
             F.col(id_col).alias(out_id),
             _as_double(F.col(vec_col)).alias("v"),
         ).withColumn("n", _norm(F.col("v")))
-        return e.withColumn(
-            "bucket",
-            lsh_bucket_id("v", planes, is_double=True),
+        return e.withColumn("q", lsh_quantized(F.col("v"))).withColumn(
+            "bucket", lsh_bucket_id("q", planes)
         )
 
     el = side(left, "left_id")
@@ -492,7 +493,13 @@ def _pq_lloyd_step(
 
     Explode discipline: the codes and subvector slices are staged
     projections BEFORE the explode select, so the Generate cannot
-    lift the encode above itself and re-run it per element."""
+    lift the encode above itself and re-run it per element. Staging
+    alone does not protect an explode of a higher-order-function
+    result: Catalyst infers ``size(a) > 0`` above a plain explode of
+    an attribute and pushes it below the stages with the staged
+    expression inlined, so such arrays go through
+    ``text.explode_rows`` (the encode here is an opaque
+    nondeterministic UDF, which that filter cannot be pushed past)."""
     m = len(codebooks)
     d_sub = len(codebooks[0][0])
     staged = embeddings.select(
@@ -674,7 +681,7 @@ def _ivfpq_coded(
     )
 
 
-def _probe_lists(
+def _probe_rows(
     queries: DataFrame,
     centroids: List[List[float]],
     n_probe: int,
@@ -682,19 +689,22 @@ def _probe_lists(
     vec_col: str,
     keep_qv: bool = False,
 ) -> DataFrame:
-    """(query_id[, qv], __probes array<int>) — each query's n_probe
-    nearest coarse lists, best-first, ties by smaller list id
-    (np_probe_lists_udf); the single home for the probe tie/rounding
+    """(query_id[, qv], list_id) — one row per probed list: each
+    query's n_probe nearest coarse lists (np_probe_lists_udf, ties by
+    smaller list id); the single home for the probe tie/rounding
     policy both IVF and IVF-PQ search paths (and their green oracles)
-    pin."""
+    pin. The probe array is exploded with explode_rows, so no inferred
+    emptiness filter re-runs the UDF below the explode."""
     cols = [F.col(query_id_col).alias("query_id")]
     if keep_qv:
         cols.append(_as_double(F.col(vec_col)).alias("qv"))
-    return queries.select(
+    probes = queries.select(
         *cols,
         np_probe_lists_udf(centroids, n_probe)(F.col(vec_col))
         .alias("__probes"),
     )
+    keep = [c for c in probes.columns if c != "__probes"]
+    return explode_rows(probes, "__probes", "list_id", *keep)
 
 
 def ivfpq_topk(
@@ -735,11 +745,8 @@ def ivfpq_topk(
         )
     coded = _ivfpq_coded(embeddings, centroids, codebooks, id_col,
                          vec_col)
-    probes = _probe_lists(queries, centroids, n_probe, query_id_col,
-                          vec_col)
-    probe_rows = probes.select(
-        "query_id", F.explode("__probes").alias("list_id")
-    )
+    probe_rows = _probe_rows(queries, centroids, n_probe, query_id_col,
+                             vec_col)
     tq = _adc_query_tables(queries, codebooks, query_id_col, vec_col)
     q = probe_rows.join(tq, "query_id")
     scored = (
@@ -779,19 +786,26 @@ def det_int_planes(dim: int, bits: int) -> List[List[int]]:
     ]
 
 
-def lsh_bucket_id(vec_name: str, planes: Sequence[Sequence[float]],
-                  is_double: bool = False):
+def lsh_quantized(v):
+    """round(vec * QUANT_SCALE) per element, from an array<double>
+    column — the integer vector ``lsh_bucket_id`` projects. Stage it
+    as its own projection: the bucket references it once per plane,
+    and an unstaged transform is re-run for every reference."""
+    return F.transform(v, lambda x: F.round(x * QUANT_SCALE))
+
+
+def lsh_bucket_id(q_name: str, planes: Sequence[Sequence[float]]):
     """Sign-LSH bucket: bit i set iff dot(round(vec * QUANT_SCALE),
     plane_i) > 0. Rounding the vector to integers first makes the dot
     product exact integer arithmetic — reproducible bit-for-bit across
     engines.
 
-    ``vec_name`` is a column name; plane literal arrays are built in
-    one py4j call each (_lit_arr). ``is_double=True`` skips the
-    element cast for columns already staged as array<double> (the
-    cast is a no-op on doubles, so bucket values are unchanged)."""
-    v = F.col(vec_name) if is_double else _as_double(F.col(vec_name))
-    v = F.transform(v, lambda x: F.round(x * QUANT_SCALE))
+    ``q_name`` names a STAGED ``lsh_quantized`` column (each plane's
+    dot reads the bound attribute, so the quantizing transform runs
+    once per row, not once per plane); plane literal arrays are built
+    in one py4j call each (_lit_arr). Stage the bucket too before
+    ``_hamming1_probes`` references it bits + 1 times."""
+    v = F.col(q_name)
     bucket = F.lit(0).cast("long")
     for i, plane in enumerate(planes):
         bucket = bucket + F.when(
@@ -874,10 +888,7 @@ def np_probe_lists_udf(centroids: Sequence[Sequence[float]],
             rows[i] = None
         return pd.Series(rows, dtype=object)
 
-    # same §4.4 marking as np_centroid_assign_udf: the explode over
-    # __probes infers a size(__probes) > 0 filter that was pushed
-    # below the UDF, evaluating probe twice per query row
-    return probe.asNondeterministic()
+    return probe
 
 
 def _lloyd_step(embeddings: DataFrame, vec_col: str,
@@ -986,11 +997,8 @@ def ivf_topk(
             lloyd_iters=lloyd_iters,
         )
     e = _coarse_assigned(embeddings, centroids, id_col, vec_col)
-    q0 = _probe_lists(queries, centroids, n_probe, query_id_col,
-                      vec_col, keep_qv=True)
-    q = q0.select(
-        "query_id", "qv", F.explode(F.col("__probes")).alias("list_id")
-    )
+    q = _probe_rows(queries, centroids, n_probe, query_id_col, vec_col,
+                    keep_qv=True)
     scored = (
         e.join(F.broadcast(q), "list_id")
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -1031,14 +1039,17 @@ def lsh_bucket_topk(
     e = embeddings.select(
         F.col(id_col).alias("vec_id"),
         _as_double(F.col(vec_col)).alias("v"),
-        lsh_bucket_id(vec_col, planes).alias("bucket"),
+    ).withColumn("q", lsh_quantized(F.col("v"))).select(
+        "vec_id", "v", lsh_bucket_id("q", planes).alias("bucket"),
     )
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         _as_double(F.col(vec_col)).alias("qv"),
-        F.explode(
-            _hamming1_probes(lsh_bucket_id(vec_col, planes), bits)
-        ).alias("bucket"),
+    ).withColumn("q", lsh_quantized(F.col("qv"))).withColumn(
+        "b", lsh_bucket_id("q", planes)
+    ).select(
+        "query_id", "qv",
+        F.explode(_hamming1_probes(F.col("b"), bits)).alias("bucket"),
     )
     scored = (
         e.join(F.broadcast(q), "bucket")

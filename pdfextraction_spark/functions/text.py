@@ -195,7 +195,10 @@ def winnowed(df, text_col: str = "text", k: int = 8, window: int = 4,
     window+k-1 shares a selected fingerprint while keeping
     ~2/(window+1) of the grams. Appends ``out_col`` (sorted distinct
     fingerprints as 16-hex md5 prefixes, the family DuckDB re-derives
-    in ``winnow_fingerprints_sql``).
+    in ``winnow_fingerprints_sql``). Explode ``out_col`` with
+    ``explode_rows`` and never filter on ``size(out_col)``: either
+    form of the emptiness test is pushed below the stages and re-runs
+    the whole winnow chain per row (see ``explode_rows``).
 
     WHY a df-transform and not one Column expression: higher-order
     functions are interpreted (not codegen), and an interpreted
@@ -234,4 +237,33 @@ def winnowed(df, text_col: str = "text", k: int = 8, window: int = 4,
     return (
         s2.withColumn(out_col, F.array_sort(F.array_distinct(selected)))
         .drop("_w_low", "_w_n", "_w_grams")
+    )
+
+
+def explode_rows(df, array_col, alias: str, *keep):
+    """The rows of ``df.select(*keep, F.explode(array_col).alias(alias))``
+    — THE way to explode an array staged by a higher-order-function
+    chain (the ``with_shingles`` / ``winnowed`` / ``word_ngrams``
+    staging rule).
+
+    Why not ``F.explode``: Catalyst's InferFiltersFromGenerate adds
+    ``size(a) > 0 AND isnotnull(a)`` above every non-outer explode of
+    an attribute, and PushPredicateThroughNonJoin pushes that filter
+    below the staging projections, substituting the FULL staged
+    expression into it — the HOF chain (with any inline
+    ``split(lower(...))``) then runs once more per row, un-staged, so
+    the quadratic form the staging exists to avoid comes back. An
+    explicit ``filter(F.size(a) > 0)`` is pushed the same way.
+
+    Here the generator is ``posexplode_outer`` (no filter is inferred
+    for an outer generator) and the filter is on the generated
+    position, which cannot be pushed below the Generate. A null or
+    empty array yields one outer row with a null position, which the
+    filter drops; a null ELEMENT keeps its non-null position and
+    survives, exactly as under ``explode``."""
+    pos = f"_{alias}_pos"
+    return (
+        df.select(*keep, F.posexplode_outer(array_col).alias(pos, alias))
+        .filter(F.col(pos).isNotNull())
+        .drop(pos)
     )

@@ -21,7 +21,7 @@ never read, which is what makes serving reads O(probed fraction)
 instead of O(corpus).
 
 Build, append and search reuse the exact ivfpq_topk machinery
-(_ivfpq_coded, _probe_lists, _adc_query_tables, _adc_score,
+(_ivfpq_coded, _probe_rows, _adc_query_tables, _adc_score,
 _topk — single homes for the tie/rounding contracts), so
 indexed results are row-identical to the
 in-memory composition; pinned in tests. Centroid/codebook collects
@@ -41,7 +41,7 @@ from ..functions.similarity import (
     _adc_query_tables,
     _adc_score,
     _ivfpq_coded,
-    _probe_lists,
+    _probe_rows,
     _topk,
     pq_quantization_mse,
     pq_train_codebooks,
@@ -277,10 +277,8 @@ def ivfpq_topk_indexed(
     queries are corpus rows (self-search). Pass ``exclude_self=False``
     when the query ids come from a DIFFERENT keyspace: a numeric
     coincidence would otherwise silently delete a true neighbor."""
-    probes = _probe_lists(queries, index.centroids, n_probe,
-                          query_id_col, vec_col)
-    probe_rows = probes.select(
-        "query_id", F.explode("__probes").alias("list_id")
+    probe_rows = _probe_rows(
+        queries, index.centroids, n_probe, query_id_col, vec_col
     ).localCheckpoint()  # consumed twice: the IN-filter collect + join
     probed = sorted(
         r.list_id

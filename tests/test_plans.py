@@ -22,6 +22,32 @@ def _extraction_exchanges(plan: str, n: int) -> int:
         plan))
 
 
+def _nodes(tree):
+    """Every node of a Catalyst tree (a plan or an expression)."""
+    stack = [tree]
+    while stack:
+        node = stack.pop()
+        yield node
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+
+
+def _inlined_emptiness_tests(plan) -> list:
+    """``size(e) > 0`` terms of Filter conditions in ``plan`` whose
+    ``e`` holds a lambda: the emptiness test that F.explode infers (or
+    an explicit size filter states) for a staged higher-order-function
+    array, pushed below the staging with the chain inlined into it."""
+    return [
+        e.toString()
+        for node in _nodes(plan) if node.nodeName() == "Filter"
+        for e in _nodes(node.condition())
+        if e.nodeName() == "GreaterThan"
+        and e.left().nodeName() == "Size"
+        and e.right().toString() == "0"
+        and any(n.nodeName() == "LambdaFunction" for n in _nodes(e.left()))
+    ]
+
+
 def _canon(df):
     pdf = df.toPandas()
     for c in pdf.columns:
@@ -416,3 +442,36 @@ def test_extraction_keeps_exchange_when_tiny_files_pack(
         pd.testing.assert_frame_equal(got, want)
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("name", [
+    "hot_shingles", "simhash_sketch", "simhash_pairs", "repetition_stats",
+    "contamination_hits", "chunk_documents", "pack_chunks",
+    "curation_funnel", "curation_funnel_v2", "lm_perplexity",
+    "winnow_containment",
+])
+def test_staged_arrays_explode_without_reinlined_filter(
+        spark, monkeypatch, name):
+    """No emptiness filter re-inlines a staged HOF chain: neither the
+    final plan nor any plan a query checkpoints while it is built (the
+    winnow_containment fingerprint table is cut by a localCheckpoint,
+    so its final plan alone would hide the filter) may test ``size(e)
+    > 0`` on a lambda-bearing ``e``. That filter re-runs the chain
+    per row un-staged: O(words^2) per doc for shingles, O(len^2 *
+    window) md5 calls for winnowing."""
+    import __spark_entry__ as em
+
+    frame_cls = type(spark.range(1))
+    checkpoint = frame_cls.localCheckpoint
+    plans = []
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    df = em.queries()[name](spark, "/root/testdata/sf0.001")
+    plans.append(df._jdf.queryExecution().optimizedPlan())
+    found = [t for p in plans for t in _inlined_emptiness_tests(p)]
+    assert not found, found[0][:300]

@@ -150,3 +150,45 @@ def test_winnowed_staged_equals_expression_form(spark):
     ).fetchall())
     assert got == want
     assert got[0] == got[1] == "" and got[5].count(",") > 10
+
+
+def test_explode_rows_equals_explode(spark):
+    """``explode_rows`` yields exactly ``F.explode``'s rows (a null
+    array, an empty array, a null element, ordinary arrays, and an
+    array<struct> column of the ``ngram_repetition_stats`` shape), and
+    its optimized plan carries no ``size(`` filter below the Generate,
+    so a staged higher-order-function array is never re-inlined into
+    one."""
+    from collections import Counter
+
+    from pdfextraction_spark.functions.text import explode_rows
+
+    df = spark.createDataFrame(
+        [
+            (0, None, None),
+            (1, [], []),
+            (2, ["a", None, "b"], [(2, None)]),
+            (3, ["a", "a"], [(2, "x y"), (3, "x y z")]),
+            (4, ["c"], [(2, "x y"), (2, "x y")]),
+        ],
+        "doc_id int, arr array<string>, "
+        "gs array<struct<n:int, gram:string>>",
+    )
+    for col in ("arr", "gs"):
+        want = df.select("doc_id", F.explode(col).alias("e")).collect()
+        got = explode_rows(df, col, "e", "doc_id")
+        assert got.columns == ["doc_id", "e"]
+        assert Counter(got.collect()) == Counter(want), col
+    assert Counter(r.e for r in explode_rows(df, "arr", "e").collect()) \
+        == Counter(["a", None, "b", "a", "a", "c"])
+
+    # a HOF-staged array: F.explode's plan gains the inferred
+    # size(up) > 0 filter below its Generate; explode_rows' plan has none
+    staged = df.withColumn("up", F.transform("arr", lambda s: F.upper(s)))
+
+    def optimized(frame):
+        return frame._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "size(" in optimized(staged.select(F.explode("up")))
+    plan = optimized(explode_rows(staged, "up", "e", "doc_id"))
+    assert "Generate" in plan and "size(" not in plan
