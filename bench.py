@@ -463,20 +463,15 @@ def _force(df) -> None:
 
 def production_queries() -> dict:
     """Bench-only overrides: the same operators as the driver queries
-    but at their PRODUCTION configuration — the xxhash64 minhash family
-    the CLI ``curate`` path runs, Lloyd-refined IVF, k=256 PQ
-    codebooks, the raw bench transcripts. The registry queries run the
-    md5 minhash family and seed-only quantizers so the DuckDB oracle
-    can re-derive them end to end. Operators with one hash family
-    (SimHash, blocked cosine, sign-LSH top-k) have no override: the
-    bench times the registry query."""
+    but at their PRODUCTION configuration — Lloyd-refined IVF, k=256
+    PQ codebooks, the raw bench transcripts. The registry queries run
+    seed-only quantizers so the DuckDB oracle can re-derive them end
+    to end. Operators with one hash family (MinHash and the
+    compositions built on it, SimHash, blocked cosine, sign-LSH top-k)
+    have no override: the CLI runs the same code, so the bench times
+    the registry query."""
     from pyspark.sql import functions as SF
 
-    from pdfextraction_spark.functions.curation import curation_funnel
-    from pdfextraction_spark.functions.dedup import (
-        incremental_update,
-        minhash_lsh_pairs,
-    )
     from pdfextraction_spark.functions.chunking import context_windows
     from pdfextraction_spark.functions.similarity import (
         ivf_topk,
@@ -485,9 +480,6 @@ def production_queries() -> dict:
         pq_encode,
         semantic_dedup,
     )
-
-    def _docs(spark, sf_dir):
-        return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
 
     def _emb(spark, sf_dir):
         return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
@@ -499,9 +491,6 @@ def production_queries() -> dict:
         )
 
     return {
-        "minhash_lsh_pairs": lambda s, d: minhash_lsh_pairs(
-            _docs(s, d), threshold=0.2
-        ),
         "ann_ivf_topk": lambda s, d: ivf_topk(
             _emb(s, d), _queries(s, d), k=10, n_centroids=16, n_probe=4,
             # index BUILD (seed + Lloyd) is a one-time cost a
@@ -533,24 +522,6 @@ def production_queries() -> dict:
         # op itself on the big fixture)
         "context_windows": lambda s, d: context_windows(
             s.read.parquet(ensure_bench_fixture()), budget=100,
-        ),
-        # crawl-increment composite with the production xxhash64
-        # family (driver query runs portable md5 for the oracle)
-        "incremental_update": lambda s, d: incremental_update(
-            _docs(s, d).filter(SF.col("doc_id") % 11 != 5),
-            _docs(s, d).filter(SF.col("doc_id") % 7 != 3).withColumn(
-                "text",
-                SF.when(SF.col("doc_id") % 5 == 0,
-                        SF.concat(SF.col("text"), SF.lit(" v2")))
-                .otherwise(SF.col("text"))),
-            threshold=0.2, portable=False,
-        ),
-        # the funnel's production shape: xxhash64 near-dup stage (the
-        # driver query runs the portable md5 family for the oracle)
-        "curation_funnel_v2": lambda s, d: curation_funnel(
-            _docs(s, d), min_quality=0.5, max_top2_frac=0.12,
-            per_lang=10, near_dup=True, nd_threshold=0.2,
-            portable=False,
         ),
     }
 

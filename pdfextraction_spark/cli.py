@@ -108,9 +108,9 @@ def _cmd_curate(args: argparse.Namespace) -> int:
             docs, min_quality=args.min_quality,
             max_top2_frac=args.max_top2_frac,
             near_dup=args.near_dup, nd_threshold=args.nd_threshold,
-            # the CLI is the production surface: xxhash64 hash family
-            # (the portable md5 family exists for the SQL oracle)
-            portable=False,
+            # no all-pairs oracle contract here: cap saturated LSH
+            # buckets (crawl-mirror clusters stay one component)
+            bucket_cap=8,
         )
         # persist the reused stages: every later stage and every count
         # below would otherwise re-run the full funnel lineage from

@@ -30,7 +30,6 @@ def curation_funnel_stages(
     max_top2_frac: float = 0.12,
     near_dup: bool = False,
     nd_threshold: float = 0.2,
-    portable: bool = True,
     bucket_cap: int | None = None,
 ) -> dict:
     """The funnel's intermediate stages, keyed gated -> survivors ->
@@ -42,16 +41,16 @@ def curation_funnel_stages(
     gate — the ordering real pipelines use (exact dedup first shrinks
     the near-dup candidate set; repetition gating after dedup avoids
     scoring doomed copies). Pairs come from minhash-LSH (the
-    scale-safe blocked path, the same portable md5 family the green
+    scale-safe blocked path, with the one hash family the green
     minhash_lsh_pairs oracle re-derives), components from distributed
     min-label propagation, and the kept copy is the HIGHEST-QUALITY
     cluster member (ties -> smallest id) via cluster_representatives
     — near-dup copies differ in noise/truncation and the funnel wants
-    the best one, not an arbitrary one. ``portable=False`` switches
-    the pair stage to the xxhash64 production hash family;
-    ``bucket_cap`` forwards the saturated-LSH-bucket dial (pathological
-    duplicate mass caps each band bucket's pair fan-out while the
-    capped pairs still chain the cluster for components)."""
+    the best one, not an arbitrary one. ``bucket_cap`` forwards the
+    saturated-LSH-bucket dial (pathological duplicate mass caps each
+    band bucket's pair fan-out while the capped pairs still chain the
+    cluster for components): None, the exact all-pairs contract, for
+    the oracle-checked queries; 8 for the CLI."""
     from pyspark.sql import Window
 
     t = F.col("text")
@@ -97,8 +96,7 @@ def curation_funnel_stages(
         # cached by default) — materialize it once; near-dup pairs
         # are a sliver of the corpus, so the checkpoint is bounded
         pairs = minhash_lsh_pairs(
-            survivors, threshold=nd_threshold, portable=portable,
-            bucket_cap=bucket_cap,
+            survivors, threshold=nd_threshold, bucket_cap=bucket_cap,
         ).select("id_a", "id_b").localCheckpoint()
         # components run ONLY over docs that appear in a pair: every
         # other survivor is trivially its own representative, so the
@@ -147,13 +145,12 @@ def curation_funnel(
     per_lang: int = 10,
     near_dup: bool = False,
     nd_threshold: float = 0.2,
-    portable: bool = True,
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """Selected training subset with per-language sample_rank."""
     stages = curation_funnel_stages(
         docs, min_quality, max_top2_frac,
-        near_dup=near_dup, nd_threshold=nd_threshold, portable=portable,
+        near_dup=near_dup, nd_threshold=nd_threshold,
         bucket_cap=bucket_cap,
     )
     return quota_sample(stages["final"], k=per_lang, stratum_col="lang")

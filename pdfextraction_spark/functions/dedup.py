@@ -8,9 +8,10 @@ All built from DataFrame primitives so Catalyst keeps pushdown/pruning:
 - ngram_jaccard_pairs: word n-gram shingles -> explode -> equi-join on
   shingle -> per-pair intersection counts -> Jaccard (candidate pairs
   share >=1 shingle, so the join IS the blocking step)
-- minhash_lsh_pairs: k permutation-free minhashes via xxhash64(seeded)
-  min-aggregated per doc; bands of r signatures hashed to buckets;
-  bucket equi-join yields candidates, verified by exact Jaccard
+- minhash_lsh_pairs: k affine permutations of one md5 base hash per
+  shingle, min-aggregated per doc; bands of r signature values joined
+  into bucket keys; bucket equi-join yields candidates, verified by
+  exact Jaccard
 - simhash_portable60: 60-bit sign-sum sketch over md5 shingle hashes;
   near-dups = pairs within Hamming distance d (bit_count(xor) <= d)
 
@@ -21,6 +22,8 @@ the head of the frequency distribution before the join.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .text import explode_rows, norm_ws_lower, winnowed
@@ -28,15 +31,28 @@ from .text import explode_rows, norm_ws_lower, winnowed
 # --------------------------------------------------------------------------
 # hash families
 #
-# The sketches here hash with md5 (md5_prefix60 and md5 hex prefixes):
-# bit-identical on ANY engine with md5(), so the DuckDB oracle
-# recomputes the ENTIRE sketch + blocking + verify pipeline in
-# SQL and lands on the same rows/hashes, which a Spark-private hash
-# cannot give it. minhash_lsh_pairs (and the joins built on it) keeps
-# a second, xxhash64 family behind ``portable=False``: the CLI
-# ``curate`` path runs it, and it measured 4.9x faster than md5 on
-# 5000 sf0.1 documents (ROADMAP item 4). For SimHash the two families
-# timed within noise, so it has only the md5 one.
+# The sketches here have one hash family, md5: bit-identical on ANY
+# engine with md5(), so the DuckDB oracle recomputes the ENTIRE
+# sketch + blocking + verify pipeline in SQL and lands on the same
+# rows/hashes, which a Spark-private hash cannot give it. MinHash pays
+# ONE md5 per shingle: its base hash h = md5_prefix60 mod p
+# (p = 2^31 - 1) feeds the affine permutations (a_i*h + b_i) mod p of
+# universal-hash MinHash (Broder 1997) — integer arithmetic both
+# engines compute exactly, near xxhash64 speed (one md5 per
+# permutation was ~10x slower). xxhash64 remains only as an in-engine
+# shuffle key whose values no oracle recomputes (exact_dedup, the
+# ngram_jaccard shingle ids).
+
+MINHASH_PRIME = 2147483647  # 2^31 - 1
+# (a_i, b_i) of permutation i, a_i in [1, p-1], b_i in [0, p-1]: fixed
+# md5 draws, inlined as literals by the Spark aggregation and the
+# DuckDB oracle alike. a_i*h + b_i < 2^62 + 2^31 never overflows int64.
+MINHASH_COEFFS = tuple(
+    (int(hashlib.md5(f"a{i}".encode()).hexdigest(), 16)
+     % (MINHASH_PRIME - 1) + 1,
+     int(hashlib.md5(f"b{i}".encode()).hexdigest(), 16) % MINHASH_PRIME)
+    for i in range(32)
+)
 
 
 def md5_prefix60(col: Column) -> Column:
@@ -310,18 +326,12 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", n: int = 3,
                        num_hashes: int = 32,
-                       portable: bool = False,
                        shingles: DataFrame | None = None) -> DataFrame:
-    """num_hashes minhash values per doc: min over shingles of
-    hash_i(shingle). Seeded-hash families replace explicit
-    permutations (standard MinHash trick).
-
-    ``portable=False``: xxhash64(shingle, seed_i) longs (production).
-    ``portable=True``: 16-hex-char md5 prefixes of '<seed>:<shingle>',
-    compared as strings (lowercase hex of equal length orders like the
-    integer it encodes, so MIN() over them is MIN() over the hashes).
-    The identical signature is computable in plain SQL, so the
-    query's DuckDB oracle re-derives it end to end.
+    """num_hashes (<= len(MINHASH_COEFFS)) minhash longs per doc:
+    h_i = min over shingles of (a_i*h + b_i) mod p, where h is the
+    shingle's md5_prefix60 mod p and (a_i, b_i) = MINHASH_COEFFS[i].
+    The identical signature is computable in plain SQL, so the DuckDB
+    oracle re-derives it end to end.
 
     ``shingles`` short-circuits the shingling step with a caller-built
     (doc_id, shingles) table — the LSH operators shingle the corpus
@@ -333,41 +343,35 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     # explode once, then num_hashes columnar min-aggregations (partial
     # agg map-side) — far cheaper than evaluating num_hashes array
     # transforms per row
-    ex = explode_rows(sh, "shingles", "s", "doc_id")
-    # each min-hash aggregate is ONE parsed SQL expression: the
-    # Column-by-Column construction cost ~6 py4j round trips per seed
-    # (~0.2-0.4 s of pure driver time per query at num_hashes=32);
-    # the parsed trees are identical to the F.* forms (same functions,
-    # same literals), so signatures are byte-identical
-    hash_sql = (
-        (lambda i: f"substring(md5(encode(concat('{i}:', s), "
-                   f"'UTF-8')), 1, 16)") if portable
-        else (lambda i: f"xxhash64(s, {i})")
+    ex = explode_rows(sh, "shingles", "s", "doc_id").select(
+        "doc_id", F.pmod(md5_prefix60(F.col("s")), F.lit(MINHASH_PRIME))
+        .alias("h")
     )
+    # each min-hash aggregate is ONE parsed SQL expression: the
+    # Column-by-Column construction cost ~6 py4j round trips per
+    # permutation (~0.2-0.4 s of pure driver time per query at
+    # num_hashes=32)
+    def perm_min(i: int) -> Column:
+        a, b = MINHASH_COEFFS[i]
+        return F.expr(f"min(pmod({a} * h + {b}, {MINHASH_PRIME}))")
+
     agg = ex.groupBy("doc_id").agg(
-        *[F.expr(f"min({hash_sql(i)})").alias(f"h{i}")
-          for i in range(num_hashes)]
+        *[perm_min(i).alias(f"h{i}") for i in range(num_hashes)]
     )
     sig = F.array(*[F.col(f"h{i}") for i in range(num_hashes)])
     return agg.select("doc_id", sig.alias("signature"))
 
 
-def _band_bucket_rows(sigs: DataFrame, bands: int, r: int,
-                      portable: bool) -> DataFrame:
-    """(doc_id, band, bucket) rows from minhash signatures: each band
-    is r consecutive signature values joined to one bucket key
-    (xxhash64'd to a long in production; raw string when portable so
-    the SQL oracle can reproduce it)."""
+def _band_bucket_rows(sigs: DataFrame, bands: int, r: int) -> DataFrame:
+    """(doc_id, band, bucket) rows from minhash signatures: each band's
+    bucket key is its r consecutive signature values as comma-joined
+    decimals (the DuckDB oracle builds the same string with
+    string_agg)."""
 
     def band_key(bi: int):
-        joined = F.array_join(
-            F.transform(
-                F.slice("signature", bi * r + 1, r),
-                lambda v: v.cast("string"),
-            ),
-            ",",
+        return F.array_join(
+            F.slice("signature", bi * r + 1, r).cast("array<string>"), ","
         )
-        return joined if portable else F.xxhash64(joined)
 
     return sigs.select(
         "doc_id",
@@ -388,8 +392,8 @@ def _band_bucket_rows(sigs: DataFrame, bands: int, r: int,
 def minhash_lsh_join(left: DataFrame, right: DataFrame,
                      threshold: float = 0.5, n: int = 3,
                      num_hashes: int = 32, bands: int = 8,
-                     text_col: str = "text", id_col: str = "doc_id",
-                     portable: bool = False) -> DataFrame:
+                     text_col: str = "text",
+                     id_col: str = "doc_id") -> DataFrame:
     """LSH-blocked ASYMMETRIC near-dup join — the scale path of
     ngram_jaccard_join when BOTH sides are large: candidates must
     collide in a minhash band across sides (cross-side bucket
@@ -405,11 +409,11 @@ def minhash_lsh_join(left: DataFrame, right: DataFrame,
     sh_r = with_shingles(right, text_col, id_col, n).localCheckpoint()
     bl = _band_bucket_rows(
         minhash_signatures(left, text_col, id_col, n, num_hashes,
-                           portable, shingles=sh_l), bands, r, portable
+                           shingles=sh_l), bands, r
     ).withColumnRenamed("doc_id", "left_id")
     br = _band_bucket_rows(
         minhash_signatures(right, text_col, id_col, n, num_hashes,
-                           portable, shingles=sh_r), bands, r, portable
+                           shingles=sh_r), bands, r
     ).withColumnRenamed("doc_id", "right_id")
     cand = (
         bl.join(br, ["band", "bucket"])
@@ -442,18 +446,13 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n: int = 3,
                       num_hashes: int = 32, bands: int = 8,
                       threshold: float = 0.5,
-                      portable: bool = False,
                       bucket_cap: int | None = None) -> DataFrame:
     """LSH candidate pairs (banding) verified by exact shingle Jaccard.
 
     bands of r = num_hashes/bands rows; a pair colliding in ANY band is
-    a candidate (s-curve threshold ~ (1/bands)^(1/r)).
-
-    ``portable=True`` switches to the md5 hash family and joins on the
-    raw comma-joined band key instead of hashing it — the whole
-    candidate set is then reproducible in the DuckDB oracle. The
-    default keeps xxhash64 longs end to end (fixed-width shuffle
-    keys, the 100 TB path).
+    a candidate (s-curve threshold ~ (1/bands)^(1/r)). Signatures and
+    band keys are the one family the DuckDB oracle re-derives, so the
+    whole candidate set is reproducible there.
 
     ``bucket_cap`` is the SATURATED-BUCKET dial for the crawl-mirror
     failure mode: a near-identical cluster holding x% of the corpus
@@ -473,19 +472,20 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     (orientation by least/greatest id, so members below the smallest
     rep keep their edges), and reps miss entirely with probability
     ~e^-c (use c >= 8). Default None keeps the exact all-pairs
-    contract (the driver-oracle path)."""
+    contract (the driver-oracle path); the CLI's near-dup stage,
+    which has no all-pairs contract, passes 8."""
     r = num_hashes // bands
     # shingle ONCE, share between the signature aggregation and the
     # exact-Jaccard verify join (sa/sb below) — otherwise the corpus
     # re-shingles per consumer (~4x per action with the self-join)
     sh = with_shingles(df, text_col, id_col, n).localCheckpoint()
     sigs = minhash_signatures(df, text_col, id_col, n, num_hashes,
-                              portable, shingles=sh)
+                              shingles=sh)
     # the bucket rows are tiny (docs x bands fixed-width rows) but
     # their lineage is the whole num_hashes-column min aggregation;
     # both sides of the candidate self-join consume them, so cut here
     # or the signature agg runs twice
-    bucket_rows = _band_bucket_rows(sigs, bands, r, portable).localCheckpoint()
+    bucket_rows = _band_bucket_rows(sigs, bands, r).localCheckpoint()
     if bucket_cap is not None:
         sizes = bucket_rows.groupBy("band", "bucket").agg(
             F.count("*").alias("__bsz")
@@ -848,7 +848,6 @@ def incremental_update(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    portable: bool = False,
 ) -> DataFrame:
     """The crawl-increment step END TO END — the composition the
     individual operators exist for: (1) corpus_diff finds what the
@@ -889,10 +888,7 @@ def incremental_update(
                              "semi")
     retained = new_docs.join(incoming_ids.select("doc_id"), "doc_id",
                              "anti")
-    pairs = minhash_lsh_join(
-        incoming, retained, threshold=threshold, n=n,
-        portable=portable,
-    )
+    pairs = minhash_lsh_join(incoming, retained, threshold=threshold, n=n)
     w = Window.partitionBy("left_id").orderBy(
         F.desc("jaccard"), F.asc("right_id")
     )

@@ -223,7 +223,7 @@ def corpus_token_stats(
         F.split(F.col(text_col), " ").alias("toks"),
     )
     tf = (
-        base.select("doc_id", F.explode("toks").alias("tok"))
+        explode_rows(base, "toks", "tok", "doc_id")
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
     )

@@ -299,7 +299,7 @@ def _curation_funnel_sql(q_min: float = 0.5, top2_max: float = 0.12,
     quality/language fragments copied verbatim from the (oracle-green)
     token_stats SQL, md5-normalized exact-dedup canon, top-2-gram
     repetition gate, md5-32 quota rank. ``near_dup=True`` inserts the
-    v2 stage 2b — the portable minhash-LSH pair chain (shared
+    v2 stage 2b — the minhash-LSH pair chain (shared
     _minhash_pair_ctes, the exact chain the green minhash_lsh_pairs
     row checks) feeding a WITH RECURSIVE transitive closure and a
     keep-best-quality representative pick. Parameters MUST match the

@@ -1,13 +1,13 @@
 """DuckDB oracle SQL for the approximate dedup/ANN driver queries.
 
 Closes VERDICT r2 item 1: the four `no_oracle` rows. Each Spark query
-runs the md5 hash family (md5-derived sketches / deterministic
-integer hyperplanes — functions/dedup.py, functions/similarity.py;
-only minhash also has an xxhash64 variant, which no query runs),
-and the SQL here re-derives the ENTIRE pipeline — sketch, banding/
-bucketing, candidate enumeration, exact verification, ranking — from
-the raw base tables, so the driver's row/schema/value-hash compare is
-a full end-to-end check, not a soundness spot-check.
+runs the one md5 hash family (md5-derived sketches, minhash's affine
+permutations of an md5 base hash, deterministic integer hyperplanes —
+functions/dedup.py, functions/similarity.py), and the SQL here
+re-derives the ENTIRE pipeline — sketch, banding/bucketing, candidate
+enumeration, exact verification, ranking — from the raw base tables,
+so the driver's row/schema/value-hash compare is a full end-to-end
+check, not a soundness spot-check.
 
 Cross-engine equalities these rely on (probed empirically in
 tests/test_portable_oracles.py):
@@ -15,7 +15,10 @@ tests/test_portable_oracles.py):
 - md5(utf8 text) is identical everywhere; 15 hex chars -> 60-bit
   positive int64 via strpos/shift == Spark conv(substr(md5,1,15),16,10)
 - lowercase fixed-width hex strings order like the integers they
-  encode, so MIN() over md5-prefix strings is MIN() over hash values
+  encode, so MIN() over md5-prefix strings (winnowing) is MIN() over
+  hash values
+- minhash permutations (a*h + b) % (2^31 - 1) over non-negative h stay
+  below 2^63, so BIGINT arithmetic is exact in both engines
 - round(x*1000) (half away from zero on doubles) matches between
   engines, and integer-valued doubles below 2^53 make the plane dot
   products exact — bucket ids can never drift by an ulp
@@ -52,39 +55,58 @@ def _shingle_cte(table: str, n: int, prefix: str = "") -> str:
         )"""
 
 
-def _minhash_pair_ctes(table: str, n: int = 3, num_hashes: int = 32,
-                       bands: int = 8, threshold: float = 0.2,
-                       prefix: str = "") -> str:
-    """CTE chain ending in ``{prefix}pairs(id_a, id_b, jaccard)`` —
-    the portable minhash-LSH near-dup pair derivation (seeded
-    md5-prefix signatures, comma-joined band keys, band equi-join
-    candidates, exact-Jaccard verification), packaged for reuse so
-    composite oracles (the curation funnel) share the exact chain the
-    green minhash_lsh_pairs row checks.
+def _minhash_sig_cte(num_hashes: int, bands: int, prefix: str = "") -> str:
+    """``{prefix}sig(doc_id, band, key)`` over ``{prefix}sh`` — mirrors
+    dedup.minhash_signatures + _band_bucket_rows: base hash
+    h = md5_prefix60(s) % p, permutation i = min((a_i*h + b_i) % p)
+    with the coefficients imported from functions/dedup.py, and the
+    band key the comma-joined decimal values in permutation order.
 
     Only the first bands*r hashes are generated: when bands does not
     divide num_hashes the Spark side's _band_bucket_rows ignores the
     remainder hashes, and an `i // r` over the full range would
     fabricate a partial band the Spark plan never builds."""
+    from ..functions.dedup import MINHASH_COEFFS, MINHASH_PRIME
+
     r = num_hashes // bands
     p = prefix
-    return f"""{_shingle_cte(table, n, prefix=p)},
-        {p}sig AS (
+    coeffs = ", ".join(
+        f"({i}, {a}, {b})"
+        for i, (a, b) in enumerate(MINHASH_COEFFS[:bands * r])
+    )
+    h = _MD5_60.format(expr="s")
+    return f"""{p}sig AS (
           SELECT doc_id, i // {r} AS band,
-                 string_agg(mh, ',' ORDER BY i) AS key
+                 string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS key
           FROM (
-            SELECT doc_id, i,
-                   MIN(substring(md5(i || ':' || s), 1, 16)) AS mh
-            FROM {p}sh,
-              LATERAL (SELECT unnest(generate_series(0, {bands * r - 1})) AS i)
-            GROUP BY doc_id, i
+            SELECT doc_id, c.i, MIN((c.a * h + c.b) % {MINHASH_PRIME}) AS mh
+            FROM (SELECT doc_id, CAST({h} % {MINHASH_PRIME} AS BIGINT) AS h
+                  FROM {p}sh) hs,
+              (VALUES {coeffs}) c(i, a, b)
+            GROUP BY doc_id, c.i
           ) mh
           GROUP BY doc_id, band
-        ), {p}cand AS (
+        )"""
+
+
+def _minhash_pair_ctes(table: str, n: int = 3, num_hashes: int = 32,
+                       bands: int = 8, threshold: float = 0.2,
+                       prefix: str = "",
+                       pair_pred: str = "{a} < {b}") -> str:
+    """CTE chain ending in ``{prefix}pairs(id_a, id_b, jaccard)`` —
+    the minhash-LSH near-dup pair derivation (_minhash_sig_cte
+    signatures and band keys, band equi-join candidates whose doc ids
+    satisfy ``pair_pred`` ({a}/{b} substituted), exact-Jaccard
+    verification). The one home of the chain: minhash_lsh_pairs_sql,
+    the curation funnel, and — with a cross-side ``pair_pred`` — the
+    asymmetric join and the incremental_update composite all use it."""
+    p = prefix
+    pred = pair_pred.format(a="a.doc_id", b="b.doc_id")
+    return f"""{_shingle_cte(table, n, prefix=p)},
+        {_minhash_sig_cte(num_hashes, bands, prefix=p)}, {p}cand AS (
           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
           FROM {p}sig a
-          JOIN {p}sig b ON a.band = b.band AND a.key = b.key
-                    AND a.doc_id < b.doc_id
+          JOIN {p}sig b ON a.band = b.band AND a.key = b.key AND ({pred})
         ), {p}sizes AS (
           SELECT doc_id, COUNT(*) AS n_sh FROM {p}sh GROUP BY doc_id
         ), {p}inter AS (
@@ -108,8 +130,8 @@ def _minhash_pair_ctes(table: str, n: int = 3, num_hashes: int = 32,
 def minhash_lsh_pairs_sql(table: str = "documents", n: int = 3,
                           num_hashes: int = 32, bands: int = 8,
                           threshold: float = 0.2) -> str:
-    """Mirror of minhash_lsh_pairs(portable=True) — see
-    _minhash_pair_ctes for the chain."""
+    """Mirror of minhash_lsh_pairs — see _minhash_pair_ctes for the
+    chain."""
     return f"""
         WITH {_minhash_pair_ctes(table, n, num_hashes, bands, threshold)}
         SELECT id_a, id_b, jaccard FROM pairs
@@ -752,70 +774,19 @@ def ngram_jaccard_join_sql(left_mod: int = 7, n: int = 3,
     """
 
 
-def _minhash_join_ctes(table: str, n: int, num_hashes: int,
-                       bands: int, threshold: float,
-                       left_pred: str, right_pred: str) -> str:
-    """CTE chain ending in ``verified(left_id, right_id, jaccard)`` —
-    the CROSS-SIDE (asymmetric) variant of _minhash_pair_ctes: one
-    signature derivation over ``table``, band-bucket candidates where
-    the a-side satisfies ``left_pred`` and the b-side ``right_pred``
-    ({id} is substituted), exact cross-side Jaccard verification.
-    Single home so minhash_lsh_join_sql and the incremental_update
-    composite can never desynchronize on the signature convention."""
-    r = num_hashes // bands
-    return f"""{_shingle_cte(table, n)},
-        sig AS (
-          SELECT doc_id, i // {r} AS band,
-                 string_agg(mh, ',' ORDER BY i) AS key
-          FROM (
-            SELECT doc_id, i,
-                   MIN(substring(md5(i || ':' || s), 1, 16)) AS mh
-            FROM sh,
-              LATERAL (SELECT unnest(generate_series(0, {bands * r - 1})) AS i)
-            GROUP BY doc_id, i
-          ) mh
-          GROUP BY doc_id, band
-        ), cand AS (
-          SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id
-          FROM sig a
-          JOIN sig b ON a.band = b.band AND a.key = b.key
-          WHERE ({left_pred.format(id="a.doc_id")})
-            AND ({right_pred.format(id="b.doc_id")})
-        ), sizes AS (
-          SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
-        ), inter AS (
-          SELECT c.left_id, c.right_id, COUNT(*) AS n_inter
-          FROM cand c
-          JOIN sh a ON a.doc_id = c.left_id
-          JOIN sh b ON b.doc_id = c.right_id AND b.s = a.s
-          GROUP BY c.left_id, c.right_id
-        ), verified AS (
-          SELECT i.left_id, i.right_id,
-                 round(i.n_inter * 1.0
-                       / (sa.n_sh + sb.n_sh - i.n_inter), 6) AS jaccard
-          FROM inter i
-          JOIN sizes sa ON sa.doc_id = i.left_id
-          JOIN sizes sb ON sb.doc_id = i.right_id
-          WHERE round(i.n_inter * 1.0
-                      / (sa.n_sh + sb.n_sh - i.n_inter), 6)
-                  >= {threshold}
-        )"""
-
-
 def minhash_lsh_join_sql(left_mod: int = 7, table: str = "documents",
                          n: int = 3, num_hashes: int = 32,
                          bands: int = 8,
                          threshold: float = 0.2) -> str:
-    """Mirror of minhash_lsh_join(portable=True) with the driver's
-    split (left = doc_id % left_mod == 0): md5-prefix signatures over
-    ALL docs, cross-side band-bucket candidates, exact cross-side
-    Jaccard verification (shared chain: _minhash_join_ctes)."""
+    """Mirror of minhash_lsh_join with the driver's split (left =
+    doc_id % left_mod == 0): minhash signatures over ALL docs,
+    cross-side band-bucket candidates, exact cross-side Jaccard
+    verification (shared chain: _minhash_pair_ctes)."""
+    cross = f"{{a}} % {left_mod} = 0 AND {{b}} % {left_mod} <> 0"
     return f"""
-        WITH {_minhash_join_ctes(
-            table, n, num_hashes, bands, threshold,
-            left_pred=f"{{id}} % {left_mod} = 0",
-            right_pred=f"{{id}} % {left_mod} <> 0")}
-        SELECT left_id, right_id, jaccard FROM verified
+        WITH {_minhash_pair_ctes(table, n, num_hashes, bands, threshold,
+                                 pair_pred=cross)}
+        SELECT id_a AS left_id, id_b AS right_id, jaccard FROM pairs
     """
 
 
@@ -1325,10 +1296,9 @@ def incremental_update_sql(table: str = "documents", n: int = 3,
     """Mirror of q_incremental_update: the corpus_diff derivation
     (old = minus id%11==5, new = minus id%7==3 with id%5==0 texts
     amended ' v2'), added/changed docs minhash-LSH joined against the
-    retained docs via the SHARED cross-side chain
-    (_minhash_join_ctes over the NEW snapshot with membership
-    predicates), best match per incoming doc (jaccard desc, id asc),
-    null-free verdict row."""
+    retained docs via the SHARED chain (_minhash_pair_ctes over the
+    NEW snapshot with a cross-side membership predicate), best match
+    per incoming doc (jaccard desc, id asc), null-free verdict row."""
     norm = "md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))"
     return f"""
         WITH nsnap AS (
@@ -1347,17 +1317,17 @@ def incremental_update_sql(table: str = "documents", n: int = 3,
                       ELSE 'changed' END AS status
           FROM nfp n LEFT JOIN ofp o ON o.doc_id = n.doc_id
           WHERE o.doc_id IS NULL OR o.fp <> n.fp
-        ), {_minhash_join_ctes(
+        ), {_minhash_pair_ctes(
             "nsnap", n, num_hashes, bands, threshold,
-            left_pred="{id} IN (SELECT doc_id FROM incoming)",
-            right_pred="{id} NOT IN (SELECT doc_id FROM incoming)")},
+            pair_pred="{a} IN (SELECT doc_id FROM incoming) "
+                      "AND {b} NOT IN (SELECT doc_id FROM incoming)")},
         best AS (
-          SELECT left_id AS doc_id, right_id AS dup_of, jaccard FROM (
-            SELECT left_id, right_id, jaccard,
-                   row_number() OVER (PARTITION BY left_id
+          SELECT id_a AS doc_id, id_b AS dup_of, jaccard FROM (
+            SELECT id_a, id_b, jaccard,
+                   row_number() OVER (PARTITION BY id_a
                                       ORDER BY jaccard DESC,
-                                               right_id ASC) AS rn
-            FROM verified
+                                               id_b ASC) AS rn
+            FROM pairs
           ) WHERE rn = 1
         )
         SELECT i.doc_id, i.status,

@@ -149,10 +149,10 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_curation_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The funnel with the NEAR-dup canonicalization stage real
     pipelines run between exact dedup and the repetition gate:
-    minhash-LSH pairs over the survivors (portable md5 family — the
-    exact chain the green minhash_lsh_pairs row checks), connected
-    components, keep the highest-quality copy per cluster (ties ->
-    smallest id). The oracle re-derives the whole chain including a
+    minhash-LSH pairs over the survivors (the chain the green
+    minhash_lsh_pairs row checks and the CLI near-dup stage runs),
+    connected components, keep the highest-quality copy per cluster
+    (ties -> smallest id). The oracle re-derives the whole chain including a
     WITH RECURSIVE transitive closure; the fixture's planted near-dup
     documents are demonstrably removed (pinned in pytest)."""
     from pdfextraction_spark.functions.curation import curation_funnel

@@ -62,15 +62,13 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, portable hash family: the DuckDB
-    oracle re-derives signatures, band keys, candidates, and the exact
-    Jaccard verification from the raw documents table (was a rows-only
-    check in r2). Production runs portable=False (xxhash64 longs)."""
+    """MinHash+LSH near-dup pairs: the DuckDB oracle re-derives
+    signatures, band keys, candidates, and the exact Jaccard
+    verification from the raw documents table (was a rows-only check
+    in r2). The CLI's near-dup stage runs the same hash family."""
     from pdfextraction_spark.functions.dedup import minhash_lsh_pairs
 
-    return minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.2, portable=True
-    )
+    return minhash_lsh_pairs(_t(spark, sf_dir, "documents"), threshold=0.2)
 
 
 def q_simhash_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -163,15 +161,14 @@ def q_ngram_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_lsh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup SCALE path: same new-batch-vs-corpus split as
     ngram_jaccard_join but candidates come from cross-side minhash
-    band collisions (portable md5 family) — both sides can be
+    band collisions (the one minhash family) — both sides can be
     arbitrarily large; exact Jaccard verifies before emit."""
     from pdfextraction_spark.functions.dedup import minhash_lsh_join
 
     docs = _t(spark, sf_dir, "documents")
     new_batch = docs.filter(F.col("doc_id") % 7 == 0)
     corpus = docs.filter(F.col("doc_id") % 7 != 0)
-    return minhash_lsh_join(new_batch, corpus, threshold=0.2,
-                            portable=True)
+    return minhash_lsh_join(new_batch, corpus, threshold=0.2)
 
 
 def q_cosine_near_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,7 +290,7 @@ def q_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The crawl-increment composite end to end: snapshot diff (same
     derived old/new split as corpus_diff) -> only the added/changed
-    docs near-dup join (portable minhash-LSH, verify-before-emit)
+    docs near-dup join (minhash-LSH, verify-before-emit)
     against the retained corpus -> per-incoming-doc verdict
     (dup_of best match / unique). The composition the incremental
     operators exist for, oracle-checked as one chain."""
@@ -307,4 +304,4 @@ def q_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.concat(F.col("text"), F.lit(" v2")))
         .otherwise(F.col("text")),
     )
-    return incremental_update(old, new, threshold=0.2, portable=True)
+    return incremental_update(old, new, threshold=0.2)

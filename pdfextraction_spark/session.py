@@ -40,13 +40,12 @@ def build_session(
         # see a whole partition at once — 8192 split every ~9k-row
         # partition into a full batch plus a rump batch that paid the
         # fixed per-batch cost twice (measured 2.04 s -> 1.65 s on the
-        # 600k-turn extract). 64k rows x ~200 B text ~ 13 MB/batch;
-        # for corpora with multi-KB documents set PDFX_ARROW_BATCH
-        # lower (the dial stays an env knob, not a code edit).
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("PDFX_ARROW_BATCH", "65536"),
-        )
+        # 600k-turn extract). 64k rows x ~200 B text ~ 13 MB/batch.
+        # Multi-KB documents need no lower row count: Spark's default
+        # arrow.maxBytesPerBatch (64 MB) also cuts mapInArrow input by
+        # bytes (20k rows of 1 KB at a 1 MB cap arrive as 20 batches
+        # of 1,036 rows).
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # AQE coalescing floor (guide §2.2 note): Spark's coalescing

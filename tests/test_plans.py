@@ -34,9 +34,10 @@ def _nodes(tree):
 
 def _inlined_emptiness_tests(plan) -> list:
     """``size(e) > 0`` terms of Filter conditions in ``plan`` whose
-    ``e`` holds a lambda: the emptiness test that F.explode infers (or
-    an explicit size filter states) for a staged higher-order-function
-    array, pushed below the staging with the chain inlined into it."""
+    ``e`` is not an attribute: the emptiness test that F.explode infers
+    (or an explicit size filter states) for a staged array, pushed
+    below the staging with the staged expression (a higher-order-
+    function chain, or a plain split()) inlined into it."""
     return [
         e.toString()
         for node in _nodes(plan) if node.nodeName() == "Filter"
@@ -44,7 +45,7 @@ def _inlined_emptiness_tests(plan) -> list:
         if e.nodeName() == "GreaterThan"
         and e.left().nodeName() == "Size"
         and e.right().toString() == "0"
-        and any(n.nodeName() == "LambdaFunction" for n in _nodes(e.left()))
+        and e.left().child().nodeName() != "AttributeReference"
     ]
 
 
@@ -449,17 +450,18 @@ def test_extraction_keeps_exchange_when_tiny_files_pack(
     "hot_shingles", "simhash_sketch", "simhash_pairs", "repetition_stats",
     "contamination_hits", "chunk_documents", "pack_chunks",
     "curation_funnel", "curation_funnel_v2", "lm_perplexity",
-    "winnow_containment",
+    "winnow_containment", "corpus_token_stats",
 ])
 def test_staged_arrays_explode_without_reinlined_filter(
         spark, monkeypatch, name):
-    """No emptiness filter re-inlines a staged HOF chain: neither the
+    """No emptiness filter re-inlines a staged array: neither the
     final plan nor any plan a query checkpoints while it is built (the
     winnow_containment fingerprint table is cut by a localCheckpoint,
     so its final plan alone would hide the filter) may test ``size(e)
-    > 0`` on a lambda-bearing ``e``. That filter re-runs the chain
-    per row un-staged: O(words^2) per doc for shingles, O(len^2 *
-    window) md5 calls for winnowing."""
+    > 0`` on an ``e`` that is not an attribute. That filter re-runs
+    the staged expression per row: O(words^2) per doc for shingles,
+    O(len^2 * window) md5 calls for winnowing, one more split() per
+    text for corpus_token_stats."""
     import __spark_entry__ as em
 
     frame_cls = type(spark.range(1))

@@ -6,16 +6,19 @@ correctness gate (tools/check_correctness.py) for the approximate
 dedup/ANN queries (VERDICT r2 item 1), independent of the generated
 test data.
 
-Also pins that portable minhash, the one operator with a second
-(xxhash64) family, keeps that family's contract: verified-exact
-outputs with high recall; and pins SimHash banding's pigeonhole recall
-and blocked cosine's recall at the registry queries' settings.
+Also pins the minhash hash itself (md5 base hash and every affine
+permutation, Spark vs DuckDB vs hashlib) and its LSH contract:
+verified-exact outputs with high recall against exact n-gram Jaccard;
+and pins SimHash banding's pigeonhole recall and blocked cosine's
+recall at the registry queries' settings.
 """
 
+import hashlib
 import itertools
 
 import duckdb
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -73,6 +76,60 @@ def _pairs_set(pdf, cols=("id_a", "id_b")):
     return set(map(tuple, pdf[list(cols)].itertuples(index=False)))
 
 
+def test_minhash_coefficients_cannot_overflow():
+    """a_i*h + b_i with h < p stays below 2^63 for every permutation,
+    so neither engine's int64 arithmetic can wrap."""
+    p = D.MINHASH_PRIME
+    assert p == 2**31 - 1 and len(D.MINHASH_COEFFS) == 32
+    assert all(1 <= a <= p - 1 and 0 <= b <= p - 1
+               for a, b in D.MINHASH_COEFFS)
+    a_max = max(a for a, _ in D.MINHASH_COEFFS)
+    b_max = max(b for _, b in D.MINHASH_COEFFS)
+    assert a_max * (p - 1) + b_max < 2**63
+
+
+@pytest.mark.slow
+def test_minhash_hash_matches_duckdb_and_hashlib(spark):
+    """The base hash md5_prefix60(s) mod p and all 32 permutation
+    minima agree between Spark (minhash_signatures), DuckDB
+    (_minhash_sig_cte with one permutation per band) and hashlib, on
+    ASCII and non-ASCII shingles."""
+    p = D.MINHASH_PRIME
+    docs = [
+        (0, ["the quick brown", "fox"]),
+        (1, ["naïve café résumé"]),
+        (2, ["日本語 の テキスト", "ünïcödé ßtraße", "🙂 ok"]),
+        (3, [""]),
+        (4, ["a b c", "a b", "a"]),
+    ]
+
+    def base(s):
+        return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % p
+
+    want = {d: [min((a * base(s) + b) % p for s in sh)
+                for a, b in D.MINHASH_COEFFS] for d, sh in docs}
+    flat = [(d, s) for d, sh in docs for s in sh]
+    sh_df = spark.createDataFrame(docs, "doc_id long, shingles array<string>")
+    spark_base = {
+        r.s: r.h for r in spark.createDataFrame(flat, "doc_id long, s string")
+        .select("s", F.pmod(D.md5_prefix60(F.col("s")), F.lit(p)).alias("h"))
+        .collect()}
+    assert spark_base == {s: base(s) for _, s in flat}
+    got = {r.doc_id: list(r.signature)
+           for r in D.minhash_signatures(None, shingles=sh_df).collect()}
+    assert got == want
+    con = _duck({"sh": pd.DataFrame(flat, columns=["doc_id", "s"])})
+    duck_base = dict(con.execute(
+        "SELECT s, " + P._MD5_60.format(expr="s") + f" % {p} FROM sh"
+    ).fetchall())
+    assert duck_base == spark_base
+    duck = {}
+    for d, band, key in con.execute(
+            f"WITH {P._minhash_sig_cte(32, 32)} SELECT * FROM sig").fetchall():
+        duck.setdefault(d, [None] * 32)[band] = int(key)
+    assert duck == want
+
+
 @pytest.mark.slow
 class TestPortableDedupParity:
     def test_simhash_sketch_matches_duckdb(self, docs):
@@ -108,7 +165,7 @@ class TestPortableDedupParity:
         assert _pairs_set(got) == truth
 
     def test_minhash_pairs_match_duckdb(self, docs):
-        got = D.minhash_lsh_pairs(docs, threshold=0.2, portable=True).toPandas()
+        got = D.minhash_lsh_pairs(docs, threshold=0.2).toPandas()
         con = _duck({"documents": docs.toPandas()})
         exp = con.execute(P.minhash_lsh_pairs_sql(threshold=0.2)).fetchdf()
         assert _pairs_set(got) == _pairs_set(exp)
@@ -118,19 +175,22 @@ class TestPortableDedupParity:
         assert len(got) >= 5
 
     def test_minhash_portable_keeps_contract(self, docs):
-        """Portable and production hash families are different LSH
-        draws but the same algorithm: both emit only verified-exact
-        Jaccard pairs, so portable ⊆ exact truth with high recall."""
-        truth = _pairs_set(
-            D.ngram_jaccard_pairs(docs, threshold=0.5).toPandas()
-        )
-        got = _pairs_set(
-            D.minhash_lsh_pairs(docs, threshold=0.5, num_hashes=32,
-                                bands=16, portable=True).toPandas()
-        )
-        assert truth
-        assert got <= truth
-        assert len(got) / len(truth) >= 0.9
+        """The DuckDB oracle's minhash chain keeps the LSH contract on
+        its own, not only parity with Spark at threshold 0.2: against
+        exact n-gram Jaccard it emits only verified pairs (the same
+        jaccard value) and r=2, b=16 finds >= 90% of the truth (catch
+        probability 1-(1-s^2)^16 = 0.99 at s=0.5). The Spark operator's
+        side is test_dedup_similarity's test_minhash_lsh_finds_near_dups."""
+        truth = D.ngram_jaccard_pairs(docs, threshold=0.5).toPandas()
+        con = _duck({"documents": docs.toPandas()})
+        got = con.execute(P.minhash_lsh_pairs_sql(
+            threshold=0.5, num_hashes=32, bands=16)).fetchdf()
+        t, g = _pairs_set(truth), _pairs_set(got)
+        assert t, "fixture must contain near-dup pairs"
+        assert g <= t
+        assert len(g) / len(t) >= 0.9
+        merged = truth.merge(got, on=["id_a", "id_b"], suffixes=("_t", "_g"))
+        assert np.allclose(merged["jaccard_t"], merged["jaccard_g"])
 
 
 @pytest.mark.slow
@@ -225,7 +285,7 @@ class TestRound4Parity:
             .otherwise(SF.col("text")),
         )
         got = (
-            D.incremental_update(old, new, threshold=0.2, portable=True)
+            D.incremental_update(old, new, threshold=0.2)
             .toPandas().sort_values("doc_id").reset_index(drop=True)
         )
         con = _duck({"documents": docs.toPandas()})
