@@ -208,9 +208,9 @@ def cmd_extract_profile(runs=3):
     timed("scan_count", lambda: turns)
     timed("scan_full", lambda: turns.select(
         F.bit_xor(F.xxhash64("conv_id", "turn_idx", "role", "text"))))
-    timed("prepare_only", lambda: prepare_for_extraction(turns))
+    timed("prepare_only", lambda: prepare_for_extraction(turns)[0])
     timed("full_extract", lambda: extract_turns(
-        prepare_for_extraction(turns)))
+        prepare_for_extraction(turns)[0]))
     spark.stop()
 
 

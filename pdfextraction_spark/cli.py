@@ -236,7 +236,9 @@ def main(argv=None) -> int:
     e.add_argument("--master", default=None)
     e.add_argument("--run-id", default=None)
     e.add_argument("--num-partitions", type=int, default=32)
-    e.add_argument("--chunks", type=int, default=4)
+    e.add_argument("--chunks", type=int, default=None,
+                   help="commits per run (default: one per wave of "
+                        "scan tasks, at most 4)")
     e.add_argument("--debug-dir", default=None,
                    help="S9 debug sink: dump parse-failed turns here")
     e.set_defaults(fn=_cmd_extract)

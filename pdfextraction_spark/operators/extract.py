@@ -10,6 +10,7 @@ boundary."""
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import numpy as np
@@ -40,31 +41,36 @@ def _spans_list_array(res) -> pa.ListArray:
     return pa.ListArray.from_arrays(offsets, struct)
 
 
+def _extract_batch(batch: pa.RecordBatch, has_ts: bool) -> pa.RecordBatch:
+    res = extract_batch_flat(batch.column("text").to_pandas())
+    arrays = [
+        batch.column("conv_id"),
+        batch.column("turn_idx").cast(pa.int32()),
+        batch.column("role"),
+    ]
+    names = ["conv_id", "turn_idx", "role"]
+    if has_ts:
+        arrays.append(batch.column("ts"))
+        names.append("ts")
+    arrays += [
+        pa.array(res.kinds, type=pa.string()),
+        pa.array(res.text, type=pa.string()),
+        _spans_list_array(res),
+        pa.array(res.kept, type=pa.int32()),
+        pa.array(res.dropped, type=pa.int32()),
+        pa.array(res.failed, type=pa.bool_()),
+    ]
+    names += ["payload_kind", "extracted_text", "spans",
+              "blocks_kept", "blocks_dropped", "parse_failed"]
+    return pa.RecordBatch.from_arrays(arrays, names=names)
+
+
 def _make_extract_fn(has_ts: bool):
     def _extract_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            texts = batch.column("text").to_pandas()
-            res = extract_batch_flat(texts)
-            arrays = [
-                batch.column("conv_id"),
-                batch.column("turn_idx").cast(pa.int32()),
-                batch.column("role"),
-            ]
-            names = ["conv_id", "turn_idx", "role"]
-            if has_ts:
-                arrays.append(batch.column("ts"))
-                names.append("ts")
-            arrays += [
-                pa.array(res.kinds, type=pa.string()),
-                pa.array(res.text, type=pa.string()),
-                _spans_list_array(res),
-                pa.array(res.kept, type=pa.int32()),
-                pa.array(res.dropped, type=pa.int32()),
-                pa.array(res.failed, type=pa.bool_()),
-            ]
-            names += ["payload_kind", "extracted_text", "spans",
-                      "blocks_kept", "blocks_dropped", "parse_failed"]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+        # map holds no reference to batch k, its input or its result,
+        # while batch k+1 is read and extracted, so a task receiving
+        # several byte-capped batches keeps one batch's working set
+        return map(partial(_extract_batch, has_ts=has_ts), it)
 
     return _extract_batches
 

@@ -10,7 +10,12 @@
 
 Chunked commits: logical partitions are processed in ``n_chunks``
 groups. The job prepares the input once (``prepare_for_extraction``:
-one planning pass for its split count). A group is a filter on
+one planning pass for its split count). That pass also sizes the
+default chunk plan: one chunk per wave of scan tasks, at most 4
+(``min(4, waves)``). Every chunk rescans the whole input, because its
+filter prunes rows, not splits, so an input that runs in one wave is
+scanned once; an input of 4 or more waves keeps 4 chunks, and an
+explicit ``n_chunks`` is honored exactly. A group is a filter on
 ``partition_id`` (a pure function of conv_id, so no exchange is needed
 to find its rows; Spark pushes it below the exchange into the scan),
 extracted by ``extract_turns``, and runs ONE Spark job, the output
@@ -71,7 +76,7 @@ def extract_dataframe(turns: DataFrame) -> DataFrame:
     identical on both paths (pinned by test); output ROW ORDER is not
     part of the contract either way.
     """
-    return extract_turns(prepare_for_extraction(turns))
+    return extract_turns(prepare_for_extraction(turns)[0])
 
 
 def run_extraction_job(
@@ -81,12 +86,16 @@ def run_extraction_job(
     manifest_path: str,
     run_id: Optional[str] = None,
     num_partitions: int = DEFAULT_NUM_PARTITIONS,
-    n_chunks: int = 4,
+    n_chunks: Optional[int] = None,
     fail_after_chunks: Optional[int] = None,
     fail_before_manifest_chunk: Optional[int] = None,
     debug_dir: Optional[str] = None,
 ) -> dict:
-    """Resumable extraction job. Returns a summary dict.
+    """Resumable extraction job. Returns a summary dict; its ``chunks``
+    key is the number of chunks this run committed.
+
+    ``n_chunks=None`` commits one chunk per wave of scan tasks,
+    at most 4 (module docstring); an explicit value is honored exactly.
 
     ``debug_dir`` is the S9 debug-response sink (reference
     openai_service.py:47-69 dumps every prompt/response to
@@ -118,7 +127,7 @@ def run_extraction_job(
     append (resume tests only).
     """
     # zero chunks would run nothing yet report every partition processed
-    if n_chunks < 1 or num_partitions < 1:
+    if (n_chunks is not None and n_chunks < 1) or num_partitions < 1:
         raise ValueError(f"need n_chunks >= 1 and num_partitions >= 1, "
                          f"got {n_chunks} and {num_partitions}")
     with writer_lock(output_path):
@@ -248,7 +257,7 @@ def _run_locked(
     manifest_path: str,
     run_id: Optional[str],
     num_partitions: int,
-    n_chunks: int,
+    n_chunks: Optional[int],
     fail_after_chunks: Optional[int],
     fail_before_manifest_chunk: Optional[int],
     debug_dir: Optional[str] = None,
@@ -273,13 +282,13 @@ def _run_locked(
     done = committed_partitions(spark, manifest_path, snapshot)
     all_parts = list(range(num_partitions))
     todo = [p for p in all_parts if p not in done]
-    chunks: List[List[int]] = [
-        todo[i::n_chunks] for i in range(n_chunks) if todo[i::n_chunks]
-    ]
-
-    # the exchange gate plans the input scan, so it runs once per job
-    # with work, never per chunk and never on a no-op resume
-    prepared = prepare_for_extraction(turns) if chunks else turns
+    chunks: List[List[int]] = []
+    if todo:
+        # the exchange gate plans the input scan, so it runs once per
+        # job with work, never per chunk and never on a no-op resume
+        prepared, waves = prepare_for_extraction(turns)
+        n = n_chunks or min(4, waves)
+        chunks = [todo[i::n] for i in range(n) if todo[i::n]]
     total_rows = 0
     observed = {"turns": 0, "parse_failures": 0, "blocks_dropped": 0}
     for ci, part_group in enumerate(chunks):
@@ -337,6 +346,7 @@ def _run_locked(
         "debug_commits_backfilled": debug_backfilled,
         "partitions_done_before": len(done),
         "partitions_processed": len(todo),
+        "chunks": len(chunks),
         "rows_written": total_rows,
         "observed_metrics": observed,
     }

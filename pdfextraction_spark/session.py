@@ -1,8 +1,8 @@
 """SparkSession builder helpers.
 
 Local defaults mirror the cluster posture we design for: AQE on,
-Arrow batches sized for the extraction kernels, shuffle partitions
-matched to parallelism.
+Arrow batches capped by rows and bytes for the extraction kernels,
+shuffle partitions matched to parallelism.
 """
 
 from __future__ import annotations
@@ -34,18 +34,24 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Arrow batch sizing (optimization guide §4.2): extraction rows
-        # are short chat turns, so large batches amortize the
-        # JVM<->Python round trip and let the content-dedup factorize
-        # see a whole partition at once — 8192 split every ~9k-row
-        # partition into a full batch plus a rump batch that paid the
-        # fixed per-batch cost twice (measured 2.04 s -> 1.65 s on the
-        # 600k-turn extract). 64k rows x ~200 B text ~ 13 MB/batch.
-        # Multi-KB documents need no lower row count: Spark's default
-        # arrow.maxBytesPerBatch (64 MB) also cuts mapInArrow input by
-        # bytes (20k rows of 1 KB at a 1 MB cap arrive as 20 batches
-        # of 1,036 rows).
+        # Arrow batch sizing (optimization guide §4.2): a batch is
+        # capped at 65536 rows and at 2 MB, whichever comes first.
+        # The row cap amortizes the JVM<->Python round trip for short
+        # chat turns (8192 split every ~9k-row partition into a full
+        # batch plus a rump batch that paid the fixed per-batch cost
+        # twice: 2.04 s -> 1.65 s on the 600k-turn extract). The byte
+        # cap bounds a Python worker's memory: the extraction job
+        # hands a task its whole scan split when the input runs in
+        # one wave, and Spark's default 64 MB cap then sends that
+        # split as one batch. On a 50k-turn input of ~560 B rows at
+        # local[4], peak worker RSS against the 4-chunk job rose 9-11%
+        # at 64 MB and 4-7% at 4 MB (one-chunk prototype), and 4% at
+        # 2 MB (137.0 -> 142.6 MB, medians of 10 runs; ~3.8k rows a
+        # batch). The cap cuts mapInArrow input by bytes (20k rows of
+        # 1 KB at a 1 MB cap arrive as 20 batches of 1,036 rows), so
+        # multi-KB documents need no lower row count.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", "2m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # AQE coalescing floor (guide §2.2 note): Spark's coalescing

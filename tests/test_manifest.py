@@ -294,3 +294,48 @@ def test_job_plans_split_count_once(spark, tmp_path, xs_parquet,
                                         num_partitions=8, n_chunks=4)
     assert again["partitions_processed"] == 0
     assert (len(gates), len(counts)) == (0, 0)
+
+
+@pytest.mark.slow
+def test_job_chunk_plan(spark, tmp_path, xs_parquet):
+    """By default the job commits one chunk per wave of scan
+    tasks, at most 4, and its summary counts the commits. The
+    single-file fixture is exchanged into one wave: one chunk, one
+    commit_id in the manifest. The same rows as one file per split,
+    at least four waves of splits that own rows, keep 4 chunks. An
+    explicit ``n_chunks`` is honored."""
+    import pdfextraction_spark.pipeline as pipeline
+
+    def run(src, name, **kw):
+        out, mf = str(tmp_path / f"{name}_out"), str(tmp_path / f"{name}_mf")
+        summary = pipeline.run_extraction_job(spark, src, out, mf,
+                                              num_partitions=8, **kw)
+        ids = set(pq.read_table(mf, columns=["commit_id"])
+                  .column("commit_id").to_pylist())
+        again = pipeline.run_extraction_job(spark, src, out, mf,
+                                            num_partitions=8, **kw)
+        assert again["chunks"] == 0
+        return summary, ids
+
+    one, ids = run(xs_parquet, "one")
+    assert one["chunks"] == 1 and len(ids) == 1
+    assert one["partitions_processed"] == 8
+
+    explicit, ids = run(xs_parquet, "explicit", n_chunks=4)
+    assert explicit["chunks"] == 4 and len(ids) == 4
+    assert explicit["rows_written"] == one["rows_written"]
+
+    n_cores = spark.sparkContext.defaultParallelism
+    many = str(tmp_path / "many_files")
+    spark.read.parquet(xs_parquet).repartition(4 * n_cores).write.parquet(many)
+    # a 1 KB split size: each file's one row group lands in a split
+    # of its own, so the splits that own rows number the files
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    spark.conf.set("spark.sql.files.openCostInBytes", "1k")
+    try:
+        wide, ids = run(many, "wide")
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert wide["chunks"] == 4 and len(ids) == 4
+    assert wide["rows_written"] == one["rows_written"]

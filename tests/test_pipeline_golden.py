@@ -37,6 +37,42 @@ def test_spark_pipeline_matches_golden(spark, xs_parquet):
 
 
 @pytest.mark.slow
+def test_byte_capped_batches_match_default(spark, xs_parquet):
+    """Under a tiny Arrow byte cap every extraction task receives many
+    batches, each extracted and released on its own; the output equals
+    the default run's, value for value."""
+    import pyarrow as pa
+
+    from pdfextraction_spark.operators.partitioning import (
+        prepare_for_extraction,
+    )
+
+    def rows(df):
+        pdf = df.orderBy("conv_id", "turn_idx").toPandas()
+        return pdf.astype(str)
+
+    turns = spark.read.parquet(xs_parquet)
+    want = rows(extract_dataframe(turns))
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    default_cap = spark.conf.get(key)
+    spark.conf.set(key, "4k")
+    try:
+        prepared = prepare_for_extraction(turns)[0]
+        batches = prepared.select("conv_id", "turn_idx", "role", "text").mapInArrow(
+            lambda it: (pa.RecordBatch.from_pydict({"n": [b.num_rows]})
+                        for b in it),
+            "n long",
+        ).collect()
+        assert len(batches) >= 4 * prepared.rdd.getNumPartitions()
+        got = rows(extract_dataframe(turns))
+    finally:
+        spark.conf.set(key, default_cap)
+    assert len(got) == len(want) == turns.count()
+    pd.testing.assert_frame_equal(got, want)
+
+
+@pytest.mark.slow
 def test_pathological_inputs_survive(spark, tmp_path):
     """Adversarial payloads must not kill the Arrow batch: multi-MB
     single turn, deeply nested HTML, 20k-word envelope, NUL bytes,

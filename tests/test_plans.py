@@ -3,8 +3,8 @@
 pruning, broadcast of small dims, map-side partial aggregation, and
 at most ONE exchange in the extraction pipeline: a hash repartition
 on (conv_id, turn_idx) to ``defaultParallelism``, planned only when
-the scan is undersplit (fewer partitions than ``defaultParallelism``),
-none for a scan-parallel input."""
+the scan is undersplit (fewer splits that own rows than
+``defaultParallelism``), none for a scan-parallel input."""
 
 import re
 
@@ -443,6 +443,46 @@ def test_extraction_keeps_exchange_when_tiny_files_pack(
         pd.testing.assert_frame_equal(got, want)
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+@pytest.mark.slow
+def test_extraction_exchanges_single_row_group_file(
+        spark, tmp_path, xs_parquet):
+    """Spark plans a byte-range split per ``maxPartitionBytes`` of a
+    file, but a row group is read by the one split that holds its
+    midpoint. A single-row-group file read at a split size that plans
+    ``defaultParallelism`` splits or more still runs every row in one
+    task, so the gate, which counts the splits that own rows, keeps
+    the exchange, and the values equal the default read's."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from pdfextraction_spark.operators.partitioning import (
+        prepare_for_extraction,
+    )
+    from pdfextraction_spark.pipeline import extract_dataframe
+
+    n_cores = spark.sparkContext.defaultParallelism
+    table = pq.read_table(xs_parquet)
+    one = tmp_path / "one_row_group.parquet"
+    pq.write_table(table, one, row_group_size=table.num_rows)
+    assert pq.read_metadata(one).num_row_groups == 1
+    want = _canon(extract_dataframe(spark.read.parquet(xs_parquet)))
+
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+                   str(max(1024, one.stat().st_size // (2 * n_cores))))
+    try:
+        turns = spark.read.parquet(str(one))
+        assert turns.rdd.getNumPartitions() >= n_cores
+        rows = turns.rdd.glom().map(len).collect()
+        assert sorted(rows)[-1] == table.num_rows  # one split owns them
+        assert prepare_for_extraction(turns)[1] == 1
+        out = extract_dataframe(turns)
+        assert _extraction_exchanges(_plan(out), n_cores) == 1
+        got = _canon(out)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    pd.testing.assert_frame_equal(got, want)
 
 
 @pytest.mark.slow

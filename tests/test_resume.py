@@ -73,7 +73,7 @@ def test_skew_salting_bounds_partition_size(spark, s_parquet):
     mega, n_mega = turns.groupBy("conv_id").count().orderBy(
         F.desc("count")).first()
     parts = (
-        prepare_for_extraction(turns)
+        prepare_for_extraction(turns)[0]
         .filter(F.col("conv_id") == mega)
         .withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
