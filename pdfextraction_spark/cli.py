@@ -8,6 +8,11 @@ Cluster usage (north rule packaging)::
         cli.py extract --input <transcripts> --output <table> \\
         --manifest <manifest> --num-partitions 4096 --chunks 64
 
+``--chunks`` sets how many commits (resume points) a run makes. Left
+out, the job commits one chunk per wave of scan tasks, at most 4, so
+an input that runs in one wave is scanned once; the cluster example
+pins 64.
+
 Local smoke::
 
     python -m pdfextraction_spark.cli extract \\
