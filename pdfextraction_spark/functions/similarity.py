@@ -7,10 +7,10 @@
 - lsh_bucket_topk: sign-hyperplane LSH over md5-derived integer planes
   — queries only join candidates sharing a bucket; the scale path
   (candidates/query drops from N to N/2^bits on average)
-- IVF / PQ / IVF-PQ / SemDeDup: coarse assignment, probe selection
-  and PQ encoding run as Arrow-batch numpy UDFs (np_*_udf) with the
-  codebooks in the UDF closure; everything downstream of them is
-  JVM-side
+- IVF / PQ / IVF-PQ / SemDeDup: coarse assignment, probe selection,
+  PQ encoding and the ADC query tables run as Arrow-batch numpy UDFs
+  (np_*_udf) with the codebooks in the UDF closure; everything
+  downstream of them is JVM-side
 """
 
 from __future__ import annotations
@@ -60,14 +60,19 @@ def _as_double(col):
 # throw on the out-of-bounds index), so the functions stay correct on
 # arbitrary inputs.
 #
-# Scope discipline (measured, round 7): the unrolled chain is used
-# ONLY at the high-cardinality pair-verify sites, where one O(pairs)
-# stage carries a single dot. Unrolling every dot (norms, buckets)
-# multiplies generated-code size past the JIT sweet spot and pays a
-# Janino compile per stage per query
-# (generated sources embed fresh expression ids, so the codegen cache
-# cannot reuse them across queries) — a measured net LOSS at the
-# O(corpus-rows) sites, which stay on the compact HOF form.
+# Scope discipline (measured): the unrolled chain is used ONLY at the
+# high-cardinality pair-verify sites, where one O(pairs) stage carries
+# a single dot, and there it still wins: at sf0.1, local[4] (build +
+# toPandas, two A/Bs of 8 runs a side, every run in ROADMAP item 4)
+# cosine_near_pairs took 8.4-17.0 s unrolled vs 11.9-20.2 s HOF, and
+# cosine_near_pairs_blocked 5.9-10.8 s vs 9.0-13.3 s; cosine_near_join
+# and semantic_dedup differ by less than their run-to-run spread, so
+# the static-dim choice stays where it is. Unrolling every dot (norms,
+# buckets) multiplies generated-code size past the JIT sweet spot and
+# pays a Janino compile per stage per query (generated sources embed
+# fresh expression ids, so the codegen cache cannot reuse them across
+# queries) — a measured net LOSS at the O(corpus-rows) sites, which
+# stay on the compact HOF form.
 
 _FIXED_DIM_MAX = 256
 
@@ -363,36 +368,34 @@ def _stack_rows(v: pd.Series, width: int):
     return M, present, lens
 
 
-def _pq_nearest(codebooks: List[List[List[float]]]):
-    """Batch scorer shared by the PQ UDFs: for every row and subspace,
-    the 1-based nearest codeword by squared L2 rounded to 6dp,
-    argmin first-wins (np.argmin = first occurrence; np.round is
+def _pq_dists(codebooks: List[List[List[float]]]):
+    """Batch scorer shared by every PQ UDF, the one home of the PQ
+    distance contract (the DuckDB oracle's ``dists`` CTE): for every
+    row, subspace and codeword, the squared L2 distance rounded to 6dp,
+    as a (rows, m, k) tensor, and the (rows, m) mask of subspaces whose
+    slice held d_sub present values (a code or an ADC table row is
+    only defined where it did). Codes are the first-wins argmin over
+    the last axis (np.argmin = first occurrence; np.round is
     half-to-even vs the oracle's half-up — they differ only for a
     distance landing exactly on a 5e-7 boundary, pinned absent on the
-    fixtures by the oracle tests), its distance, and whether the
-    subspace slice held d_sub present values (a code is only defined
-    where it did)."""
+    fixtures by the oracle tests)."""
     B = np.asarray(codebooks, dtype=np.float64)  # (m, k, d_sub)
-    m, _, d_sub = B.shape
+    m, k, d_sub = B.shape
 
-    def nearest(v: pd.Series):
+    def dists(v: pd.Series):
         M, present, _ = _stack_rows(v, m * d_sub)
         n = M.shape[0]
-        codes = np.empty((n, m), dtype=np.int32)
-        best = np.empty((n, m), dtype=np.float64)
+        D = np.empty((n, m, k), dtype=np.float64)
         for j in range(m):
             sub = M[:, j * d_sub:(j + 1) * d_sub]
             # (rows, k, d_sub) diff tensor: one vectorized
             # squared-difference reduction per subspace
             diff = sub[:, None, :] - B[j][None, :, :]
-            d = np.round(np.einsum("rkd,rkd->rk", diff, diff), 6)
-            c = np.argmin(d, axis=1)
-            codes[:, j] = c + 1
-            best[:, j] = d[np.arange(n), c]
+            D[:, j, :] = np.einsum("rkd,rkd->rk", diff, diff)
         ok = present.reshape(n, m, d_sub).all(axis=2)
-        return codes, best, ok
+        return np.round(D, 6), ok
 
-    return nearest
+    return dists
 
 
 def np_pq_encode_udf(codebooks: List[List[List[float]]]):
@@ -403,11 +406,12 @@ def np_pq_encode_udf(codebooks: List[List[List[float]]]):
     values gets a null code; a null vector gets m null codes."""
     from pyspark.sql.functions import pandas_udf
 
-    nearest = _pq_nearest(codebooks)
+    dists = _pq_dists(codebooks)
 
     @pandas_udf("array<int>")
     def encode(v: pd.Series) -> pd.Series:
-        codes, _, ok = nearest(v)
+        D, ok = dists(v)
+        codes = np.argmin(D, axis=2).astype(np.int32) + 1
         rows = list(codes)
         for i in np.flatnonzero(~ok.all(axis=1)):
             rows[i] = [int(c) if o else None
@@ -429,16 +433,81 @@ def np_pq_recon_err_udf(codebooks: List[List[List[float]]]):
     Null for a vector with any null code (no reconstruction)."""
     from pyspark.sql.functions import pandas_udf
 
-    nearest = _pq_nearest(codebooks)
+    dists = _pq_dists(codebooks)
 
     @pandas_udf("double")
     def err(v: pd.Series) -> pd.Series:
-        _, best, ok = nearest(v)
+        D, ok = dists(v)
         # NaN leaves the UDF as null, which avg() skips
-        return pd.Series(np.where(ok.all(axis=1), best.sum(axis=1),
-                                  np.nan))
+        return pd.Series(np.where(ok.all(axis=1),
+                                  D.min(axis=2).sum(axis=1), np.nan))
 
     return err
+
+
+def np_adc_table_udf(codebooks: List[List[List[float]]]):
+    """Arrow-batch numpy ADC query tables (array<array<bigint>>): each
+    query's m x k table of _pq_dists distances, the ones pq_encode
+    takes its argmin over, in integer micro-units (rint(d * 1e6)). A
+    query gets a null table, and so scores nothing, when a subspace
+    is absent (null vector, short vector, null or NaN element) or an
+    entry does not fit an int64 (an inf element, or one large enough
+    to overflow)."""
+    from pyspark.sql.functions import pandas_udf
+
+    dists = _pq_dists(codebooks)
+
+    @pandas_udf("array<array<bigint>>")
+    def table(v: pd.Series) -> pd.Series:
+        D, ok = dists(v)
+        micros = np.rint(D * 1_000_000)
+        # NaN and inf fail the comparison too
+        good = ok.all(axis=1) & (np.abs(micros) < 2.0 ** 63).all(axis=(1, 2))
+        rows = np.where(good[:, None, None], micros, 0).astype(
+            np.int64).tolist()
+        for i in np.flatnonzero(~good):
+            rows[i] = None
+        return pd.Series(rows, dtype=object)
+
+    return table
+
+
+def _adc_tables(codebooks: List[List[List[float]]], vec_col: str):
+    """The ``tbl`` column of a query side: np_adc_table_udf over the
+    query vector."""
+    return np_adc_table_udf(codebooks)(
+        _as_double(F.col(vec_col))
+    ).alias("tbl")
+
+
+def _adc_search(coded: DataFrame, q: DataFrame, k: int,
+                on: Optional[str] = None,
+                exclude_self: bool = True) -> DataFrame:
+    """The ADC score/rank tail of every PQ search: the bounded query
+    side ``q`` (query_id, tbl[, on]) is broadcast and joined to the
+    coded candidates (vec_id, codes[, on]) — on ``on``, or every
+    candidate against every query when it is None — self-matches are
+    dropped, and a candidate's distance is the sum of its m table
+    lookups as BIGINT micro-units (order-free integer sums — an 8-term
+    float sum's addition order is engine-dependent and could flip a
+    6dp rounding), ranked by _topk. A null table or code gives a null
+    distance, which _topk drops."""
+    scored = coded.join(F.broadcast(q), on)
+    if exclude_self:
+        scored = scored.filter(F.col("vec_id") != F.col("query_id"))
+    dist = F.aggregate(
+        F.zip_with(
+            F.col("codes"), F.col("tbl"),
+            lambda c, row: F.element_at(row, c),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    return _topk(
+        scored.select("query_id", "vec_id",
+                      dist.alias("approx_dist_micros")),
+        k, "approx_dist_micros",
+    )
 
 
 def pq_quantization_mse(
@@ -550,11 +619,12 @@ def pq_adc_topk(
 ) -> DataFrame:
     """PQ search by asymmetric distance: corpus vectors are REDUCED TO
     CODES (pq_encode — at store scale only the codes are persisted);
-    each query's exact m x k sub-distance table rides the plan as a
-    literal, and a candidate's approximate distance is the sum of m
-    table lookups via zip_with(codes, table) — O(m) per candidate,
-    independent of dim. Queries are collected driver-side (the query
-    set is bounded, same stance as the IVF centroid collect).
+    each query's exact m x k sub-distance table is computed in the
+    engine by the same numpy scorer as the codes (np_adc_table_udf)
+    and travels as data in one broadcast query side, and a candidate's
+    approximate distance is the sum of m table lookups via
+    zip_with(codes, table) — O(m) per candidate, independent of dim
+    (_adc_search). Building the search starts no Spark job.
 
     Output: (query_id, vec_id, approx_dist_micros, rank) — rank 1 =
     nearest, ties by vec_id. Distances are INTEGER micro-units
@@ -565,78 +635,9 @@ def pq_adc_topk(
     Recall vs exact brute force is pinned in pytest (approximation
     error is the quantization error; raise m/k to shrink it)."""
     coded = pq_encode(embeddings, codebooks, id_col, vec_col)
-    tq = _adc_query_tables(queries, codebooks, query_id_col, vec_col)
-    scored = (
-        coded.crossJoin(F.broadcast(tq))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id",
-                _adc_score().alias("approx_dist_micros"))
-    )
-    return _topk(scored, k, "approx_dist_micros")
-
-
-def _adc_query_tables(
-    queries: DataFrame,
-    codebooks: List[List[List[float]]],
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, tbl array<array<bigint>>): each query's exact m x k
-    sub-distance table in integer micro-units. The per-query tables
-    travel as DATA in one broadcast table — one scan of the coded
-    corpus however many queries there are (a per-query union would
-    re-derive the encode lineage per query). Queries are collected
-    driver-side (the query set is bounded, same stance as the IVF
-    centroid collect). A query whose first m * d_sub values are not
-    all present (null vector, too short, null element) has no table,
-    so it joins nothing and returns no rows."""
-    d_sub = len(codebooks[0][0])
-    dim = len(codebooks) * d_sub
-    q_rows = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-    ).collect()
-    tables = []
-    for r in q_rows:
-        if r.qv is None or len(r.qv) < dim or None in r.qv[:dim]:
-            continue
-        qv = list(map(float, r.qv))
-        tables.append((
-            int(r.query_id),
-            [
-                [
-                    int(round(
-                        round(
-                            sum(
-                                (qv[j * d_sub + t] - c[t]) ** 2
-                                for t in range(d_sub)
-                            ),
-                            6,
-                        ) * 1_000_000
-                    ))
-                    for c in book
-                ]
-                for j, book in enumerate(codebooks)
-            ],
-        ))
-    return queries.sparkSession.createDataFrame(
-        tables, "query_id long, tbl array<array<bigint>>"
-    )
-
-
-def _adc_score():
-    """Approximate distance of a coded candidate against the joined
-    query table: sum of m integer table lookups (order-free BIGINT
-    sums — an 8-term float sum's addition order is engine-dependent
-    and could flip a 6dp rounding)."""
-    return F.aggregate(
-        F.zip_with(
-            F.col("codes"), F.col("tbl"),
-            lambda c, row: F.element_at(row, c),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    q = queries.select(F.col(query_id_col).alias("query_id"),
+                       _adc_tables(codebooks, vec_col))
+    return _adc_search(coded, q, k)
 
 
 def _coarse_assigned(
@@ -687,19 +688,20 @@ def _probe_rows(
     n_probe: int,
     query_id_col: str,
     vec_col: str,
-    keep_qv: bool = False,
+    *carry,
 ) -> DataFrame:
-    """(query_id[, qv], list_id) — one row per probed list: each
+    """(query_id, *carry, list_id) — one row per probed list: each
     query's n_probe nearest coarse lists (np_probe_lists_udf, ties by
     smaller list id); the single home for the probe tie/rounding
     policy both IVF and IVF-PQ search paths (and their green oracles)
-    pin. The probe array is exploded with explode_rows, so no inferred
-    emptiness filter re-runs the UDF below the explode."""
-    cols = [F.col(query_id_col).alias("query_id")]
-    if keep_qv:
-        cols.append(_as_double(F.col(vec_col)).alias("qv"))
+    pin. The ``carry`` columns are computed in the probe's own select,
+    so an ADC table UDF shares the probe's ArrowEvalPython node and
+    the query vectors cross the Python boundary once. The probe array
+    is exploded with explode_rows, so no inferred emptiness filter
+    re-runs the UDF below the explode."""
     probes = queries.select(
-        *cols,
+        F.col(query_id_col).alias("query_id"),
+        *carry,
         np_probe_lists_udf(centroids, n_probe)(F.col(vec_col))
         .alias("__probes"),
     )
@@ -729,12 +731,13 @@ def ivfpq_topk(
 
     Plan shape: corpus side is encode (codes) + coarse assignment
     (list_id) — one Arrow-batch pass over one scan (_ivfpq_coded);
-    query side is the probe-list explode joined to the broadcast ADC
-    tables (bounded query set); the only shuffle is the per-query
-    top-k window. Each vector lives in exactly one list, so a (query,
-    candidate) pair appears at most once — no dedup aggregation
-    needed. Seed codebooks and lloyd_iters=0 are the oracle-exact
-    driver config.
+    query side is the probe-list explode carrying each query's ADC
+    table, probe and table UDFs in one Arrow-batch pass (_probe_rows),
+    broadcast to the list_id join (bounded query set); the only
+    shuffle is the per-query top-k window. Each vector lives in
+    exactly one list, so a (query, candidate) pair appears at most
+    once — no dedup aggregation needed. Seed codebooks and
+    lloyd_iters=0 are the oracle-exact driver config.
 
     Output: (query_id, vec_id, approx_dist_micros, rank), rank 1 =
     nearest by ADC distance, ties by vec_id."""
@@ -745,17 +748,9 @@ def ivfpq_topk(
         )
     coded = _ivfpq_coded(embeddings, centroids, codebooks, id_col,
                          vec_col)
-    probe_rows = _probe_rows(queries, centroids, n_probe, query_id_col,
-                             vec_col)
-    tq = _adc_query_tables(queries, codebooks, query_id_col, vec_col)
-    q = probe_rows.join(tq, "query_id")
-    scored = (
-        coded.join(F.broadcast(q), "list_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id",
-                _adc_score().alias("approx_dist_micros"))
-    )
-    return _topk(scored, k, "approx_dist_micros")
+    q = _probe_rows(queries, centroids, n_probe, query_id_col, vec_col,
+                    _adc_tables(codebooks, vec_col))
+    return _adc_search(coded, q, k, "list_id")
 
 
 # quantization scale for sign-LSH bucketing: embeddings are
@@ -998,7 +993,7 @@ def ivf_topk(
         )
     e = _coarse_assigned(embeddings, centroids, id_col, vec_col)
     q = _probe_rows(queries, centroids, n_probe, query_id_col, vec_col,
-                    keep_qv=True)
+                    _as_double(F.col(vec_col)).alias("qv"))
     scored = (
         e.join(F.broadcast(q), "list_id")
         .filter(F.col("vec_id") != F.col("query_id"))

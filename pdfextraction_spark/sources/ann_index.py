@@ -21,10 +21,9 @@ never read, which is what makes serving reads O(probed fraction)
 instead of O(corpus).
 
 Build, append and search reuse the exact ivfpq_topk machinery
-(_ivfpq_coded, _probe_rows, _adc_query_tables, _adc_score,
-_topk — single homes for the tie/rounding contracts), so
-indexed results are row-identical to the
-in-memory composition; pinned in tests. Centroid/codebook collects
+(_ivfpq_coded, _probe_rows, _adc_tables, _adc_search — single homes
+for the tie/rounding contracts), so indexed results are row-identical
+to the in-memory composition; pinned in tests. Centroid/codebook collects
 are bounded metadata (n_centroids x dim + m x k x d_sub doubles) —
 the same stance as the IVF training collect.
 """
@@ -38,11 +37,10 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.similarity import (
-    _adc_query_tables,
-    _adc_score,
+    _adc_search,
+    _adc_tables,
     _ivfpq_coded,
     _probe_rows,
-    _topk,
     pq_quantization_mse,
     pq_train_codebooks,
     train_ivf_centroids,
@@ -265,33 +263,26 @@ def ivfpq_topk_indexed(
     vec_col: str = "embedding",
     exclude_self: bool = True,
 ) -> DataFrame:
-    """IVF-PQ search over a PERSISTED index: probe lists are computed
-    for the (bounded) query batch, collected, and pushed into the
-    coded-corpus scan as a ``list_id IN (...)`` partition filter —
-    only the probed inverted-list directories are read. Scoring and
-    ranking are the shared ADC contract, so output rows match the
-    in-memory ivfpq_topk bit-for-bit (pinned in tests).
+    """IVF-PQ search over a PERSISTED index: probe lists and ADC
+    tables are computed for the (bounded) query batch in one
+    Arrow-batch pass and checkpointed; the probed list ids are
+    collected and pushed into the coded-corpus scan as a
+    ``list_id IN (...)`` partition filter — only the probed
+    inverted-list directories are read. Scoring and ranking are the
+    shared ADC tail (_adc_search), so output rows match the in-memory
+    ivfpq_topk bit-for-bit (pinned in tests).
 
     ``exclude_self=True`` (the in-memory ivfpq_topk contract) drops a
     candidate whose vec_id EQUALS the query id — correct when the
     queries are corpus rows (self-search). Pass ``exclude_self=False``
     when the query ids come from a DIFFERENT keyspace: a numeric
     coincidence would otherwise silently delete a true neighbor."""
-    probe_rows = _probe_rows(
-        queries, index.centroids, n_probe, query_id_col, vec_col
+    q = _probe_rows(
+        queries, index.centroids, n_probe, query_id_col, vec_col,
+        _adc_tables(index.codebooks, vec_col),
     ).localCheckpoint()  # consumed twice: the IN-filter collect + join
     probed = sorted(
-        r.list_id
-        for r in probe_rows.select("list_id").distinct().collect()
+        r.list_id for r in q.select("list_id").distinct().collect()
     )
     coded = index.coded().filter(F.col("list_id").isin(probed))
-    tq = _adc_query_tables(queries, index.codebooks, query_id_col,
-                           vec_col)
-    q = probe_rows.join(tq, "query_id")
-    scored = coded.join(F.broadcast(q), "list_id")
-    if exclude_self:
-        scored = scored.filter(F.col("vec_id") != F.col("query_id"))
-    scored = scored.select(
-        "query_id", "vec_id", _adc_score().alias("approx_dist_micros")
-    )
-    return _topk(scored, k, "approx_dist_micros")
+    return _adc_search(coded, q, k, "list_id", exclude_self)

@@ -920,6 +920,35 @@ class TestMalformedVectors:
         assert len(want) == 50
         assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
+    @pytest.mark.parametrize("bad", [float("nan"), float("inf"), 1e30])
+    def test_adc_nonfinite_query_returns_no_rows(self, emb, bad):
+        """A query with a NaN or inf element, or one whose distances
+        overflow int64 micro-units, gets no ADC table: it returns no
+        rows, and the other queries in its batch are unchanged (the
+        search must not fail)."""
+        from pyspark.sql import functions as F
+
+        cents = S.train_ivf_centroids(emb, n_centroids=16,
+                                      lloyd_iters=0)
+        books = S.pq_train_codebooks(emb, m=8, k=16, dim=32)
+        good_q = emb.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        v7 = [float(x) for x in
+              emb.filter("vec_id = 7").collect()[0].embedding]
+        odd = emb.sparkSession.createDataFrame(
+            [(9005, [bad] + v7[1:])],
+            "query_id long, embedding array<float>")
+        mixed_q = good_q.unionByName(odd)
+
+        for search in (
+            lambda qs: S.pq_adc_topk(emb, qs, books, k=10),
+            lambda qs: S.ivfpq_topk(emb, qs, books, centroids=cents,
+                                    k=10),
+        ):
+            want = sorted(map(tuple, search(good_q).collect()))
+            assert len(want) == 50
+            assert sorted(map(tuple, search(mixed_q).collect())) == want
+
     def test_cosine_topk_drop_malformed_rows(self, emb, dirty):
         """k exceeds the corpus, so every scored candidate would show:
         malformed corpus rows must not rank, and a malformed query

@@ -255,6 +255,35 @@ class TestPlans:
         assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
 
+    def test_adc_build_starts_no_job(self, spark):
+        """The ADC query tables are computed in the engine: building
+        the search on precomputed codebooks runs no Spark job (no
+        driver collect of the queries); running it does."""
+        from pyspark.sql import functions as SF
+
+        from pdfextraction_spark.functions.similarity import (
+            pq_adc_topk,
+            pq_train_codebooks,
+        )
+
+        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        books = pq_train_codebooks(emb, m=8, k=8, dim=64)
+        queries = emb.filter(SF.col("vec_id") < 3).select(
+            SF.col("vec_id").alias("query_id"), "embedding"
+        )
+        sc = spark.sparkContext
+        group = "adc-build-starts-no-job"
+        sc.setJobGroup(group, "pq_adc_topk build")
+        try:
+            df = pq_adc_topk(emb, queries, books, k=5)
+            built = list(sc.statusTracker().getJobIdsForGroup(group))
+            df.collect()
+            ran = list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert built == []
+        assert ran
+
 
 @pytest.mark.slow
 class TestRound4Plans:
@@ -298,6 +327,20 @@ class TestRound4Plans:
 
         plan = _plan(em.q_ann_ivfpq(spark, "/root/testdata/sf0.001"))
         assert "BroadcastHashJoin" in plan
+        # one Python pass per side: assign + encode over the corpus,
+        # probe + ADC table over the queries
+        assert plan.count("ArrowEvalPython") <= 2
+
+    def test_ivfpq_indexed_search_runs_no_python(self, spark):
+        """The persisted-index search checkpoints its probe rows with
+        their ADC tables, so the search plan reads the coded corpus
+        and the checkpoint only: no Python UDF node."""
+        import __spark_entry__ as em
+
+        plan = _plan(em.q_ann_ivfpq_indexed(spark,
+                                            "/root/testdata/sf0.001"))
+        assert "BroadcastHashJoin" in plan
+        assert plan.count("ArrowEvalPython") == 0
 
     def test_mixture_weights_broadcast_totals(self, spark):
         """Per-source agg plus a single-row totals side: the totals
