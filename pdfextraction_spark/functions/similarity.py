@@ -149,11 +149,13 @@ def _topk(scored: DataFrame, k: int, score: str = "sim") -> DataFrame:
     the rank contract every search here and its DuckDB oracle share.
     A null score (a null vector, a null element or code, or two widths
     that differ, on either side) is no candidate: it would otherwise
-    still fill a slot of a short top-k."""
+    still fill a slot of a short top-k. Nor is a NaN one (an inf
+    element): Spark orders NaN above every double, so it would rank
+    first."""
     order = F.desc(score) if score == "sim" else F.asc(score)
     w = Window.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
     return (
-        scored.filter(F.col(score).isNotNull())
+        scored.filter(F.col(score).isNotNull() & ~F.isnan(score))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )

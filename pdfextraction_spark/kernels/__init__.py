@@ -3,5 +3,3 @@
 Semantics are defined by the loop-based oracle package; pytest asserts
 exact agreement (SURVEY.md §5.2).
 """
-
-from .extract import extract_batch  # noqa: F401

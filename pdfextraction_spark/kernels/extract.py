@@ -3,8 +3,10 @@
 Takes one Arrow-batch worth of turn texts, detects payload kinds
 vectorized, routes each kind to its kernel, and assembles the output
 columns (payload_kind, extracted_text, spans, blocks_kept,
-blocks_dropped, parse_failed). Replaces the reference's three LLM call
-sites with its own deterministic machinery (SURVEY.md §2.10).
+blocks_dropped, parse_failed) as one Arrow batch: every span of the
+batch lands in flat label/start/end lists that become one ListArray.
+Replaces the reference's three LLM call sites with its own
+deterministic machinery (SURVEY.md §2.10).
 
 Envelope decoding has a regex fast path matched to the canonical
 encoder shape (payload.encode_pdf_envelope) that extracts word
@@ -18,10 +20,11 @@ from __future__ import annotations
 import json
 import os
 import re
-from typing import List, Optional, Tuple
+from typing import List
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from ..payload import (
     KIND_HTML,
@@ -32,8 +35,6 @@ from ..payload import (
 )
 from .htmlstrip import strip_html_doc
 from .layout import reflow_flat
-
-Span = Tuple[str, int, int]
 
 # canonical encoder word shape: {"t": "...", "x0": N, "y0": N, "x1": N, "y1": N}
 _WORD_FAST_RE = re.compile(
@@ -134,35 +135,17 @@ def _decode_envelopes_flat(texts: List[str]):
     return sizes, t_arr, coord, failed
 
 
-class FlatResult:
-    """Columnar extraction result: spans kept as flat parallel arrays
-    (label/start/end + per-row counts) so the Spark operator can build
-    an Arrow ListArray with zero per-span Python objects."""
-
-    __slots__ = ("kinds", "text", "span_counts", "span_labels",
-                 "span_starts", "span_ends", "kept", "dropped", "failed")
-
-    def __init__(self, n: int):
-        self.kinds: np.ndarray = np.empty(0, dtype=object)
-        self.text = np.empty(n, dtype=object)
-        self.span_counts = np.zeros(n, dtype=np.int32)
-        self.span_labels: List[str] = []
-        self.span_starts: List[int] = []
-        self.span_ends: List[int] = []
-        self.kept = np.zeros(n, dtype=np.int32)
-        self.dropped = np.zeros(n, dtype=np.int32)
-        self.failed = np.zeros(n, dtype=bool)
-
-    def spans_per_row(self) -> List[List[Span]]:
-        out: List[List[Span]] = []
-        offs = np.r_[0, np.cumsum(self.span_counts)]
-        for i in range(len(self.span_counts)):
-            out.append(
-                list(zip(self.span_labels[offs[i]:offs[i + 1]],
-                         self.span_starts[offs[i]:offs[i + 1]],
-                         self.span_ends[offs[i]:offs[i + 1]]))
-            )
-        return out
+def decode_pdf_rows(texts: pd.Series):
+    """Detect a batch's payload kinds and decode its pdf_layout rows:
+    the prelude the extraction kernel and every envelope operator
+    share. Returns (kinds, pdf_idx, decoded), where ``decoded`` is
+    _decode_envelopes_flat's (sizes, t_arr, coord, failed) over the
+    rows ``pdf_idx``, in that order."""
+    kinds = detect_kinds(texts)
+    pdf_idx = np.flatnonzero(kinds == KIND_PDF)
+    # a pdf_layout row matched its prefix, so it is never null
+    pdf_texts = texts.to_numpy(dtype=object)[pdf_idx].tolist()
+    return kinds, pdf_idx, _decode_envelopes_flat(pdf_texts)
 
 
 # content-level dedup default (PDFX_CONTENT_DEDUP=0 to disable, e.g.
@@ -170,144 +153,103 @@ class FlatResult:
 CONTENT_DEDUP = os.environ.get("PDFX_CONTENT_DEDUP", "1") != "0"
 
 
-def extract_batch_flat(texts: pd.Series, dedup: Optional[bool] = None) -> FlatResult:
-    """Extract one batch of turn texts into columnar outputs.
+def extract_batch_flat(texts: pd.Series) -> pa.RecordBatch:
+    """Extract one batch of turn texts into the extracted columns
+    (payload_kind, extracted_text, spans, blocks_kept, blocks_dropped,
+    parse_failed), one row per text; a null text extracts as "".
 
-    ``dedup=True`` (default) factorizes the batch and runs the kernels
-    once per UNIQUE text, then expands results back by code — repeated
-    payloads (retries, boilerplate pages, templated tool outputs) are
-    pervasive at corpus scale and extraction is a pure function of the
-    text. Byte-identical to the non-deduped path (tests compare both).
+    With content dedup on (the default) the kernels run once per
+    UNIQUE text and the unique-level batch is expanded back by code
+    with one ``take`` — repeated payloads (retries, boilerplate pages,
+    templated tool outputs) are pervasive at corpus scale and
+    extraction is a pure function of the text. Byte-identical to the
+    non-deduped path (tests compare both).
     """
-    if dedup is None:
-        dedup = CONTENT_DEDUP
-    if dedup:
-        sv0 = texts.fillna("").to_numpy(dtype=object)
-        codes, uniques = pd.factorize(sv0)
-        if len(uniques) < len(sv0):
-            res_u = _extract_rows(pd.Series(uniques, dtype="object"))
-            return _expand_by_codes(res_u, codes)
-        return _extract_rows(pd.Series(sv0, dtype="object"))
-    return _extract_rows(texts.fillna("").reset_index(drop=True))
+    sv = texts.fillna("").to_numpy(dtype=object)
+    if CONTENT_DEDUP:
+        codes, uniques = pd.factorize(sv)
+        if len(uniques) < len(sv):
+            return _extract_rows(uniques).take(pa.array(codes))
+    return _extract_rows(sv)
 
 
-def _expand_by_codes(u: FlatResult, codes: np.ndarray) -> FlatResult:
-    """Gather a unique-level FlatResult back to row level (vectorized:
-    grouped-arange indexing into the flat span arrays)."""
-    n = len(codes)
-    res = FlatResult(n)
-    res.kinds = u.kinds[codes]
-    res.text = u.text[codes]
-    res.kept = u.kept[codes]
-    res.dropped = u.dropped[codes]
-    res.failed = u.failed[codes]
-    res.span_counts = u.span_counts[codes]
-    u_off = np.r_[0, np.cumsum(u.span_counts)].astype(np.int64)
-    lengths = res.span_counts.astype(np.int64)
-    total = int(lengths.sum())
-    if total:
-        starts = u_off[codes]
-        # grouped arange: for each row, indices [start, start+len)
-        reps = np.repeat(starts - np.r_[0, np.cumsum(lengths)[:-1]], lengths)
-        idx = np.arange(total, dtype=np.int64) + reps
-        lab = np.asarray(u.span_labels, dtype=object)
-        st = np.asarray(u.span_starts, dtype=np.int64)
-        en = np.asarray(u.span_ends, dtype=np.int64)
-        res.span_labels = lab[idx].tolist()
-        res.span_starts = st[idx].tolist()
-        res.span_ends = en[idx].tolist()
-    return res
+def _extract_rows(sv: np.ndarray) -> pa.RecordBatch:
+    n = len(sv)
+    kinds, pdf_idx, (sizes, t_arr, coord, dec_failed) = decode_pdf_rows(
+        pd.Series(sv, dtype=object)
+    )
+    # plain turns and undecodable envelopes pass their text through
+    text = sv.copy()
+    kept = np.zeros(n, dtype=np.int32)
+    dropped = np.zeros(n, dtype=np.int32)
+    failed = np.zeros(n, dtype=bool)
+    # one entry per span, appended kind by kind; ordered by row at the end
+    rows: List[int] = []
+    labels: List[str] = []
+    starts: List[int] = []
+    ends: List[int] = []
 
+    # passthrough: one "text" span over a non-empty text
+    undecoded = pdf_idx[dec_failed]
+    passthrough = np.concatenate([np.flatnonzero(kinds == KIND_PLAIN), undecoded])
+    lens = np.fromiter(map(len, sv[passthrough]), dtype=np.int64,
+                       count=len(passthrough))
+    spanned = passthrough[lens > 0]
+    rows += spanned.tolist()
+    labels += ["text"] * len(spanned)
+    starts += [0] * len(spanned)
+    ends += lens[lens > 0].tolist()
+    kept[spanned] = 1
+    failed[undecoded] = True
 
-def _extract_rows(s: pd.Series) -> FlatResult:
-    n = len(s)
-    sv = s.to_numpy(dtype=object)
-    res = FlatResult(n)
-    res.kinds = detect_kinds(s)
+    for i in np.flatnonzero(kinds == KIND_HTML).tolist():
+        text[i], doc_spans, kept[i], dropped[i], failed[i] = strip_html_doc(sv[i])
+        if doc_spans:
+            ls, ss, es = zip(*doc_spans)
+            rows += [i] * len(doc_spans)
+            labels += ls
+            starts += ss
+            ends += es
 
-    # spans accumulate per row index; build per-kind then reorder once
-    row_spans_label: List[Optional[List[str]]] = [None] * n
-    row_spans_se: List[Optional[Tuple[List[int], List[int]]]] = [None] * n
+    reflowed = reflow_flat(len(pdf_idx), sizes, t_arr, coord, dec_failed)
+    for i, lines in zip(pdf_idx.tolist(), reflowed):
+        if lines is None:
+            continue  # undecodable: passed through above
+        pos = 0
+        for label, line_text in lines:
+            rows.append(i)
+            labels.append(label)
+            starts.append(pos)
+            pos += len(line_text)
+            ends.append(pos)
+            pos += 1
+        text[i] = "\n".join([line_text for _label, line_text in lines])
+        kept[i] = len(lines)
+        failed[i] = len(lines) == 0
 
-    plain_idx = np.flatnonzero(res.kinds == KIND_PLAIN)
-    if len(plain_idx):
-        res.text[plain_idx] = sv[plain_idx]
-        for i in plain_idx.tolist():
-            t = sv[i]
-            if t:
-                row_spans_label[i] = ["text"]
-                row_spans_se[i] = ([0], [len(t)])
-                res.span_counts[i] = 1
-                res.kept[i] = 1
-
-    html_idx = np.flatnonzero(res.kinds == KIND_HTML)
-    for i in html_idx.tolist():
-        t, spans, k, dcount, f = strip_html_doc(sv[i])
-        res.text[i] = t
-        if spans:
-            row_spans_label[i] = [sp[0] for sp in spans]
-            row_spans_se[i] = ([sp[1] for sp in spans], [sp[2] for sp in spans])
-            res.span_counts[i] = len(spans)
-        res.kept[i], res.dropped[i], res.failed[i] = k, dcount, f
-
-    pdf_idx = np.flatnonzero(res.kinds == KIND_PDF)
-    if len(pdf_idx):
-        pdf_texts = [sv[i] for i in pdf_idx.tolist()]
-        sizes, t_arr, coord, dec_failed = _decode_envelopes_flat(pdf_texts)
-        reflowed = reflow_flat(len(pdf_texts), sizes, t_arr, coord, dec_failed)
-        for j, i in enumerate(pdf_idx.tolist()):
-            if dec_failed[j]:
-                # undecodable envelope -> conservative passthrough
-                t = sv[i]
-                res.text[i] = t
-                if t:
-                    row_spans_label[i] = ["text"]
-                    row_spans_se[i] = ([0], [len(t)])
-                    res.span_counts[i] = 1
-                    res.kept[i] = 1
-                res.failed[i] = True
-                continue
-            lines = reflowed[j]
-            labels: List[str] = []
-            starts: List[int] = []
-            ends: List[int] = []
-            parts: List[str] = []
-            pos = 0
-            for label, line_text in lines:
-                parts.append(line_text)
-                labels.append(label)
-                starts.append(pos)
-                pos += len(line_text)
-                ends.append(pos)
-                pos += 1
-            res.text[i] = "\n".join(parts)
-            if labels:
-                row_spans_label[i] = labels
-                row_spans_se[i] = (starts, ends)
-                res.span_counts[i] = len(labels)
-            res.kept[i] = len(lines)
-            res.failed[i] = len(lines) == 0
-
-    for i in range(n):
-        if row_spans_label[i] is not None:
-            res.span_labels.extend(row_spans_label[i])
-            st, en = row_spans_se[i]
-            res.span_starts.extend(st)
-            res.span_ends.extend(en)
-    return res
-
-
-def extract_batch(texts: pd.Series) -> pd.DataFrame:
-    """Row-oriented wrapper over extract_batch_flat (tests/golden
-    comparisons); Spark uses the flat form directly."""
-    res = extract_batch_flat(texts)
-    return pd.DataFrame(
-        {
-            "payload_kind": res.kinds,
-            "extracted_text": res.text,
-            "spans": res.spans_per_row(),
-            "blocks_kept": res.kept,
-            "blocks_dropped": res.dropped,
-            "parse_failed": res.failed,
-        }
+    row = np.asarray(rows, dtype=np.int64)
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(np.bincount(row, minlength=n), out=offsets[1:])
+    spans = pa.ListArray.from_arrays(
+        pa.array(offsets),
+        pa.StructArray.from_arrays(
+            [
+                pa.array(labels, type=pa.string()),
+                pa.array(starts, type=pa.int32()),
+                pa.array(ends, type=pa.int32()),
+            ],
+            names=["label", "start", "end"],
+        ).take(pa.array(np.argsort(row, kind="stable"))),
+    )
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(kinds, type=pa.string()),
+            pa.array(text, type=pa.string()),
+            spans,
+            pa.array(kept),
+            pa.array(dropped),
+            pa.array(failed),
+        ],
+        names=["payload_kind", "extracted_text", "spans", "blocks_kept",
+               "blocks_dropped", "parse_failed"],
     )

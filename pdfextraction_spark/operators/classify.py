@@ -38,7 +38,6 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
@@ -59,44 +58,38 @@ _FUSED_SCHEMA = pa.schema(
 
 
 def _classify_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from ..kernels.extract import _decode_envelopes_flat, detect_kinds
+    from ..kernels.extract import decode_pdf_rows
     from ..kernels.layout import reflow_flat
     from ..kernels.tables import tables_flat
-    from ..payload import KIND_PDF
 
     for batch in it:
         texts = batch.column("text").to_pandas()
         conv = batch.column("conv_id").to_pylist()
         turn = batch.column("turn_idx").to_pylist()
-        kinds = detect_kinds(texts)
-        pdf_idx = np.flatnonzero(kinds == KIND_PDF)
         out = {k: [] for k in ("conv_id", "turn_idx", "block_class",
                                "confidence", "n_table_regions",
                                "n_field_lines")}
-        if len(pdf_idx):
-            sv = texts.fillna("").to_numpy(dtype=object)
-            pdf_texts = [sv[i] for i in pdf_idx.tolist()]
-            # ONE decode feeds both kernels (the fusion this operator
-            # exists for)
-            sizes, t_arr, coord, failed = _decode_envelopes_flat(pdf_texts)
-            lines = reflow_flat(len(pdf_texts), sizes, t_arr, coord, failed)
-            tables = tables_flat(len(pdf_texts), sizes, t_arr, coord, failed)
-            for j, i in enumerate(pdf_idx.tolist()):
-                if failed[j] or not lines[j]:
-                    continue  # undecodable/empty: parse_failed turns
-                nf = sum(1 for label, _t in lines[j] if label == "fields")
-                nt = len(tables[j])
-                cls = ("mixed" if nf and nt else "table" if nt
-                       else "form" if nf else "unknown")
-                conf = 0.0 if cls == "unknown" else round(
-                    0.5 + 0.1 * min(nf + 2 * nt, 4), 2
-                )
-                out["conv_id"].append(conv[i])
-                out["turn_idx"].append(turn[i])
-                out["block_class"].append(cls)
-                out["confidence"].append(conf)
-                out["n_table_regions"].append(nt)
-                out["n_field_lines"].append(nf)
+        # ONE decode feeds both kernels (the fusion this operator
+        # exists for)
+        _, pdf_idx, (sizes, t_arr, coord, failed) = decode_pdf_rows(texts)
+        lines = reflow_flat(len(pdf_idx), sizes, t_arr, coord, failed)
+        tables = tables_flat(len(pdf_idx), sizes, t_arr, coord, failed)
+        for j, i in enumerate(pdf_idx.tolist()):
+            if failed[j] or not lines[j]:
+                continue  # undecodable/empty: parse_failed turns
+            nf = sum(1 for label, _t in lines[j] if label == "fields")
+            nt = len(tables[j])
+            cls = ("mixed" if nf and nt else "table" if nt
+                   else "form" if nf else "unknown")
+            conf = 0.0 if cls == "unknown" else round(
+                0.5 + 0.1 * min(nf + 2 * nt, 4), 2
+            )
+            out["conv_id"].append(conv[i])
+            out["turn_idx"].append(turn[i])
+            out["block_class"].append(cls)
+            out["confidence"].append(conf)
+            out["n_table_regions"].append(nt)
+            out["n_field_lines"].append(nf)
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(out["conv_id"], type=pa.string()),

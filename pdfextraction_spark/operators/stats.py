@@ -9,9 +9,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from ..kernels.extract import _decode_envelopes_flat, detect_kinds
+from ..kernels.extract import decode_pdf_rows
 from ..kernels.tables import spacing_stats_batch
-from ..payload import KIND_PDF
 
 _DDL = ("conv_id string, turn_idx int, avg_spacing double, "
         "median_spacing double, spacing_std double")
@@ -30,35 +29,30 @@ _SCHEMA = pa.schema(
 def _batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     for batch in it:
         texts = batch.column("text").to_pandas()
-        kinds = detect_kinds(texts)
-        pdf_idx = np.flatnonzero(kinds == KIND_PDF)
         conv = batch.column("conv_id").to_pylist()
         turn = batch.column("turn_idx").to_pylist()
         out = {"conv_id": [], "turn_idx": [], "stats": []}
-        if len(pdf_idx):
-            sv = texts.fillna("").to_numpy(dtype=object)
-            pdf_texts = [sv[i] for i in pdf_idx.tolist()]
-            sizes, t_arr, coord, failed = _decode_envelopes_flat(pdf_texts)
-            # rebuild per-doc word lists is unnecessary: stats kernel
-            # takes the flat layout too via a thin shim
-            docs = []
-            off = 0
-            for j in range(len(pdf_texts)):
-                k = int(sizes[j])
-                if failed[j]:
-                    docs.append(None)
-                else:
-                    docs.append(
-                        [(t_arr[off + m], *coord[off + m]) for m in range(k)]
-                    )
-                off += k
-            stats = spacing_stats_batch(docs)
-            for j, i in enumerate(pdf_idx.tolist()):
-                if docs[j] is None:
-                    continue
-                out["conv_id"].append(conv[i])
-                out["turn_idx"].append(turn[i])
-                out["stats"].append(stats[j])
+        _, pdf_idx, (sizes, t_arr, coord, failed) = decode_pdf_rows(texts)
+        # spacing_stats_batch takes per-doc word lists (None for an
+        # undecodable envelope): rebuild them from the flat decode
+        docs = []
+        off = 0
+        for j in range(len(pdf_idx)):
+            k = int(sizes[j])
+            if failed[j]:
+                docs.append(None)
+            else:
+                docs.append(
+                    [(t_arr[off + m], *coord[off + m]) for m in range(k)]
+                )
+            off += k
+        stats = spacing_stats_batch(docs)
+        for j, i in enumerate(pdf_idx.tolist()):
+            if docs[j] is None:
+                continue
+            out["conv_id"].append(conv[i])
+            out["turn_idx"].append(turn[i])
+            out["stats"].append(stats[j])
         st = np.asarray(out["stats"]) if out["stats"] else np.zeros((0, 3))
         yield pa.RecordBatch.from_arrays(
             [

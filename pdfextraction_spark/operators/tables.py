@@ -11,15 +11,13 @@ table-less pages emit nothing.
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import Iterator
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from ..kernels.extract import _decode_envelopes_flat, detect_kinds
+from ..kernels.extract import decode_pdf_rows
 from ..kernels.tables import tables_flat
-from ..payload import KIND_PDF
 
 _OUT_SCHEMA = pa.schema(
     [
@@ -44,28 +42,20 @@ def _table_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         texts = batch.column("text").to_pandas()
         conv = batch.column("conv_id").to_pylist()
         turn = batch.column("turn_idx").to_pylist()
-        kinds = detect_kinds(texts)
-        pdf_idx = np.flatnonzero(kinds == KIND_PDF)
         rows = {k: [] for k in ("conv_id", "turn_idx", "table_idx",
                                 "headers", "columns", "row_idx", "cells")}
-        if len(pdf_idx):
-            sv = texts.fillna("").to_numpy(dtype=object)
-            pdf_texts = [sv[i] for i in pdf_idx.tolist()]
-            sizes, t_arr, coord, failed = _decode_envelopes_flat(pdf_texts)
-            all_tables = tables_flat(len(pdf_texts), sizes, t_arr, coord, failed)
-            for j, i in enumerate(pdf_idx.tolist()):
-                tables = all_tables[j]
-                if not tables:
-                    continue
-                for ti, tab in enumerate(tables):
-                    for ri, cells in enumerate(tab["rows"]):
-                        rows["conv_id"].append(conv[i])
-                        rows["turn_idx"].append(turn[i])
-                        rows["table_idx"].append(ti)
-                        rows["headers"].append(tab["headers"])
-                        rows["columns"].append(tab["columns"])
-                        rows["row_idx"].append(ri)
-                        rows["cells"].append(cells)
+        _, pdf_idx, (sizes, t_arr, coord, failed) = decode_pdf_rows(texts)
+        all_tables = tables_flat(len(pdf_idx), sizes, t_arr, coord, failed)
+        for i, tables in zip(pdf_idx.tolist(), all_tables):
+            for ti, tab in enumerate(tables or ()):
+                for ri, cells in enumerate(tab["rows"]):
+                    rows["conv_id"].append(conv[i])
+                    rows["turn_idx"].append(turn[i])
+                    rows["table_idx"].append(ti)
+                    rows["headers"].append(tab["headers"])
+                    rows["columns"].append(tab["columns"])
+                    rows["row_idx"].append(ri)
+                    rows["cells"].append(cells)
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(rows["conv_id"], type=pa.string()),

@@ -373,10 +373,21 @@ def _bucket_ctes(table: str, bits: int, dim: int) -> str:
         )"""
 
 
+def _topk_sim(a: str, b: str) -> str:
+    """The top-k score as Spark's round(cosine_sim, 6) gives it: NaN
+    when either vector has an inf or NaN element (a squared norm that
+    is not finite), where DuckDB's list_cosine_similarity returns -1.
+    _TOPK_TAIL drops NaN scores, as _topk does."""
+    return (f"CASE WHEN isfinite(list_inner_product({a}, {a}) "
+            f"+ list_inner_product({b}, {b})) "
+            f"THEN round(list_cosine_similarity({a}, {b}), 6) "
+            f"ELSE CAST('NaN' AS DOUBLE) END")
+
+
 _TOPK_TAIL = """
         agg AS (
           SELECT query_id, vec_id, MAX(sim) AS sim FROM scored
-          WHERE sim IS NOT NULL
+          WHERE sim IS NOT NULL AND NOT isnan(sim)
           GROUP BY query_id, vec_id
         ), ranked AS (
           SELECT query_id, vec_id, sim,
@@ -407,7 +418,7 @@ def ann_lsh_topk_sql(table: str = "embeddings", bits: int = 4,
           WHERE b2.vec_id < {n_queries}
         ), scored AS (
           SELECT p.query_id, c.vec_id,
-                 round(list_cosine_similarity(qe.v, c.v), 6) AS sim
+                 {_topk_sim('qe.v', 'c.v')} AS sim
           FROM probes p
           JOIN buck c ON c.bucket = p.bucket
           JOIN e qe ON qe.vec_id = p.query_id
@@ -423,7 +434,7 @@ def ann_cosine_topk_sql(k: int = 10, n_queries: int = 5) -> str:
         WITH {_vectors_cte("embeddings")},
         scored AS (
           SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-                 round(list_cosine_similarity(q.v, c.v), 6) AS sim
+                 {_topk_sim('q.v', 'c.v')} AS sim
           FROM e q, e c
           WHERE q.vec_id < {n_queries} AND c.vec_id <> q.vec_id
             AND len(q.v) = len(c.v)
@@ -528,7 +539,7 @@ def ann_ivf_topk_sql(table: str = "embeddings", n_centroids: int = 16,
           ) WHERE pr <= {n_probe}
         ), scored AS (
           SELECT p.query_id, c.vec_id,
-                 round(list_cosine_similarity(qe.v, c.v), 6) AS sim
+                 {_topk_sim('qe.v', 'c.v')} AS sim
           FROM probes p
           JOIN assigned c ON c.list_id = p.list_id
           JOIN e qe ON qe.vec_id = p.query_id

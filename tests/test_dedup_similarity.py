@@ -1012,6 +1012,43 @@ class TestMalformedVectors:
             assert (set(zip(pairs.id_a, pairs.id_b))
                     == set(zip(exp.id_a, exp.id_b)))
 
+    def test_nonfinite_sims_are_no_candidates(self, emb):
+        """Vector 1 with an inf first element scores sim = NaN against
+        every vector, and Spark and DuckDB both order NaN above every
+        double. A NaN sim is no candidate: brute_force_topk and ivf_topk
+        return no NaN row (query 1 returns none at all) and match their
+        DuckDB oracles."""
+        from pyspark.sql import functions as F
+
+        from pdfextraction_spark.oracle import portable_sql as P
+
+        odd = emb.sparkSession.createDataFrame(
+            [(r.vec_id, [float("inf")] + r.embedding[1:] if r.vec_id == 1
+              else r.embedding) for r in emb.collect()],
+            emb.schema,
+        )
+        queries = odd.filter(F.col("vec_id") < 5).select(
+            F.col("vec_id").alias("query_id"), "embedding")
+        for got, sql in (
+            (S.brute_force_topk(odd, queries, k=10),
+             P.ann_cosine_topk_sql(k=10, n_queries=5)),
+            (S.ivf_topk(odd, queries, k=10, n_centroids=16, n_probe=4,
+                        lloyd_iters=0),
+             P.ann_ivf_topk_sql(n_centroids=16, n_probe=4, k=10,
+                                n_queries=5)),
+        ):
+            key = ["query_id", "rank"]
+            g = got.toPandas().sort_values(key).reset_index(drop=True)
+            e = (_duckdb_oracle(odd, sql)
+                 .sort_values(key).reset_index(drop=True))
+            assert len(g) == 40
+            assert not g["sim"].isna().any()
+            assert 1 not in set(g["query_id"]) | set(g["vec_id"])
+            assert list(g["query_id"]) == list(e["query_id"])
+            assert list(g["vec_id"]) == list(e["vec_id"])
+            assert list(g["rank"]) == list(e["rank"])
+            assert np.allclose(g["sim"], e["sim"])
+
     def test_assignment_oracles_match_on_malformed_rows(self, dirty):
         """The DuckDB oracles of ivfpq_topk and semantic_dedup run on
         the malformed rows and match Spark: only rows with no null

@@ -7,21 +7,25 @@ import pandas as pd
 import pytest
 
 from fixtures.generate import gen_transcripts, golden_frame
-from pdfextraction_spark.kernels import extract_batch
+from pdfextraction_spark.kernels import extract as K
 from pdfextraction_spark.kernels.htmlstrip import strip_html_doc
 from pdfextraction_spark.kernels.layout import reflow_batch
 from pdfextraction_spark.oracle import spatial
 from pdfextraction_spark.oracle.htmlstrip import strip_html
 
 
-def _assert_frames_equal(golden: pd.DataFrame, got: pd.DataFrame):
+def _extract(texts: pd.Series) -> list:
+    """The kernel's rows, as dicts."""
+    return K.extract_batch_flat(texts).to_pylist()
+
+
+def _assert_frames_equal(golden: pd.DataFrame, got: list):
     assert len(golden) == len(got)
     for i in range(len(golden)):
-        g, k = golden.iloc[i], got.iloc[i]
-        gspans = [(d["label"], d["start"], d["end"]) for d in g["spans"]]
+        g, k = golden.iloc[i], got[i]
         assert g["payload_kind"] == k["payload_kind"], i
         assert g["extracted_text"] == k["extracted_text"], i
-        assert gspans == k["spans"], i
+        assert list(g["spans"]) == k["spans"], i
         assert g["blocks_kept"] == k["blocks_kept"], i
         assert g["blocks_dropped"] == k["blocks_dropped"], i
         assert bool(g["parse_failed"]) == bool(k["parse_failed"]), i
@@ -29,13 +33,13 @@ def _assert_frames_equal(golden: pd.DataFrame, got: pd.DataFrame):
 
 def test_xs_fixtures_full_dispatch():
     df = gen_transcripts("xs")
-    _assert_frames_equal(golden_frame(df), extract_batch(df["text"]))
+    _assert_frames_equal(golden_frame(df), _extract(df["text"]))
 
 
 @pytest.mark.slow
 def test_s_fixtures_full_dispatch():
     df = gen_transcripts("s")
-    _assert_frames_equal(golden_frame(df), extract_batch(df["text"]))
+    _assert_frames_equal(golden_frame(df), _extract(df["text"]))
 
 
 _TOKENS = [
@@ -126,28 +130,27 @@ def test_hypothesis_layout_if_available():
     run()
 
 
-def test_content_dedup_expansion_identical():
-    """extract_batch_flat(dedup=True) must be byte-identical to the
-    non-deduped path on inputs with heavy payload repetition."""
-    from pdfextraction_spark.kernels.extract import extract_batch_flat
-
+def test_content_dedup_expansion_identical(monkeypatch):
+    """Content dedup (the kernels run once per unique text, then one
+    ``take``) must give the same batch as extracting every row, on
+    inputs with heavy payload repetition plus a null text, "" and an
+    undecodable envelope."""
     rng = np.random.default_rng(424242)
     base = gen_transcripts("xs")["text"].astype(object).tolist()
+    base += [None, "", '{"kind": "pdf_layout", "words": [{"t": "x"']
     texts = pd.Series(
         [base[int(rng.integers(0, len(base)))] for _ in range(2000)],
         dtype="object",
     )
-    a = extract_batch_flat(texts, dedup=True)
-    b = extract_batch_flat(texts, dedup=False)
-    assert list(a.text) == list(b.text)
-    assert list(a.kinds) == list(b.kinds)
-    assert a.span_labels == b.span_labels
-    assert a.span_starts == b.span_starts
-    assert a.span_ends == b.span_ends
-    assert (a.span_counts == b.span_counts).all()
-    assert (a.kept == b.kept).all()
-    assert (a.dropped == b.dropped).all()
-    assert (a.failed == b.failed).all()
+    broken = int(np.flatnonzero(texts == base[-1])[0])
+    assert texts.isna().any() and (texts == "").any()
+    monkeypatch.setattr(K, "CONTENT_DEDUP", True)
+    a = K.extract_batch_flat(texts)
+    monkeypatch.setattr(K, "CONTENT_DEDUP", False)
+    b = K.extract_batch_flat(texts)
+    assert a.num_rows == len(texts)
+    assert a.slice(broken, 1).to_pylist()[0]["parse_failed"]
+    assert a.equals(b)
 
 
 def test_envelope_escape_handling():
@@ -179,17 +182,16 @@ def test_envelope_escape_handling():
         '{"t": "C:\\qath", "x0": 36.0, "y0": 72.0, "x1": 80.0, "y1": 82.0}]}'
     )
     df = pd.DataFrame({"text": [fast, strict, bad]})
+    got = _extract(df["text"])
     _assert_frames_equal(
-        golden_frame(df.assign(conv_id="c", turn_idx=[0, 1, 2])),
-        extract_batch(df["text"]),
+        golden_frame(df.assign(conv_id="c", turn_idx=[0, 1, 2])), got
     )
-    got = extract_batch(df["text"])
-    assert "C:\\path" in got["extracted_text"].iloc[0]
-    assert "a\bc" in got["extracted_text"].iloc[0]
+    assert "C:\\path" in got[0]["extracted_text"]
+    assert "a\bc" in got[0]["extracted_text"]
     # strict-path literal backslashes preserved byte-for-byte
-    assert "C:\\path" in got["extracted_text"].iloc[1]
-    assert "a\\bc" in got["extracted_text"].iloc[1]
-    assert bool(got["parse_failed"].iloc[2])
+    assert "C:\\path" in got[1]["extracted_text"]
+    assert "a\\bc" in got[1]["extracted_text"]
+    assert got[2]["parse_failed"]
 
 
 def test_last_word_field_rule_whitespace_words():
@@ -212,9 +214,9 @@ def test_last_word_field_rule_whitespace_words():
          "text": [encode_pdf_envelope(w) for w in cases]}
     )
     golden = golden_frame(df)
-    got = extract_batch(df["text"])
+    got = _extract(df["text"])
     _assert_frames_equal(golden, got)
     # all three must classify as field lines (the 'fields' span label)
-    for i in range(len(cases)):
-        labels = [s[0] for s in got["spans"].iloc[i]]
-        assert "fields" in labels, (i, got["extracted_text"].iloc[i])
+    for i, row in enumerate(got):
+        labels = [s["label"] for s in row["spans"]]
+        assert "fields" in labels, (i, row["extracted_text"])

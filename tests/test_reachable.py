@@ -39,12 +39,11 @@ ROOT_DIRS = ("perfbench", "tools", "fixtures")
 # - oracle/ holds the loop-based reference implementations. Tests
 #   compare the kernels and operators against them, so they are
 #   specifications, not dead code.
-# - the three kernel adapters run a kernel over a pandas batch; the
-#   kernel-vs-oracle and hypothesis tests drive the kernels through
-#   them.
+# - the two kernel adapters run a kernel over per-document word
+#   lists; the kernel-vs-oracle, hypothesis and table tests drive the
+#   kernels through them.
 EXEMPT_DIRS = ("oracle",)
 EXEMPT_DEFS = {
-    ("kernels/extract.py", "extract_batch"),
     ("kernels/layout.py", "reflow_batch"),
     ("kernels/tables.py", "tables_batch"),
 }
