@@ -10,10 +10,12 @@ deterministic machinery (SURVEY.md §2.10).
 
 Envelope decoding has a regex fast path matched to the canonical
 encoder shape (payload.encode_pdf_envelope) that extracts word
-text/coords straight into flat NumPy arrays (no per-word dicts); any
-envelope the regex cannot fully account for falls back to strict
-json.loads, and a failed parse degrades to passthrough+parse_failed
-(the conservative stance of SURVEY.md §7.4)."""
+text/coords straight into flat NumPy arrays (no per-word dicts). It
+takes an envelope only when the word matches tile the words array
+between the encoder's head and tail, so it decodes exactly what
+json.loads would; any other envelope falls back to strict json.loads,
+and a failed parse degrades to passthrough+parse_failed (the
+conservative stance of SURVEY.md §7.4)."""
 
 from __future__ import annotations
 
@@ -36,13 +38,23 @@ from ..payload import (
 from .htmlstrip import strip_html_doc
 from .layout import reflow_flat
 
+# a JSON number (json.loads's grammar; NaN/Infinity take the strict
+# path). Possessive quantifiers (Python >= 3.11): a number never needs
+# backtracking, and without them the word pattern is ~1/3 slower.
+_NUM = r"-?+(?:0|[1-9][0-9]*+)(?:\.[0-9]++)?+(?:[eE][-+]?+[0-9]++)?+"
 # canonical encoder word shape: {"t": "...", "x0": N, "y0": N, "x1": N, "y1": N}
+# (a JSON string body holds no raw control character)
 _WORD_FAST_RE = re.compile(
-    r'\{"t": "((?:[^"\\]|\\.)*)", '
-    r'"x0": ([-+0-9.eE]+), "y0": ([-+0-9.eE]+), '
-    r'"x1": ([-+0-9.eE]+), "y1": ([-+0-9.eE]+)\}'
+    r'\{"t": "([^"\\\x00-\x1f]*+(?:\\.[^"\\\x00-\x1f]*+)*+)", '
+    r'"x0": (' + _NUM + r'), "y0": (' + _NUM + r'), '
+    r'"x1": (' + _NUM + r'), "y1": (' + _NUM + r')\}'
 )
-_WORD_COUNT_RE = re.compile(r'\{"t":')
+# the encoder's head and tail around the ", "-joined words
+_HEAD_RE = re.compile(
+    r'[ \t\n\r]*\{"kind": "pdf_layout", "page_width": ' + _NUM
+    + r', "page_height": ' + _NUM + r', "words": \['
+)
+_TAIL_RE = re.compile(r"\]\}[ \t\n\r]*")
 
 
 def detect_kinds(texts: pd.Series) -> np.ndarray:
@@ -69,6 +81,24 @@ def _decode_json_strict(text: str):
         return None
 
 
+def _canonical_split(s: str):
+    """``_WORD_FAST_RE.split(s)`` when ``s`` is exactly a canonical
+    envelope (the encoder's head, its words joined by ", " and its
+    tail), else None. Such an envelope is valid JSON with exactly those
+    words, up to escapes inside a word text; the caller checks those."""
+    parts = _WORD_FAST_RE.split(s)
+    head = _HEAD_RE.match(parts[0])
+    if head is None:
+        return None
+    n_words = len(parts) // 6
+    tail = parts[0][head.end():]
+    if n_words:
+        if tail or parts[6:-1:6].count(", ") != n_words - 1:
+            return None
+        tail = parts[-1]
+    return parts if _TAIL_RE.fullmatch(tail) else None
+
+
 def _decode_envelopes_flat(texts: List[str]):
     """Decode a list of pdf_layout envelopes into flat arrays.
 
@@ -84,8 +114,8 @@ def _decode_envelopes_flat(texts: List[str]):
     cs_x1: List[str] = []
     cs_y1: List[str] = []
     for i, s in enumerate(texts):
-        matches = _WORD_FAST_RE.findall(s)
-        if len(matches) != len(_WORD_COUNT_RE.findall(s)):
+        parts = _canonical_split(s)
+        if parts is None:
             # strict-path tokens come out of json.loads ALREADY decoded;
             # they must never see the escape fix below (a literal
             # backslash in a decoded token is data, not an escape)
@@ -102,27 +132,24 @@ def _decode_envelopes_flat(texts: List[str]):
                 cs_x1.append(repr(c))
                 cs_y1.append(repr(e))
             continue
-        if matches:
-            ts, xs, ys, x1s, y1s = zip(*matches)
-            if "\\" in s:
-                # fast-path tokens are raw JSON string bodies: decode
-                # escapes per token (rare — gated on the envelope
-                # containing a backslash at all). An invalid escape
-                # (e.g. C:\path unescaped) is invalid JSON, so fail the
-                # doc exactly as the strict parser would.
-                try:
-                    ts = [
-                        json.loads(f'"{t}"') if "\\" in t else t for t in ts
-                    ]
-                except ValueError:
-                    failed[i] = True
-                    continue
-            sizes[i] = len(matches)
-            all_t.extend(ts)
-            cs_x0.extend(xs)
-            cs_y0.extend(ys)
-            cs_x1.extend(x1s)
-            cs_y1.extend(y1s)
+        ts = parts[1::6]
+        if "\\" in s:
+            # fast-path tokens are raw JSON string bodies: decode
+            # escapes per token (rare — gated on the envelope
+            # containing a backslash at all). An invalid escape
+            # (e.g. C:\path unescaped) is invalid JSON, so fail the
+            # doc exactly as the strict parser would.
+            try:
+                ts = [json.loads(f'"{t}"') if "\\" in t else t for t in ts]
+            except ValueError:
+                failed[i] = True
+                continue
+        sizes[i] = len(ts)
+        all_t.extend(ts)
+        cs_x0.extend(parts[2::6])
+        cs_y0.extend(parts[3::6])
+        cs_x1.extend(parts[4::6])
+        cs_y1.extend(parts[5::6])
     t_arr = np.asarray(all_t, dtype=object)
     if len(all_t):
         coord = np.empty((len(all_t), 4), dtype=np.float64)

@@ -1,4 +1,5 @@
-"""Vectorized Arrow-batch layout-reflow kernel.
+"""Vectorized Arrow-batch layout-reflow kernel, and the reading-order /
+line-grouping prelude of every PDF kernel.
 
 Implements the reference's spatial pipeline
 (/root/reference/services/spatial_preprocessor.py) for EVERY document
@@ -6,6 +7,14 @@ in a batch simultaneously, with NumPy/pandas batch primitives — no
 per-row Python UDFs (the north rule). The loop-based oracle
 (oracle/spatial.py) defines the semantics; pytest asserts exact
 agreement.
+
+All three PDF kernels (``reflow_flat`` here, ``tables_flat`` and
+``spacing_stats_flat`` in kernels/tables.py) take the flat decode of
+kernels/extract.py:decode_pdf_rows (per-doc word counts, word texts,
+an n x 4 coordinate array, failed flags) and start from one prelude:
+``reading_order`` (F1 whitespace drop + reading order) and
+``line_order`` (that plus W1 line grouping). Each returns an index into
+the flat words, and a kernel gathers only the columns it needs.
 
 Vectorization notes
 -------------------
@@ -34,7 +43,7 @@ Vectorization notes
 from __future__ import annotations
 
 import re
-from typing import List, Optional, Sequence, Tuple
+from typing import List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -154,102 +163,70 @@ def _slice_join(items: list, starts: np.ndarray, ends: np.ndarray,
     return out
 
 
-def reflow_batch(
-    doc_words: Sequence[Optional[Sequence[Tuple[str, float, float, float, float]]]]
-):
-    """Reflow a batch of word-lists.
+def reading_order(n_docs: int, doc_sizes: np.ndarray, t_arr: np.ndarray,
+                  coord: np.ndarray):
+    """F1 whitespace drop + reading order over a batch's flat words
+    (``t_arr`` object[n_words], ``coord`` float64[n_words, 4] as x0, y0,
+    x1, y1, ``doc_sizes`` int64[n_docs] words per doc in order).
 
-    Args:
-        doc_words: per document, a sequence of (text, x0, y0, x1, y1)
-            or None (undecodable envelope).
-
-    Returns:
-        list per document of (label, line_text) tuples — same contract
-        as oracle.spatial.reflow; None entries stay None.
-    """
-    n_docs = len(doc_words)
-    flat_t: List[str] = []
-    flat_coord: List[Tuple[float, float, float, float]] = []
-    doc_sizes = np.zeros(n_docs, dtype=np.int64)
-    for di, words in enumerate(doc_words):
-        if not words:
-            continue
-        doc_sizes[di] = len(words)
-        for w in words:
-            flat_t.append(w[0])
-            flat_coord.append((w[1], w[2], w[3], w[4]))
-    none_mask = np.array([w is None for w in doc_words], dtype=bool)
-    if not flat_t:
-        return [None if none_mask[i] else [] for i in range(n_docs)]
-    return reflow_flat(
-        n_docs,
-        doc_sizes,
-        np.asarray(flat_t, dtype=object),
-        np.asarray(flat_coord, dtype=np.float64),
-        none_mask,
-    )
-
-
-def reflow_flat(
-    n_docs: int,
-    doc_sizes: np.ndarray,
-    t_arr: np.ndarray,
-    coord: np.ndarray,
-    none_mask: Optional[np.ndarray] = None,
-):
-    """Flat-array reflow core: ``t_arr`` object[n_words], ``coord``
-    float64[n_words, 4] (x0, y0, x1, y1), ``doc_sizes`` int64[n_docs]
-    words per doc in order. Avoids any per-word Python materialization
-    between the envelope decoder and the kernel."""
-    results: List[Optional[List[Tuple[str, str]]]] = [
-        None if (none_mask is not None and none_mask[i]) else []
-        for i in range(n_docs)
-    ]
-    if len(t_arr) == 0:
-        return results
-    d = np.repeat(np.arange(n_docs, dtype=np.int64), doc_sizes)
-
-    # dictionary-encode word texts: every classification rule below
-    # runs once per unique string, then broadcasts via codes
+    Texts are dictionary-encoded so the whitespace test runs once per
+    unique string (pdf_processor.py:61-62); the kept words are sorted by
+    (doc, y0, x0), ties in input order (pdf_processor.py:81). Returns
+    (codes, uniques, idx, d): every flat word's code into ``uniques``,
+    the kept words' flat index in reading order, and their doc."""
     codes, uniques = pd.factorize(t_arr)
-    uq = pd.Series(uniques, dtype=object)
+    uq_keep = (pd.Series(uniques, dtype=object).str.strip().str.len() > 0)
+    idx = np.flatnonzero(uq_keep.to_numpy()[codes])
+    d = np.repeat(np.arange(n_docs, dtype=np.int64), doc_sizes)[idx]
+    order = np.lexsort((coord[idx, 0], coord[idx, 1], d))
+    return codes, uniques, idx[order], d[order]
 
-    # F1: drop whitespace-only words (pdf_processor.py:61-62)
-    uq_keep = (uq.str.strip().str.len() > 0).to_numpy()
-    keep = uq_keep[codes]
-    codes, coord, d = codes[keep], coord[keep], d[keep]
-    if len(codes) == 0:
-        return results
-    x0, y0, x1 = coord[:, 0], coord[:, 1], coord[:, 2]
-    cx = (x0 + x1) / 2.0
 
-    # reading order: (doc, y0, x0) — pdf_processor.py:81
-    order = np.lexsort((x0, y0, d))
-    codes = codes[order]
-    x0, y0, x1, cx, d = x0[order], y0[order], x1[order], cx[order], d[order]
-
-    n = len(codes)
-    seg_starts = _segment_starts(d)
-    seg_ends = np.r_[seg_starts[1:], n]
+def line_order(n_docs: int, doc_sizes: np.ndarray, t_arr: np.ndarray,
+               coord: np.ndarray):
+    """reading_order plus W1 anchored line grouping at y-tol 5.0
+    (spatial_preprocessor.py:184-223) and the stable in-line x0 sort
+    (:211). Returns (codes, uniques, idx, d, line_id, bounds): ``idx``
+    the kept words' flat index in line order, ``d`` their doc,
+    ``line_id`` their dense 0-based line, and ``bounds`` int64[n_docs+1]
+    offsets such that doc k's words are ``idx[bounds[k]:bounds[k+1]]``."""
+    codes, uniques, idx, d = reading_order(n_docs, doc_sizes, t_arr, coord)
+    bounds = np.searchsorted(d, np.arange(n_docs + 1))
     doc_ord = np.cumsum(np.r_[False, d[1:] != d[:-1]])  # dense 0..k-1
-
-    # W1: anchored line grouping at y-tol 5.0
-    yk = y0 + doc_ord * _DOC_STRIDE
-    line_start = _anchored_lines(yk, seg_starts, seg_ends, LINE_Y_TOL)
+    yk = coord[idx, 1] + doc_ord * _DOC_STRIDE
+    line_start = _anchored_lines(yk, bounds[:-1], bounds[1:], LINE_Y_TOL)
     line_id = np.cumsum(line_start) - 1
+    # lines never cross docs, so the doc ranges survive this sort
+    order = np.lexsort((coord[idx, 0], line_id))
+    return codes, uniques, idx[order], d[order], line_id[order], bounds
 
-    # in-line stable x sort (spatial_preprocessor.py:211)
-    order2 = np.lexsort((np.arange(n), x0, line_id))
-    codes = codes[order2]
-    x0, y0, x1, cx, d = x0[order2], y0[order2], x1[order2], cx[order2], d[order2]
-    line_id = line_id[order2]
-    doc_ord = doc_ord[order2]
+
+def reflow_flat(n_docs: int, doc_sizes: np.ndarray, t_arr: np.ndarray,
+                coord: np.ndarray, failed: np.ndarray):
+    """Reflow a batch of decoded envelopes (decode_pdf_rows's flat
+    arrays; ``failed`` marks undecodable docs).
+
+    Returns per doc a list of (label, line_text) tuples, the contract
+    of oracle.spatial.reflow; a failed doc gives None."""
+    results: List[Optional[List[Tuple[str, str]]]] = [
+        None if failed[i] else [] for i in range(n_docs)
+    ]
+    codes, uniques, idx, d, line_id, _ = line_order(
+        n_docs, doc_sizes, t_arr, coord
+    )
+    n = len(idx)
+    if n == 0:
+        return results
+    uq = pd.Series(uniques, dtype=object)
+    codes = codes[idx]
+    x0, x1 = coord[idx, 0], coord[idx, 2]
+    cx = (x0 + x1) / 2.0
 
     line_starts_idx = _segment_starts(line_id)
     n_lines = len(line_starts_idx)
     line_ends_idx = np.r_[line_starts_idx[1:], n]
     line_len = line_ends_idx - line_starts_idx
-    line_doc = doc_ord[line_starts_idx]
+    line_doc = d[line_starts_idx]
 
     # W2/A2: per-line mean gap, threshold 2.0x, cluster breaks
     same_line = np.r_[False, line_id[1:] == line_id[:-1]]

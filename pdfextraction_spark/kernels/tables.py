@@ -1,5 +1,8 @@
-"""Batch table-extraction kernel (M3).
+"""Batch table-extraction (M3) and word-spacing-stats (A1) kernels.
 
+Both take the flat decode of kernels/extract.py:decode_pdf_rows and
+start from the reflow kernel's prelude (kernels/layout.py:
+``line_order`` for tables, ``reading_order`` for spacing stats).
 Region DETECTION is fully vectorized across all documents in the
 batch (same frontier/reduceat machinery as the reflow kernel);
 per-region extraction (column boundaries via ``np.searchsorted`` on
@@ -11,20 +14,18 @@ pytest asserts exact agreement.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence, Tuple
+from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 
 from ..config import (
-    LINE_Y_TOL,
     REGULAR_SPACING_TOL,
     ROW_Y_TOL,
     TABLE_MIN_COLS,
     TABLE_MIN_ROWS,
     TABLE_ROW_GAP,
 )
-from .layout import _DOC_STRIDE, _anchored_lines, _segment_starts
+from .layout import _segment_starts, line_order, reading_order
 
 
 def _find_header_span(header: str, texts: List[str], cy: np.ndarray,
@@ -148,66 +149,17 @@ def _extract_region(headers: List[str], texts: List[str],
     return columns, result_rows
 
 
-def tables_batch(
-    doc_words: Sequence[Optional[Sequence[Tuple[str, float, float, float, float]]]]
-):
-    """Detect + extract tables for every doc in the batch.
-
-    Returns per doc a list of {"headers", "columns", "rows"} dicts
-    (None stays None) — same contract as oracle.tables.extract_doc_tables.
-    """
-    n_docs = len(doc_words)
-    flat_t: List[str] = []
-    flat_coord: List[Tuple[float, float, float, float]] = []
-    doc_sizes = np.zeros(n_docs, dtype=np.int64)
-    for di, words in enumerate(doc_words):
-        if not words:
-            continue
-        doc_sizes[di] = len(words)
-        for w in words:
-            flat_t.append(w[0])
-            flat_coord.append((w[1], w[2], w[3], w[4]))
-    results = [None if doc_words[i] is None else [] for i in range(n_docs)]
-    if not flat_t:
-        return results
-    return tables_flat(
-        n_docs, doc_sizes, np.asarray(flat_t, dtype=object),
-        np.asarray(flat_coord, dtype=np.float64),
-        np.array([w is None for w in doc_words], dtype=bool),
-    )
-
-
-def spacing_stats_batch(
-    doc_words: Sequence[Optional[Sequence[Tuple[str, float, float, float, float]]]]
-):
+def spacing_stats_flat(n_docs: int, doc_sizes: np.ndarray,
+                       t_arr: np.ndarray, coord: np.ndarray) -> np.ndarray:
     """Vectorized A1 word-spacing stats (spatial_preprocessor.py:422-463)
-    for a batch: per doc (avg, median, population std) over same-line
-    (|Δy0| <= 5) non-negative reading-order gaps. Median is the
-    reference's sorted[n//2] upper median."""
-    n_docs = len(doc_words)
+    over a batch's flat decode (decode_pdf_rows's arrays): float64
+    [n_docs, 3] of (avg, median, population std) over same-line
+    (|Δy0| <= 5) non-negative gaps between consecutive words in
+    reading order (layout.reading_order); zeros for a doc with no such
+    gap. Median is the reference's sorted[n//2] upper median."""
     out = np.zeros((n_docs, 3), dtype=np.float64)
-    flat_t: List[str] = []
-    flat_coord: List[Tuple[float, float, float, float]] = []
-    doc_sizes = np.zeros(n_docs, dtype=np.int64)
-    for di, words in enumerate(doc_words):
-        if not words:
-            continue
-        doc_sizes[di] = len(words)
-        for w in words:
-            flat_t.append(w[0])
-            flat_coord.append((w[1], w[2], w[3], w[4]))
-    if not flat_t:
-        return out
-    t_arr = np.asarray(flat_t, dtype=object)
-    coord = np.asarray(flat_coord, dtype=np.float64)
-    d = np.repeat(np.arange(n_docs, dtype=np.int64), doc_sizes)
-    keep = (pd.Series(t_arr, dtype="object").str.strip().str.len() > 0).to_numpy()
-    coord, d = coord[keep], d[keep]
-    if len(d) == 0:
-        return out
-    x0, y0, x1 = coord[:, 0], coord[:, 1], coord[:, 2]
-    order = np.lexsort((x0, y0, d))
-    x0, y0, x1, d = x0[order], y0[order], x1[order], d[order]
+    _, _, idx, d = reading_order(n_docs, doc_sizes, t_arr, coord)
+    x0, y0, x1 = coord[idx, 0], coord[idx, 1], coord[idx, 2]
     same_doc = d[1:] == d[:-1]
     same_line = same_doc & (np.abs(y0[1:] - y0[:-1]) <= 5.0)
     gap = x0[1:] - x1[:-1]
@@ -234,44 +186,25 @@ def spacing_stats_batch(
     return out
 
 
-def tables_flat(n_docs, doc_sizes, t_arr, coord, none_mask=None):
+def tables_flat(n_docs: int, doc_sizes: np.ndarray, t_arr: np.ndarray,
+                coord: np.ndarray, failed: np.ndarray):
+    """Detect + extract the tables of a batch of decoded envelopes
+    (decode_pdf_rows's flat arrays; ``failed`` marks undecodable docs),
+    starting from layout.line_order.
+
+    Returns per doc a list of {"headers", "columns", "rows"} dicts, the
+    contract of oracle.tables.extract_doc_tables; a failed doc gives
+    None."""
     results: List[Optional[list]] = [
-        None if (none_mask is not None and none_mask[i]) else []
-        for i in range(n_docs)
+        None if failed[i] else [] for i in range(n_docs)
     ]
-    if len(t_arr) == 0:
+    _, _, idx, d, line_id, bounds = line_order(n_docs, doc_sizes, t_arr,
+                                               coord)
+    n = len(idx)
+    if n == 0:
         return results
-    d = np.repeat(np.arange(n_docs, dtype=np.int64), doc_sizes)
-
-    ts = pd.Series(t_arr, dtype="object")
-    keep = (ts.str.strip().str.len() > 0).to_numpy()
-    t_arr, coord, d = t_arr[keep], coord[keep], d[keep]
-    if len(t_arr) == 0:
-        return results
-    x0, y0, x1, y1 = coord[:, 0], coord[:, 1], coord[:, 2], coord[:, 3]
-    cy = (y0 + y1) / 2.0
-    orig = np.arange(len(t_arr), dtype=np.int64)  # post-filter input order
-
-    # reading order + anchored line grouping (shared with reflow)
-    order = np.lexsort((x0, y0, d))
-    t_arr, x0, y0, x1, y1, cy, d, orig = (
-        t_arr[order], x0[order], y0[order], x1[order], y1[order], cy[order],
-        d[order], orig[order]
-    )
-    n = len(t_arr)
-    seg_starts = _segment_starts(d)
-    seg_ends = np.r_[seg_starts[1:], n]
-    doc_ord = np.cumsum(np.r_[False, d[1:] != d[:-1]])
-    yk = y0 + doc_ord * _DOC_STRIDE
-    line_start = _anchored_lines(yk, seg_starts, seg_ends, LINE_Y_TOL)
-    line_id = np.cumsum(line_start) - 1
-    order2 = np.lexsort((np.arange(n), x0, line_id))
-    t_arr, x0, y0, x1, y1, cy, d, orig = (
-        t_arr[order2], x0[order2], y0[order2], x1[order2], y1[order2],
-        cy[order2], d[order2], orig[order2]
-    )
-    line_id = line_id[order2]
-    doc_ord = doc_ord[order2]
+    t_arr = t_arr[idx]
+    x0, y0, x1, y1 = coord[idx].T
 
     ls = _segment_starts(line_id)
     le = np.r_[ls[1:], n]
@@ -304,7 +237,6 @@ def tables_flat(n_docs, doc_sizes, t_arr, coord, none_mask=None):
     region_id = np.cumsum(new_region) - 1
     n_regions = region_id[-1] + 1
 
-    # per-doc word ranges for region word slicing
     tl = t_arr.tolist()
     for r in range(n_regions):
         rlines = cand_idx[region_id == r]
@@ -317,15 +249,13 @@ def tables_flat(n_docs, doc_sizes, t_arr, coord, none_mask=None):
         h_ls, h_le = int(ls[rlines[0]]), int(le[rlines[0]])
         headers = tl[h_ls:h_le]
         # region words: ALL doc words with center_y within bbox
-        ds, de = int(seg_starts[doc_ord[ls[rlines[0]]]]), int(
-            seg_ends[doc_ord[ls[rlines[0]]]]
-        )
+        ds, de = int(bounds[doc]), int(bounds[doc + 1])
         # doc words in reading order: slice of the line-sorted arrays is
-        # NOT reading order; rebuild via (y0, x0, original-input) sort
-        # of the doc slice (stable tie-break = input order, matching
-        # the oracle's stable reading_order sort)
+        # NOT reading order; rebuild via a (y0, x0, flat index) sort of
+        # the doc slice (the flat index is input order, the oracle's
+        # stable reading_order tie-break)
         dsl = slice(ds, de)
-        sub_order = np.lexsort((orig[dsl], x0[dsl], y0[dsl]))
+        sub_order = np.lexsort((idx[dsl], x0[dsl], y0[dsl]))
         sx0 = x0[dsl][sub_order]
         sy0 = y0[dsl][sub_order]
         sx1 = x1[dsl][sub_order]

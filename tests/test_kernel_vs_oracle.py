@@ -6,10 +6,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from conftest import decode_docs
 from fixtures.generate import gen_transcripts, golden_frame
 from pdfextraction_spark.kernels import extract as K
 from pdfextraction_spark.kernels.htmlstrip import strip_html_doc
-from pdfextraction_spark.kernels.layout import reflow_batch
+from pdfextraction_spark.kernels.layout import reflow_flat
 from pdfextraction_spark.oracle import spatial
 from pdfextraction_spark.oracle.htmlstrip import strip_html
 
@@ -78,7 +79,7 @@ def test_layout_fuzz_500_docs():
                  ("c", 36.0, 77.25, 41.0, 87.25)])
     docs.append([])
     docs.append(None)
-    got = reflow_batch(docs)
+    got = reflow_flat(*decode_docs(docs))
     for i, d in enumerate(docs):
         expected = None if d is None else spatial.reflow(d)
         assert got[i] == expected, f"doc {i}"
@@ -123,7 +124,7 @@ def test_hypothesis_layout_if_available():
     @settings(max_examples=150, deadline=None, derandomize=True)
     @given(st.lists(doc, max_size=6))
     def run(docs):
-        got = reflow_batch(docs)
+        got = reflow_flat(*decode_docs(docs))
         for i, d in enumerate(docs):
             assert got[i] == spatial.reflow(d)
 
@@ -192,6 +193,68 @@ def test_envelope_escape_handling():
     assert "C:\\path" in got[1]["extracted_text"]
     assert "a\\bc" in got[1]["extracted_text"]
     assert got[2]["parse_failed"]
+
+
+@pytest.mark.parametrize("text", [
+    # truncated after a canonical word: no closing "]}"
+    '{"kind": "pdf_layout", "words": '
+    '[{"t": "a", "x0": 1, "y0": 2, "x1": 3, "y1": 4}',
+    '{"kind": "pdf_layout", "words": [',
+    '{"kind": "pdf_layout"}',
+    '{"kind": "pdf_layout", garbage',
+])
+def test_invalid_envelope_is_a_parse_failure(text):
+    """An envelope json.loads rejects (or that has no word list) failed
+    to parse and passes its text through, as in the oracle, even when
+    the word matches alone look canonical."""
+    df = pd.DataFrame({"conv_id": "c", "turn_idx": [0], "text": [text]})
+    got = _extract(df["text"])
+    _assert_frames_equal(golden_frame(df), got)
+    assert got[0]["parse_failed"] and got[0]["extracted_text"] == text
+
+
+def test_canonical_envelopes_take_the_fast_path():
+    """Every decodable envelope the encoder writes is decoded by the
+    regex fast path, not by strict json.loads."""
+    texts = gen_transcripts("xs")["text"]
+    pdf = texts[K.detect_kinds(texts) == "pdf_layout"]
+    decodable = [t for t in pdf if K._decode_json_strict(t) is not None]
+    assert decodable
+    assert all(K._canonical_split(t) is not None for t in decodable)
+
+
+def test_envelope_decoder_fuzz_matches_json():
+    """Canonical envelopes with one character cut, changed or added, or
+    truncated: the flat decoder fails exactly the envelopes strict JSON
+    decoding rejects and gives the same words for the rest (a mangled
+    number such as 1..5 used to crash the batch)."""
+    from pdfextraction_spark.payload import (
+        KIND_PDF, decode_pdf_envelope, detect_kind, encode_pdf_envelope,
+    )
+
+    rng = np.random.default_rng(5)
+    toks = ["a", "C:\\path", 'say "hi"', "ünï", "\t", "", "x\ny"]
+    nums = [0.0, -1.5, 1e-05, 1.5e20, 36, 72.25]
+    alphabet = list('{}[]",:. \\-+eE0159tx\t\n\x01')
+    texts = []
+    while len(texts) < 3000:
+        words = [(toks[rng.integers(len(toks))],
+                  *(nums[i] for i in rng.integers(len(nums), size=4)))
+                 for _ in range(rng.integers(0, 4))]
+        s = encode_pdf_envelope(words)
+        k = int(rng.integers(len(s)))
+        c = alphabet[rng.integers(len(alphabet))]
+        s = [s[:k], s[:k] + s[k + 1:], s[:k] + c + s[k + 1:],
+             s[:k] + c + s[k:]][rng.integers(4)]
+        if detect_kind(s) == KIND_PDF:
+            texts.append(s)
+    sizes, t_arr, coord, failed = K._decode_envelopes_flat(texts)
+    off = np.r_[0, np.cumsum(sizes)]
+    for i, s in enumerate(texts):
+        exp = decode_pdf_envelope(s)
+        assert failed[i] == (exp is None), s
+        got = [(t_arr[j], *coord[j]) for j in range(off[i], off[i + 1])]
+        assert got == (exp or []), s
 
 
 def test_last_word_field_rule_whitespace_words():

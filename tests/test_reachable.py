@@ -35,18 +35,10 @@ ROOT_FILES = ("__spark_entry__.py", "pdfextraction_spark/cli.py",
               "pdfextraction_spark/pipeline.py")
 ROOT_DIRS = ("perfbench", "tools", "fixtures")
 
-# Kept although no root may reach them:
-# - oracle/ holds the loop-based reference implementations. Tests
-#   compare the kernels and operators against them, so they are
-#   specifications, not dead code.
-# - the two kernel adapters run a kernel over per-document word
-#   lists; the kernel-vs-oracle, hypothesis and table tests drive the
-#   kernels through them.
+# Kept although no root may reach it: oracle/ holds the loop-based
+# reference implementations. Tests compare the kernels and operators
+# against them, so they are specifications, not dead code.
 EXEMPT_DIRS = ("oracle",)
-EXEMPT_DEFS = {
-    ("kernels/layout.py", "reflow_batch"),
-    ("kernels/tables.py", "tables_batch"),
-}
 
 
 def _py_files(base):
@@ -131,8 +123,7 @@ def unreachable_defs():
         f"{rel}:{name}" for rel, name in defs
         if (rel, name) not in reached
         and not name.startswith("__")  # __all__, __version__
-        and rel.split("/")[0] not in EXEMPT_DIRS
-        and (rel, name) not in EXEMPT_DEFS)
+        and rel.split("/")[0] not in EXEMPT_DIRS)
 
 
 def test_every_package_def_is_reachable_from_a_root():

@@ -3,9 +3,11 @@
 import numpy as np
 import pytest
 
+from conftest import decode_docs
 from fixtures.generate import gen_transcripts
-from pdfextraction_spark.kernels.tables import tables_batch
+from pdfextraction_spark.kernels.tables import spacing_stats_flat, tables_flat
 from pdfextraction_spark.oracle import tables as OT
+from pdfextraction_spark.oracle.spatial import spacing_stats
 from pdfextraction_spark.payload import KIND_PDF, decode_pdf_envelope, detect_kind
 
 
@@ -97,7 +99,7 @@ class TestKernelVsOracle:
         df = gen_transcripts("xs")
         words = [decode_pdf_envelope(t) for t in df["text"]
                  if detect_kind(t) == KIND_PDF]
-        got = tables_batch(words)
+        got = tables_flat(*decode_docs(words))
         for i, w in enumerate(words):
             exp = None if w is None else OT.extract_doc_tables(w)
             assert got[i] == exp, i
@@ -116,9 +118,17 @@ class TestKernelVsOracle:
                   float(rng.integers(0, 2000)) / 4.0 + float(rng.integers(4, 200)) / 4.0)
                 for _ in range(n)
             ])
-        got = tables_batch(docs)
+        docs += [[], None]
+        flat = decode_docs(docs)
+        got = tables_flat(*flat)
+        stats = spacing_stats_flat(*flat[:4])
         for i, w in enumerate(docs):
+            if w is None:
+                assert got[i] is None
+                continue
             assert got[i] == OT.extract_doc_tables(w), i
+            exp = spacing_stats(w)
+            assert np.allclose(stats[i], exp, rtol=1e-9, atol=1e-12), (i, exp)
 
 
 @pytest.mark.slow
@@ -152,23 +162,16 @@ def test_spark_table_operator(spark, xs_parquet):
 
 class TestSpacingStats:
     def test_kernel_vs_oracle(self):
-        import numpy as np
-
-        from pdfextraction_spark.kernels.tables import spacing_stats_batch
-        from pdfextraction_spark.oracle.spatial import spacing_stats
-
         df = gen_transcripts("xs")
         words = [decode_pdf_envelope(t) for t in df["text"]
                  if detect_kind(t) == KIND_PDF]
         docs = [w for w in words if w is not None]
-        got = spacing_stats_batch(docs)
+        got = spacing_stats_flat(*decode_docs(docs)[:4])
         for i, w in enumerate(docs):
             exp = spacing_stats(w)
             assert np.allclose(got[i], exp, rtol=1e-9, atol=1e-12), (i, exp, got[i])
 
     def test_pinned(self):
-        from pdfextraction_spark.oracle.spatial import spacing_stats
-
         words = [W("a", 0, 72, 10), W("b", 20, 72, 30), W("c", 50, 72, 60),
                  W("d", 55, 72, 65),  # overlap with c: gap -5 ignored
                  W("e", 0, 100, 10)]  # new line: no cross-line gap
